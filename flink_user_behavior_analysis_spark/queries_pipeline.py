@@ -254,10 +254,10 @@ def q_dedup_keeper_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_fut = _start_action(quality)
     try:
         out = keeper_by_quality(docs, pairs, quality)
-    finally:
-        # always await the overlapped job (rethrows its failure): a
-        # main-path exception must not leak a still-running action
-        q_fut.result()
+    except BaseException:
+        _fail_action(q_fut)
+        raise
+    q_fut.result()
     return out
 
 
@@ -2110,10 +2110,10 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         keepers = comp.where(
             F.col("doc_id") == F.col("component")).select("doc_id")
         d3 = d2.join(keepers, "doc_id").localCheckpoint(eager=True)
-    finally:
-        # always await the overlapped gram build (rethrows its
-        # failure) so a d2/d3/pairs exception can't leak a running job
-        ev_fut.result()
+    except BaseException:
+        _fail_action(ev_fut)
+        raise
+    ev_fut.result()
     tr_grams = with_shingles(d3, n=CONTAM_N).select(
         "doc_id", F.explode_outer("shingles").alias("gram")
     ).where(F.col("gram").isNotNull())

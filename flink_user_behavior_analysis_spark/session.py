@@ -1,16 +1,35 @@
 """SparkSession construction for the engine.
 
-Local-mode defaults are tuned for the test container (local[32],
-single JVM); the same builder works unchanged on a real cluster where
-``master`` comes from spark-submit. Scale-relevant settings:
+Local-mode defaults are tuned for one JVM on one machine; the same
+builder works unchanged on a real cluster where ``master`` comes from
+spark-submit. Scale-relevant settings:
 
-- AQE on (runtime re-plan, skew-join splitting, partition coalescing)
-- shuffle partitions sized to cores locally; on a 1000-executor
-  cluster this should be ~2-3x total cores (set via env/submit conf)
+- AQE on for batch queries (runtime re-plan, skew-join splitting,
+  partition coalescing).
+- Shuffle partitions default to the core count (``cpus``), not more.
+  Structured Streaming runs every micro-batch with AQE off, so nothing
+  coalesces its shuffles, and a stateful operator keeps the partition
+  count its query had at its first start (the count is pinned in the
+  checkpoint). Each state partition is one Python task per
+  micro-batch for the ``applyInPandasWithState`` operators, so 8
+  partitions on 4 cores ran every stateful batch in two waves of
+  fixed-cost tasks. On a 1000-executor cluster set ~2-3x total cores
+  through ``SPARK_GRAFT_SHUFFLE`` or ``shuffle_partitions=``.
+- Python workers start through ``worker_daemon`` (Spark's
+  ``spark.python.daemon.module`` hook); this package's parent
+  directory is appended to ``spark.executorEnv.PYTHONPATH`` so the
+  daemon can import it. Every task's ``importlib.invalidate_caches()``
+  re-reads each zip archive on the worker's import path (Python
+  3.11): with Spark's default path that cost about 200 ms per
+  stateful task on a 4-core VM, about 10 ms after the start-up module
+  takes the spark-core jar off the path and imports pyspark from the
+  unpacked tree of the same build. With the partition default above
+  this took the benchmark's ``alert_stream`` warm pass from 22.3 s to
+  14.1 s (medians of 10 runs each, 4-core VM).
 - UTC session timezone so event-time window semantics are
   engine-independent (the reference pins windows to epoch alignment;
-  see SURVEY.md section 2.4)
-- Arrow enabled for the few Pandas-UDF code paths
+  see SURVEY.md section 2.4).
+- Arrow enabled for the Pandas-UDF and Arrow-kernel code paths.
 """
 
 from __future__ import annotations
@@ -22,6 +41,7 @@ from pyspark.sql import SparkSession
 
 
 _TMP_WAREHOUSE: str | None = None
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _tmp_warehouse() -> str:
@@ -53,7 +73,7 @@ def get_spark(
     """Build (or fetch) the engine's SparkSession."""
     cpus = int(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle = int(
-        shuffle_partitions or os.environ.get("SPARK_GRAFT_SHUFFLE", str(max(cpus, 8)))
+        shuffle_partitions or os.environ.get("SPARK_GRAFT_SHUFFLE", str(cpus))
     )
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -64,6 +84,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
         .config("spark.ui.enabled", "false")
         .config(
             "spark.driver.memory",
@@ -83,7 +104,12 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_WAREHOUSE") or _tmp_warehouse(),
         )
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    # the worker start-up module must be importable by the executors'
+    # Python daemon: append this package's parent to their PYTHONPATH
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (conf.get("spark.executorEnv.PYTHONPATH"), _PACKAGE_PARENT) if p)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -395,33 +395,6 @@ def curation_ingest_batch(spark: SparkSession, prefix: str,
         batch_df.unpersist()
 
 
-def run_curation_ingest(raw_docs: DataFrame, prefix: str,
-                        checkpoint_dir: str, min_quality: float = 0.6,
-                        threshold: float = 0.8,
-                        job_id: str = "curation") -> None:
-    """End-to-end streaming curation INGEST (closes the r8 gap where
-    curation_stream survivors stopped at the probe): quality-filter
-    the arriving documents (stateless scan predicate — same head as
-    curation_stream), then per micro-batch probe-survive-append into
-    the stored corpus under the epoch-derived batch_id. The corpus a
-    later batch probes therefore already contains every earlier
-    batch's survivors, and a crash at ANY point replays the epoch
-    into a ledger hit — the streaming engine's replay semantics and
-    the exactly-once append ledger compose instead of fighting.
-    The span-count family wires identically:
-    run_ingest_foreach_batch(stream, ckpt, lambda b, bid:
-    span_append_counts(spark, prefix, b, batch_id=bid))."""
-    from ..operators.text import quality_score_col
-
-    spark = raw_docs.sparkSession
-    accepted = raw_docs.where(quality_score_col("text") >= min_quality)
-    run_ingest_foreach_batch(
-        accepted, checkpoint_dir,
-        lambda b, bid: curation_ingest_batch(spark, prefix, b, bid,
-                                             threshold),
-        job_id=job_id)
-
-
 def dsir_ingest_batch(spark: SparkSession, prefix_raw: str,
                       prefix_tgt: str, batch_df: DataFrame,
                       batch_id: str, logw_threshold: float = 0.0,

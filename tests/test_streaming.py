@@ -138,6 +138,58 @@ def test_cap_filter_stateful_equals_batch(spark, sf_dir):
     _assert_same(got, want, ["user_id", "behavior", "day", "warning_msg"])
 
 
+def test_python_worker_startup_path(spark):
+    """The session's Python daemon starts through the package's
+    worker start-up module (session.get_spark), so every worker runs
+    with no jar on its import path and, when the unpacked tree of the
+    Spark build exists, pyspark imported from plain files. Otherwise
+    each task's importlib.invalidate_caches() re-reads the archives.
+    The three applyInPandasWithState twins above
+    (consecutive_fail / cap_filter / reconcile) run on this same
+    session, so their equality with the batch twins is the end-to-end
+    check that the reordered path changes no result."""
+    import json
+    import os
+
+    import pyarrow as pa
+
+    def probe(batches):
+        import sys
+
+        import pyspark
+
+        for _ in batches:
+            yield pa.RecordBatch.from_pylist([{"info": json.dumps({
+                "path": list(sys.path),
+                "cache": list(sys.path_importer_cache),
+                "pyspark": pyspark.__file__})}])
+
+    row = (spark.range(1, numPartitions=1)
+           .mapInArrow(probe, "info string").collect())
+    info = json.loads(row[0]["info"])
+    assert not [p for p in info["path"] if p.endswith(".jar")], info["path"]
+    assert not [p for p in info["cache"] if p.endswith(".jar")], info["cache"]
+    tree = os.path.join(os.environ.get("SPARK_HOME", ""), "python", "pyspark")
+    if os.environ.get("SPARK_HOME") and os.path.isdir(tree):
+        assert ".zip" + os.sep not in info["pyspark"], info["pyspark"]
+
+
+def test_worker_reorder_path_drops_jars_and_prefers_tree(tmp_path):
+    from flink_user_behavior_analysis_spark.worker_daemon import reorder_path
+
+    (tmp_path / "pyspark").mkdir()
+    (tmp_path / "pyspark" / "__init__.py").write_text("")
+    zip_entry = str(tmp_path / "lib" / "pyspark.zip")
+    jar = "/spark/jars/spark-core.jar"
+    cache = {jar: object(), jar + "/org": object(), zip_entry: object()}
+    got = reorder_path(["", zip_entry, jar, "/site-packages"], cache)
+    assert got == ["", str(tmp_path), zip_entry, "/site-packages"]
+    assert list(cache) == [zip_entry]
+    # no unpacked tree next to the zip: the path keeps the zip alone
+    other = "/elsewhere/lib/pyspark.zip"
+    assert reorder_path([other, jar], {}) == [other]
+
+
 def test_sessionize_stream_equals_batch(spark, sf_dir):
     """Native session_window streaming aggregation == the batch
     lag+cumsum sessionize on the bounded replay."""
