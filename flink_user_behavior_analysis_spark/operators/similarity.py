@@ -2368,7 +2368,7 @@ def _semdedup_assigned(vecs: DataFrame, centroids: list[list[float]],
     np.argmax takes the FIRST max, matching
     array_position(arr, array_max(arr)). Equivalence vs the retained
     JVM reference (_semdedup_assigned_sql) is pytest-asserted,
-    including the zero-norm and NULL-vector branches.
+    including the zero-norm, NULL-vector and ragged-dimension branches.
 
     Batch (non-streaming) inputs are pre-partitioned by id — small
     corpora arrive as one parquet split and would serialize the
@@ -2383,6 +2383,7 @@ def _semdedup_assigned(vecs: DataFrame, centroids: list[list[float]],
     id_arrow = to_arrow_type(id_type)
     cents = [[float(x) for x in c] for c in centroids]
     cns = [math.sqrt(sum(x * x for x in c)) for c in cents]
+    dims = {len(c) for c in cents}
     out_schema = StructType([
         StructField(id_col, id_type),
         StructField("cell", IntegerType()),
@@ -2406,35 +2407,42 @@ def _semdedup_assigned(vecs: DataFrame, centroids: list[list[float]],
             n = len(vcol)
             offs = vcol.offsets.to_numpy(zero_copy_only=False)
             widths = np.diff(offs)
-            if vcol.null_count or len(set(widths.tolist())) > 1:
-                # ragged / NULL vectors: defer to the JVM-shaped
-                # per-row path via pylists (never taken on the
-                # uniform-dim corpora; correctness fallback only)
+            if vcol.null_count or len(set(widths.tolist()) | dims) > 1:
+                # NULL vectors / dims differing from each other or from
+                # the centroids: defer to the JVM-shaped per-row path
+                # via pylists (never taken on the uniform-dim corpora;
+                # correctness fallback only). As in the SQL form, a
+                # zero-norm centroid's literal 0.0 survives a NULL
+                # vector, a length mismatch gives a NULL cosine
+                # (zip_with NULL-pads), and array_max skips NULLs.
                 rows = vcol.to_pylist()
                 cells, sims_o, norms = [], [], []
                 for r in rows:
-                    if r is None:
-                        cells.append(None)
-                        sims_o.append(None)
-                        norms.append(None)
-                        continue
-                    acc = 0.0
-                    for x in r:
-                        acc += x * x
-                    nr = math.sqrt(acc)
+                    nr = None
+                    if r is not None:
+                        acc = 0.0
+                        for x in r:
+                            acc += x * x
+                        nr = math.sqrt(acc)
                     cs = []
                     for ci in range(k):
                         if cns[ci] == 0:
                             cs.append(0.0)
-                            continue
-                        d = 0.0
-                        for xj, cj in zip(r, cmat[ci]):
-                            d += xj * cj
-                        s = 0.0 if nr == 0 else d / (nr * cns[ci])
-                        cs.append(math.copysign(
-                            math.floor(abs(s) * 1e6 + 0.5), s) / 1e6)
-                    mx = max(cs)
-                    cells.append(cs.index(mx))
+                        elif r is None or (nr != 0
+                                           and len(r) != len(cmat[ci])):
+                            cs.append(None)
+                        elif nr == 0:
+                            cs.append(0.0)
+                        else:
+                            d = 0.0
+                            for xj, cj in zip(r, cmat[ci]):
+                                d += xj * cj
+                            s = d / (nr * cns[ci])
+                            cs.append(math.copysign(
+                                math.floor(abs(s) * 1e6 + 0.5), s) / 1e6)
+                    known = [x for x in cs if x is not None]
+                    mx = max(known) if known else None
+                    cells.append(None if mx is None else cs.index(mx))
                     sims_o.append(mx)
                     norms.append(nr)
                 yield pa.RecordBatch.from_arrays(

@@ -1263,9 +1263,10 @@ def run_topn_to_parquet(
 # (spark, sf_dir) and returning an unstarted streaming DataFrame (run
 # with run_available_now for the bounded-replay form the equivalence
 # tests use, or writeStream with your own sink/trigger unbounded).
-# Stateful machines (consecutive fails, cap filter, reconcile, order
-# timeout) live in streaming.stateful and wrap the same stream_events
-# source; they are registered here through their module entrypoints.
+# The stateful machines (consecutive fails, cap filter, reconcile,
+# order timeout, as-of) are not in this registry: they take an event
+# stream plus parameters, live in streaming.stateful, and are exported
+# from the streaming package.
 STREAMING_QUERIES = {
     "hot_items_counts": hot_items_counts_stream,
     "page_views": page_views_stream,

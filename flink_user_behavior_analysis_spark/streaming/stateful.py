@@ -1,7 +1,7 @@
 """Keyed stateful streaming operators — the applyInPandasWithState
 layer for semantics SQL can't express per-record (SURVEY section 4:
-F6 daily-cap blacklist, C1/C2 consecutive-fail detection, J3
-create->pay timeout with event-time timers).
+F6 daily-cap blacklist, C1/C2 consecutive-fail detection, J2/J3
+two-sided matching and create->pay timeout with event-time timers).
 
 These mirror the reference's KeyedProcessFunction state machines:
 - consecutive_fail_stateful  <- LoginFail.java:145-196 (ListState of
@@ -10,29 +10,39 @@ These mirror the reference's KeyedProcessFunction state machines:
   .java:117-179 (per-key count state, one warning at cap+1; the
   midnight-reset timer becomes part of the key (day) — same semantics,
   no timer needed)
+- reconcile_stateful         <- TxPayMatch.java:65-170 (per-side state
+  + timers, unmatched side outputs)
 - order_timeout_stateful     <- OrderTimeoutWithoutCEP.java:68-161
   (create/pay ValueStates + event-time timer; here GroupStateTimeout
   .EventTimeTimeout fires when the watermark passes create+timeout)
+- asof_stateful              <- streaming twin of operators/asof.py
 
 State is bounded per key (a few scalars / a <=n-element buffer), so a
 1000-executor run holds state proportional to live keys only — same
 asymptotics as the reference's RocksDB-backed keyed state.
 
-Ordering contract: rows are processed in (ts, event_id) order WITHIN a
-micro-batch. Cross-batch reordering is bounded by the source's
-watermark, matching the reference's assumption that watermarked input
-is effectively ordered (AscendingTimestampExtractor W1). Closures are
-self-contained (no module references) so executors don't need this
-package on sys.path.
+Each operator is a ``prepared`` projection plus a state-machine
+``step(key, rows, state)``; ``_per_key`` is the one place that runs
+them through applyInPandasWithState, and it owns the ordering
+contract: a key's rows can span several Arrow chunks, and sorting each
+chunk on its own is only ordered while the group fits one chunk, so
+the runner concatenates ALL of a key's chunks and sorts them ONCE
+(by (ts, event_id), or ts alone) before ``step`` sees them. Cross-
+batch reordering is bounded by the source's watermark, matching the
+reference's assumption that watermarked input is effectively ordered
+(AscendingTimestampExtractor W1). The closures reference module-level
+helpers; executors import this package from the PYTHONPATH that
+session.get_spark sets.
 
 Batch equivalence: each operator's batch twin lives in
-operators/patterns.py / operators/blacklist.py; tests assert equal
-output on bounded replays (tests/test_streaming.py).
+operators/patterns.py / operators/blacklist.py / operators/joins.py /
+operators/asof.py; tests assert equal output on bounded replays
+(tests/test_streaming.py).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -47,12 +57,50 @@ from pyspark.sql.types import (
 
 US = 1_000_000
 
-# Ordering note (ADVICE r4): a key's rows can span several Arrow
-# chunks, and sorting each chunk independently is only globally
-# ordered while the group fits one chunk. Every state machine below
-# therefore buffers ALL chunks for the key and sorts ONCE before
-# iterating. Inlined per closure (not a shared helper) to keep the
-# self-contained-closure contract above.
+
+def _unpack(packed: str) -> list[list[int]]:
+    """State-string codec: ``"a:b,c:d"`` -> ``[[a, b], [c, d]]``."""
+    return [[int(a), int(b)] for a, b in
+            (e.split(":") for e in packed.split(",") if e)]
+
+
+def _pack(buf: list[list[int]]) -> str:
+    return ",".join(f"{a}:{b}" for a, b in buf)
+
+
+def _per_key(
+    prepared: DataFrame,
+    keys: Sequence[str],
+    step: Callable[[tuple, pd.DataFrame, GroupState], list | None],
+    out_schema: StructType,
+    state_schema: StructType,
+    timeout: str,
+    order: Sequence[str],
+) -> DataFrame:
+    """Group ``prepared`` by ``keys`` and run ``step`` once per key and
+    micro-batch with all of the key's rows, sorted by ``order`` (no sort
+    when empty). On a timer firing with no new data ``rows`` is an
+    empty frame. ``step`` returns output tuples in ``out_schema``'s
+    field order."""
+    cols = out_schema.fieldNames()
+    in_cols = prepared.columns
+    order = list(order)
+
+    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
+        chunks = list(pdfs)
+        if not chunks:
+            rows = pd.DataFrame(columns=in_cols)
+        else:
+            rows = (chunks[0] if len(chunks) == 1
+                    else pd.concat(chunks, ignore_index=True))
+            if order:
+                rows = rows.sort_values(order)
+        out = step(key, rows, state)
+        if out:
+            yield pd.DataFrame(out, columns=cols)
+
+    return prepared.groupBy(*keys).applyInPandasWithState(
+        fn, out_schema, state_schema, "append", timeout)
 
 
 def consecutive_fail_stateful(
@@ -75,31 +123,24 @@ def consecutive_fail_stateful(
     ])
     state_schema = StructType([StructField("fails", StringType())])
     span_us = within_seconds * US
-    n_ = n
 
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
+    def step(key, rows, state: GroupState):
         buf = []
         if state.exists:
             (packed,) = state.get
             buf = [int(x) for x in packed.split(",") if x]
         out = []
-        chunks = list(pdfs)
-        pdf = (pd.concat(chunks, ignore_index=True)
-               if len(chunks) > 1 else chunks[0] if chunks else None)
-        if pdf is not None:
-            pdf = pdf.sort_values(["__ts_us", "__ord"])
-            for ts_us, is_fail in zip(pdf["__ts_us"], pdf["__is_fail"]):
-                if is_fail:
-                    buf.append(int(ts_us))
-                    if len(buf) > n_:
-                        buf.pop(0)
-                    if len(buf) == n_ and buf[-1] - buf[0] <= span_us:
-                        out.append((key[0], buf[0], buf[-1]))
-                else:
-                    buf = []
+        for ts_us, is_fail in zip(rows["__ts_us"], rows["__is_fail"]):
+            if is_fail:
+                buf.append(int(ts_us))
+                if len(buf) > n:
+                    buf.pop(0)
+                if len(buf) == n and buf[-1] - buf[0] <= span_us:
+                    out.append((key[0], buf[0], buf[-1]))
+            else:
+                buf = []
         state.update((",".join(str(x) for x in buf),))
-        if out:
-            yield pd.DataFrame(out, columns=["user_id", "first_fail_us", "last_fail_us"])
+        return out
 
     prepared = events.select(
         F.col(user_col),
@@ -107,9 +148,8 @@ def consecutive_fail_stateful(
         F.col(order_col).alias("__ord"),
         (F.col(type_col) == fail_value).alias("__is_fail"),
     )
-    return prepared.groupBy(user_col).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    return _per_key(prepared, [user_col], step, out_schema, state_schema,
+                    GroupStateTimeout.NoTimeout, ["__ts_us", "__ord"])
 
 
 def cap_filter_stateful(
@@ -124,7 +164,9 @@ def cap_filter_stateful(
     emit ONE warning when the (cap+1)-th event arrives. The reference's
     midnight state-clear timer is replaced by day-scoped keys — old
     days' state is droppable by watermark (document: production would
-    add a timeout to evict prior-day keys)."""
+    add a timeout to evict prior-day keys). Only the count matters, so
+    rows are neither ordered nor iterated (``order_col`` is unused and
+    kept for signature compatibility)."""
     out_schema = StructType([
         StructField("user_id", LongType()),
         StructField("behavior", StringType()),
@@ -132,39 +174,21 @@ def cap_filter_stateful(
         StructField("warning_msg", StringType()),
     ])
     state_schema = StructType([StructField("cnt", LongType())])
-    cap_ = cap
 
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
+    def step(key, rows, state: GroupState):
         cnt = state.get[0] if state.exists else 0
-        out = []
-        chunks = list(pdfs)
-        pdf = (pd.concat(chunks, ignore_index=True)
-               if len(chunks) > 1 else chunks[0] if chunks else None)
-        if pdf is not None:
-            pdf = pdf.sort_values(["__ts_us", "__ord"])
-            for _ in range(len(pdf)):
-                cnt += 1
-                if cnt == cap_ + 1:
-                    out.append(
-                        (key[0], key[1], key[2],
-                         f"click over {cap_} times today")
-                    )
-        state.update((cnt,))
-        if out:
-            yield pd.DataFrame(
-                out, columns=["user_id", "behavior", "day", "warning_msg"]
-            )
+        state.update((cnt + len(rows),))
+        if cnt <= cap < cnt + len(rows):
+            return [(key[0], key[1], key[2], f"click over {cap} times today")]
+        return None
 
     prepared = events.select(
         F.col(user_col),
         F.col(behavior_col).alias("behavior"),
         F.date_format(F.date_trunc("day", F.col(ts_col)), "yyyy-MM-dd").alias("day"),
-        F.unix_micros(F.col(ts_col)).alias("__ts_us"),
-        F.col(order_col).alias("__ord"),
     )
-    return prepared.groupBy(user_col, "behavior", "day").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    return _per_key(prepared, [user_col, "behavior", "day"], step,
+                    out_schema, state_schema, GroupStateTimeout.NoTimeout, [])
 
 
 def reconcile_stateful(
@@ -211,41 +235,28 @@ def reconcile_stateful(
     ])
     lo_us = int(lower_seconds * US)
     hi_us = int(upper_seconds * US)
-    cols = ["kind", "user_id", "item_id", "pay_us", "receipt_us"]
 
-    def _unpack(packed: str) -> list[list[int]]:
-        return [[int(a), int(b)] for a, b in
-                (e.split(":") for e in packed.split(",") if e)]
-
-    def _pack(buf: list[list[int]]) -> str:
-        return ",".join(f"{t}:{m}" for t, m in buf)
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
+    def step(key, rows, state: GroupState):
         pays, receipts = ([], [])
         if state.exists:
             p_packed, r_packed = state.get
             pays, receipts = _unpack(p_packed), _unpack(r_packed)
         out = []
-        chunks = list(pdfs)
-        pdf = (pd.concat(chunks, ignore_index=True)
-               if len(chunks) > 1 else chunks[0] if chunks else None)
-        if pdf is not None:
-            pdf = pdf.sort_values(["__ts_us", "__ord"])
-            for ts_us, etype in zip(pdf["__ts_us"], pdf["__etype"]):
-                ts_us = int(ts_us)
-                matched = 0
-                if etype == "l":
-                    for r in receipts:
-                        if lo_us <= r[0] - ts_us <= hi_us:
-                            out.append(("matched", key[0], key[1], ts_us, r[0]))
-                            r[1] = matched = 1
-                    pays.append([ts_us, matched])
-                else:
-                    for p in pays:
-                        if lo_us <= ts_us - p[0] <= hi_us:
-                            out.append(("matched", key[0], key[1], p[0], ts_us))
-                            p[1] = matched = 1
-                    receipts.append([ts_us, matched])
+        for ts_us, etype in zip(rows["__ts_us"], rows["__etype"]):
+            ts_us = int(ts_us)
+            matched = 0
+            if etype == "l":
+                for r in receipts:
+                    if lo_us <= r[0] - ts_us <= hi_us:
+                        out.append(("matched", key[0], key[1], ts_us, r[0]))
+                        r[1] = matched = 1
+                pays.append([ts_us, matched])
+            else:
+                for p in pays:
+                    if lo_us <= ts_us - p[0] <= hi_us:
+                        out.append(("matched", key[0], key[1], p[0], ts_us))
+                        p[1] = matched = 1
+                receipts.append([ts_us, matched])
         # expire: a pay's last eligible receipt is pay+upper, a
         # receipt's last eligible pay is receipt-lower — both decided
         # once the watermark passes the deadline
@@ -273,8 +284,7 @@ def reconcile_stateful(
             state.setTimeoutTimestamp(
                 max(deadline_us // 1000, state.getCurrentWatermarkMs() + 1)
             )
-        if out:
-            yield pd.DataFrame(out, columns=cols)
+        return out
 
     prepared = events.where(
         F.col(type_col).isin(left_value, right_value)
@@ -287,10 +297,8 @@ def reconcile_stateful(
         .otherwise(F.lit("r")).alias("__etype"),
         F.col(ts_col),
     )
-    return prepared.groupBy(*key_cols).applyInPandasWithState(
-        fn, out_schema, state_schema, "append",
-        GroupStateTimeout.EventTimeTimeout,
-    )
+    return _per_key(prepared, key_cols, step, out_schema, state_schema,
+                    GroupStateTimeout.EventTimeTimeout, ["__ts_us", "__ord"])
 
 
 def order_timeout_stateful(
@@ -322,9 +330,7 @@ def order_timeout_stateful(
     ])
     timeout_us = timeout_seconds * US
 
-    cols = ["user_id", "item_id", "create_us", "pay_us", "result_state"]
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
+    def step(key, rows, state: GroupState):
         # state: (create_us, pre_create_pay_us). A pay observed BEFORE
         # any create is NOT an eligible settlement (the batch twin
         # takes min pay >= create, ORDER_TIMEOUT_SQL w2); it only
@@ -334,49 +340,30 @@ def order_timeout_stateful(
             create_us, pre_pay = state.get
             state.remove()
             if create_us is not None:
-                yield pd.DataFrame(
-                    [(key[0], key[1], create_us, None, "timeout_no_pay")],
-                    columns=cols,
-                )
-            elif pre_pay is not None:
-                yield pd.DataFrame(
-                    [(key[0], key[1], None, None, "payed_not_created")],
-                    columns=cols,
-                )
-            return
+                return [(key[0], key[1], create_us, None, "timeout_no_pay")]
+            if pre_pay is not None:
+                return [(key[0], key[1], None, None, "payed_not_created")]
+            return None
         create_us, pre_pay = state.get if state.exists else (None, None)
-        out = []
-        done = False
-        chunks = list(pdfs)
-        pdf = (pd.concat(chunks, ignore_index=True)
-               if len(chunks) > 1 else chunks[0] if chunks else None)
-        if pdf is not None:
-            pdf = pdf.sort_values(["__ts_us"])
-            for ts_us, etype in zip(pdf["__ts_us"], pdf["__etype"]):
-                if done:
-                    break
-                ts_us = int(ts_us)
-                if etype == "c":
-                    if create_us is None:
-                        create_us = ts_us
-                        pre_pay = None  # earlier pays are ineligible
-                elif create_us is not None and ts_us >= create_us:
-                    st = ("payed" if ts_us < create_us + timeout_us
-                          else "timeout_payed_late")
-                    out.append((key[0], key[1], create_us, ts_us, st))
-                    done = True
-                elif pre_pay is None:
-                    pre_pay = ts_us
-        if done:
-            state.remove()
-        else:
-            state.update((create_us, pre_pay))
-            # deadline in EVENT time: create + timeout, or a same-length
-            # grace period for a pay still waiting on its create
-            anchor = create_us if create_us is not None else pre_pay
-            state.setTimeoutTimestamp((anchor + timeout_us) // 1000)
-        if out:
-            yield pd.DataFrame(out, columns=cols)
+        for ts_us, etype in zip(rows["__ts_us"], rows["__etype"]):
+            ts_us = int(ts_us)
+            if etype == "c":
+                if create_us is None:
+                    create_us = ts_us
+                    pre_pay = None  # earlier pays are ineligible
+            elif create_us is not None and ts_us >= create_us:
+                st = ("payed" if ts_us < create_us + timeout_us
+                      else "timeout_payed_late")
+                state.remove()
+                return [(key[0], key[1], create_us, ts_us, st)]
+            elif pre_pay is None:
+                pre_pay = ts_us
+        state.update((create_us, pre_pay))
+        # deadline in EVENT time: create + timeout, or a same-length
+        # grace period for a pay still waiting on its create
+        anchor = create_us if create_us is not None else pre_pay
+        state.setTimeoutTimestamp((anchor + timeout_us) // 1000)
+        return None
 
     prepared = events.where(
         F.col(type_col).isin(create_value, pay_value)
@@ -388,105 +375,8 @@ def order_timeout_stateful(
         .otherwise(F.lit("p")).alias("__etype"),
         F.col(ts_col),
     )
-    return prepared.groupBy(*key_cols).applyInPandasWithState(
-        fn, out_schema, state_schema, "append",
-        GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def consecutive_fail_tws(
-    events: DataFrame,
-    n: int,
-    within_seconds: int,
-    fail_value: str = "error",
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    order_col: str = "event_id",
-) -> DataFrame:
-    """consecutive_fail_stateful on Spark 4's transformWithStateInPandas
-    — the successor API (SPARK-49564, public docs: StatefulProcessor /
-    StatefulProcessorHandle) with typed per-key state handles instead
-    of a single tuple blob, RocksDB-backed. Identical semantics and
-    output to the applyInPandasWithState form; the equivalence test
-    runs both against the same bounded replay.
-
-    Kept alongside (not replacing) the GroupState form: both APIs are
-    part of the engine surface SURVEY §7 step 8 names, and the old
-    one still runs on HDFS-backed state stores where RocksDB isn't
-    available.
-
-    Environment gate (this sandbox): the TWS python state server
-    speaks protobuf to the JVM, and `google.protobuf` is not
-    installed here (pip is unavailable), so the streaming query
-    crashes at init with STREAMING_PYTHON_RUNNER_INITIALIZATION_
-    FAILURE / ImportError google.protobuf — the equivalence test
-    skips cleanly on that signature and passes on any cluster with
-    protobuf present (it ships with every standard Spark distro).
-    """
-    from pyspark.sql.streaming import StatefulProcessor
-
-    out_schema = StructType([
-        StructField("user_id", LongType()),
-        StructField("first_fail_us", LongType()),
-        StructField("last_fail_us", LongType()),
-    ])
-    span_us = within_seconds * US
-    n_ = n
-
-    class _Proc(StatefulProcessor):
-        def init(self, handle):
-            self._buf = handle.getValueState(
-                "fails", StructType([StructField("packed", StringType())]))
-
-        def handleInputRows(self, key, rows, timerValues):
-            buf = []
-            if self._buf.exists():
-                (packed,) = self._buf.get()
-                buf = [int(x) for x in packed.split(",") if x]
-            out = []
-            # A key's rows may span several Arrow chunks; sorting each
-            # chunk independently would let the fail-run state machine
-            # see events out of global (ts, order) order, so buffer the
-            # whole group and sort ONCE (ADVICE r4).
-            chunks = [pdf for pdf in rows]
-            if chunks:
-                pdf = (chunks[0] if len(chunks) == 1
-                       else pd.concat(chunks, ignore_index=True))
-                pdf = pdf.sort_values(["__ts_us", "__ord"])
-                for ts_us, is_fail in zip(pdf["__ts_us"], pdf["__is_fail"]):
-                    if is_fail:
-                        buf.append(int(ts_us))
-                        if len(buf) > n_:
-                            buf.pop(0)
-                        if len(buf) == n_ and buf[-1] - buf[0] <= span_us:
-                            out.append((key[0], buf[0], buf[-1]))
-                    else:
-                        buf = []
-            self._buf.update((",".join(str(x) for x in buf),))
-            if out:
-                yield pd.DataFrame(
-                    out,
-                    columns=["user_id", "first_fail_us", "last_fail_us"])
-
-        def close(self):
-            # Required StatefulProcessor lifecycle hook (not a
-            # swallowed exception): we hold no resources outside the
-            # state store, so teardown is a no-op.
-            pass
-
-    prepared = events.select(
-        F.col(user_col),
-        F.unix_micros(F.col(ts_col)).alias("__ts_us"),
-        F.col(order_col).alias("__ord"),
-        (F.col(type_col) == fail_value).alias("__is_fail"),
-    )
-    return prepared.groupBy(user_col).transformWithStateInPandas(
-        statefulProcessor=_Proc(),
-        outputStructType=out_schema,
-        outputMode="append",
-        timeMode="None",
-    )
+    return _per_key(prepared, key_cols, step, out_schema, state_schema,
+                    GroupStateTimeout.EventTimeTimeout, ["__ts_us"])
 
 
 def asof_stateful(
@@ -560,29 +450,19 @@ def asof_stateful(
     idle_ttl_us = (None if idle_ttl_sec is None
                    else int(idle_ttl_sec * US))
 
-    def _unpack(packed: str) -> list[list[int]]:
-        return [[int(a), int(b)] for a, b in
-                (e.split(":") for e in packed.split(",") if e)]
-
-    def _pack(buf: list[list[int]]) -> str:
-        return ",".join(f"{t}:{i}" for t, i in buf)
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
+    def step(key, rows, state: GroupState):
         best, lefts, rights, last_us = None, [], [], 0
         if state.exists:
             b_packed, l_packed, r_packed, last_us = state.get
             b = _unpack(b_packed)
             best = b[0] if b else None
             lefts, rights = _unpack(l_packed), _unpack(r_packed)
-        chunks = list(pdfs)
-        pdf = (pd.concat(chunks, ignore_index=True)
-               if len(chunks) > 1 else chunks[0] if chunks else None)
-        if pdf is not None and len(pdf):
+        if len(rows):
             for ts_us, oid, side in zip(
-                    pdf["__ts_us"], pdf["__ord"], pdf["__side"]):
+                    rows["__ts_us"], rows["__ord"], rows["__side"]):
                 (lefts if side == "l" else rights).append(
                     [int(ts_us), int(oid)])
-            last_us = max(last_us, int(pdf["__ts_us"].max()))
+            last_us = max(last_us, int(rows["__ts_us"].max()))
         wm_us = state.getCurrentWatermarkMs() * 1000
         # decide every left strictly below the watermark: all rights
         # at-or-before it are final by now
@@ -628,10 +508,7 @@ def asof_stateful(
                 state.setTimeoutTimestamp(
                     max((last_us + idle_ttl_us) // 1000 + 1,
                         state.getCurrentWatermarkMs() + 1))
-        if out:
-            yield pd.DataFrame(
-                out, columns=[key_col, "left_id", "left_us",
-                              "right_id", "right_us"])
+        return out
 
     prepared = events.where(
         F.col(type_col).isin(left_value, right_value)
@@ -643,7 +520,6 @@ def asof_stateful(
         .otherwise(F.lit("r")).alias("__side"),
         F.col(ts_col),
     )
-    return prepared.groupBy(key_col).applyInPandasWithState(
-        fn, out_schema, state_schema, "append",
-        GroupStateTimeout.EventTimeTimeout,
-    )
+    # no sort: step sorts its decidable lefts itself
+    return _per_key(prepared, [key_col], step, out_schema, state_schema,
+                    GroupStateTimeout.EventTimeTimeout, [])

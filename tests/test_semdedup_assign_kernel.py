@@ -33,7 +33,11 @@ def test_assign_kernel_equals_sql_on_corpus(spark, sf_dir):
 
 def test_assign_kernel_edge_branches(spark):
     # zero centroid (whole column pinned 0.0), zero vector (sim 0.0),
-    # exact ties (argmax must take the FIRST max both sides)
+    # exact ties (argmax must take the FIRST max both sides), NULL
+    # vector (only the zero centroid's 0.0 survives array_max) and a
+    # ragged vector (a length mismatch is a NULL cosine, not a
+    # truncated dot); without the zero centroid both of the last two
+    # give a NULL cell and cent_sim
     cents = [[0.0, 0.0, 0.0, 0.0],
              [1.0, 0.0, 0.0, 0.0],
              [1.0, 0.0, 0.0, 0.0]]
@@ -41,9 +45,12 @@ def test_assign_kernel_edge_branches(spark):
         [(1, [0.0, 0.0, 0.0, 0.0]),
          (2, [0.5, 0.25, -0.125, 1.0]),
          (3, [1.0, 0.0, 0.0, 0.0]),
-         (4, [-1.0, 0.03125, 0.0, 0.0])],
+         (4, [-1.0, 0.03125, 0.0, 0.0]),
+         (5, None),
+         (6, [1.0, 0.5])],
         "vec_id long, embedding array<double>")
-    _assert_bit_equal(
-        _semdedup_assigned(vecs, cents, "vec_id", "embedding"),
-        _semdedup_assigned_sql(vecs, cents, "vec_id", "embedding"),
-        "edge")
+    for name, cs in (("edge", cents), ("edge-no-zero-centroid", cents[1:])):
+        _assert_bit_equal(
+            _semdedup_assigned(vecs, cs, "vec_id", "embedding"),
+            _semdedup_assigned_sql(vecs, cs, "vec_id", "embedding"),
+            name)

@@ -94,39 +94,48 @@ def test_consecutive_fail_stateful_equals_batch(spark, sf_dir):
     _assert_same(got, want, ["user_id", "first_fail_us", "last_fail_us"])
 
 
-def test_consecutive_fail_transform_with_state_equals_batch(spark, sf_dir):
-    """The Spark-4 transformWithStateInPandas twin must reproduce the
-    applyInPandasWithState operator's exact output (and therefore the
-    batch form's) on the same bounded replay. RocksDB provider is
-    required by the new API; skip cleanly if this build lacks it."""
-    import pytest
+def test_per_key_sorts_across_arrow_chunks(spark, tmp_path):
+    """The runner's ordering contract: with 2 records per Arrow batch a
+    6-row key reaches the worker as three chunks, and ``step`` must
+    still see the key's rows in one ascending ``(ts, event_id)`` run —
+    a per-chunk sort would hand it [5, 6, 3, 4, 1, 2]."""
+    from datetime import datetime, timezone
 
-    from flink_user_behavior_analysis_spark.streaming.stateful import (
-        consecutive_fail_tws,
-    )
+    from pyspark.sql.streaming.state import GroupStateTimeout
+    from pyspark.sql.types import (
+        LongType, StringType, StructField, StructType)
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass",
-                          None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider")
+    from flink_user_behavior_analysis_spark.streaming.stateful import _per_key
+
+    schema = "user_id long, ts timestamp, event_id long"
+    data = [(1, datetime.fromtimestamp(s, tz=timezone.utc).replace(
+        tzinfo=None), s) for s in range(6, 0, -1)]
+    d = str(tmp_path / "desc")
+    spark.createDataFrame(data, schema).coalesce(1).write.parquet(d)
+    ev = spark.readStream.schema(schema).parquet(d)
+    prepared = ev.select(
+        "user_id",
+        F.unix_micros("ts").alias("__ts_us"),
+        F.col("event_id").alias("__ord"))
+
+    def step(key, rows, state):
+        return [(key[0], ",".join(str(t // 1_000_000)
+                                  for t in rows["__ts_us"]))]
+
+    out_schema = StructType([StructField("user_id", LongType()),
+                             StructField("seen", StringType())])
+    state_schema = StructType([StructField("unused", LongType())])
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "2")
     try:
-        ev = stream_events(spark, sf_dir, watermark="0 seconds")
-        try:
-            got = run_available_now(
-                consecutive_fail_tws(ev, n=2, within_seconds=6 * 3600),
-                "append")
-        except Exception as exc:  # pragma: no cover - env-dependent
-            pytest.skip(f"transformWithStateInPandas unavailable: {exc}")
-        want = Q.QUERIES["login_fail"](spark, sf_dir)
-        _assert_same(got, want, ["user_id", "first_fail_us", "last_fail_us"])
+        got = run_available_now(
+            _per_key(prepared, ["user_id"], step, out_schema, state_schema,
+                     GroupStateTimeout.NoTimeout, ["__ts_us", "__ord"]),
+            "append")
+        assert [tuple(r) for r in got.collect()] == [(1, "1,2,3,4,5,6")]
     finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev)
+        spark.conf.set(key, prev)
 
 
 def test_cap_filter_stateful_equals_batch(spark, sf_dir):

@@ -1,10 +1,8 @@
-"""Probe the two environment gates once per round (VERDICT r13
+"""Probe the Kafka environment gate once per round (VERDICT r13
 stretch #8): the Kafka source/producer pair (S1/S4) activates only
-when a broker + the spark-sql-kafka jar are reachable, and the
-transformWithStateInPandas streaming twin needs google.protobuf in
-the Python workers. Both are honest clean-skip paths in this
-sandbox (DNS dead, protobuf absent) — this probe records the state
-per round so the moment either gate opens, the standing skips are
+when a broker + the spark-sql-kafka jar are reachable. It is an
+honest clean-skip path when DNS is dead — this probe records the
+state per round so the moment the gate opens, the standing skips are
 converted to real tests the same round instead of silently staying
 stale. Prints one JSON line for PERF.md.
 
@@ -21,12 +19,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    try:
-        import google.protobuf  # noqa: F401
-        protobuf = True
-    except ImportError:
-        protobuf = False
-
     from flink_user_behavior_analysis_spark.session import get_spark
     from flink_user_behavior_analysis_spark.sources.readers import (
         kafka_available,
@@ -38,10 +30,8 @@ def main() -> None:
     print(json.dumps({
         "probe": "env_gates",
         "kafka_available": kafka,
-        "google_protobuf": protobuf,
         "action": ("convert the matching pytest skips to live tests"
-                   if (kafka or protobuf) else
-                   "no change: both gates still closed"),
+                   if kafka else "no change: the gate is still closed"),
     }))
 
 
