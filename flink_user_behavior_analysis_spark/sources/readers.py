@@ -19,14 +19,76 @@ explain(): PushedFilters / ReadSchema on parquet).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import LongType, StructField, StructType
 
 from .. import schemas
 
 
 # --------------------------------------------------------------- testdata
+
+def _arrow_exact(t) -> bool:
+    """Whether from_arrow_type maps the Arrow type ``t`` to the type
+    Spark infers for the Parquet column it was written as."""
+    import pyarrow.types as pat
+
+    if pat.is_list(t) or pat.is_large_list(t):
+        return _arrow_exact(t.value_type)
+    if pat.is_struct(t):
+        return all(_arrow_exact(f.type) for f in t)
+    if pat.is_timestamp(t):
+        # Arrow reads INT96 and TIMESTAMP(NANOS) both as ns; Spark does not
+        return t.unit != "ns"
+    return (pat.is_boolean(t) or pat.is_signed_integer(t)
+            or pat.is_float32(t) or pat.is_float64(t) or pat.is_decimal(t)
+            or pat.is_string(t) or pat.is_large_string(t)
+            or pat.is_binary(t) or pat.is_large_binary(t) or pat.is_date32(t))
+
+
+def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema Spark infers for the Parquet table at ``path``, read
+    from one footer here in the driver; None where that cannot be done
+    exactly (a URI scheme, a missing path, a directory with
+    subdirectories, whose names may be partition columns, or a column
+    type outside ``_arrow_exact``)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    if "://" in path:
+        return None
+    if os.path.isfile(path):
+        first = path
+    elif os.path.isdir(path):
+        entries = sorted((e for e in os.scandir(path)
+                          if not e.name.startswith(("_", "."))),
+                         key=lambda e: e.name)
+        if not entries or any(e.is_dir() for e in entries):
+            return None
+        first = entries[0].path
+    else:
+        return None
+    footer = pq.ParquetFile(first)
+    leaves = footer.schema
+    physical = {leaves.column(i).path: leaves.column(i).physical_type
+                for i in range(len(leaves))}
+    conf = spark.conf
+    ntz = conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "true"
+    nanos_as_long = conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+    fields = []
+    for f in footer.schema_arrow:
+        if (f.type == pa.timestamp("ns") and physical.get(f.name) == "INT64"
+                and nanos_as_long):
+            fields.append(StructField(f.name, LongType()))
+        elif _arrow_exact(f.type):
+            fields.append(StructField(f.name, from_arrow_type(f.type, ntz)))
+        else:
+            return None
+    return StructType(fields)
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver testdata table (parquet, columnar, pushdown-able).
@@ -37,22 +99,31 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     DuckDB's reader produces for the same file (it truncates ns -> us),
     so oracle comparisons agree. Integer `div`, never double division:
     epoch-nanos exceed 2^53.
+
+    The reader is given the schema up front, read from the first
+    file's footer in the driver, because Spark's own inference runs
+    one Spark job per call to read that footer. Where the footer
+    schema cannot be read exactly (see ``_footer_schema``), Spark
+    infers it. Nothing is held between calls: each call lists the
+    table's files again, so a changed table is read as it now is.
     """
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        # nanosAsLong only fires for physical TIMESTAMP(NANOS); files
-        # written with micro precision (e.g. tools/make_scale.py output)
-        # need no truncation — only NTZ->TZ normalization (identity on
-        # values with the session pinned to UTC)
-        if isinstance(raw.schema["ts"].dataType, LongType):
-            raw = raw.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
-        else:
-            raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-        return raw
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    schema = _footer_schema(spark, path)
+    raw = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
+    return _events_ts(raw) if name == "events" else raw
+
+
+def _events_ts(raw: DataFrame) -> DataFrame:
+    """``events.ts`` as microsecond TimestampType. nanosAsLong only
+    fires for physical TIMESTAMP(NANOS); files written with micro
+    precision (e.g. tools/make_scale.py output) need no truncation —
+    only NTZ->TZ normalization (identity on values with the session
+    pinned to UTC)."""
+    if isinstance(raw.schema["ts"].dataType, LongType):
+        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
@@ -165,34 +236,24 @@ def file_replay_stream(
     ``events.ts`` needs the same nanos->micros normalization as the
     batch reader: the stream schema must describe the RAW file (int64
     nanos under nanosAsLong), with the cast applied on top, or the
-    parquet reader rejects the TIMESTAMP(NANOS) column.
+    parquet reader rejects the TIMESTAMP(NANOS) column. The schema is
+    the footer's, as in ``load_table``.
 
     The trailing ``parque[t]`` glob is deliberate: FileStreamSource
     insists on a directory/glob path ("Option 'basePath' must be a
     directory" on a plain file); a one-character glob makes it list
     the single file without any temp-dir staging.
     """
-    glob_path = f"{sf_dir}/{name}.parque[t]"
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw_schema = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
-        raw = (
-            spark.readStream.schema(raw_schema)
-            .option("maxFilesPerTrigger", str(max_files_per_trigger))
-            .parquet(glob_path)
-        )
-        # mirror load_table: only a physically-nanos file reads as int64
-        # and needs truncation; a micro-precision rewrite (e.g.
-        # tools/make_scale.py output) arrives as TimestampType already
-        if isinstance(raw_schema["ts"].dataType, LongType):
-            return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    batch = load_table(spark, sf_dir, name)
-    return (
-        spark.readStream.schema(batch.schema)
+    schema = _footer_schema(spark, path) or spark.read.parquet(path).schema
+    raw = (
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(glob_path)
+        .parquet(f"{sf_dir}/{name}.parque[t]")
     )
+    return _events_ts(raw) if name == "events" else raw
 
 
 def kafka_available(spark: SparkSession) -> bool:

@@ -1,9 +1,12 @@
 """Engine facade + CLI entry point."""
 
+import os
+
 import pytest
 
 from flink_user_behavior_analysis_spark.__main__ import main as cli_main
 from flink_user_behavior_analysis_spark.engine import Engine
+from flink_user_behavior_analysis_spark.queries_reference import FIXTURES
 
 
 def test_engine_query_and_sql(spark, sf_dir):
@@ -17,6 +20,10 @@ def test_engine_query_and_sql(spark, sf_dir):
         eng.query("nope")
 
 
+@pytest.mark.skipif(
+    not all(os.path.exists(p) for p in FIXTURES.values()),
+    reason="reference fixtures not available",
+)
 def test_engine_reference_query(spark, sf_dir):
     eng = Engine(sf_dir, spark=spark, register_sql_views=False)
     assert eng.reference_query("ref_login_fail").count() > 0

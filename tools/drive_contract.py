@@ -1,8 +1,10 @@
 """Driver-simulation: consume __spark_entry__ exactly as the round driver does."""
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# import the package from the checkout this script lives in
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as e
 

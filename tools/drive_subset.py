@@ -33,7 +33,8 @@ import re
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# import the package from the checkout this script lives in
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as e  # noqa: E402
 
