@@ -27,20 +27,19 @@ from pyspark.sql import functions as F
 
 
 def _band_condition(
-    left: DataFrame,
-    right: DataFrame,
     on: Sequence[str],
     left_ts: str,
     right_ts: str,
     lower_seconds: float,
     upper_seconds: float,
 ) -> Column:
-    """right.ts in [left.ts + lower, left.ts + upper] plus key equality."""
+    """right.ts in [left.ts + lower, left.ts + upper] plus key equality,
+    over the sides aliased ``left`` and ``right``."""
     lo_us = int(lower_seconds * 1_000_000)
     hi_us = int(upper_seconds * 1_000_000)
-    eq = [left[k] == right[k] for k in on]
-    l_us = F.unix_micros(left[left_ts])
-    r_us = F.unix_micros(right[right_ts])
+    eq = [F.col(f"left.{k}") == F.col(f"right.{k}") for k in on]
+    l_us = F.unix_micros(F.col(f"left.{left_ts}"))
+    r_us = F.unix_micros(F.col(f"right.{right_ts}"))
     band = (r_us >= l_us + F.lit(lo_us)) & (r_us <= l_us + F.lit(hi_us))
     return reduce(lambda a, b: a & b, eq + [band])
 
@@ -57,10 +56,11 @@ def interval_join(
 ) -> DataFrame:
     """Time-banded equi join (J1). Emits every qualifying pair, like
     Flink's intervalJoin (TxPayMatchByJoin.java:66 between(-3s, +5s)).
+    The sides are aliased ``left`` and ``right``: select their columns
+    as ``F.col("left.<name>")`` / ``F.col("right.<name>")``.
     """
-    cond = _band_condition(left, right, on, left_ts, right_ts,
-                           lower_seconds, upper_seconds)
-    return left.join(right, cond, how)
+    cond = _band_condition(on, left_ts, right_ts, lower_seconds, upper_seconds)
+    return left.alias("left").join(right.alias("right"), cond, how)
 
 
 def reconcile(
@@ -78,15 +78,16 @@ def reconcile(
     mirroring the reference's main + two side outputs
     (TxPayMatch.java:71-73, 157-163). The anti-joins reuse the same
     equi keys, so all three legs share one shuffle layout of each input.
+    The sides are aliased ``left`` and ``right`` as in ``interval_join``,
+    so the condition names each side explicitly even when both derive
+    from one frame (a self-join).
     """
-    cond = _band_condition(left, right, on, left_ts, right_ts,
-                           lower_seconds, upper_seconds)
-    matched = left.join(right, cond, "inner")
-    unmatched_left = left.join(right, cond, "left_anti")
+    cond = _band_condition(on, left_ts, right_ts, lower_seconds, upper_seconds)
+    lhs, rhs = left.alias("left"), right.alias("right")
+    matched = lhs.join(rhs, cond, "inner")
+    unmatched_left = lhs.join(rhs, cond, "left_anti")
     # anti-join with the band seen from the right side
-    rcond = _band_condition(left, right, on, left_ts, right_ts,
-                            lower_seconds, upper_seconds)
-    unmatched_right = right.join(left, rcond, "left_anti")
+    unmatched_right = rhs.join(lhs, cond, "left_anti")
     return {
         "matched": matched,
         "unmatched_left": unmatched_left,

@@ -500,10 +500,10 @@ def tx_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pay_ts", "receipt_ts", IJ_LO_S, IJ_HI_S,
     )
     return joined.select(
-        pays.user_id.alias("user_id"),
-        pays.item_id.alias("item_id"),
-        F.unix_micros(pays.pay_ts).alias("pay_us"),
-        F.unix_micros(receipts.receipt_ts).alias("receipt_us"),
+        F.col("left.user_id").alias("user_id"),
+        F.col("left.item_id").alias("item_id"),
+        F.unix_micros("left.pay_ts").alias("pay_us"),
+        F.unix_micros("right.receipt_ts").alias("receipt_us"),
     )
 
 
@@ -535,10 +535,10 @@ def tx_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     matched = legs["matched"].select(
         F.lit("matched").alias("kind"),
-        pays.user_id.alias("user_id"),
-        pays.item_id.alias("item_id"),
-        F.unix_micros(pays.pay_ts).alias("pay_us"),
-        F.unix_micros(receipts.receipt_ts).alias("receipt_us"),
+        F.col("left.user_id").alias("user_id"),
+        F.col("left.item_id").alias("item_id"),
+        F.unix_micros("left.pay_ts").alias("pay_us"),
+        F.unix_micros("right.receipt_ts").alias("receipt_us"),
     )
     up = legs["unmatched_left"].select(
         F.lit("unmatched_pay").alias("kind"),

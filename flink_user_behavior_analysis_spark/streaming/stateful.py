@@ -8,8 +8,8 @@ These mirror the reference's KeyedProcessFunction state machines:
   recent fails, warn when n fails land within the span, success clears)
 - cap_filter_stateful        <- AdStatisticsByProvinceWithoutBlacklist
   .java:117-179 (per-key count state, one warning at cap+1; the
-  midnight-reset timer becomes part of the key (day) — same semantics,
-  no timer needed)
+  midnight-reset timer becomes part of the sub-key (day) — same
+  semantics, no timer needed)
 - reconcile_stateful         <- TxPayMatch.java:65-170 (per-side state
   + timers, unmatched side outputs)
 - order_timeout_stateful     <- OrderTimeoutWithoutCEP.java:68-161
@@ -17,9 +17,45 @@ These mirror the reference's KeyedProcessFunction state machines:
   .EventTimeTimeout fires when the watermark passes create+timeout)
 - asof_stateful              <- streaming twin of operators/asof.py
 
-State is bounded per key (a few scalars / a <=n-element buffer), so a
-1000-executor run holds state proportional to live keys only — same
-asymptotics as the reference's RocksDB-backed keyed state.
+State is bounded per key (a few scalars / a <=n-element buffer per
+sub-key), so a 1000-executor run holds state proportional to live keys
+only — same asymptotics as the reference's RocksDB-backed keyed state.
+
+Keys and state rows. pyspark pays a fixed cost per group and trigger
+before ``step`` sees a row: it turns the group's Arrow slice into
+pandas, builds a GroupState and reads and writes the group's state
+row. So the grouping key, not the row count, sets what a micro-batch
+costs, and each operator groups by the coarsest key its machine
+allows, keeping finer sub-keys inside the state row:
+
+- consecutive_fail_stateful: user; ``fails`` is the packed ts buffer.
+- cap_filter_stateful: user; ``counts`` is
+  ``array<struct<behavior, day, cnt>>``, one count per (behavior, day).
+- reconcile_stateful: ``key_cols[0]`` (user); ``items`` is
+  ``array<struct<item, pays, receipts>>``, the per-side
+  ``"ts_us:matched"`` buffers of each live item, and the one timer is
+  the earliest live deadline over the items.
+- order_timeout_stateful: (user, item), one timer per pair.
+- asof_stateful: ``key_col``; best right, pending lefts and rights,
+  last event time.
+
+A NULL sub-key (behavior, item) is its own entry, as it was its own
+group when the sub-key was part of the grouping key. On the
+benchmark's ``alert_stream`` replay (50 users, ~30 rows per user and
+micro-batch) keying cap_filter by (user, behavior, day) and reconcile
+by (user, item) split each user's rows into ~25 and ~12 groups; a
+traced run (4 cores) spent 2885 ms of state update on cap_filter's
+first micro-batch of 1,219 groups, ~2.4 ms per group. Keyed by user,
+the two operators hold 50 state rows each instead of 2,489 and 591,
+and that micro-batch's state update takes 1189 ms. CHANGES.md has the
+paired runs.
+
+Checkpoints: a checkpoint records each operator's key and state
+schema. One written while cap_filter or reconcile was keyed by
+(user, sub-key) cannot be restarted by this code: Spark 4.1 fails the
+first micro-batch after the restart with
+STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE, before writing output. Such a
+query restarts from a new checkpoint location (replaying its input).
 
 Each operator is a ``prepared`` projection plus a state-machine
 ``step(key, rows, state)``; ``_per_key`` is the one place that runs
@@ -42,6 +78,7 @@ operators/asof.py; tests assert equal output on bounded replays
 
 from __future__ import annotations
 
+from collections import Counter
 from typing import Callable, Iterator, Sequence
 
 import pandas as pd
@@ -49,6 +86,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
+    ArrayType,
     LongType,
     StringType,
     StructField,
@@ -162,33 +200,44 @@ def cap_filter_stateful(
 ) -> DataFrame:
     """Streaming F6: per (user, behavior, day) pass while count < cap,
     emit ONE warning when the (cap+1)-th event arrives. The reference's
-    midnight state-clear timer is replaced by day-scoped keys — old
-    days' state is droppable by watermark (document: production would
-    add a timeout to evict prior-day keys). Only the count matters, so
-    rows are neither ordered nor iterated (``order_col`` is unused and
-    kept for signature compatibility)."""
+    midnight state-clear timer is replaced by day-scoped counts — old
+    days' counts are droppable by watermark (document: production would
+    add a timeout to evict prior-day counts). Keyed by user; the state
+    row holds a count per (behavior, day). Only the counts matter, so
+    rows are not ordered (``order_col`` is unused and kept for
+    signature compatibility)."""
     out_schema = StructType([
         StructField("user_id", LongType()),
         StructField("behavior", StringType()),
         StructField("day", StringType()),
         StructField("warning_msg", StringType()),
     ])
-    state_schema = StructType([StructField("cnt", LongType())])
+    state_schema = StructType([StructField("counts", ArrayType(StructType([
+        StructField("behavior", StringType()),
+        StructField("day", StringType()),
+        StructField("cnt", LongType()),
+    ])))])
+    msg = f"click over {cap} times today"
 
     def step(key, rows, state: GroupState):
-        cnt = state.get[0] if state.exists else 0
-        state.update((cnt + len(rows),))
-        if cnt <= cap < cnt + len(rows):
-            return [(key[0], key[1], key[2], f"click over {cap} times today")]
-        return None
+        counts = ({(b, d): c for b, d, c in state.get[0]}
+                  if state.exists else {})
+        out = []
+        for sub, n in Counter(zip(rows["behavior"], rows["day"])).items():
+            cnt = counts.get(sub, 0)
+            counts[sub] = cnt + n
+            if cnt <= cap < cnt + n:
+                out.append((key[0], sub[0], sub[1], msg))
+        state.update(([(b, d, c) for (b, d), c in counts.items()],))
+        return out
 
     prepared = events.select(
         F.col(user_col),
         F.col(behavior_col).alias("behavior"),
         F.date_format(F.date_trunc("day", F.col(ts_col)), "yyyy-MM-dd").alias("day"),
     )
-    return _per_key(prepared, [user_col, "behavior", "day"], step,
-                    out_schema, state_schema, GroupStateTimeout.NoTimeout, [])
+    return _per_key(prepared, [user_col], step, out_schema, state_schema,
+                    GroupStateTimeout.NoTimeout, [])
 
 
 def reconcile_stateful(
@@ -219,6 +268,12 @@ def reconcile_stateful(
     event-time timer at the earliest pending deadline so idle keys
     still flush — exactly the reference's per-side ValueState + timer
     shape, with state bounded by the band width per key.
+
+    Grouped by ``key_cols[0]`` alone; the state row holds the buffers
+    of each live ``key_cols[1]`` value. That sub-key travels as a
+    NULL-free long plus a NULL flag, so it stays exact (a nullable long
+    holding a NULL reaches pandas as float64) and NULL stays its own
+    sub-key.
     """
     out_schema = StructType([
         StructField("kind", StringType()),
@@ -229,75 +284,85 @@ def reconcile_stateful(
     ])
     # per-side buffer packed as "ts_us:matched_flag," strings — a few
     # band-widths of events per key, never unbounded
-    state_schema = StructType([
+    state_schema = StructType([StructField("items", ArrayType(StructType([
+        StructField("item", LongType()),
         StructField("pays", StringType()),
         StructField("receipts", StringType()),
-    ])
+    ])))])
     lo_us = int(lower_seconds * US)
     hi_us = int(upper_seconds * US)
 
     def step(key, rows, state: GroupState):
-        pays, receipts = ([], [])
-        if state.exists:
-            p_packed, r_packed = state.get
-            pays, receipts = _unpack(p_packed), _unpack(r_packed)
+        uid = key[0]
+        items = ({item: (_unpack(p), _unpack(r)) for item, p, r in state.get[0]}
+                 if state.exists else {})
         out = []
-        for ts_us, etype in zip(rows["__ts_us"], rows["__etype"]):
+        for item, no_item, ts_us, etype in zip(
+                rows["__item"], rows["__no_item"], rows["__ts_us"],
+                rows["__etype"]):
+            item = None if no_item else int(item)
             ts_us = int(ts_us)
+            pays, receipts = items.setdefault(item, ([], []))
             matched = 0
             if etype == "l":
                 for r in receipts:
                     if lo_us <= r[0] - ts_us <= hi_us:
-                        out.append(("matched", key[0], key[1], ts_us, r[0]))
+                        out.append(("matched", uid, item, ts_us, r[0]))
                         r[1] = matched = 1
                 pays.append([ts_us, matched])
             else:
                 for p in pays:
                     if lo_us <= ts_us - p[0] <= hi_us:
-                        out.append(("matched", key[0], key[1], p[0], ts_us))
+                        out.append(("matched", uid, item, p[0], ts_us))
                         p[1] = matched = 1
                 receipts.append([ts_us, matched])
         # expire: a pay's last eligible receipt is pay+upper, a
         # receipt's last eligible pay is receipt-lower — both decided
         # once the watermark passes the deadline
         wm_us = state.getCurrentWatermarkMs() * 1000
-        live_p, live_r = [], []
-        for t, m in pays:
-            if t + hi_us <= wm_us:
-                if not m:
-                    out.append(("unmatched_pay", key[0], key[1], t, None))
-            else:
-                live_p.append([t, m])
-        for t, m in receipts:
-            if t - lo_us <= wm_us:
-                if not m:
-                    out.append(("unmatched_receipt", key[0], key[1], None, t))
-            else:
-                live_r.append([t, m])
-        if not live_p and not live_r:
+        live, deadlines = [], []
+        for item, (pays, receipts) in items.items():
+            live_p, live_r = [], []
+            for t, m in pays:
+                if t + hi_us <= wm_us:
+                    if not m:
+                        out.append(("unmatched_pay", uid, item, t, None))
+                else:
+                    live_p.append([t, m])
+                    deadlines.append(t + hi_us)
+            for t, m in receipts:
+                if t - lo_us <= wm_us:
+                    if not m:
+                        out.append(("unmatched_receipt", uid, item, None, t))
+                else:
+                    live_r.append([t, m])
+                    deadlines.append(t - lo_us)
+            if live_p or live_r:
+                live.append((item, _pack(live_p), _pack(live_r)))
+        if not live:
             if state.exists:
                 state.remove()
         else:
-            state.update((_pack(live_p), _pack(live_r)))
-            deadline_us = min([t + hi_us for t, _ in live_p]
-                              + [t - lo_us for t, _ in live_r])
+            state.update((live,))
             state.setTimeoutTimestamp(
-                max(deadline_us // 1000, state.getCurrentWatermarkMs() + 1)
+                max(min(deadlines) // 1000, state.getCurrentWatermarkMs() + 1)
             )
         return out
 
+    item_col = F.col(key_cols[1])
     prepared = events.where(
         F.col(type_col).isin(left_value, right_value)
     ).select(
         F.col(key_cols[0]),
-        F.col(key_cols[1]),
+        F.coalesce(item_col, F.lit(0)).alias("__item"),
+        item_col.isNull().alias("__no_item"),
         F.unix_micros(F.col(ts_col)).alias("__ts_us"),
         F.col(order_col).alias("__ord"),
         F.when(F.col(type_col) == left_value, F.lit("l"))
         .otherwise(F.lit("r")).alias("__etype"),
         F.col(ts_col),
     )
-    return _per_key(prepared, key_cols, step, out_schema, state_schema,
+    return _per_key(prepared, [key_cols[0]], step, out_schema, state_schema,
                     GroupStateTimeout.EventTimeTimeout, ["__ts_us", "__ord"])
 
 

@@ -39,3 +39,20 @@ def test_nonempty_results(spark, sf_dir):
     ]
     for name in must_be_nonempty:
         assert Q.QUERIES[name](spark, sf_dir).count() > 0, name
+
+
+@pytest.mark.parametrize("name", ["tx_interval_join", "tx_match"])
+def test_self_join_needs_no_ambiguity_rewrite(spark, sf_dir, name):
+    """Pays and receipts both derive from one ``events`` frame, so the
+    join condition must name its sides (the ``left``/``right`` aliases of
+    operators/joins.py). Comparing ``pays[k] == receipts[k]`` instead
+    is ``k == k`` on one attribute, right only while
+    ``selfJoinAutoResolveAmbiguity`` rewrites it; with the rewrite off
+    it joins every pay to every receipt."""
+    key = "spark.sql.selfJoinAutoResolveAmbiguity"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        compare(Q.QUERIES[name](spark, sf_dir), Q.ORACLES[name], sf_dir)
+    finally:
+        spark.conf.set(key, prev)

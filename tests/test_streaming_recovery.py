@@ -7,13 +7,22 @@ from pyspark.sql import functions as F
 
 from flink_user_behavior_analysis_spark import queries as Q
 from flink_user_behavior_analysis_spark.sources import load_table
-from flink_user_behavior_analysis_spark.streaming import consecutive_fail_stateful
+from flink_user_behavior_analysis_spark.streaming import (
+    cap_filter_stateful,
+    consecutive_fail_stateful,
+    reconcile_stateful,
+)
 
 
-def _run_once(spark, src_dir, ckpt, out_dir, raw_schema):
+def _consecutive_fail(ev):
+    return consecutive_fail_stateful(ev, n=2, within_seconds=6 * 3600)
+
+
+def _run_once(spark, src_dir, ckpt, out_dir, raw_schema,
+              build=_consecutive_fail):
     raw = spark.readStream.schema(raw_schema).parquet(src_dir)
     ev = raw.withWatermark("ts", "0 seconds")
-    out = consecutive_fail_stateful(ev, n=2, within_seconds=6 * 3600)
+    out = build(ev)
     q = (
         out.writeStream.format("parquet")
         .option("path", out_dir)
@@ -62,6 +71,63 @@ def test_consecutive_fail_survives_restart(spark, sf_dir, tmp_path):
     # cross-restart runs exist: some warning spans the checkpoint cut
     spanning = [r for r in second if r.first_fail_us <= mid_us]
     assert spanning, "no fail-run crossed the restart boundary"
+
+
+def _two_phase(spark, ev, cut, tmp_path, build):
+    """Drain ``ev`` up to ``cut``, then restart the same checkpoint after
+    the rest arrives; return (phase-1 rows, rows of both phases)."""
+    src, ckpt, out_dir = (str(tmp_path / d) for d in ("src", "ckpt", "out"))
+    ev.where(F.col("ts") <= cut).coalesce(1).write.parquet(src)
+    first = _run_once(spark, src, ckpt, out_dir, ev.schema, build)
+    ev.where(F.col("ts") > cut).coalesce(1).write.mode("append").parquet(src)
+    both = _run_once(spark, src, ckpt, out_dir, ev.schema, build)
+    return first, both
+
+
+def test_cap_filter_survives_restart(spark, sf_dir, tmp_path):
+    """The per-user count state carries a (behavior, day) count across
+    the restart: the cut falls after the first event of a group whose
+    warning fires after it."""
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id", "ts", "user_id", F.col("event_type").alias("behavior"))
+    want = sorted(tuple(r) for r in Q.QUERIES["blacklist_warnings"](
+        spark, sf_dir).collect())
+    u, b, day, _ = want[0]
+    first_us = ev.where(
+        (F.col("user_id") == u) & (F.col("behavior") == b)
+        & (F.date_format("ts", "yyyy-MM-dd") == day)
+    ).agg(F.min(F.unix_micros("ts"))).first()[0]
+    first, both = _two_phase(
+        spark, ev, F.timestamp_micros(F.lit(first_us)), tmp_path,
+        lambda e: cap_filter_stateful(e, cap=Q.BL_CAP))
+    assert sorted(tuple(r) for r in both) == want
+    assert (u, b, day) not in {(r.user_id, r.behavior, r.day) for r in first}
+
+
+def test_reconcile_survives_restart(spark, sf_dir, tmp_path):
+    """A pay buffered before the restart matches its receipt after it;
+    the matched leg equals the batch twin and every unmatched row is in
+    it. sf0.001 holds no matched pair, so the input is the split test's
+    (sf0.001 plus edge rows, among them one matched pair next to a
+    NULL-item pay of the same user)."""
+    from .test_streaming_split import _events_with_edges, _write_replay
+
+    whole = _write_replay(str(tmp_path / "whole"), _events_with_edges(sf_dir),
+                          [])
+    ev = Q._with_item(load_table(spark, whole, "events")).select(
+        "event_id", "ts", "user_id", "item_id", "event_type")
+    want = [tuple(r) for r in Q.QUERIES["tx_match"](spark, whole).collect()]
+    want_m = sorted(r for r in want if r[0] == "matched")
+    pay_us, receipt_us = next((p, r) for _, _, _, p, r in want_m if p < r)
+    cut = F.timestamp_micros(F.lit(pay_us))
+    first, both = _two_phase(
+        spark, ev, cut, tmp_path,
+        lambda e: reconcile_stateful(e, Q.IJ_LO_S, Q.IJ_HI_S))
+    got = [tuple(r) for r in both]
+    assert sorted(r for r in got if r[0] == "matched") == want_m
+    assert set(got) <= set(want)
+    assert any(r[0] == "matched" and r[3] == pay_us and r[4] == receipt_us
+               for r in got if r not in first)
 
 
 def test_streaming_ingest_exactly_once_across_restart(spark, sf_dir,
