@@ -225,24 +225,6 @@ HEADLINE = [
     "frame_sample",
 ]
 
-# Queries whose signature hashing routes through operators.dedup.sig_hash
-# — the only code the SPARK_GRAFT_FAST_HASH knob changes. Timed a second
-# time with the knob on; reported under "fast_hash" in the JSON line.
-#
-# dedup_simhash RETIRED from this list (VERDICT r12 #5): under the
-# fullhash consumer a quiet min-of-6 A/B read md5 1.658 s vs fast
-# 2.015 s (every fast run slower than every md5 run; the r12 driver
-# sample and the r13 round-open run agreed) — SimHash's per-bit
-# extraction dominates its wall, so swapping the seed hash only adds
-# plan-cache churn. The three kept rows win on fast hash in the same
-# study: minhash_lsh 1.120->1.033, clusters 2.333->2.025, incremental
-# 1.829->1.352 (PERF.md r13).
-FAST_HASH_QUERIES = [
-    "dedup_minhash_lsh",
-    "dedup_clusters",
-    "dedup_incremental",
-]
-
 # Train-vs-serve split (VERDICT r7 #3): these inline entries refit
 # their model — and rescan brute-force truth — on EVERY call; they are
 # self-certifying correctness forms, not the serving path. Their
@@ -841,48 +823,12 @@ def main() -> None:
               f"build={build} shared={shared} "
               f"probe={per_query[stored]:.3f}s", file=sys.stderr)
 
-    # Production-hash column (VERDICT r4 item 8): re-time the queries
-    # whose signatures route through the sig_hash seam with
-    # SPARK_GRAFT_FAST_HASH=1 (xxhash64 instead of oracle-portable
-    # md5), so the production speedup is tracked per-round instead of
-    # as a one-off PERF.md note. Same warm+min-of-2 protocol; the
-    # xxhash64 plans are distinct codegen classes, so they get their
-    # own sf0.001 warmup pass.
-    fast_hash: dict[str, float] = {}
-    os.environ["SPARK_GRAFT_FAST_HASH"] = "1"
-    try:
-        for name in FAST_HASH_QUERIES:
-            fn = Q.QUERIES.get(name)
-            if fn is None:
-                continue
-            try:
-                _consume(fn(spark, warm_dir))
-                release_signature_cache()
-            except Exception as exc:  # pragma: no cover
-                print(f"# fast-hash warmup {name} failed: {exc}",
-                      file=sys.stderr)
-                continue
-            best = None
-            for _ in range(2):
-                t0 = time.perf_counter()
-                _consume(fn(spark, sf_dir))
-                dt = time.perf_counter() - t0
-                best = dt if best is None else min(best, dt)
-                release_signature_cache()
-            fast_hash[name] = round(best, 3)
-            print(f"# fast_hash {name}: {fast_hash[name]:.3f}s "
-                  f"(md5 {per_query.get(name, float('nan')):.3f}s)",
-                  file=sys.stderr)
-    finally:
-        os.environ.pop("SPARK_GRAFT_FAST_HASH", None)
-
     total = round(sum(per_query.values()), 3)
     payload = {
         "metric": "headline_queries_total_wall",
         "value": total,
         "unit": "sec",
         "queries": per_query,
-        "fast_hash": fast_hash,
         "train_vs_serve": train_vs_serve,
         # machine-state + instability evidence (VERDICT r8 #2): rows
         # that needed adjudication reruns, with their full timing

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .arrow_kernel import map_arrow, token_starts
 from .dedup import md5_long, with_tokens
 
 
@@ -248,63 +249,41 @@ def _span_instances(sized: DataFrame, k: int, id_col: str) -> DataFrame:
     """(id, pos, fp) for every stride-1 k-token span of docs with
     >= k tokens (1-based positions).
 
-    r14 (guide §4.2): the former JVM form evaluated
-    ``transform(sequence(...), i -> md5(concat_ws(' ', slice(...))))``
-    — an interpreted (CodegenFallback) lambda allocating a k-token
-    array and rebuilding the span string per span. The fingerprints
-    now come from an Arrow kernel that rejoins the (single-space)
-    token stream once per doc, byte-slices each span out of it via
-    precomputed token offsets, and md5s the slice — the identical
-    bytes, so the identical hex fingerprints (normalized text is pure
-    ASCII by construction: [a-z0-9 ]). The n_tokens >= k filter stays
-    a JVM scan predicate, and the doc-keyed repartition upstream
-    (with_tokens) spreads the kernel work exactly as before."""
-    from pyspark.sql.pandas.types import to_arrow_type
+    The fingerprints come from an Arrow kernel that rejoins the
+    (single-space) token stream once per doc, byte-slices each span out
+    of it (``token_starts``) and md5s the slice: the bytes of
+    ``md5(concat_ws(' ', slice(tokens, i, k)))``, so the same hex
+    fingerprints, without an interpreted lambda building a k-token
+    array per span. The n_tokens >= k filter stays a JVM scan
+    predicate, and the doc-keyed repartition upstream (with_tokens)
+    spreads the kernel work."""
     from pyspark.sql.types import (LongType, StringType, StructField,
                                    StructType)
 
-    id_type = sized.schema[id_col].dataType
-    id_arrow = to_arrow_type(id_type)
     out_schema = StructType([
-        StructField(id_col, id_type),
+        StructField(id_col, sized.schema[id_col].dataType),
         StructField("pos", LongType()),
         StructField("fp", StringType()),
     ])
 
-    def _spans(batches):
-        import hashlib
+    def _spans(batch):
+        from hashlib import md5
 
-        import pyarrow as pa
+        out_ids, out_pos, out_fp = [], [], []
+        for rid, s in zip(batch.column(0).to_pylist(),
+                          batch.column(1).to_pylist()):
+            b = s.encode()
+            starts = token_starts(s, b)
+            for i in range(len(starts) - k):
+                out_ids.append(rid)
+                out_pos.append(i + 1)
+                out_fp.append(md5(b[starts[i]:starts[i + k] - 1]).hexdigest())
+        return out_ids, out_pos, out_fp
 
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            out_ids, out_pos, out_fp = [], [], []
-            md5 = hashlib.md5
-            for rid, s in zip(ids, texts):
-                b = s.encode()
-                # token byte offsets over the single-space-joined
-                # stream (ASCII: char offsets == byte offsets)
-                starts = [0]
-                for t in s.split(" "):
-                    starts.append(starts[-1] + len(t) + 1)
-                n = len(starts) - 1
-                for i in range(n - k + 1):
-                    out_ids.append(rid)
-                    out_pos.append(i + 1)
-                    out_fp.append(
-                        md5(b[starts[i]:starts[i + k] - 1]).hexdigest())
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_ids, type=id_arrow),
-                 pa.array(out_pos, type=pa.int64()),
-                 pa.array(out_fp, type=pa.string())],
-                [id_col, "pos", "fp"])
-
-    return sized.where(F.col("n_tokens") >= k).select(
-        F.col(id_col), F.concat_ws(" ", F.col("tokens")).alias("_nt")
-    ).mapInArrow(_spans, out_schema)
+    return map_arrow(sized.where(F.col("n_tokens") >= k),
+                     [F.col(id_col),
+                      F.concat_ws(" ", F.col("tokens")).alias("_nt")],
+                     out_schema, _spans)
 
 
 def _span_coverage(sized: DataFrame, dup: DataFrame, k: int,

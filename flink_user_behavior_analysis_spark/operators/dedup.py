@@ -34,12 +34,13 @@ should be salted or dropped by a bucket-size cap before the pair join
 from __future__ import annotations
 
 import logging
-import os
 import threading
 import weakref
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .arrow_kernel import map_arrow, md5_60
 
 
 def md5_long(col: Column) -> Column:
@@ -48,30 +49,6 @@ def md5_long(col: Column) -> Column:
     DuckDB equivalent: ('0x' || substr(md5(x), 1, 15))::BIGINT.
     """
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def use_fast_hash() -> bool:
-    """Production knob: SPARK_GRAFT_FAST_HASH=1 swaps the md5-derived
-    signature hash for JVM xxhash64 at the cost of oracle portability
-    (DuckDB has no xxhash64, so fast-hash runs skip the SQL oracles;
-    the LSH/SimHash pair SEMANTICS are hash-agnostic — recall tests
-    hold under either primitive). Read per call so tests can toggle."""
-    return os.environ.get("SPARK_GRAFT_FAST_HASH", "0") == "1"
-
-
-def sig_hash(col: Column) -> Column:
-    """Signature-hash seam for MinHash/SimHash: portable md5_long by
-    default (bit-identical in DuckDB — the oracle-parity tax PERF.md
-    measures at ~5x vs xxhash64); xxhash64 masked into the same
-    non-negative 60-bit domain when fast hashing is enabled.
-
-    Split/sample assignment (operators/sampling.py) deliberately does
-    NOT route through this seam: split stability across engines and
-    dataset versions is the product feature there, so it stays md5.
-    """
-    if use_fast_hash():
-        return F.xxhash64(col).bitwiseAND(F.lit((1 << 60) - 1))
-    return md5_long(col)
 
 
 # Persisted-frame registry, keyed per SparkSession so one session's
@@ -305,7 +282,7 @@ def minhash_signatures(docs: DataFrame, k: int = 12,
     sh = with_shingles(docs, id_col, text_col, n)
     ex = sh.select(F.col(id_col), F.explode_outer("shingles").alias("shingle"))
     aggs = [
-        F.min(sig_hash(F.concat_ws("|", F.lit(str(i)), F.col("shingle"))))
+        F.min(md5_long(F.concat_ws("|", F.lit(str(i)), F.col("shingle"))))
         .alias(f"mh{i}")
         for i in range(k)
     ]
@@ -390,99 +367,47 @@ def simhash_signatures(docs: DataFrame, id_col: str = "doc_id",
     is positive. The sum is linear in occurrences, so it needs no
     per-(doc, word) count stage.
 
-    md5 path (r14, guide §4.2): the signature is md5-bound and
-    strictly per-document, so it runs as ONE mapInArrow kernel — each
-    doc's distinct words are hashed once with C hashlib
-    (int(hexdigest[:15], 16) == md5_long exactly), the 60 bit sums
-    are one (words x 60) numpy reduction weighted by occurrence
-    counts (pure integer arithmetic, bit-identical to the 60
-    conditional JVM sums by linearity), and the exploded token rows
-    never exist Spark-side. The previous form exploded every token
-    instance and ran 60 codegen'd conditional sums through a
-    groupBy(id) — the r13 fast-hash A/B measured that row
-    bit-extraction-bound, which is exactly the part numpy vectorizes.
-    The fast-hash path (xxhash64 — JVM-only primitive) keeps the
-    explode + groupBy expression form.
+    The signature is md5-bound and strictly per-document, so it runs
+    as ONE Arrow kernel: each doc's distinct words are hashed once with
+    C hashlib (``md5_60`` == md5_long), and the 60 bit sums are one
+    (words x 60) numpy reduction weighted by occurrence counts (integer
+    arithmetic, bit-identical to 60 conditional sums by linearity); the
+    exploded token rows never exist Spark-side. NULL text gives 0 (the
+    explode_outer form this replaced saw one NULL word, whose NULL hash
+    fails every bit test).
     """
-    if use_fast_hash():
-        words = with_tokens(docs, id_col, text_col).select(
-            F.col(id_col), F.explode_outer("tokens").alias("word")
-        )
-        inst = words.withColumn("h", sig_hash(F.col("word")))
-        bit_sums = [
-            F.sum(
-                F.when(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) == 1,
-                       F.lit(1)).otherwise(-1)
-            ).alias(f"s{j}")
-            for j in range(SIMHASH_BITS)
-        ]
-        sums = inst.groupBy(id_col).agg(*bit_sums)
-        sim = None
-        for j in range(SIMHASH_BITS):
-            term = F.when(F.col(f"s{j}") > 0,
-                          F.lit(1).cast("long") * (1 << j)).otherwise(0)
-            sim = term if sim is None else sim + term
-        return sums.select(F.col(id_col), sim.alias("simhash"))
-
-    from pyspark.sql.pandas.types import to_arrow_type
     from pyspark.sql.types import LongType, StructField, StructType
 
-    id_type = docs.schema[id_col].dataType
-    id_arrow = to_arrow_type(id_type)
     out_schema = StructType([
-        StructField(id_col, id_type),
+        StructField(id_col, docs.schema[id_col].dataType),
         StructField("simhash", LongType()),
     ])
     n_bits = SIMHASH_BITS
 
-    def _simhash(batches):
-        import hashlib
-
+    def _simhash(batch):
         import numpy as np
-        import pyarrow as pa
 
-        md5 = hashlib.md5
         shifts = np.arange(n_bits, dtype=np.int64)
         weights = np.int64(1) << shifts
-        for batch in batches:
-            if batch.num_rows == 0:
+        out = []
+        for s in batch.column(1).to_pylist():
+            if s is None:
+                out.append(0)
                 continue
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            out_ids, out_sim = [], []
-            for rid, s in zip(ids, texts):
-                if s is None:
-                    # explode_outer emits one NULL word; its NULL hash
-                    # fails every bit test -> -1 per bit -> all bits 0
-                    out_ids.append(rid)
-                    out_sim.append(0)
-                    continue
-                toks = s.split(" ")
-                n = len(toks)
-                cnt: dict = {}
-                for t in toks:
-                    cnt[t] = cnt.get(t, 0) + 1
-                h = np.fromiter(
-                    (int(md5(wd.encode()).hexdigest()[:15], 16)
-                     for wd in cnt),
-                    dtype=np.int64, count=len(cnt))
-                c = np.fromiter(cnt.values(), dtype=np.int64,
-                                count=len(cnt))
-                bits = (h[:, None] >> shifts) & 1
-                sj = 2 * (c @ bits) - n
-                out_ids.append(rid)
-                out_sim.append(int(weights[sj > 0].sum()))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_ids, type=id_arrow),
-                 pa.array(out_sim, type=pa.int64())],
-                [id_col, "simhash"])
+            toks = s.split(" ")
+            cnt: dict = {}
+            for t in toks:
+                cnt[t] = cnt.get(t, 0) + 1
+            h = np.fromiter((md5_60(wd.encode()) for wd in cnt),
+                            dtype=np.int64, count=len(cnt))
+            c = np.fromiter(cnt.values(), dtype=np.int64, count=len(cnt))
+            sj = 2 * (c @ ((h[:, None] >> shifts) & 1)) - len(toks)
+            out.append(int(weights[sj > 0].sum()))
+        return batch.column(0), out
 
-    n_parts = docs.sparkSession.sparkContext.defaultParallelism
-    return (
-        docs.select(F.col(id_col), normalized_text(text_col).alias("_nt"))
-        .repartition(n_parts, id_col)
-        .mapInArrow(_simhash, out_schema)
-    )
+    return map_arrow(docs, [F.col(id_col),
+                            normalized_text(text_col).alias("_nt")],
+                     out_schema, _simhash, partition_by=id_col)
 
 
 def simhash_pairs(docs: DataFrame, max_hamming: int = 3,

@@ -33,6 +33,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .arrow_kernel import list_matrix, map_arrow, md5_60
+
 
 def _segment_sums(cent, fx):
     """(uniq, sums, counts): int64 column sums of ``fx`` grouped by
@@ -51,6 +53,31 @@ def _segment_sums(cent, fx):
     return uniq, sums, counts
 
 
+def _partial_rows(cent, fx):
+    """(cent, dim, s, n) columns of the fixed-point partial update of one
+    batch: per assigned centroid and dimension, the int64 sum of ``fx``
+    and the row count."""
+    import numpy as np
+
+    uniq, sums, counts = _segment_sums(cent, fx)
+    d = fx.shape[1]
+    return (np.repeat(uniq, d), np.tile(np.arange(d), uniq.size),
+            sums.ravel(), np.repeat(counts, d))
+
+
+def _fold_norm(x):
+    """Row norms of ``x`` with norm_expr's arithmetic: the squares summed
+    as a strict left fold over the dims (vectorized across rows), then
+    sqrt — bit-identical to the JVM form."""
+    import numpy as np
+
+    acc = np.zeros(x.shape[0])
+    for j in range(x.shape[1]):
+        xj = x[:, j]
+        acc = acc + xj * xj
+    return np.sqrt(acc)
+
+
 def _unit_rows(x):
     """Drop zero-norm rows and unit-normalize, replicating the JVM
     ``where(norm_expr > 0) + transform(x / nrm)`` projection BIT FOR
@@ -60,16 +87,9 @@ def _unit_rows(x):
     JVM evaluates. Exists because the JVM form is interpreted
     (higher-order functions are CodegenFallback) and — worse — a
     lambda referencing the fold re-evaluates it per ELEMENT (measured
-    0.59 s vs 0.13 s per sf0.1 pass); Catalyst's project collapsing
-    re-inlines any attempt to hoist it, so the normalization moved
-    into the Arrow kernels instead (guide §4.2)."""
-    import numpy as np
-
-    acc = np.zeros(x.shape[0])
-    for j in range(x.shape[1]):
-        xj = x[:, j]
-        acc = acc + xj * xj
-    nrm = np.sqrt(acc)
+    0.59 s vs 0.13 s per sf0.1 pass), so the normalization runs in
+    the Arrow kernels instead."""
+    nrm = _fold_norm(x)
     keep = nrm > 0
     if not keep.all():
         x = x[keep]
@@ -77,36 +97,89 @@ def _unit_rows(x):
     return x / nrm[:, None]
 
 
-def _batch_mat(col, dtype="float64"):
-    """(n, d) ndarray from one Arrow ``list<numeric>`` record-batch
-    column — the §4.2 zero-copy path: a list column is one contiguous
-    values buffer plus offsets, so the dense matrix is a flatten +
-    reshape instead of a per-row object conversion (measured 0.29 s
-    -> 0.7 ms at 50k x 64; every embedding kernel pays this per
-    pass). Rows must be fixed-width and non-null (the embedding
-    contract) — ragged input fails loudly in the reshape."""
+def _unit_or_zero(x):
+    """Rows of ``x`` divided by their norms; a zero row stays zero."""
     import numpy as np
 
-    assert col.null_count == 0, "embedding column contains nulls"
-    n = len(col)
-    vals = col.flatten().to_numpy(zero_copy_only=False)
-    if n == 0:
-        return np.empty((0, 0), dtype=dtype)
-    return vals.astype(dtype, copy=False).reshape(n, -1)
+    nrm = np.linalg.norm(x, axis=1, keepdims=True)
+    nrm[nrm == 0] = 1.0
+    return x / nrm
 
 
-def _list_col(mat, arrow_type=None):
-    """Arrow ``list<arrow_type>`` array from a contiguous (n, d)
-    matrix — a computed offsets array over the raveled values buffer
-    (guide §4.2's re-slice trick), not a per-row list build."""
+def _local_topk(q_ids, ids, rows, score, k: int):
+    """One batch's top-k per query — the local half of the
+    local-then-global top-k every ANN scan here runs (``_rank_topk`` is
+    the global half). Rows are sorted by id first, so the stable argsort
+    breaks score ties by neighbor id ascending, the order of the final
+    rank. ``score(rows)`` gives a (queries, rows) matrix, smaller is
+    better; a query's own id is excluded. Returns (query_id,
+    neighbor_id, score) arrays of at most k rows per query."""
     import numpy as np
-    import pyarrow as pa
 
-    n, d = mat.shape
-    offsets = pa.array(np.arange(0, (n + 1) * d, d, dtype=np.int32),
-                       type=pa.int32())
-    values = pa.array(mat.ravel(), type=arrow_type)
-    return pa.ListArray.from_arrays(offsets, values)
+    order = np.argsort(ids, kind="stable")
+    ids = ids[order]
+    s = np.where(q_ids[:, None] == ids[None, :], np.inf, score(rows[order]))
+    take = min(k, s.shape[1])
+    idx = np.argsort(s, axis=1, kind="stable")[:, :take]
+    best = np.take_along_axis(s, idx, axis=1).ravel()
+    keep = best != np.inf
+    return np.repeat(q_ids, take)[keep], ids[idx.ravel()][keep], best[keep]
+
+
+def _rank_topk(scored: DataFrame, k: int, score: str, out: str,
+               descending: bool) -> DataFrame:
+    """The global rank of every top-k query: per query_id, the k best
+    ``score`` rows (ties by neighbor_id ascending), the score rounded to
+    4 decimals as ``out``. Output (query_id, neighbor_id, out, rnk)."""
+    from pyspark.sql import Window
+
+    order = F.col(score).desc() if descending else F.col(score).asc()
+    w = Window.partitionBy("query_id").orderBy(order,
+                                               F.col("neighbor_id").asc())
+    return (
+        scored.withColumn("rnk", F.row_number().over(w))
+        .where(F.col("rnk") <= k)
+        .select("query_id", "neighbor_id", F.round(score, 4).alias(out),
+                F.col("rnk").cast("long").alias("rnk"))
+    )
+
+
+def _collect_queries(queries: DataFrame, id_col: str, vec_col: str,
+                     what: str):
+    """(ids, matrix) of a query set that a scan closes over, guarded at
+    4096 rows (it is broadcast state)."""
+    import numpy as np
+
+    rows = queries.select(F.col(id_col), F.col(vec_col)).collect()
+    if not rows:
+        raise ValueError("empty query set")
+    if len(rows) > 4096:
+        raise ValueError(f"{len(rows)} query vectors; {what} broadcasts "
+                         "the query set — block the queries")
+    return (np.asarray([int(r[0]) for r in rows], dtype="int64"),
+            np.array([np.asarray(r[1], dtype=np.float64) for r in rows]))
+
+
+def _pq_codes(x, books, sub: int):
+    """(n, m) int32 codes: per subspace j, the nearest codebook entry of
+    ``x[:, j*sub:(j+1)*sub]`` (argmax of x.c - |c|^2/2, first max on
+    ties)."""
+    import numpy as np
+
+    cs = np.empty((x.shape[0], len(books)), dtype="int32")
+    for j, c in enumerate(books):
+        xj = x[:, j * sub:(j + 1) * sub]
+        cs[:, j] = (xj @ c.T - 0.5 * (c * c).sum(axis=1)).argmax(axis=1)
+    return cs
+
+
+def _route(x, c_unit):
+    """(cell, residual) of each row of ``x``, unit-normalized (zero rows
+    stay zero), against the unit coarse centroids: cell is the argmax
+    cosine (lowest cell on ties)."""
+    x = _unit_or_zero(x)
+    cell = (x @ c_unit.T).argmax(axis=1)
+    return cell, x - c_unit[cell]
 
 
 def dot_expr(a: str, b: str) -> Column:
@@ -156,47 +229,30 @@ def brute_force_topk(queries: DataFrame, corpus: DataFrame, k: int,
             cos.alias("_cos"),
         )
     )
-    from pyspark.sql import Window
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("_cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id",
-                F.round("_cos", 4).alias("cosine"),
-                F.col("rnk").cast("long").alias("rnk"))
-    )
+    return _rank_topk(scored, k, "_cos", "cosine", descending=True)
 
 
 def brute_force_topk_arrow(queries: DataFrame, corpus: DataFrame, k: int,
                            id_col: str = "vec_id",
                            vec_col: str = "embedding") -> DataFrame:
-    """Exact cosine top-k via an Arrow/numpy scan — same output as
-    brute_force_topk, built for volume.
+    """Exact cosine top-k via an Arrow/numpy scan — the same output as
+    brute_force_topk, bit for bit, built for volume.
 
     The query set is collected to a dense matrix and closed over (its
     role is broadcast state — it must be small by contract; guarded at
-    4096 rows). Each corpus partition streams through mapInPandas and
-    multiplies against the query matrix at BLAS speed, keeping only its
-    local top-k per query; the final global top-k reduces
-    #partitions x k rows per query with the same rank expression as the
-    baseline. Spark-side: one scan, no shuffle until the tiny rank.
+    4096 rows). Each corpus batch multiplies against the query matrix
+    at BLAS speed to find candidates, rescores them with the JVM form's
+    arithmetic and keeps its local top-k per query; the final global
+    top-k reduces #partitions x k rows per query with the same rank
+    expression as the baseline. Spark-side: one scan, no shuffle until
+    the tiny rank.
     """
-    q_rows = queries.select(F.col(id_col), F.col(vec_col)).collect()
-    if not q_rows:
-        raise ValueError("empty query set")
-    if len(q_rows) > 4096:
-        raise ValueError(
-            f"{len(q_rows)} query vectors; brute_force_topk_arrow "
-            "broadcasts the query set — use hyperplane_lsh_topk or "
-            "block the queries for larger sets"
-        )
     import numpy as np
 
-    q_ids = [int(r[0]) for r in q_rows]
-    q_mat = np.array([np.asarray(r[1], dtype=np.float64) for r in q_rows])
-    q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
+    q_ids, q_raw = _collect_queries(queries, id_col, vec_col,
+                                    "brute_force_topk_arrow")
+    q_unit = q_raw / np.linalg.norm(q_raw, axis=1, keepdims=True)
+    q_norm = _fold_norm(q_raw)
     k_ = int(k)
 
     out_schema = StructType([
@@ -205,51 +261,35 @@ def brute_force_topk_arrow(queries: DataFrame, corpus: DataFrame, k: int,
         StructField("_cos", DoubleType()),
     ])
 
-    def _scan(batches):
-        import numpy as np
-        import pyarrow as pa
+    def _neg_cos(x):
+        # BLAS cosines only pick candidates: per query, every row within
+        # 1e-9 of its (k+1)-th best (the query itself may be one of
+        # them). Those are rescored with the JVM form's arithmetic
+        # (left-fold dot of the raw vectors / product of the fold
+        # norms), so values and ties equal brute_force_topk's bit for
+        # bit; BLAS can give two identical rows cosines an ulp apart
+        approx = np.nan_to_num(
+            q_unit @ (x / np.linalg.norm(x, axis=1, keepdims=True)).T,
+            nan=-np.inf)
+        t = min(k_, approx.shape[1] - 1)
+        kth = -np.partition(-approx, t, axis=1)[:, t]
+        qi, xi = np.nonzero(approx >= kth[:, None] - 1e-9)
+        dot = np.zeros(qi.size)
+        for j in range(x.shape[1]):
+            dot += q_raw[qi, j] * x[xi, j]
+        s = np.full(approx.shape, np.inf)
+        s[qi, xi] = -(dot / (q_norm[qi] * _fold_norm(x)[xi]))
+        return s
 
-        qm = q_mat
-        qids = np.asarray(q_ids, dtype="int64")
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = batch.column(0).to_numpy().astype("int64")
-            x = _batch_mat(batch.column(1))
-            # sort by id so the stable argsort below breaks exact-cosine
-            # ties by neighbor_id asc — the same total order the final
-            # rank (and the SQL oracle) uses
-            order = np.argsort(ids, kind="stable")
-            ids = ids[order]
-            x = x[order]
-            x /= np.linalg.norm(x, axis=1, keepdims=True)
-            cos = qm @ x.T                      # (nq, batch)
-            self_mask = qids[:, None] == ids[None, :]
-            cos_m = np.where(self_mask, -np.inf, cos)
-            take = min(k_, cos_m.shape[1])
-            idx = np.argsort(-cos_m, axis=1, kind="stable")[:, :take]
-            c = np.take_along_axis(cos_m, idx, axis=1).ravel()
-            keep = c != -np.inf
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.repeat(qids, take)[keep], type=pa.int64()),
-                 pa.array(ids[idx.ravel()][keep], type=pa.int64()),
-                 pa.array(c[keep], type=pa.float64())],
-                ["query_id", "neighbor_id", "_cos"])
+    def _scan(batch):
+        qid, nid, d = _local_topk(q_ids, batch.column(0).to_numpy()
+                                  .astype("int64"), list_matrix(batch, 1),
+                                  _neg_cos, k_)
+        return qid, nid, -d
 
-    scored = corpus.select(F.col(id_col), F.col(vec_col)).mapInArrow(
-        _scan, out_schema
-    )
-    from pyspark.sql import Window
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("_cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k_)
-        .select("query_id", "neighbor_id",
-                F.round("_cos", 4).alias("cosine"),
-                F.col("rnk").cast("long").alias("rnk"))
-    )
+    scored = map_arrow(corpus, [F.col(id_col), F.col(vec_col)], out_schema,
+                       _scan)
+    return _rank_topk(scored, k_, "_cos", "cosine", descending=True)
 
 
 def hyperplane_weights(plane: int, dims: int) -> list[float]:
@@ -263,13 +303,8 @@ def hyperplane_weights(plane: int, dims: int) -> list[float]:
     planes x dims md5 calls for EVERY row (~2M at sf0.1); as a literal
     array Catalyst constant-folds it.
     """
-    import hashlib
-
-    out = []
-    for d in range(dims):
-        h = hashlib.md5(f"{plane}_{d}".encode()).hexdigest()
-        out.append((int(h[:15], 16) % 2001 - 1000) / 1000.0)
-    return out
+    return [(md5_60(f"{plane}_{d}".encode()) % 2001 - 1000) / 1000.0
+            for d in range(dims)]
 
 
 def hyperplane_weight_expr(plane: int, dims: int) -> str:
@@ -340,17 +375,7 @@ def hyperplane_lsh_topk(queries: DataFrame, corpus: DataFrame, k: int,
             cos.alias("_cos"),
         )
     )
-    from pyspark.sql import Window
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("_cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id",
-                F.round("_cos", 4).alias("cosine"),
-                F.col("rnk").cast("long").alias("rnk"))
-    )
+    return _rank_topk(scored, k, "_cos", "cosine", descending=True)
 
 
 def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int,
@@ -383,8 +408,6 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int,
 
     Recall tuning: nprobe up, n_centroids up (more, smaller lists).
     """
-    from pyspark.sql import Window
-
     from .dedup import md5_long
 
     # one TakeOrderedAndProject job selects the K centroid rows; they
@@ -416,77 +439,68 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int,
         .drop("_h", "_key")
         .collect()
     )
-    spark = corpus.sparkSession
-    cents = spark.createDataFrame(
-        cent_rows,
+    return _ivf_probe(
+        queries, corpus, k, nprobe,
+        [r[0] for r in cent_rows], [r[1] for r in cent_rows],
         StructType([
             # id type mirrors the corpus id column (string ids work too)
             StructField("cent_id", corpus.schema[id_col].dataType),
             StructField("cent_vec", corpus.schema[vec_col].dataType),
-        ]),
+        ]), id_col, vec_col)
+
+
+def _ivf_probe(queries: DataFrame, corpus: DataFrame, k: int, nprobe: int,
+               cent_ids: list, cent_vecs: list, cent_schema: StructType,
+               id_col: str, vec_col: str) -> DataFrame:
+    """The probe plan of both IVF forms, given the coarse quantizer's
+    centroid ids and vectors (``cent_schema`` types the (cent_id,
+    cent_vec) pair). The corpus is assigned to its argmax-cosine
+    centroid by an Arrow scan against the centroid matrix (centroids
+    ordered by id, so argmax's first max is the lowest cent_id, the
+    oracle's tiebreak); each query probes its ``nprobe`` nearest
+    centroids by the DOUBLE left-fold expressions against the broadcast
+    centroid frame; candidates join on cent_id and are ranked by exact
+    cosine. Each corpus vector is in one list, so a (query, neighbor)
+    pair occurs once."""
+    import numpy as np
+    from pyspark.sql import Window
+
+    cents = corpus.sparkSession.createDataFrame(
+        list(zip(cent_ids, cent_vecs)), cent_schema,
     ).select("cent_id", "cent_vec", norm_expr("cent_vec").alias("cent_norm"))
+    by_id = sorted(range(len(cent_ids)), key=lambda i: cent_ids[i])
+    c_ids = np.array([cent_ids[i] for i in by_id])
+    c_mat = np.array([np.asarray(cent_vecs[i], dtype=np.float64)
+                      for i in by_id])
+    c_mat /= np.linalg.norm(c_mat, axis=1, keepdims=True)
 
-    def nearest(side: DataFrame, prefix: str, topn: int) -> DataFrame:
-        s = _normed(side, id_col, vec_col, prefix)
-        cos = (dot_expr(f"{prefix}_vec", "cent_vec")
-               / (F.col(f"{prefix}_norm") * F.col("cent_norm")))
-        scored = s.join(F.broadcast(cents)).select(
-            F.col(f"{prefix}_id"), F.col(f"{prefix}_vec"),
-            F.col(f"{prefix}_norm"), F.col("cent_id"), cos.alias("_ccos"),
-        )
-        w = Window.partitionBy(f"{prefix}_id").orderBy(
-            F.col("_ccos").desc(), F.col("cent_id").asc()
-        )
-        return (scored.withColumn("_crnk", F.row_number().over(w))
-                .where(F.col("_crnk") <= topn)
-                .drop("_ccos", "_crnk"))
+    def _assign(batch):
+        x = list_matrix(batch, 1)
+        norms = np.linalg.norm(x, axis=1)
+        best = np.argmax((x / norms[:, None]) @ c_mat.T, axis=1)
+        return batch.column(0), batch.column(1), norms, c_ids[best]
 
-    def assign_arrow(side: DataFrame, prefix: str) -> DataFrame:
-        # centroid matrix is broadcast state (exactly n_centroids rows,
-        # independent of corpus size, already collected); rows sorted
-        # by cent_id so argmax's first-max matches the cent_id-asc
-        # tiebreak of the SQL form and the oracle
-        import numpy as np
+    corpus_assigned = map_arrow(
+        corpus, [F.col(id_col), F.col(vec_col)],
+        StructType([
+            StructField("c_id", corpus.schema[id_col].dataType),
+            StructField("c_vec", corpus.schema[vec_col].dataType),
+            StructField("c_norm", DoubleType()),
+            StructField("cent_id", cent_schema["cent_id"].dataType),
+        ]), _assign)
 
-        by_id = sorted(cent_rows, key=lambda r: r[0])
-        c_ids = np.array([r[0] for r in by_id])
-        c_mat = np.array([np.asarray(r[1], dtype=np.float64) for r in by_id])
-        c_mat /= np.linalg.norm(c_mat, axis=1, keepdims=True)
-
-        id_type = side.schema[id_col].dataType
-        out_schema = StructType([
-            StructField(f"{prefix}_id", id_type),
-            StructField(f"{prefix}_vec", side.schema[vec_col].dataType),
-            StructField(f"{prefix}_norm", DoubleType()),
-            StructField("cent_id", id_type),
-        ])
-
-        from pyspark.sql.pandas.types import to_arrow_type
-
-        cent_arrow_type = to_arrow_type(id_type)
-
-        def _scan(batches):
-            import pyarrow as pa
-
-            for batch in batches:
-                if batch.num_rows == 0:
-                    continue
-                x = _batch_mat(batch.column(1))
-                norms = np.linalg.norm(x, axis=1)
-                best = np.argmax((x / norms[:, None]) @ c_mat.T, axis=1)
-                yield pa.RecordBatch.from_arrays(
-                    [batch.column(0), batch.column(1),
-                     pa.array(norms, type=pa.float64()),
-                     pa.array(c_ids[best]).cast(cent_arrow_type)],
-                    [f"{prefix}_id", f"{prefix}_vec",
-                     f"{prefix}_norm", "cent_id"])
-
-        return side.select(F.col(id_col), F.col(vec_col)).mapInArrow(
-            _scan, out_schema
-        )
-
-    corpus_assigned = assign_arrow(corpus, "c")
-    query_probes = nearest(queries, "q", nprobe)
+    q = _normed(queries, id_col, vec_col, "q")
+    ccos = dot_expr("q_vec", "cent_vec") / (F.col("q_norm")
+                                            * F.col("cent_norm"))
+    w = Window.partitionBy("q_id").orderBy(F.col("_ccos").desc(),
+                                           F.col("cent_id").asc())
+    query_probes = (
+        q.join(F.broadcast(cents))
+        .select("q_id", "q_vec", "q_norm", "cent_id", ccos.alias("_ccos"))
+        .withColumn("_crnk", F.row_number().over(w))
+        .where(F.col("_crnk") <= nprobe)
+        .drop("_ccos", "_crnk")
+    )
     cos = (dot_expr("q_vec", "c_vec")
            / (F.col("q_norm") * F.col("c_norm")))
     cand = (
@@ -495,19 +509,8 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int,
         .select(F.col("q_id").alias("query_id"),
                 F.col("c_id").alias("neighbor_id"),
                 cos.alias("_cos"))
-        # no distinct needed: each corpus vector belongs to exactly one
-        # centroid list, so a (query, neighbor) pair occurs once
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("_cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id",
-                F.round("_cos", 4).alias("cosine"),
-                F.col("rnk").cast("long").alias("rnk"))
-    )
+    return _rank_topk(cand, k, "_cos", "cosine", descending=True)
 
 
 def quantize_embeddings(vecs: DataFrame,
@@ -796,6 +799,72 @@ def cosine_pairs_blocked(vecs: DataFrame, threshold: float,
     )
 
 
+def _fixed_point(x):
+    """x * 1e6 rounded half away from zero, as int64 — F.round(x * 1e6,
+    0).cast("long") exactly: n + 0.5 is exactly representable at
+    |x * 1e6| <= 1e6, so the decimal and binary tie sets coincide."""
+    import numpy as np
+
+    return np.copysign(np.floor(np.abs(x) * 1_000_000 + 0.5), x
+                       ).astype("int64")
+
+
+def _content_hash_init(vecs: DataFrame, vec_col: str, m: int, k: int,
+                       normalize: bool) -> list:
+    """The no-RNG initialization of kmeans_fit (m = 1) and pq_fit: split
+    the (unit-normalized when ``normalize``, zero rows dropped) vectors
+    into ``m`` contiguous subspaces, key each sub-vector by its
+    ","-joined fixed-point coordinates, and per subspace take the ``k``
+    rows with the smallest (md5_60(key), key). One corpus scan: each
+    batch emits its own k smallest per subspace, a superset of the
+    global ones, which a rank window over the tiny candidate set
+    finishes in the same order (keys are ASCII, so Python's sort and
+    Spark's string order agree). Returns one (k, d/m) array per
+    subspace, rows in that order."""
+    import numpy as np
+    from pyspark.sql import Window
+
+    def _cands(batch):
+        x = list_matrix(batch, 0)
+        if normalize:
+            x = _unit_rows(x)
+            if x.shape[0] == 0:
+                return None
+        sub = x.shape[1] // m
+        subs, hs, keys, rows = [], [], [], []
+        for j in range(m):
+            xj = x[:, j * sub:(j + 1) * sub]
+            cands = []
+            for i, row in enumerate(_fixed_point(xj)):
+                key = ",".join(str(v) for v in row)
+                cands.append((md5_60(key.encode()), key, i))
+            cands = sorted(cands, key=lambda t: (t[0], t[1]))[:k]
+            subs.append(np.full(len(cands), j, dtype="int32"))
+            hs.extend(t[0] for t in cands)
+            keys.extend(t[1] for t in cands)
+            rows.append(xj[[t[2] for t in cands]])
+        return np.concatenate(subs), hs, keys, np.concatenate(rows)
+
+    cand_schema = StructType([
+        StructField("_sub", IntegerType()),
+        StructField("_h", LongType()),
+        StructField("_key", StringType()),
+        StructField("v", ArrayType(DoubleType())),
+    ])
+    w = Window.partitionBy("_sub").orderBy("_h", "_key")
+    init_rows = (
+        map_arrow(vecs, [vec_col], cand_schema, _cands)
+        .withColumn("_r", F.row_number().over(w))
+        .where(F.col("_r") <= k)
+        .select("_sub", "_r", "v")
+        .collect()
+    )
+    return [np.array([np.asarray(r.v, dtype=np.float64)
+                      for r in sorted((r for r in init_rows if r._sub == j),
+                                      key=lambda r: r._r)])
+            for j in range(m)]
+
+
 def kmeans_fit(vecs: DataFrame, k: int, iters: int = 5,
                id_col: str = "vec_id",
                vec_col: str = "embedding",
@@ -822,8 +891,8 @@ def kmeans_fit(vecs: DataFrame, k: int, iters: int = 5,
     (the group_centroids rationale). Empty clusters keep their
     previous centroid.
 
-    Scale shape (100 TB): per iteration, ONE corpus scan (mapInPandas
-    assigns against k broadcast centroids AND pre-aggregates the
+    Scale shape (100 TB): per iteration, ONE corpus scan (an Arrow
+    kernel assigns against k broadcast centroids AND pre-aggregates the
     fixed-point update in-task, the pq_fit pattern) + ONE shuffle of
     k*d partial rows per task — the vector column never re-crosses
     Arrow and the shuffle is corpus-size-independent; centroids
@@ -834,77 +903,9 @@ def kmeans_fit(vecs: DataFrame, k: int, iters: int = 5,
     if metric not in ("cosine", "euclid"):
         raise ValueError(f"unknown metric {metric!r}; "
                          "use 'cosine' or 'euclid'")
-    # r14 (§4.2): the JVM normalization projection is interpreted and
-    # re-evaluates the norm fold per element (see _unit_rows) — ~0.5 s
-    # per sf0.1 pass. The INIT pass keeps it (its md5 content-hash
-    # keys are built JVM-side over the normalized values); the
-    # per-iteration scans feed the RAW column and normalize inside
-    # the Arrow kernel via _unit_rows, which replicates the JVM
-    # projection bit-for-bit — centroids are unchanged.
-    raw_scan = vecs.select(F.col(vec_col))
-    if metric == "cosine":
-        nrm = norm_expr(vec_col)
-        vecs = vecs.where(nrm > 0).select(
-            F.transform(
-                F.col(vec_col), lambda x: x.cast("double") / nrm
-            ).alias(vec_col))
-
-    # r14 (§4.2): the content-hash init used to build its keys with an
-    # interpreted per-element transform over the (equally interpreted)
-    # normalized frame — ~0.8 s per fit at sf0.1. The SAME selection
-    # now runs inside an Arrow kernel: normalize via _unit_rows
-    # (bit-identical), fixed-point the coordinates with the identical
-    # HALF_UP rule the update step uses (replicates
-    # F.round(x*1e6, 0).cast long — same tie-set argument as there),
-    # md5 the identical ","-joined key string, and emit only each
-    # batch's k smallest (_h, _key) candidates — a superset of the
-    # global top-k, which the tiny JVM TakeOrdered then finishes with
-    # the same (_h, _key) binary string order (pure-ASCII keys, so
-    # Python's sort and UTF8String.compare agree).
-    init_schema = StructType([
-        StructField("_h", LongType()),
-        StructField("_key", StringType()),
-        StructField("v", ArrayType(DoubleType())),
-    ])
-
-    def _init_cands(batches):
-        import hashlib
-
-        import pyarrow as pa
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            x = _batch_mat(batch.column(0))
-            if metric == "cosine":
-                x = _unit_rows(x)
-                if x.shape[0] == 0:
-                    continue
-            fx = np.copysign(
-                np.floor(np.abs(x) * 1_000_000 + 0.5), x).astype("int64")
-            cands = []
-            for i in range(fx.shape[0]):
-                key = ",".join(str(v) for v in fx[i])
-                cands.append(
-                    (int(hashlib.md5(key.encode()).hexdigest()[:15], 16),
-                     key, i))
-            cands.sort(key=lambda t: (t[0], t[1]))
-            cands = cands[:k]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([t[0] for t in cands], type=pa.int64()),
-                 pa.array([t[1] for t in cands], type=pa.string()),
-                 _list_col(x[[t[2] for t in cands]], pa.float64())],
-                ["_h", "_key", "v"])
-
-    init_rows = (
-        raw_scan.mapInArrow(_init_cands, init_schema)
-        .orderBy("_h", "_key")
-        .limit(k)
-        .select("v")
-        .collect()
-    )
-    cents = np.array([np.asarray(r[0], dtype=np.float64)
-                      for r in init_rows])
+    # every pass reads the RAW column and unit-normalizes inside the
+    # Arrow kernel (_unit_rows, bit-identical to the JVM projection)
+    cents = _content_hash_init(vecs, vec_col, 1, k, metric == "cosine")[0]
 
     assign_schema = StructType([
         StructField("cent", IntegerType()),
@@ -926,51 +927,27 @@ def kmeans_fit(vecs: DataFrame, k: int, iters: int = 5,
             c_mat = cents
             half_sq = 0.5 * (c_mat * c_mat).sum(axis=1)
 
-        def _assign_partials(batches):
-            import pyarrow as pa
-
+        def _assign_partials(batch):
             # assignment AND the fixed-point partial update in ONE
-            # Arrow pass (the pq_fit pattern): the shuffle moves
-            # k*d partial rows per task instead of the corpus'
-            # vectors + a d-per-row explode, and the vector column
-            # never crosses Arrow a second time. Per-element HALF_UP
-            # (copysign/floor) replicates F.round exactly — n+0.5 is
-            # exactly representable at |x*1e6| <= 1e6 so the decimal
-            # and binary tie sets coincide — and int64 partial sums
-            # are associative, so centroids are bit-identical to the
-            # former posexplode+groupBy path on any partitioning.
-            for batch in batches:
-                if batch.num_rows == 0:
-                    continue
-                x = _batch_mat(batch.column(0))
-                if metric == "cosine":
-                    x = _unit_rows(x)
-                    if x.shape[0] == 0:
-                        continue
-                # (squared-euclidean via the dot trick, or plain dot on
-                # the unit sphere); argmax returns the FIRST max ->
-                # lowest centroid index on ties
-                d = x @ c_mat.T - half_sq
-                cent = d.argmax(axis=1)
-                fx = np.copysign(
-                    np.floor(np.abs(x) * 1_000_000 + 0.5), x
-                ).astype("int64")
-                dim_n = x.shape[1]
-                uniq, sums, nn = _segment_sums(cent, fx)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.repeat(uniq, dim_n).astype("int32")),
-                     pa.array(np.tile(np.arange(dim_n, dtype="int32"),
-                                      uniq.size)),
-                     pa.array(sums.ravel(), type=pa.int64()),
-                     pa.array(np.repeat(nn, dim_n).astype("int64"))],
-                    ["cent", "dim", "s", "n"])
+            # Arrow pass (the pq_fit pattern): the shuffle moves k*d
+            # partial rows per task, and int64 partial sums are
+            # associative, so centroids are bit-identical on any
+            # partitioning
+            x = list_matrix(batch, 0)
+            if metric == "cosine":
+                x = _unit_rows(x)
+                if x.shape[0] == 0:
+                    return None
+            # (squared-euclidean via the dot trick, or plain dot on the
+            # unit sphere); argmax returns the FIRST max -> lowest
+            # centroid index on ties
+            cent = (x @ c_mat.T - half_sq).argmax(axis=1)
+            return _partial_rows(cent, _fixed_point(x))
 
         # toArrow (not collect): the k*d partial rows land as columnar
-        # buffers and the update is one vectorized scatter — same
-        # divisions in the same order as the former per-row loop
+        # buffers and the update is one vectorized scatter
         per_dim = (
-            raw_scan
-            .mapInArrow(_assign_partials, assign_schema)
+            map_arrow(vecs, [vec_col], assign_schema, _assign_partials)
             .groupBy("cent", "dim")
             .agg(F.sum("s").alias("s"),
                  F.sum("n").cast("long").alias("n"))
@@ -1014,86 +991,14 @@ def ivf_topk_trained(queries: DataFrame, corpus: DataFrame, k: int,
     (queries, k, nprobe), and max-cell-size <= the untrained
     quantizer's.
     """
-    from pyspark.sql import Window
-
     cent_vecs = kmeans_fit(corpus, n_centroids, train_iters,
                            id_col, vec_col)
-    spark = corpus.sparkSession
-    cents = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(cent_vecs)],
+    return _ivf_probe(
+        queries, corpus, k, nprobe, list(range(len(cent_vecs))), cent_vecs,
         StructType([
             StructField("cent_id", LongType()),
             StructField("cent_vec", ArrayType(DoubleType())),
-        ]),
-    ).select("cent_id", "cent_vec", norm_expr("cent_vec").alias("cent_norm"))
-
-    import numpy as np
-
-    c_mat = np.array(cent_vecs)
-    c_mat = c_mat / np.linalg.norm(c_mat, axis=1, keepdims=True)
-
-    def assign_arrow(side: DataFrame, prefix: str) -> DataFrame:
-        id_type = side.schema[id_col].dataType
-        out_schema = StructType([
-            StructField(f"{prefix}_id", id_type),
-            StructField(f"{prefix}_vec", side.schema[vec_col].dataType),
-            StructField(f"{prefix}_norm", DoubleType()),
-            StructField("cent_id", LongType()),
-        ])
-
-        def _scan(batches):
-            import pyarrow as pa
-
-            for batch in batches:
-                if batch.num_rows == 0:
-                    continue
-                x = _batch_mat(batch.column(1))
-                norms = np.linalg.norm(x, axis=1)
-                best = np.argmax((x / norms[:, None]) @ c_mat.T, axis=1)
-                yield pa.RecordBatch.from_arrays(
-                    [batch.column(0), batch.column(1),
-                     pa.array(norms, type=pa.float64()),
-                     pa.array(best.astype("int64"), type=pa.int64())],
-                    [f"{prefix}_id", f"{prefix}_vec",
-                     f"{prefix}_norm", "cent_id"])
-
-        return side.select(F.col(id_col), F.col(vec_col)).mapInArrow(
-            _scan, out_schema)
-
-    def nearest(side: DataFrame, prefix: str, topn: int) -> DataFrame:
-        s = _normed(side, id_col, vec_col, prefix)
-        cos = (dot_expr(f"{prefix}_vec", "cent_vec")
-               / (F.col(f"{prefix}_norm") * F.col("cent_norm")))
-        scored = s.join(F.broadcast(cents)).select(
-            F.col(f"{prefix}_id"), F.col(f"{prefix}_vec"),
-            F.col(f"{prefix}_norm"), F.col("cent_id"), cos.alias("_ccos"),
-        )
-        w = Window.partitionBy(f"{prefix}_id").orderBy(
-            F.col("_ccos").desc(), F.col("cent_id").asc())
-        return (scored.withColumn("_crnk", F.row_number().over(w))
-                .where(F.col("_crnk") <= topn)
-                .drop("_ccos", "_crnk"))
-
-    corpus_assigned = assign_arrow(corpus, "c")
-    query_probes = nearest(queries, "q", nprobe)
-    cos = (dot_expr("q_vec", "c_vec")
-           / (F.col("q_norm") * F.col("c_norm")))
-    cand = (
-        corpus_assigned.join(query_probes, "cent_id")
-        .where(F.col("q_id") != F.col("c_id"))
-        .select(F.col("q_id").alias("query_id"),
-                F.col("c_id").alias("neighbor_id"),
-                cos.alias("_cos"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("_cos").desc(), F.col("neighbor_id").asc())
-    return (
-        cand.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id",
-                F.round("_cos", 4).alias("cosine"),
-                F.col("rnk").cast("long").alias("rnk"))
-    )
+        ]), id_col, vec_col)
 
 
 def pca_fit(vecs: DataFrame, n_components: int = 8,
@@ -1115,9 +1020,9 @@ def pca_fit(vecs: DataFrame, n_components: int = 8,
     sign-fixed so each axis's largest-|component| entry is positive.
 
     Scale shape (100 TB): pass 1 is one posexplode + (dim)-keyed agg;
-    pass 2 is ONE mapInPandas scan emitting 32 partial d x d integer
-    frames reduced by a (i, j)-keyed sum — shuffle volume is
-    partitions x d^2 rows, independent of corpus size.
+    pass 2 is ONE Arrow scan emitting one partial d x d integer
+    matrix per partition, reduced by a (i, j)-keyed sum — shuffle
+    volume is partitions x d^2 rows, independent of corpus size.
 
     Returns {"mean": [d], "components": [n_components x d],
     "explained": [n_components]} (plain python lists).
@@ -1145,6 +1050,8 @@ def pca_fit(vecs: DataFrame, n_components: int = 8,
     ])
     mu_local = mu.copy()
 
+    # the one kernel outside arrow_kernel.map_arrow: it accumulates over
+    # every batch of a partition and emits one partial Gram matrix
     def _partial_gram(batches):
         import pyarrow as pa
 
@@ -1152,10 +1059,10 @@ def pca_fit(vecs: DataFrame, n_components: int = 8,
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            x = _batch_mat(batch.column(0))
+            x = list_matrix(batch, 0)
             xc = x - mu_local
             # per-row fixed-point outer products, summed as exact ints
-            # — vectorized in row strips (the r14 §4.2 pass): rint per
+            # — vectorized in row strips: rint per
             # ROW then int64 sum is associative, so strip order and
             # size cannot change the total; 512 x d x d float64
             # temporaries bound the strip at ~16 MB for d=64
@@ -1209,20 +1116,10 @@ def pca_transform(vecs: DataFrame, model: dict,
         StructField("pca", ArrayType(DoubleType())),
     ])
 
-    def _proj(batches):
-        import pyarrow as pa
+    def _proj(batch):
+        return batch.column(0), np.round((list_matrix(batch, 1) - mu) @ w.T, 6)
 
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            x = _batch_mat(batch.column(1))
-            p = np.round((x - mu) @ w.T, 6)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(0), _list_col(p, pa.float64())],
-                [id_col, "pca"])
-
-    return vecs.select(F.col(id_col), F.col(vec_col)).mapInArrow(
-        _proj, out_schema)
+    return map_arrow(vecs, [F.col(id_col), F.col(vec_col)], out_schema, _proj)
 
 
 # ------------------------------------------------- product quantization
@@ -1251,7 +1148,7 @@ def pq_fit(vecs: DataFrame, m: int = 8, codes: int = 16,
     previous centroid.
 
     Scale shape (100 TB): per iteration ONE corpus scan assigns all m
-    subspaces at once (mapInPandas against m broadcast codebooks) +
+    subspaces at once (an Arrow kernel against m broadcast codebooks) +
     ONE shuffle keyed by (subspace, centroid, dim) with map-side
     partial sums; the driver ever holds only m x codes x (d/m)
     numbers. At real scale the fit runs on a sample and the codebook
@@ -1269,84 +1166,9 @@ def pq_fit(vecs: DataFrame, m: int = 8, codes: int = 16,
     if d % m != 0:
         raise ValueError(f"dim {d} not divisible by m={m}")
     sub = d // m
-    # r14 (§4.2): every pass — init included — reads the RAW column;
-    # normalization (when asked) happens inside the Arrow kernels via
-    # _unit_rows, bit-identical to the former interpreted JVM
-    # where(norm>0)+transform(x/nrm) projection
-    raw_scan = vecs.select(F.col(vec_col))
-
-    # all m subspace inits in ONE corpus scan — r14 (§4.2): the former
-    # JVM form exploded every vector into m sub-vector rows and built
-    # the content-hash keys with an interpreted per-element transform
-    # (m x corpus rows through the md5/window machinery, ~1.2 s at
-    # sf0.1 for the ivfpq config). The identical selection now runs
-    # inside an Arrow kernel: slice the (n, d) matrix per subspace,
-    # fixed-point with the same HALF_UP rule, md5 the same
-    # ","-joined key, keep each batch's `codes` smallest (_h, _key)
-    # per subspace — a superset of the global per-subspace top-codes,
-    # finished by the same rank window over the tiny candidate set
-    # (pure-ASCII keys: Python sort == UTF8String.compare).
-    from pyspark.sql import Window
-
-    init_schema = StructType([
-        StructField("_sub", IntegerType()),
-        StructField("_h", LongType()),
-        StructField("_key", StringType()),
-        StructField("v", ArrayType(DoubleType())),
-    ])
-
-    def _init_cands(batches):
-        import hashlib
-
-        import pyarrow as pa
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            x = _batch_mat(batch.column(0))
-            if normalize:
-                x = _unit_rows(x)
-                if x.shape[0] == 0:
-                    continue
-            subs_a, hs_a, keys_a, rows_a = [], [], [], []
-            for j in range(m):
-                xj = x[:, j * sub:(j + 1) * sub]
-                fx = np.copysign(
-                    np.floor(np.abs(xj) * 1_000_000 + 0.5), xj
-                ).astype("int64")
-                cands = []
-                for i in range(fx.shape[0]):
-                    key = ",".join(str(v) for v in fx[i])
-                    cands.append(
-                        (int(hashlib.md5(key.encode())
-                             .hexdigest()[:15], 16), key, i))
-                cands.sort(key=lambda t: (t[0], t[1]))
-                cands = cands[:codes]
-                subs_a.append(np.full(len(cands), j, dtype="int32"))
-                hs_a.append(np.array([t[0] for t in cands], dtype="int64"))
-                keys_a.extend(t[1] for t in cands)
-                rows_a.append(xj[[t[2] for t in cands]])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.concatenate(subs_a)),
-                 pa.array(np.concatenate(hs_a), type=pa.int64()),
-                 pa.array(keys_a, type=pa.string()),
-                 _list_col(np.concatenate(rows_a), pa.float64())],
-                ["_sub", "_h", "_key", "v"])
-
-    rnk_w = Window.partitionBy("_sub").orderBy("_h", "_key")
-    init_rows = (
-        raw_scan.mapInArrow(_init_cands, init_schema)
-        .withColumn("_r", F.row_number().over(rnk_w))
-        .where(F.col("_r") <= codes)
-        .select("_sub", "_r", "v")
-        .collect()
-    )
-    books = []
-    for j in range(m):
-        rows = sorted((r for r in init_rows if r._sub == j),
-                      key=lambda r: r._r)
-        books.append(np.array([np.asarray(r.v, dtype=np.float64)
-                               for r in rows]))
+    # every pass reads the RAW column; normalization (when asked)
+    # happens inside the Arrow kernels via _unit_rows
+    books = _content_hash_init(vecs, vec_col, m, codes, normalize)
 
     assign_schema = StructType([
         StructField("sub", IntegerType()),
@@ -1359,45 +1181,28 @@ def pq_fit(vecs: DataFrame, m: int = 8, codes: int = 16,
     for _ in range(max(0, iters)):
         bks = [b.copy() for b in books]
 
-        def _assign_partials(batches):
-            import pyarrow as pa
-
-            # per-partition pre-aggregation: emit (sub, cent, dim)
-            # fixed-point partial sums instead of per-row rows, so the
-            # shuffle moves m*codes*sub rows per task, not the corpus
-            for batch in batches:
-                if batch.num_rows == 0:
-                    continue
-                x = _batch_mat(batch.column(0))
-                if normalize:
-                    x = _unit_rows(x)
-                    if x.shape[0] == 0:
-                        continue
-                subs, cents, dims, ss, ns = [], [], [], [], []
-                for jj in range(m):
-                    xj = x[:, jj * sub:(jj + 1) * sub]
-                    c = bks[jj]
-                    d2 = xj @ c.T - 0.5 * (c * c).sum(axis=1)
-                    cent = d2.argmax(axis=1)
-                    fx = np.round(xj * 1_000_000).astype("int64")
-                    uniq, sums, nn = _segment_sums(cent, fx)
-                    subs.append(np.full(uniq.size * sub, jj, dtype="int32"))
-                    cents.append(np.repeat(uniq, sub).astype("int32"))
-                    dims.append(np.tile(np.arange(sub, dtype="int32"),
-                                        uniq.size))
-                    ss.append(sums.ravel())
-                    ns.append(np.repeat(nn, sub).astype("int64"))
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.concatenate(subs)),
-                     pa.array(np.concatenate(cents)),
-                     pa.array(np.concatenate(dims)),
-                     pa.array(np.concatenate(ss), type=pa.int64()),
-                     pa.array(np.concatenate(ns))],
-                    ["sub", "cent", "dim", "s", "n"])
+        def _assign_partials(batch):
+            # pre-aggregation per batch: (sub, cent, dim) fixed-point
+            # partial sums, so the shuffle moves m*codes*sub rows per
+            # batch, not the corpus. The fixed point here is np.round
+            # (half to even), not kmeans_fit's half-up _fixed_point:
+            # trained codebooks depend on it
+            x = list_matrix(batch, 0)
+            if normalize:
+                x = _unit_rows(x)
+                if x.shape[0] == 0:
+                    return None
+            cs = _pq_codes(x, bks, sub)
+            fx = np.round(x * 1_000_000).astype("int64")
+            parts = [_partial_rows(cs[:, j], fx[:, j * sub:(j + 1) * sub])
+                     for j in range(m)]
+            return (np.concatenate([np.full(p[0].size, j)
+                                    for j, p in enumerate(parts)]),
+                    *(np.concatenate(c) for c in zip(*parts)))
 
         # toArrow + vectorized scatter, as in kmeans_fit
         per_dim = (
-            raw_scan.mapInArrow(_assign_partials, assign_schema)
+            map_arrow(vecs, [vec_col], assign_schema, _assign_partials)
             .groupBy("sub", "cent", "dim")
             .agg(F.sum("s").alias("s"),
                  F.sum("n").cast("long").alias("n"))
@@ -1430,37 +1235,20 @@ def pq_encode(vecs: DataFrame, model: dict, id_col: str = "vec_id",
     ``normalize=False`` encodes the column as-is (residual mode)."""
     import numpy as np
 
-    m, sub = model["m"], model["sub"]
+    sub = model["sub"]
     books = [np.asarray(b, dtype=np.float64) for b in model["codebooks"]]
     out_schema = StructType([
         StructField(id_col, LongType()),
         StructField("codes", ArrayType(IntegerType())),
     ])
 
-    def _enc(batches):
-        import pyarrow as pa
+    def _enc(batch):
+        x = list_matrix(batch, 1)
+        if normalize:
+            x = _unit_or_zero(x)
+        return batch.column(0), _pq_codes(x, books, sub)
 
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = batch.column(0).to_numpy().astype("int64")
-            x = _batch_mat(batch.column(1))
-            if normalize:
-                nrm = np.linalg.norm(x, axis=1, keepdims=True)
-                nrm[nrm == 0] = 1.0
-                x = x / nrm
-            cs = np.empty((x.shape[0], m), dtype="int32")
-            for j in range(m):
-                xj = x[:, j * sub:(j + 1) * sub]
-                c = books[j]
-                d2 = xj @ c.T - 0.5 * (c * c).sum(axis=1)
-                cs[:, j] = d2.argmax(axis=1)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, type=pa.int64()), _list_col(cs, pa.int32())],
-                [id_col, "codes"])
-
-    return vecs.select(F.col(id_col), F.col(vec_col)).mapInArrow(
-        _enc, out_schema)
+    return map_arrow(vecs, [F.col(id_col), F.col(vec_col)], out_schema, _enc)
 
 
 def pq_topk(queries: DataFrame, corpus: DataFrame, k: int,
@@ -1491,31 +1279,16 @@ def pq_topk(queries: DataFrame, corpus: DataFrame, k: int,
     m, sub = model["m"], model["sub"]
     books = [np.asarray(b, dtype=np.float64) for b in model["codebooks"]]
 
-    q_rows = queries.select(F.col(id_col), F.col(vec_col)).collect()
-    if not q_rows:
-        raise ValueError("empty query set")
-    if len(q_rows) > 4096:
-        raise ValueError(
-            f"{len(q_rows)} query vectors; pq_topk broadcasts the "
-            "per-query distance tables — block the queries for more")
+    q_ids, q_mat = _collect_queries(queries, id_col, vec_col, "pq_topk")
     n_codes = max(len(b) for b in books)
-    table_bytes = len(q_rows) * m * n_codes * 8
+    table_bytes = q_ids.size * m * n_codes * 8
     if table_bytes > 512 * 1024 * 1024:
         raise ValueError(
             f"per-query ADC tables would be {table_bytes >> 20} MiB "
-            f"({len(q_rows)} queries x m {m} x codes {n_codes}); "
+            f"({q_ids.size} queries x m {m} x codes {n_codes}); "
             "block the queries into smaller batches")
-    q_ids = np.asarray([int(r[0]) for r in q_rows], dtype="int64")
-    q_mat = np.array([np.asarray(r[1], dtype=np.float64) for r in q_rows])
-    q_nrm = np.linalg.norm(q_mat, axis=1, keepdims=True)
-    q_nrm[q_nrm == 0] = 1.0  # zero query -> origin, not NaN distances
-    q_mat = q_mat / q_nrm
-    # tables[q, j, c] = ||q_j - books[j][c]||^2  (exact on the query side)
-    tables = np.stack([
-        ((q_mat[:, j * sub:(j + 1) * sub, None]
-          - books[j].T[None, :, :]) ** 2).sum(axis=1)
-        for j in range(m)
-    ], axis=1)
+    # zero query -> origin, not NaN distances
+    tables = _adc_tables(_unit_or_zero(q_mat), books, sub)
     k_ = int(k)
 
     # `encoded` is the stored-artifact seam: pass the materialized
@@ -1529,44 +1302,36 @@ def pq_topk(queries: DataFrame, corpus: DataFrame, k: int,
         StructField("_d2", DoubleType()),
     ])
 
-    def _scan(batches):
-        import pyarrow as pa
+    def _scan(batch):
+        return _local_topk(q_ids, batch.column(0).to_numpy().astype("int64"),
+                           list_matrix(batch, 1, dtype="int64"),
+                           lambda cs: _adc(tables, cs), k_)
 
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = batch.column(0).to_numpy().astype("int64")
-            codes_idx = batch.schema.get_field_index("codes")
-            cs = _batch_mat(batch.column(codes_idx), dtype="int64")
-            order = np.argsort(ids, kind="stable")
-            ids = ids[order]
-            cs = cs[order]
-            # ADC: d2[q, v] = sum_j tables[q, j, cs[v, j]]
-            d2 = np.zeros((q_ids.size, ids.size))
-            for j in range(m):
-                d2 += tables[:, j, :][:, cs[:, j]]
-            d2 = np.where(q_ids[:, None] == ids[None, :], np.inf, d2)
-            take = min(k_, d2.shape[1])
-            idx = np.argsort(d2, axis=1, kind="stable")[:, :take]
-            dd = np.take_along_axis(d2, idx, axis=1).ravel()
-            keep = dd != np.inf
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.repeat(q_ids, take)[keep], type=pa.int64()),
-                 pa.array(ids[idx.ravel()][keep], type=pa.int64()),
-                 pa.array(dd[keep], type=pa.float64())],
-                ["query_id", "neighbor_id", "_d2"])
+    scored = map_arrow(enc, [F.col(id_col), F.col("codes")], out_schema,
+                       _scan)
+    return _rank_topk(scored, k_, "_d2", "approx_d2", descending=False)
 
-    scored = enc.mapInArrow(_scan, out_schema)
-    from pyspark.sql import Window
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("_d2").asc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k_)
-        .select("query_id", "neighbor_id",
-                F.round("_d2", 4).alias("approx_d2"),
-                F.col("rnk").cast("long").alias("rnk"))
-    )
+
+def _adc_tables(q, books, sub: int):
+    """tables[q, j, c] = ||q_j - books[j][c]||^2, exact on the query
+    side: the lookup tables of asymmetric distance computation."""
+    import numpy as np
+
+    return np.stack([
+        ((q[:, j * sub:(j + 1) * sub, None] - b.T[None, :, :]) ** 2).sum(axis=1)
+        for j, b in enumerate(books)
+    ], axis=1)
+
+
+def _adc(tables, cs):
+    """d2[q, v] = sum_j tables[q, j, cs[v, j]]: the PQ estimate of the
+    squared distance of each query to each coded vector."""
+    import numpy as np
+
+    d2 = np.zeros((tables.shape[0], cs.shape[0]))
+    for j in range(cs.shape[1]):
+        d2 += tables[:, j, :][:, cs[:, j]]
+    return d2
 
 
 def ivfpq_fit(corpus: DataFrame, n_centroids: int = 32, m: int = 8,
@@ -1621,35 +1386,18 @@ def _residual_frame(corpus: DataFrame, c_unit, id_col: str,
     """(id, cell, resid): each corpus vector unit-normalized, routed
     to its nearest coarse centroid (argmax cosine, ties -> lowest
     cell), and the residual vs that centroid. One Arrow scan."""
-    import numpy as np
-
     out_schema = StructType([
         StructField(id_col, LongType()),
         StructField("cell", IntegerType()),
         StructField("resid", ArrayType(DoubleType())),
     ])
 
-    def _route(batches):
-        import pyarrow as pa
+    def _resid(batch):
+        cell, r = _route(list_matrix(batch, 1), c_unit)
+        return batch.column(0), cell, r
 
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = batch.column(0).to_numpy().astype("int64")
-            x = _batch_mat(batch.column(1))
-            nrm = np.linalg.norm(x, axis=1, keepdims=True)
-            nrm[nrm == 0] = 1.0
-            x = x / nrm
-            cell = (x @ c_unit.T).argmax(axis=1)
-            r = x - c_unit[cell]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, type=pa.int64()),
-                 pa.array(cell.astype("int32")),
-                 _list_col(r, pa.float64())],
-                [id_col, "cell", "resid"])
-
-    return corpus.select(F.col(id_col), F.col(vec_col)).mapInArrow(
-        _route, out_schema)
+    return map_arrow(corpus, [F.col(id_col), F.col(vec_col)], out_schema,
+                     _resid)
 
 
 def ivfpq_encode(corpus: DataFrame, model: dict,
@@ -1663,7 +1411,7 @@ def ivfpq_encode(corpus: DataFrame, model: dict,
     import numpy as np
 
     c_unit = np.asarray(model["centroids"], dtype=np.float64)
-    m, sub = model["m"], model["sub"]
+    sub = model["sub"]
     books = [np.asarray(b, dtype=np.float64) for b in model["codebooks"]]
     out_schema = StructType([
         StructField(id_col, LongType()),
@@ -1671,33 +1419,12 @@ def ivfpq_encode(corpus: DataFrame, model: dict,
         StructField("codes", ArrayType(IntegerType())),
     ])
 
-    def _route_encode(batches):
-        import pyarrow as pa
+    def _route_encode(batch):
+        cell, r = _route(list_matrix(batch, 1), c_unit)
+        return batch.column(0), cell, _pq_codes(r, books, sub)
 
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = batch.column(0).to_numpy().astype("int64")
-            x = _batch_mat(batch.column(1))
-            nrm = np.linalg.norm(x, axis=1, keepdims=True)
-            nrm[nrm == 0] = 1.0
-            x = x / nrm
-            cell = (x @ c_unit.T).argmax(axis=1)
-            r = x - c_unit[cell]
-            cs = np.empty((x.shape[0], m), dtype="int32")
-            for j in range(m):
-                rj = r[:, j * sub:(j + 1) * sub]
-                b = books[j]
-                cs[:, j] = (rj @ b.T - 0.5 * (b * b).sum(axis=1)
-                            ).argmax(axis=1)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, type=pa.int64()),
-                 pa.array(cell.astype("int32")),
-                 _list_col(cs, pa.int32())],
-                [id_col, "cell", "codes"])
-
-    return corpus.select(F.col(id_col), F.col(vec_col)).mapInArrow(
-        _route_encode, out_schema)
+    return map_arrow(corpus, [F.col(id_col), F.col(vec_col)], out_schema,
+                     _route_encode)
 
 
 def ivfpq_topk(queries: DataFrame, corpus: DataFrame | None, k: int,
@@ -1743,50 +1470,32 @@ def ivfpq_topk(queries: DataFrame, corpus: DataFrame | None, k: int,
     m_, sub = model["m"], model["sub"]
     books = [np.asarray(b, dtype=np.float64) for b in model["codebooks"]]
 
-    q_rows = queries.select(F.col(id_col), F.col(vec_col)).collect()
-    if not q_rows:
-        raise ValueError("empty query set")
-    if len(q_rows) > 4096:
-        raise ValueError("query set above the broadcast guard; "
-                         "block the queries")
+    q_ids, q_mat = _collect_queries(queries, id_col, vec_col, "ivfpq_topk")
     # the ADC tables here are PER-(query, cell): nprobe x m x codes
     # doubles per query, an nprobe-times larger broadcast than
     # pq_topk's per-query table — guard on actual bytes, not just
     # query count, so generous hyperparameters can't silently ship a
     # multi-GB closure to every task
     n_codes = max(len(b) for b in books)
-    table_bytes = len(q_rows) * nprobe * m_ * n_codes * 8
+    table_bytes = q_ids.size * nprobe * m_ * n_codes * 8
     if table_bytes > 512 * 1024 * 1024:
         raise ValueError(
             f"per-(query, cell) ADC tables would be "
-            f"{table_bytes >> 20} MiB ({len(q_rows)} queries x "
+            f"{table_bytes >> 20} MiB ({q_ids.size} queries x "
             f"nprobe {nprobe} x m {m_} x codes {n_codes}); "
             "block the queries into smaller batches")
-    q_ids = np.asarray([int(r[0]) for r in q_rows], dtype="int64")
-    q_mat = np.array([np.asarray(r[1], dtype=np.float64) for r in q_rows])
-    q_nrm = np.linalg.norm(q_mat, axis=1, keepdims=True)
-    q_nrm[q_nrm == 0] = 1.0  # zero query -> origin, not NaN distances
-    q_mat = q_mat / q_nrm
+    q_mat = _unit_or_zero(q_mat)  # zero query -> origin, not NaN distances
     # nprobe nearest cells per query (cosine == dot on unit sphere)
     aff = q_mat @ c_unit.T
     probe_cells = np.argsort(-aff, axis=1, kind="stable")[:, :nprobe]
-    # per-(query, cell) ADC tables on the RESIDUAL q - c_cell:
-    # tables[(cell)][qi_local, j, code] = ||(q - c)_j - books[j][code]||^2
-    cell_queries: dict[int, "np.ndarray"] = {}
-    cell_tables: dict[int, "np.ndarray"] = {}
+    # per-(query, cell) ADC tables on the RESIDUAL q - c_cell
     cells_by_q: dict[int, list[int]] = {}
     for qi, cells in enumerate(probe_cells):
         for c in cells:
             cells_by_q.setdefault(int(c), []).append(qi)
-    for c, qidx in cells_by_q.items():
-        qs = np.asarray(qidx)
-        rq = q_mat[qs] - c_unit[c]
-        cell_queries[c] = qs
-        cell_tables[c] = np.stack([
-            ((rq[:, j * sub:(j + 1) * sub, None]
-              - books[j].T[None, :, :]) ** 2).sum(axis=1)
-            for j in range(m_)
-        ], axis=1)
+    cell_queries = {c: np.asarray(qidx) for c, qidx in cells_by_q.items()}
+    cell_tables = {c: _adc_tables(q_mat[qs] - c_unit[c], books, sub)
+                   for c, qs in cell_queries.items()}
     k_ = int(k)
 
     if encoded is None:
@@ -1796,13 +1505,11 @@ def ivfpq_topk(queries: DataFrame, corpus: DataFrame | None, k: int,
         encoded = ivfpq_encode(corpus, model, id_col, vec_col)
     # probed-cell pruning: on a cell-partitioned stored table this is
     # PartitionFilters (whole unprobed cells never read); inline it is
-    # still a pushed scan predicate. Project to exactly the three
-    # scanned columns so meta/batch partition columns a stored table
-    # carries never ride the Arrow transfer (and the kernel's
-    # positional id access stays valid for any table layout).
+    # still a pushed scan predicate. The runner projects exactly the
+    # three scanned columns, so meta/batch partition columns a stored
+    # table carries never ride the Arrow transfer.
     enc = encoded.where(F.col("cell").isin(
-        [int(c) for c in sorted(cell_queries)])) \
-        .select(F.col(id_col), F.col("cell"), F.col("codes"))
+        [int(c) for c in sorted(cell_queries)]))
 
     out_schema = StructType([
         StructField("query_id", LongType()),
@@ -1810,60 +1517,22 @@ def ivfpq_topk(queries: DataFrame, corpus: DataFrame | None, k: int,
         StructField("_d2", DoubleType()),
     ])
 
-    def _scan(batches):
-        import pyarrow as pa
+    def _scan(batch):
+        ids = batch.column(0).to_numpy().astype("int64")
+        cell = batch.column(1).to_numpy().astype("int64")
+        cs = list_matrix(batch, 2, dtype="int64")
+        parts = [
+            _local_topk(q_ids[cell_queries[c]], ids[cell == c],
+                        cs[cell == c],
+                        lambda rows, tab=cell_tables[c]: _adc(tab, rows), k_)
+            for c in np.unique(cell).tolist() if c in cell_tables]
+        if not parts:
+            return None
+        return [np.concatenate(col) for col in zip(*parts)]
 
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = batch.column(0).to_numpy().astype("int64")
-            cell = batch.column(
-                batch.schema.get_field_index("cell")
-            ).to_numpy().astype("int64")
-            cs = _batch_mat(
-                batch.column(batch.schema.get_field_index("codes")),
-                dtype="int64")
-            order = np.argsort(ids, kind="stable")
-            ids, cell, cs = ids[order], cell[order], cs[order]
-            qcols, ncols, dcols = [], [], []
-            for c in np.unique(cell):
-                tab = cell_tables.get(int(c))
-                if tab is None:
-                    continue
-                sel = cell == c
-                sel_ids = ids[sel]
-                sel_cs = cs[sel]
-                qs = cell_queries[int(c)]
-                d2 = np.zeros((qs.size, sel_ids.size))
-                for j in range(m_):
-                    d2 += tab[:, j, :][:, sel_cs[:, j]]
-                d2 = np.where(q_ids[qs][:, None] == sel_ids[None, :],
-                              np.inf, d2)
-                take = min(k_, d2.shape[1])
-                idx = np.argsort(d2, axis=1, kind="stable")[:, :take]
-                dd = np.take_along_axis(d2, idx, axis=1).ravel()
-                keep = dd != np.inf
-                qcols.append(np.repeat(q_ids[qs], take)[keep])
-                ncols.append(sel_ids[idx.ravel()][keep])
-                dcols.append(dd[keep])
-            if qcols:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.concatenate(qcols), type=pa.int64()),
-                     pa.array(np.concatenate(ncols), type=pa.int64()),
-                     pa.array(np.concatenate(dcols), type=pa.float64())],
-                    ["query_id", "neighbor_id", "_d2"])
-
-    scored = enc.mapInArrow(_scan, out_schema)
-    from pyspark.sql import Window
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("_d2").asc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k_)
-        .select("query_id", "neighbor_id",
-                F.round("_d2", 4).alias("approx_d2"),
-                F.col("rnk").cast("long").alias("rnk"))
-    )
+    scored = map_arrow(enc, [F.col(id_col), F.col("cell"), F.col("codes")],
+                       out_schema, _scan)
+    return _rank_topk(scored, k_, "_d2", "approx_d2", descending=False)
 
 
 def ivfpq_store_index(corpus: DataFrame, prefix: str,
@@ -2354,11 +2023,9 @@ def _semdedup_assigned(vecs: DataFrame, centroids: list[list[float]],
     the cast vector and norm kept, so semantic_dedup's branches all
     derive from ONE frame instead of re-joining embeddings.
 
-    r15 (guide §4.2): the former JVM form evaluated k zip_with +
-    aggregate folds per row — interpreted (CodegenFallback) higher-
-    order expressions, measured as the DOMINANT cost of every
-    semdedup path at sf0.1 (assignment checkpoint 2.0-3.6 s of a
-    3.2-4.9 s inline wall). This kernel computes the identical values
+    The JVM form (_semdedup_assigned_sql) evaluates k interpreted
+    zip_with + aggregate folds per row, measured as the dominant cost
+    of every semdedup path at sf0.1. This kernel computes the identical values
     in numpy with BIT-EXACT arithmetic: dots and squared norms
     accumulate COLUMN-BY-COLUMN (``acc += V[:, j] * c[j]``), which
     reproduces the JVM left fold's exact sequence of IEEE adds
@@ -2368,19 +2035,18 @@ def _semdedup_assigned(vecs: DataFrame, centroids: list[list[float]],
     np.argmax takes the FIRST max, matching
     array_position(arr, array_max(arr)). Equivalence vs the retained
     JVM reference (_semdedup_assigned_sql) is pytest-asserted,
-    including the zero-norm, NULL-vector and ragged-dimension branches.
+    including the zero-norm, NULL-vector and ragged-dimension branches:
+    this kernel keeps its own per-row NULL/ragged contract instead of
+    the runner's list_matrix.
 
     Batch (non-streaming) inputs are pre-partitioned by id — small
     corpora arrive as one parquet split and would serialize the
     kernel; streaming inputs keep their micro-batch partitioning."""
     import math
 
-    from pyspark.sql.pandas.types import to_arrow_type
-    from pyspark.sql.types import (ArrayType, DoubleType, IntegerType,
-                                   StructField, StructType)
+    import numpy as np
 
     id_type = vecs.schema[id_col].dataType
-    id_arrow = to_arrow_type(id_type)
     cents = [[float(x) for x in c] for c in centroids]
     cns = [math.sqrt(sum(x * x for x in c)) for c in cents]
     dims = {len(c) for c in cents}
@@ -2392,102 +2058,85 @@ def _semdedup_assigned(vecs: DataFrame, centroids: list[list[float]],
         StructField("_n", DoubleType()),
     ])
 
-    def _assign(batches):
-        import numpy as np
+    cmat = [np.asarray(c, dtype=np.float64) for c in cents]
+    k = len(cmat)
+
+    def _assign(batch):
         import pyarrow as pa
 
-        cmat = [np.asarray(c, dtype=np.float64) for c in cents]
-        k = len(cmat)
-        list_f64 = pa.list_(pa.float64())
-        for batch in batches:
-            if batch.num_rows == 0:
+        ids = batch.column(0)
+        vcol = batch.column(1).cast(pa.list_(pa.float64()))
+        n = len(vcol)
+        offs = vcol.offsets.to_numpy(zero_copy_only=False)
+        widths = np.diff(offs)
+        if vcol.null_count or len(set(widths.tolist()) | dims) > 1:
+            # NULL vectors / dims differing from each other or from
+            # the centroids: defer to the JVM-shaped per-row path
+            # via pylists (never taken on the uniform-dim corpora;
+            # correctness fallback only). As in the SQL form, a
+            # zero-norm centroid's literal 0.0 survives a NULL
+            # vector, a length mismatch gives a NULL cosine
+            # (zip_with NULL-pads), and array_max skips NULLs.
+            rows = vcol.to_pylist()
+            cells, sims_o, norms = [], [], []
+            for r in rows:
+                nr = None
+                if r is not None:
+                    acc = 0.0
+                    for x in r:
+                        acc += x * x
+                    nr = math.sqrt(acc)
+                cs = []
+                for ci in range(k):
+                    if cns[ci] == 0:
+                        cs.append(0.0)
+                    elif r is None or (nr != 0
+                                       and len(r) != len(cmat[ci])):
+                        cs.append(None)
+                    elif nr == 0:
+                        cs.append(0.0)
+                    else:
+                        d = 0.0
+                        for xj, cj in zip(r, cmat[ci]):
+                            d += xj * cj
+                        s = d / (nr * cns[ci])
+                        cs.append(math.copysign(
+                            math.floor(abs(s) * 1e6 + 0.5), s) / 1e6)
+                known = [x for x in cs if x is not None]
+                mx = max(known) if known else None
+                cells.append(None if mx is None else cs.index(mx))
+                sims_o.append(mx)
+                norms.append(nr)
+            return ids, cells, sims_o, vcol, norms
+        d = int(widths[0]) if n else 0
+        V = vcol.flatten().to_numpy(zero_copy_only=False) \
+            .reshape(n, d)
+        # squared norm, column-by-column: the JVM fold's add order
+        acc = np.zeros(n, dtype=np.float64)
+        for j in range(d):
+            acc += V[:, j] * V[:, j]
+        nrm = np.sqrt(acc)
+        zero = nrm == 0
+        sims = np.empty((n, k), dtype=np.float64)
+        for ci in range(k):
+            if cns[ci] == 0:
+                sims[:, ci] = 0.0
                 continue
-            ids = batch.column(0)
-            vcol = batch.column(1).cast(list_f64)
-            n = len(vcol)
-            offs = vcol.offsets.to_numpy(zero_copy_only=False)
-            widths = np.diff(offs)
-            if vcol.null_count or len(set(widths.tolist()) | dims) > 1:
-                # NULL vectors / dims differing from each other or from
-                # the centroids: defer to the JVM-shaped per-row path
-                # via pylists (never taken on the uniform-dim corpora;
-                # correctness fallback only). As in the SQL form, a
-                # zero-norm centroid's literal 0.0 survives a NULL
-                # vector, a length mismatch gives a NULL cosine
-                # (zip_with NULL-pads), and array_max skips NULLs.
-                rows = vcol.to_pylist()
-                cells, sims_o, norms = [], [], []
-                for r in rows:
-                    nr = None
-                    if r is not None:
-                        acc = 0.0
-                        for x in r:
-                            acc += x * x
-                        nr = math.sqrt(acc)
-                    cs = []
-                    for ci in range(k):
-                        if cns[ci] == 0:
-                            cs.append(0.0)
-                        elif r is None or (nr != 0
-                                           and len(r) != len(cmat[ci])):
-                            cs.append(None)
-                        elif nr == 0:
-                            cs.append(0.0)
-                        else:
-                            d = 0.0
-                            for xj, cj in zip(r, cmat[ci]):
-                                d += xj * cj
-                            s = d / (nr * cns[ci])
-                            cs.append(math.copysign(
-                                math.floor(abs(s) * 1e6 + 0.5), s) / 1e6)
-                    known = [x for x in cs if x is not None]
-                    mx = max(known) if known else None
-                    cells.append(None if mx is None else cs.index(mx))
-                    sims_o.append(mx)
-                    norms.append(nr)
-                yield pa.RecordBatch.from_arrays(
-                    [ids.cast(id_arrow),
-                     pa.array(cells, type=pa.int32()),
-                     pa.array(sims_o, type=pa.float64()),
-                     vcol, pa.array(norms, type=pa.float64())],
-                    [id_col, "cell", "cent_sim", "_v", "_n"])
-                continue
-            d = int(widths[0]) if n else 0
-            V = vcol.flatten().to_numpy(zero_copy_only=False) \
-                .reshape(n, d)
-            # squared norm, column-by-column: the JVM fold's add order
-            acc = np.zeros(n, dtype=np.float64)
+            c = cmat[ci]
+            accd = np.zeros(n, dtype=np.float64)
             for j in range(d):
-                acc += V[:, j] * V[:, j]
-            nrm = np.sqrt(acc)
-            zero = nrm == 0
-            sims = np.empty((n, k), dtype=np.float64)
-            for ci in range(k):
-                if cns[ci] == 0:
-                    sims[:, ci] = 0.0
-                    continue
-                c = cmat[ci]
-                accd = np.zeros(n, dtype=np.float64)
-                for j in range(d):
-                    accd += V[:, j] * c[j]
-                s = accd / (nrm * cns[ci])
-                s[zero] = 0.0
-                sims[:, ci] = np.copysign(
-                    np.floor(np.abs(s) * 1e6 + 0.5), s) / 1e6
-            cell = np.argmax(sims, axis=1)
-            cent = sims[np.arange(n), cell]
-            yield pa.RecordBatch.from_arrays(
-                [ids.cast(id_arrow),
-                 pa.array(cell.astype(np.int32)),
-                 pa.array(cent),
-                 vcol, pa.array(nrm)],
-                [id_col, "cell", "cent_sim", "_v", "_n"])
+                accd += V[:, j] * c[j]
+            s = accd / (nrm * cns[ci])
+            s[zero] = 0.0
+            sims[:, ci] = np.copysign(
+                np.floor(np.abs(s) * 1e6 + 0.5), s) / 1e6
+        cell = np.argmax(sims, axis=1)
+        cent = sims[np.arange(n), cell]
+        return ids, cell, cent, vcol, nrm
 
-    src = vecs.select(F.col(id_col), F.col(vec_col))
-    if not vecs.isStreaming:
-        n_parts = vecs.sparkSession.sparkContext.defaultParallelism
-        src = src.repartition(n_parts, F.col(id_col))
-    return src.mapInArrow(_assign, out_schema)
+    return map_arrow(vecs, [F.col(id_col), F.col(vec_col)], out_schema,
+                     _assign,
+                     partition_by=None if vecs.isStreaming else id_col)
 
 
 def _semdedup_dropped_within(assigned: DataFrame, eps: float,

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .arrow_kernel import map_arrow, md5_60, token_starts
 from .dedup import normalized_text
 
 # BPE-ish word/number/symbol tokenizer (shared with the DuckDB oracle)
@@ -360,77 +361,51 @@ def doc_fingerprints(docs: DataFrame, id_col: str = "doc_id",
     fp_min{i}: i-th independent min shingle hash (rolling-hash-style
     winnowing fingerprint; equal fp_min columns => likely near-dup).
 
-    r14 (guide §4.2): the former JVM form built the shingle array with
-    an interpreted transform and hashed it through minhash_k more
-    interpreted per-element transforms (md5 + conv + substring per
-    shingle per hash, all CodegenFallback). The projection is
-    md5-BOUND, so it moved into an Arrow kernel: shingles are byte
-    slices of the normalized text (the _span_instances offsets trick —
-    normalized text is the single-space-joined token stream, pure
-    ASCII), each hashed with C hashlib; int(hexdigest[:15], 16)
-    replicates md5_long exactly and min() over all instances equals
-    array_min over the distinct set. Measured 1.58 -> 0.6 s at sf0.1,
-    output bit-identical (exceptAll 0/0 both ways; same DuckDB
-    oracle). Contrast with_shingles, which KEEPS the JVM form: there
-    the output is the array<string> itself and the same-window A/B
-    read 1.0-1.4 s JVM vs 2.4-2.7 s Arrow — list<string> emission
-    costs more than the interpreted build.
+    The projection is md5-bound, so it runs as an Arrow kernel:
+    shingles are byte slices of the normalized text (``token_starts``),
+    each hashed with C hashlib; ``md5_60`` replicates md5_long and min()
+    over all instances equals array_min over the distinct set. NULL
+    text gives NULL fingerprints, as md5(NULL) does. with_shingles, by
+    contrast, keeps the JVM form: its output is the array<string>
+    itself, and list<string> emission cost more than the interpreted
+    build (1.0-1.4 s JVM vs 2.4-2.7 s Arrow).
     """
-    from pyspark.sql.pandas.types import to_arrow_type
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-    id_type = docs.schema[id_col].dataType
-    id_arrow = to_arrow_type(id_type)
     k = int(minhash_k)
     nn = int(n)
     out_schema = StructType(
-        [StructField(id_col, id_type), StructField("fp_md5", StringType())]
+        [StructField(id_col, docs.schema[id_col].dataType),
+         StructField("fp_md5", StringType())]
         + [StructField(f"fp_min{i}", LongType()) for i in range(k)])
 
-    def _fp(batches):
-        import pyarrow as pa
+    def _fp(batch):
         from hashlib import md5
 
         prefixes = [(str(i) + "|").encode() for i in range(k)]
-        for batch in batches:
-            if batch.num_rows == 0:
+        fpmd = []
+        mins: list[list[int]] = [[] for _ in range(k)]
+        for s in batch.column(1).to_pylist():
+            if s is None:
+                fpmd.append(None)
+                for m in mins:
+                    m.append(None)
                 continue
-            texts = batch.column(1).to_pylist()
-            fpmd = []
-            mins: list[list[int]] = [[] for _ in range(k)]
-            for s in texts:
-                if s is None:
-                    # NULL text: md5(NULL)/min-hash(NULL) are NULL in
-                    # the JVM form this kernel replaced
-                    fpmd.append(None)
-                    for m in mins:
-                        m.append(None)
-                    continue
-                b = s.encode()
-                fpmd.append(md5(b).hexdigest())
-                toks = s.split(" ")
-                if len(toks) < nn:
-                    sh = [b]
-                else:
-                    starts = [0]
-                    for t in toks:
-                        starts.append(starts[-1] + len(t) + 1)
-                    sh = [b[starts[i]:starts[i + nn] - 1]
-                          for i in range(len(toks) - nn + 1)]
-                for i, p in enumerate(prefixes):
-                    mins[i].append(min(
-                        int(md5(p + g).hexdigest()[:15], 16) for g in sh))
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(0).cast(id_arrow), pa.array(fpmd)]
-                + [pa.array(m, type=pa.int64()) for m in mins],
-                [id_col, "fp_md5"] + [f"fp_min{i}" for i in range(k)])
+            b = s.encode()
+            fpmd.append(md5(b).hexdigest())
+            starts = token_starts(s, b)
+            if len(starts) - 1 < nn:
+                sh = [b]
+            else:
+                sh = [b[starts[i]:starts[i + nn] - 1]
+                      for i in range(len(starts) - nn)]
+            for i, p in enumerate(prefixes):
+                mins[i].append(min(md5_60(p + g) for g in sh))
+        return [batch.column(0), fpmd, *mins]
 
-    n_parts = docs.sparkSession.sparkContext.defaultParallelism
-    return (
-        docs.repartition(n_parts, F.col(id_col))
-        .select(F.col(id_col), normalized_text(text_col).alias("_nt"))
-        .mapInArrow(_fp, out_schema)
-    )
+    return map_arrow(docs, [F.col(id_col),
+                            normalized_text(text_col).alias("_nt")],
+                     out_schema, _fp, partition_by=id_col)
 
 
 def bm25_topk(docs: DataFrame, queries: DataFrame, k: int = 5,
@@ -1231,100 +1206,63 @@ def winnow_fingerprints(docs: DataFrame, k: int = 4, w: int = 5,
     pos = 0-based k-gram position -- join on fp to find local
     overlaps.
 
-    Implementation (r14, guide §4.2): the computation is md5-BOUND
-    and strictly per-document, so it runs as ONE mapInArrow kernel
-    over (id, normalized_text) -- each k-gram is a byte slice of the
-    single-space-joined token stream (normalized text is pure ASCII
-    by construction: [a-z0-9 ], so char offsets == byte offsets),
-    hashed with C hashlib; ``int(hexdigest[:15], 16)`` replicates
-    md5_long exactly; and the per-window rightmost-argmin selection
-    is a vectorized numpy sliding-window pass over the int64 hash
-    sequence (integer compares -- engine-portable by definition).
-    History of forms, all hash-equal against the same direct-
-    semantics DuckDB oracle: direct array expressions ~12 s at sf0.1
-    (transform()/filter() are CodegenFallback); the r10 run-length
-    lag/lead reformulation ~1.5 s (full codegen, but posexplode blew
-    the doc rows into ~100x token rows through a doc-keyed window
-    exchange plus 2(w-1) lag/lead columns); this kernel ~0.5 s.
+    Implementation: the computation is md5-bound and strictly
+    per-document, so it runs as ONE Arrow kernel over (id,
+    normalized_text): each k-gram is a byte slice of the token stream
+    (``token_starts``) hashed with C hashlib (``md5_60`` == md5_long),
+    and the per-window rightmost-argmin selection is a vectorized numpy
+    sliding-window pass over the int64 hash sequence. NULL documents
+    are dropped, as the posexplode form this replaced dropped them.
+    Earlier forms, all hash-equal against the same DuckDB oracle: direct
+    array expressions ~12 s at sf0.1 (transform()/filter() are
+    CodegenFallback); a run-length lag/lead form ~1.5 s; this kernel
+    ~0.5 s.
 
-    Scale: ONE cheap shuffle of the compact (id, text) rows (the
-    same load-bearing repartition as with_tokens -- small corpora
-    arrive as one parquet split and would serialize the hashing),
-    then a single scan-shaped kernel pass; the exploded token rows
-    never exist Spark-side. Fp keys are uniform 60-bit hashes for
+    Scale: ONE cheap shuffle of the compact (id, text) rows (small
+    corpora arrive as one parquet split and would serialize the
+    hashing), then a single scan-shaped kernel pass; the exploded token
+    rows never exist Spark-side. Fp keys are uniform 60-bit hashes for
     the downstream overlap join.
     """
-    from pyspark.sql.pandas.types import to_arrow_type
     from pyspark.sql.types import LongType, StructField, StructType
 
-    id_type = docs.schema[id_col].dataType
-    id_arrow = to_arrow_type(id_type)
     out_schema = StructType([
-        StructField(id_col, id_type),
+        StructField(id_col, docs.schema[id_col].dataType),
         StructField("pos", LongType()),
         StructField("fp", LongType()),
     ])
     k_, w_ = int(k), int(w)
 
-    def _winnow(batches):
-        import hashlib
-
+    def _winnow(batch):
         import numpy as np
-        import pyarrow as pa
 
-        md5 = hashlib.md5
-        for batch in batches:
-            if batch.num_rows == 0:
+        out_ids, out_pos, out_fp = [], [], []
+        for rid, s in zip(batch.column(0).to_pylist(),
+                          batch.column(1).to_pylist()):
+            if s is None:
                 continue
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            out_ids, out_pos, out_fp = [], [], []
-            for rid, s in zip(ids, texts):
-                if s is None:
-                    # NULL text: normalized_text(NULL) is NULL and the
-                    # replaced posexplode form dropped such docs
-                    continue
-                b = s.encode()
-                # token byte offsets over the normalized stream; when
-                # the ASCII invariant of normalized_text ever breaks
-                # (len(b) != len(s)), fall back to encoded-token widths
-                # so the byte slices stay aligned
-                starts = [0]
-                if len(b) == len(s):
-                    for t in s.split(" "):
-                        starts.append(starts[-1] + len(t) + 1)
-                else:  # pragma: no cover - normalized_text is ASCII
-                    for t in s.split(" "):
-                        starts.append(starts[-1] + len(t.encode()) + 1)
-                n_g = len(starts) - k_  # == n_tokens - k + 1
-                if n_g < 1:
-                    continue
-                fps = np.empty(n_g, dtype=np.int64)
-                for i in range(n_g):
-                    fps[i] = int(
-                        md5(b[starts[i]:starts[i + k_] - 1])
-                        .hexdigest()[:15], 16)
-                ww = w_ if w_ < n_g else n_g
-                win = np.lib.stride_tricks.sliding_window_view(fps, ww)
-                # rightmost argmin per window: argmin over the
-                # reversed window gives the offset from the right
-                m = (ww - 1) - np.argmin(win[:, ::-1], axis=1)
-                sel = np.unique(m + np.arange(win.shape[0]))
-                out_ids.extend([rid] * len(sel))
-                out_pos.extend(sel.tolist())
-                out_fp.extend(fps[sel].tolist())
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_ids, type=id_arrow),
-                 pa.array(out_pos, type=pa.int64()),
-                 pa.array(out_fp, type=pa.int64())],
-                [id_col, "pos", "fp"])
+            b = s.encode()
+            starts = token_starts(s, b)
+            n_g = len(starts) - k_  # == n_tokens - k + 1
+            if n_g < 1:
+                continue
+            fps = np.fromiter((md5_60(b[starts[i]:starts[i + k_] - 1])
+                               for i in range(n_g)), dtype=np.int64,
+                              count=n_g)
+            ww = w_ if w_ < n_g else n_g
+            win = np.lib.stride_tricks.sliding_window_view(fps, ww)
+            # rightmost argmin per window: argmin over the reversed
+            # window gives the offset from the right
+            m = (ww - 1) - np.argmin(win[:, ::-1], axis=1)
+            sel = np.unique(m + np.arange(win.shape[0]))
+            out_ids.extend([rid] * len(sel))
+            out_pos.extend(sel.tolist())
+            out_fp.extend(fps[sel].tolist())
+        return out_ids, out_pos, out_fp
 
-    n_parts = docs.sparkSession.sparkContext.defaultParallelism
-    return (
-        docs.select(F.col(id_col), normalized_text(text_col).alias("_nt"))
-        .repartition(n_parts, id_col)
-        .mapInArrow(_winnow, out_schema)
-    )
+    return map_arrow(docs, [F.col(id_col),
+                            normalized_text(text_col).alias("_nt")],
+                     out_schema, _winnow, partition_by=id_col)
 
 
 def winnow_overlap_pairs(docs: DataFrame, k: int = 4, w: int = 5,

@@ -44,15 +44,13 @@ from .operators import (
     windowed_global_count,
 )
 from .session import ensure_utc
-from .sources import load_table
+from .sources import load_table, with_item
 
 US = 1_000_000
 HOUR_US = 3600 * US
 MIN_US = 60 * US
 
-# item_id extraction from the props JSON ({"k": 87}) — regexp on both
-# engines avoids JSON-extension differences.
-ITEM_RE = r'"k":\s*(\d+)'
+# DuckDB twin of sources.with_item
 DUCK_ITEM = (
     "TRY_CAST(regexp_extract(props, '\"k\":\\s*(\\d+)', 1) AS BIGINT)"
 )
@@ -61,12 +59,6 @@ DUCK_ITEM = (
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_utc(spark)
     return load_table(spark, sf_dir, "events")
-
-
-def _with_item(df: DataFrame) -> DataFrame:
-    return df.withColumn(
-        "item_id", F.regexp_extract("props", ITEM_RE, 1).cast("long")
-    )
 
 
 def _duck_sliding_end(size_us: int, slide_us: int, ts: str = "ts") -> str:
@@ -89,7 +81,7 @@ def _duck_tumbling_end(size_us: int, ts: str = "ts") -> str:
 # =====================================================================
 
 def hot_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _with_item(_events(spark, sf_dir).where(F.col("event_type") == "view"))
+    ev = with_item(_events(spark, sf_dir).where(F.col("event_type") == "view"))
     counts = windowed_count(ev, "ts", ["item_id"], "1 hour", "15 minutes")
     ranked = top_n_per_window(
         counts,
@@ -393,7 +385,7 @@ def view_then_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase of the same (user, item) within 24h — the J3 create->pay
     shape expressed through followed_by instead of the dedicated
     match_create_pay state machine."""
-    ev = _with_item(_events(spark, sf_dir))
+    ev = with_item(_events(spark, sf_dir))
     return followed_by(
         ev, ["user_id", "item_id"], "ts",
         F.col("event_type") == "view", F.col("event_type") == "purchase",
@@ -433,7 +425,7 @@ ORDER_TIMEOUT_S = 3 * 24 * 3600
 
 
 def order_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _with_item(_events(spark, sf_dir))
+    ev = with_item(_events(spark, sf_dir))
     return match_create_pay(
         ev,
         ["user_id", "item_id"],
@@ -481,7 +473,7 @@ IJ_LO_S, IJ_HI_S = -12 * 3600, 12 * 3600
 
 
 def _pays_receipts(spark: SparkSession, sf_dir: str):
-    ev = _with_item(_events(spark, sf_dir))
+    ev = with_item(_events(spark, sf_dir))
     pays = ev.where(F.col("event_type") == "purchase").select(
         "user_id", "item_id", F.col("ts").alias("pay_ts"),
         F.col("event_id").alias("pay_id"),
@@ -890,7 +882,7 @@ def purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     range probe (operators/asof.py)."""
     from .operators.asof import asof_join
 
-    ev = _with_item(_events(spark, sf_dir))
+    ev = with_item(_events(spark, sf_dir))
     purchases = ev.where(F.col("event_type") == "purchase").select(
         "user_id", "item_id", F.col("ts"), F.col("event_id")
     )
@@ -1054,7 +1046,7 @@ def heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     and demands every CMS bound certificate be 1."""
     from .operators.sketches import heavy_hitters_cms
 
-    ev = _with_item(_events(spark, sf_dir)).where(F.col("item_id").isNotNull())
+    ev = with_item(_events(spark, sf_dir)).where(F.col("item_id").isNotNull())
     return heavy_hitters_cms(ev, "item_id", k=10)
 
 

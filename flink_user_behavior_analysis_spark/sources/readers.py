@@ -126,6 +126,19 @@ def _events_ts(raw: DataFrame) -> DataFrame:
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
+# item_id in the events' props JSON ({"k": 87}): a regexp, so that both
+# engines read it alike (queries.DUCK_ITEM is the DuckDB form)
+ITEM_RE = r'"k":\s*(\d+)'
+
+
+def with_item(events: DataFrame) -> DataFrame:
+    """``events`` plus ``item_id``: the long after ``"k":`` in ``props``,
+    NULL when props is NULL or has no such entry (TRY_CAST, as in
+    DuckDB; a plain cast raises CAST_INVALID_INPUT under ANSI mode)."""
+    return events.withColumn(
+        "item_id", F.regexp_extract("props", ITEM_RE, 1).try_cast("long"))
+
+
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
     return {n: load_table(spark, sf_dir, n) for n in (names or schemas.TESTDATA_TABLES)}
 

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ..operators import top_n_per_window, windowed_count, windowed_global_count
 from ..session import ensure_utc
-from ..sources.readers import file_replay_stream
+from ..sources.readers import file_replay_stream, with_item
 
 
 def stream_events(
@@ -54,9 +54,7 @@ def stream_events(
 def hot_items_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1 streaming: per-item sliding-window counts (HotItem.java:70-75)."""
     ev = stream_events(spark, sf_dir).where(F.col("event_type") == "view")
-    ev = ev.withColumn(
-        "item_id", F.regexp_extract("props", r'"k":\s*(\d+)', 1).cast("long")
-    )
+    ev = with_item(ev)
     return windowed_count(ev, "ts", ["item_id"], "1 hour", "15 minutes")
 
 
@@ -974,9 +972,7 @@ def tx_interval_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark-bounded state, matches emit as they arrive."""
     lo_s, hi_s = -12 * 3600, 12 * 3600
     ev = stream_events(spark, sf_dir, watermark=None)
-    ev = ev.withColumn(
-        "item_id", F.regexp_extract("props", r'"k":\s*(\d+)', 1).cast("long")
-    )
+    ev = with_item(ev)
     pays = (
         ev.where(F.col("event_type") == "purchase")
         .select("user_id", "item_id", F.col("ts").alias("pay_ts"))

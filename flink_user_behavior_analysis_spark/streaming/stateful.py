@@ -40,7 +40,9 @@ allows, keeping finer sub-keys inside the state row:
   last event time.
 
 A NULL sub-key (behavior, item) is its own entry, as it was its own
-group when the sub-key was part of the grouping key. On the
+group when the sub-key was part of the grouping key; a NULL item's pays
+and receipts never match each other, as NULL keys never join in the
+batch twin. On the
 benchmark's ``alert_stream`` replay (50 users, ~30 rows per user and
 micro-batch) keying cap_filter by (user, behavior, day) and reconcile
 by (user, item) split each user's rows into ~25 and ~12 groups; a
@@ -303,15 +305,17 @@ def reconcile_stateful(
             item = None if no_item else int(item)
             ts_us = int(ts_us)
             pays, receipts = items.setdefault(item, ([], []))
+            # a NULL item equals nothing, as in the batch join: such a
+            # row is only buffered, and expires unmatched
             matched = 0
             if etype == "l":
-                for r in receipts:
+                for r in receipts if item is not None else ():
                     if lo_us <= r[0] - ts_us <= hi_us:
                         out.append(("matched", uid, item, ts_us, r[0]))
                         r[1] = matched = 1
                 pays.append([ts_us, matched])
             else:
-                for p in pays:
+                for p in pays if item is not None else ():
                     if lo_us <= ts_us - p[0] <= hi_us:
                         out.append(("matched", uid, item, p[0], ts_us))
                         p[1] = matched = 1

@@ -38,26 +38,6 @@ def test_minhash_lsh_recall_vs_exact(spark, sf_dir):
     assert lsh <= exact  # verification step removes false positives
 
 
-def test_minhash_lsh_fast_hash_same_recall(spark, sf_dir, monkeypatch):
-    """SPARK_GRAFT_FAST_HASH=1 swaps md5 for xxhash64 in the signature
-    seam; the verified pair set must still be a no-false-positive
-    subset of the exact Jaccard pairs with near-total recall (the
-    LSH guarantee is hash-agnostic)."""
-    monkeypatch.setenv("SPARK_GRAFT_FAST_HASH", "1")
-    docs = load_table(spark, sf_dir, "documents")
-    exact = {
-        (r.id_a, r.id_b)
-        for r in ngram_jaccard_pairs(docs, 0.8).collect()
-    }
-    lsh = {
-        (r.id_a, r.id_b)
-        for r in minhash_lsh_pairs(docs, 0.8).collect()
-    }
-    assert lsh <= exact
-    missed = exact - lsh
-    assert len(missed) <= max(1, len(exact) // 20), missed
-
-
 def test_lsh_topk_subset_of_bruteforce_candidates(spark, sf_dir):
     """LSH top-k returns only true neighbors (cosine values must agree
     with the brute-force scoring for the same pairs)."""

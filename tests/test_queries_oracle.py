@@ -5,6 +5,7 @@ driver runs the same comparison at sf0.01)."""
 import pytest
 
 from flink_user_behavior_analysis_spark import queries as Q
+from flink_user_behavior_analysis_spark.sources import with_item
 
 from .oracle_util import compare
 
@@ -56,3 +57,21 @@ def test_self_join_needs_no_ambiguity_rewrite(spark, sf_dir, name):
         compare(Q.QUERIES[name](spark, sf_dir), Q.ORACLES[name], sf_dir)
     finally:
         spark.conf.set(key, prev)
+
+
+def test_item_id_is_null_without_k(spark):
+    """item_id is the long after ``"k":`` in props, NULL when props is
+    NULL or has no ``"k"`` entry, as DuckDB's TRY_CAST (DUCK_ITEM) reads
+    it; under ANSI mode a plain cast raises CAST_INVALID_INPUT instead."""
+    import duckdb
+
+    props = ['{"x": 1}', '{"k": 87}', None]
+    df = spark.createDataFrame(list(enumerate(props)),
+                               "event_id long, props string")
+    got = [r.item_id for r in with_item(df).orderBy("event_id").collect()]
+    assert got == [None, 87, None]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (i INTEGER, props VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", list(enumerate(props)))
+    assert [r[0] for r in con.execute(
+        f"SELECT {Q.DUCK_ITEM} FROM t ORDER BY i").fetchall()] == got

@@ -38,10 +38,11 @@ def _assert_same(stream_df, batch_df, cols):
 def test_hot_items_counts_stream_equals_batch(spark, sf_dir):
     got = run_available_now(hot_items_counts_stream(spark, sf_dir))
     # batch twin: the count stage of the hot_items query
-    from flink_user_behavior_analysis_spark.queries import _events, _with_item
+    from flink_user_behavior_analysis_spark.queries import _events
+    from flink_user_behavior_analysis_spark.sources import with_item
     from flink_user_behavior_analysis_spark.operators import windowed_count
 
-    ev = _with_item(_events(spark, sf_dir).where(F.col("event_type") == "view"))
+    ev = with_item(_events(spark, sf_dir).where(F.col("event_type") == "view"))
     want = windowed_count(ev, "ts", ["item_id"], "1 hour", "15 minutes")
     _assert_same(got, want, ["window_end_us", "item_id", "cnt"])
 

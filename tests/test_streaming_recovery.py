@@ -6,7 +6,7 @@ story the reference gets from Flink checkpoints)."""
 from pyspark.sql import functions as F
 
 from flink_user_behavior_analysis_spark import queries as Q
-from flink_user_behavior_analysis_spark.sources import load_table
+from flink_user_behavior_analysis_spark.sources import load_table, with_item
 from flink_user_behavior_analysis_spark.streaming import (
     cap_filter_stateful,
     consecutive_fail_stateful,
@@ -114,7 +114,7 @@ def test_reconcile_survives_restart(spark, sf_dir, tmp_path):
 
     whole = _write_replay(str(tmp_path / "whole"), _events_with_edges(sf_dir),
                           [])
-    ev = Q._with_item(load_table(spark, whole, "events")).select(
+    ev = with_item(load_table(spark, whole, "events")).select(
         "event_id", "ts", "user_id", "item_id", "event_type")
     want = [tuple(r) for r in Q.QUERIES["tx_match"](spark, whole).collect()]
     want_m = sorted(r for r in want if r[0] == "matched")

@@ -14,7 +14,8 @@ holds several sub-keys at once: an ``item_id`` above 2**53 next to a
 NULL ``item_id`` (a nullable long holding a NULL reaches pandas as
 float64, which would round the id), a NULL-item pay in band with
 receipts of other items (merging NULL into another item would match
-it), and NULL ``behavior`` rows on days that also hold clicks (merging
+it) and with a NULL-item receipt (a NULL item equals nothing in the
+batch join), and NULL ``behavior`` rows on days that also hold clicks (merging
 NULL into another behavior would cross the cap).
 """
 
@@ -30,6 +31,7 @@ from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from flink_user_behavior_analysis_spark import queries as Q
+from flink_user_behavior_analysis_spark.sources import with_item
 from flink_user_behavior_analysis_spark.streaming import (
     cap_filter_stateful,
     consecutive_fail_stateful,
@@ -50,6 +52,7 @@ EDGE_ROWS = [
     (1 * H, "click", f'{{"k": {BIG_ITEM}}}'),       # matches the BIG pay
     (2 * H, "purchase", None),                       # NULL item, unmatched
     (2.5 * H, "click", '{"k": 0}'),
+    (3 * H, "click", None),                          # NULL item, unmatched
     (D, "click", '{"k": 1}'),
     (D + H, "click", '{"k": 2}'),
     (D + 2 * H, None, '{"k": 3}'),                   # NULL behavior
@@ -133,7 +136,7 @@ def _drain(spark, replay):
         "cap_filter": cap_filter_stateful(
             events().withColumnRenamed("event_type", "behavior"), cap=3),
         "reconcile": reconcile_stateful(
-            Q._with_item(events()), -12 * 3600, 12 * 3600),
+            with_item(events()), -12 * 3600, 12 * 3600),
     }
 
 
@@ -164,3 +167,34 @@ def test_stateful_twins_equal_batch_on_any_split(spark, edge_events,
     assert ("matched", EDGE_USER, BIG_ITEM, _us(T0), _us(T0 + H)) in matched
     assert (EDGE_USER, None, "2024-01-12", "click over 3 times today") \
         in got["cap_filter"]
+
+
+def test_reconcile_null_item_never_matches(spark, sf_dir, tmp_path):
+    """User 7 pays and receives 1 h apart, both with NULL props, so
+    both with a NULL item. Two later files of another user's receipts
+    (reconcile's filter runs before the watermark, so only pays and
+    receipts move it) take the watermark past both deadlines and then
+    run a micro-batch under it, which fires user 7's timer. The batch
+    twin (tx_match) and its oracle never equate NULL items, so both of
+    user 7's rows come out unmatched, and the stream must say the
+    same."""
+    schema = pq.read_schema(
+        os.path.join(sf_dir, "events.parquet")).remove_metadata()
+    rows = [(1, T0, 7, "purchase", None), (2, T0 + H, 7, "click", None),
+            (3, T0 + 2 * D, 8, "click", '{"k": 1}'),
+            (4, T0 + 2 * D + H, 8, "click", '{"k": 1}')]
+    table = pa.table({
+        "event_id": [r[0] for r in rows], "ts": [r[1] for r in rows],
+        "user_id": [r[2] for r in rows], "event_type": [r[3] for r in rows],
+        "value": [1.0] * len(rows), "props": [r[4] for r in rows],
+    }).select(schema.names).cast(schema)
+    replay = _write_replay(str(tmp_path), table, [2, 3])
+    def user_7(df):
+        return _bag(df.where("user_id = 7"), STREAM_COLS["reconcile"])
+
+    want = user_7(Q.QUERIES["tx_match"](spark, replay))
+    assert want == Counter({("unmatched_pay", 7, None, _us(T0), None): 1,
+                            ("unmatched_receipt", 7, None, None,
+                             _us(T0 + H)): 1})
+    assert user_7(run_available_now(_drain(spark, replay)["reconcile"],
+                                    "append")) == want
