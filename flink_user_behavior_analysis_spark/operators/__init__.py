@@ -26,7 +26,6 @@ from .skew import salted_join
 from .similarity import (
     brute_force_topk,
     brute_force_topk_arrow,
-    cosine_pairs,
     cosine_pairs_blocked,
     hyperplane_lsh_topk,
 )
@@ -47,7 +46,6 @@ __all__ = [
     "hash_split",
     "hash_uniform",
     "consecutive_events",
-    "cosine_pairs",
     "cosine_pairs_blocked",
     "decode_media",
     "doc_fingerprints",

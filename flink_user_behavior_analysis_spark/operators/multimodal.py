@@ -1,33 +1,35 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata,
-decode / feature-extraction as Arrow-batched Pandas functions.
+decode / feature extraction as Arrow kernels.
 
-Real Spark-side machinery (schemas, partition-preserving mapInPandas,
-batch shapes, metadata structs) with the actual media decode STUBBED:
-image/audio libraries are not in this container, so ``decode_fn``
-defaults to a clearly-marked deterministic fake (seeded by content
-hash), and ``decode_media(..., decoder="real")`` raises
-NotImplementedError at the exact point a PIL/ffmpeg call would go.
+Each codec is a pure-python, module-level function over one payload's
+bytes (``ppm_decode``, ``ahash`` / ``phash_wide``, and the
+``png_header`` / ``jpeg_header`` / ``gif_header`` / ``bmp_header``
+parsers); the Spark passes (``decode_media``, ``media_ahash``,
+``media_headers``) run those same functions per row inside
+``operators/arrow_kernel.map_arrow``. Executors import this module, so
+there is one copy of each parser. A parse error of any row is re-raised
+as ``ValueError("media <id>: ...")``.
 
 Design for 100 TB of media:
 - payloads stay an opaque ``binary`` column; Spark never interprets
   them JVM-side, so the scan is a straight parquet/binaryFile read
   with column pruning on the metadata struct.
-- mapInPandas streams Arrow batches through the Python worker —
-  memory is bounded by spark.sql.execution.arrow.maxRecordsPerBatch,
-  not by partition size; decode cost scales per-row, shuffle-free.
+- the kernels stream Arrow batches through the Python worker — memory
+  is bounded by spark.sql.execution.arrow.maxRecordsPerBatch, not by
+  partition size; decode cost scales per row, shuffle-free.
 - feature vectors come back as array<float> ready for
   operators.similarity (ANN / near-dup).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import binascii
+import struct
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     FloatType,
     LongType,
     StringType,
@@ -35,14 +37,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-MEDIA_SCHEMA = StructType([
-    StructField("media_id", LongType()),
-    StructField("payload", BinaryType()),
-    StructField("media_type", StringType()),     # image | audio | video
-    StructField("format", StringType()),         # png | wav | mp4 | ...
-    StructField("n_bytes", LongType()),
-    StructField("content_sha256", StringType()),
-])
+from .arrow_kernel import map_arrow
 
 FEATURE_SCHEMA = StructType([
     StructField("media_id", LongType()),
@@ -51,7 +46,21 @@ FEATURE_SCHEMA = StructType([
     StructField("feature", ArrayType(FloatType())),
 ])
 
-FEATURE_DIM = 8
+
+def _media_rows(docs: DataFrame, id_col: str, payload: Column, fmt: str,
+                hash_hex: bool = True) -> DataFrame:
+    """(media_id, payload, media_type, format, n_bytes, content_sha256)
+    rows of ``docs`` for one payload expression. The fingerprint hashes the payload's hex (the form the DuckDB
+    oracle can reproduce for any bytes) unless ``hash_hex`` is False."""
+    return docs.select(
+        F.col(id_col).alias("media_id"),
+        payload.alias("payload"),
+        F.lit("image").alias("media_type"),
+        F.lit(fmt).alias("format"),
+        F.octet_length(payload).cast("long").alias("n_bytes"),
+        F.sha2(F.hex(payload) if hash_hex else payload, 256)
+        .alias("content_sha256"),
+    )
 
 
 def documents_as_media(docs: DataFrame, id_col: str = "doc_id",
@@ -59,26 +68,33 @@ def documents_as_media(docs: DataFrame, id_col: str = "doc_id",
     """Wrap the documents table as a media table (text bytes stand in
     for image payloads — the plumbing is format-agnostic by design).
 
-    Pure column expressions: encode / length / sha2 all run JVM-side.
+    Pure column expressions: encode / length / sha2 all run JVM-side;
+    the fingerprint hashes the raw text bytes.
     """
-    payload = F.encode(F.col(text_col), "UTF-8")
-    return docs.select(
-        F.col(id_col).alias("media_id"),
-        payload.alias("payload"),
-        F.lit("image").alias("media_type"),
-        F.lit("png").alias("format"),
-        F.octet_length(payload).cast("long").alias("n_bytes"),
-        F.sha2(payload, 256).alias("content_sha256"),
-    )
+    return _media_rows(docs, id_col, F.encode(F.col(text_col), "UTF-8"),
+                       "png", hash_hex=False)
+
+
+def _checked_rows(ids, parse, *cols) -> list:
+    """``parse(*row)`` for each row of ``cols``; a parse error becomes
+    ``ValueError("media <id>: ...")``. IndexError and struct.error are
+    caught too, so a malformed payload never escapes as a bare
+    low-level exception without its media_id."""
+    out = []
+    for mid, *row in zip(ids, *cols):
+        try:
+            out.append(parse(*row))
+        except (ValueError, IndexError, struct.error) as exc:
+            raise ValueError(f"media {mid}: {exc}") from None
+    return out
 
 
 # --- pure-python PPM (P6) codec -------------------------------------
 # A real, if minimal, image format both engines can certify: binary
 # PPM is `P6\n{w} {h}\n{maxval}\n` followed by w*h*3 raw RGB bytes —
-# no compression, no library needed (VERDICT r4 next-round #4). The
-# decode features are chosen to be EXACT in float32 (integers and
-# 32nds), so the DuckDB oracle reproduces them bit-for-bit from the
-# payload's hex.
+# no compression, no library needed. The decode features are chosen
+# to be EXACT in float32 (integers and 32nds), so the DuckDB oracle
+# reproduces them bit-for-bit from the payload's hex.
 
 PPM_W, PPM_H = 8, 4  # 32 pixels, 96 RGB bytes
 
@@ -95,26 +111,15 @@ def documents_as_ppm(docs: DataFrame, id_col: str = "doc_id",
         F.expr(f"rpad(substring(encode({text_col}, 'UTF-8'), 1, "
                f"{n_px_bytes}), {n_px_bytes}, X'00')"),
     )
-    return docs.select(
-        F.col(id_col).alias("media_id"),
-        payload.alias("payload"),
-        F.lit("image").alias("media_type"),
-        F.lit("ppm").alias("format"),
-        F.octet_length(payload).cast("long").alias("n_bytes"),
-        F.sha2(F.hex(payload), 256).alias("content_sha256"),
-    )
+    return _media_rows(docs, id_col, payload, "ppm")
 
 
-def ppm_decode(payload: bytes) -> list[float]:
-    """Reference P6 parser (mirrored verbatim inside the decode_media
-    closure): validates the magic, reads the header, and derives 8
-    features from the pixel data — [w, h, mean_r, mean_g, mean_b,
-    min_byte, max_byte, n_pixels]. Means are 1/n_pixels-ths and the
-    rest are small integers, so every feature is exactly
-    representable in float32 (no rounding seam for the oracle)."""
+def _ppm_pixels(payload: bytes) -> tuple[int, int, bytes]:
+    """(w, h, rgb bytes) of a P6 payload: validates the magic, reads
+    the three whitespace-separated header ints, requires maxval 255
+    and w*h*3 pixel bytes."""
     if payload[:2] != b"P6":
         raise ValueError("not a P6 PPM payload")
-    # header: three whitespace-separated ints after the magic
     parts, i, tok = [], 2, b""
     while len(parts) < 3 and i < len(payload):
         c = payload[i:i + 1]
@@ -131,93 +136,49 @@ def ppm_decode(payload: bytes) -> list[float]:
     px = payload[i:i + w * h * 3]
     if len(px) != w * h * 3:
         raise ValueError("truncated pixel data")
+    return w, h, px
+
+
+def ppm_decode(payload: bytes) -> list[float]:
+    """8 features of a P6 payload: [w, h, mean_r, mean_g, mean_b,
+    min_byte, max_byte, n_pixels]. Means are 1/n_pixels-ths and the
+    rest are small integers, so every feature is exactly
+    representable in float32 (no rounding seam for the oracle)."""
+    w, h, px = _ppm_pixels(payload)
     n = w * h
-    chans = [px[c::3] for c in range(3)]
     return [
         float(w), float(h),
-        *(sum(ch) / n for ch in chans),
+        *(sum(px[c::3]) / n for c in range(3)),
         float(min(px)), float(max(px)), float(n),
     ]
 
 
-def ahash(payload: bytes) -> tuple[int, int, int]:
-    """Reference average-hash (aHash — the public perceptual-hash
-    family's simplest member: threshold each pixel's intensity at the
-    image mean; cf. pHash/dHash) over a real P6 PPM payload, in pure
-    integer arithmetic so the DuckDB oracle reproduces every bit:
-    s_i = r_i + g_i + b_i per pixel (row-major), and
-    bit_i = 1 iff s_i * n_pixels > sum(s) (cross-multiplied mean
-    comparison — no division, no float seam). Returns
-    (hash, w, h) with bit 0 of pixel 0 at the MSB of a w*h-bit
-    integer. Mirrored verbatim inside the media_ahash closure."""
-    if payload[:2] != b"P6":
-        raise ValueError("not a P6 PPM payload")
-    parts, i, tok = [], 2, b""
-    while len(parts) < 3 and i < len(payload):
-        c = payload[i:i + 1]
-        if c.isspace():
-            if tok:
-                parts.append(int(tok))
-                tok = b""
-        else:
-            tok += c
-        i += 1
-    w, h, maxval = parts
-    if maxval != 255:
-        raise ValueError(f"unsupported maxval {maxval}")
-    px = payload[i:i + w * h * 3]
-    if len(px) != w * h * 3:
-        raise ValueError("truncated pixel data")
-    n = w * h
-    s = [px[3 * j] + px[3 * j + 1] + px[3 * j + 2] for j in range(n)]
-    total = sum(s)
+def _intensities(payload: bytes) -> tuple[int, int, list[int]]:
+    """(w, h, s) with s_i = r_i + g_i + b_i per pixel, row-major."""
+    w, h, px = _ppm_pixels(payload)
+    return w, h, [px[3 * j] + px[3 * j + 1] + px[3 * j + 2]
+                  for j in range(w * h)]
+
+
+def _ahash_bits(s: list[int]) -> int:
+    """bit_i = 1 iff s_i * n > sum(s), pixel 0 at the MSB."""
+    n, total = len(s), sum(s)
     hv = 0
     for j in range(n):
         if s[j] * n > total:
             hv |= 1 << (n - 1 - j)
-    return hv, w, h
+    return hv
 
 
-def phash_wide(payload: bytes) -> tuple[int, int, int]:
-    """Reference WIDE perceptual hash: aHash concatenated with the
-    horizontal difference hash (dHash: bit per adjacent pixel pair,
-    1 iff the right neighbor's intensity sum is strictly greater) —
-    h*(2w-1) bits total, (ahash << h*(w-1)) | dhash, same MSB-first
-    row-major bit order in both halves. For the standard 8x4 PPM
-    images: 32 + 28 = 60 bits.
-
-    Why it exists (r11 sf1 finding): banding a 32-bit hash for
-    hamming<=3 forces 8-bit chunks, whose 256-value space saturates —
-    bucket density grows linearly with corpus size and the candidate
-    join goes quadratic (measured 107x wall for 10x images). The
-    60-bit hash bands into 15-bit chunks (32768 values), so buckets
-    stay sparse at realistic corpus sizes while the pigeonhole recall
-    guarantee is unchanged. Pure integer comparisons — the DuckDB
-    oracle reproduces every bit. Mirrored verbatim inside the
-    media_ahash closure."""
-    hv, w, h = ahash(payload)
+def _wide_bits(hv: int, s: list[int], w: int, h: int) -> int:
+    """aHash ``hv`` followed by the horizontal dHash of ``s``."""
     if h * (2 * w - 1) > 63:
-        # LongType ceiling (ADVICE r11): the combined aHash||dHash is
-        # h*(2w-1) bits wide and silently wraps past 63 — reject
-        # explicitly, mirroring ahash's payload validation, instead
-        # of emitting an aliased hash (e.g. 8x8 needs 120 bits)
+        # LongType ceiling: the combined aHash||dHash is h*(2w-1) bits
+        # wide and would silently wrap past 63 — reject explicitly
+        # instead of emitting an aliased hash (e.g. 8x8 needs 120 bits)
         raise ValueError(
             f"phash_wide: {w}x{h} image needs {h * (2 * w - 1)} bits, "
             f"> 63 (LongType); use <= 8x4 images or a binary hash")
-    # re-parse for the pixel sums (keeps ahash's contract frozen; the
-    # Arrow closure computes both hashes from one parse)
-    parts, i, tok = [], 2, b""
-    while len(parts) < 3 and i < len(payload):
-        c = payload[i:i + 1]
-        if c.isspace():
-            if tok:
-                parts.append(int(tok))
-                tok = b""
-        else:
-            tok += c
-        i += 1
-    px = payload[i:i + w * h * 3]
-    s = [px[3 * j] + px[3 * j + 1] + px[3 * j + 2] for j in range(w * h)]
     nd = h * (w - 1)
     dv, k = 0, 0
     for r in range(h):
@@ -225,82 +186,74 @@ def phash_wide(payload: bytes) -> tuple[int, int, int]:
             if s[r * w + c + 1] > s[r * w + c]:
                 dv |= 1 << (nd - 1 - k)
             k += 1
-    return (hv << nd) | dv, w, h
+    return (hv << nd) | dv
+
+
+def ahash(payload: bytes) -> tuple[int, int, int]:
+    """Average-hash (aHash — the public perceptual-hash family's
+    simplest member: threshold each pixel's intensity at the image
+    mean; cf. pHash/dHash) over a real P6 PPM payload, in pure integer
+    arithmetic so the DuckDB oracle reproduces every bit:
+    s_i = r_i + g_i + b_i per pixel (row-major), and
+    bit_i = 1 iff s_i * n_pixels > sum(s) (cross-multiplied mean
+    comparison — no division, no float seam). Returns
+    (hash, w, h) with bit 0 of pixel 0 at the MSB of a w*h-bit
+    integer."""
+    w, h, s = _intensities(payload)
+    return _ahash_bits(s), w, h
+
+
+def phash_wide(payload: bytes) -> tuple[int, int, int]:
+    """WIDE perceptual hash: aHash concatenated with the horizontal
+    difference hash (dHash: bit per adjacent pixel pair, 1 iff the
+    right neighbor's intensity sum is strictly greater) —
+    h*(2w-1) bits total, (ahash << h*(w-1)) | dhash, same MSB-first
+    row-major bit order in both halves. For the standard 8x4 PPM
+    images: 32 + 28 = 60 bits.
+
+    Why it exists (sf1 finding): banding a 32-bit hash for
+    hamming<=3 forces 8-bit chunks, whose 256-value space saturates —
+    bucket density grows linearly with corpus size and the candidate
+    join goes quadratic (measured 107x wall for 10x images). The
+    60-bit hash bands into 15-bit chunks (32768 values), so buckets
+    stay sparse at realistic corpus sizes while the pigeonhole recall
+    guarantee is unchanged. Pure integer comparisons — the DuckDB
+    oracle reproduces every bit."""
+    w, h, s = _intensities(payload)
+    return _wide_bits(_ahash_bits(s), s, w, h), w, h
+
+
+def _media_hashes(payload: bytes) -> tuple[int, int, int, int]:
+    """(ahash, phash_wide, w, h) from one parse of the payload."""
+    w, h, s = _intensities(payload)
+    hv = _ahash_bits(s)
+    return hv, _wide_bits(hv, s, w, h), w, h
+
+
+def _hash_kernel(batch):
+    rows = _checked_rows(batch.column(0).to_pylist(), _media_hashes,
+                         batch.column(1).to_pylist())
+    return (batch.column(0), *(list(c) for c in zip(*rows)))
 
 
 def media_ahash(media: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """Perceptual fingerprints over real PPM payloads: one Arrow
-    mapInPandas pass computing BOTH the integer average-hash and the
-    wide aHash||dHash variant per image (see ahash / phash_wide
-    above). Emits (media_id, phash, phash_wide, w, h) — phash is a
-    w*h-bit integer (32 bits for the standard 8x4 documents_as_ppm
-    images), phash_wide is h*(2w-1) bits (60), both LongType-exact.
+    """Perceptual fingerprints over real PPM payloads: one Arrow pass
+    computing BOTH the integer average-hash and the wide aHash||dHash
+    variant per image from one parse (see ahash / phash_wide above).
+    Emits (media_id, phash, phash_wide, w, h) — phash is a w*h-bit
+    integer (32 bits for the standard 8x4 documents_as_ppm images),
+    phash_wide is h*(2w-1) bits (60), both LongType-exact.
 
     Scale shape (100 TB of images): per-row, stateless, shuffle-free
     — memory bounded by the Arrow batch; the hash column is what a
     production pipeline materializes once per corpus version and
     dedups/bands against (image near-dup is hash-space work, the
     pixels are never revisited)."""
-
-    def _hash_batches(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        def hsh(p: bytes):
-            if p[:2] != b"P6":
-                raise ValueError("not a P6 PPM payload")
-            parts, i, tok = [], 2, b""
-            while len(parts) < 3 and i < len(p):
-                c = p[i:i + 1]
-                if c.isspace():
-                    if tok:
-                        parts.append(int(tok))
-                        tok = b""
-                else:
-                    tok += c
-                i += 1
-            w, h, maxval = parts
-            if maxval != 255:
-                raise ValueError(f"unsupported maxval {maxval}")
-            px = p[i:i + w * h * 3]
-            if len(px) != w * h * 3:
-                raise ValueError("truncated pixel data")
-            if h * (2 * w - 1) > 63:
-                # LongType ceiling (ADVICE r11) — see phash_wide
-                raise ValueError(
-                    f"{w}x{h} needs {h * (2 * w - 1)} hash bits > 63")
-            n = w * h
-            s = [px[3 * j] + px[3 * j + 1] + px[3 * j + 2]
-                 for j in range(n)]
-            total = sum(s)
-            hv = 0
-            for j in range(n):
-                if s[j] * n > total:
-                    hv |= 1 << (n - 1 - j)
-            # wide hash: aHash || horizontal dHash (see phash_wide)
-            nd = h * (w - 1)
-            dv, k = 0, 0
-            for r in range(h):
-                for c in range(w - 1):
-                    if s[r * w + c + 1] > s[r * w + c]:
-                        dv |= 1 << (nd - 1 - k)
-                    k += 1
-            return hv, (hv << nd) | dv, w, h
-
-        for pdf in batches:
-            out = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    hv, wide, w, h = hsh(bytes(p))
-                except ValueError as exc:
-                    raise ValueError(f"media {mid}: {exc}") from None
-                out.append((mid, hv, wide, w, h))
-            yield pd.DataFrame(out, columns=["media_id", "phash",
-                                             "phash_wide", "w", "h"])
-
-    sel = media.select(F.col(id_col).alias("media_id"), "payload")
-    return sel.mapInPandas(
-        _hash_batches,
-        "media_id long, phash long, phash_wide long, w long, h long")
+    return map_arrow(
+        media, [F.col(id_col).alias("media_id"), "payload"],
+        StructType([StructField(c, LongType()) for c in
+                    ("media_id", "phash", "phash_wide", "w", "h")]),
+        _hash_kernel)
 
 
 def phash_neardup_pairs(hashes: DataFrame, max_hamming: int = 3,
@@ -326,13 +279,13 @@ def phash_neardup_pairs(hashes: DataFrame, max_hamming: int = 3,
     assert max_hamming < bands, "pigeonhole needs max_hamming < bands"
     from .dedup import _tracked_persist
 
-    # persist the (id, hash) proxy (r15, guide §2.4/§5 — the
-    # winnow_overlap discipline): downstream the chunk frame feeds
-    # the bucket-count aggregate AND both sides of the self-join, so
-    # an unpersisted input re-runs the upstream hash computation
-    # (for image corpora: the whole decode+hash MapInPandas pass) up
-    # to 4x — plan-audited 4 scans -> 1. Rows are id + one 64-bit
-    # hash: the lightweight proxy a 100 TB image corpus would store.
+    # persist the (id, hash) proxy (the winnow_overlap discipline):
+    # downstream the chunk frame feeds the bucket-count aggregate AND
+    # both sides of the self-join, so an unpersisted input re-runs the
+    # upstream hash computation (for image corpora: the whole
+    # decode+hash Arrow pass) up to 4x — plan-audited 4 scans -> 1.
+    # Rows are id + one 64-bit hash: the lightweight proxy a 100 TB
+    # image corpus would store.
     hashes = _tracked_persist(hashes.select(F.col(id_col),
                                             F.col(hash_col)))
     chunk_w = bits // bands
@@ -370,127 +323,30 @@ def phash_neardup_pairs(hashes: DataFrame, max_hamming: int = 3,
     )
 
 
-def _fake_decode(payload: bytes) -> list[float]:
-    """Deterministic stand-in for a real decoder: 8 features derived
-    from content bytes (length buckets + leading-byte statistics)."""
-    n = len(payload)
-    head = payload[:16]
-    return [
-        float(n % 251) / 251.0,
-        float(sum(head) % 997) / 997.0,
-        float(head[0]) / 255.0 if n else 0.0,
-        float(head[-1]) / 255.0 if n else 0.0,
-        float(n % 7) / 7.0,
-        float(n % 13) / 13.0,
-        float(min(n, 4096)) / 4096.0,
-        1.0,
-    ]
+def _decode_kernel(batch):
+    features = _checked_rows(batch.column(0).to_pylist(), ppm_decode,
+                             batch.column(3).to_pylist())
+    return batch.column(0), batch.column(1), batch.column(2), features
 
 
-def decode_media(media: DataFrame, decoder: str = "fake",
-                 batch_size_hint: int = 256) -> DataFrame:
-    """Decode payloads to fixed-width feature vectors via mapInPandas.
-
-    decoder='ppm' parses REAL binary PPM (P6) payloads with the
-    pure-python codec (ppm_decode) — deterministic, library-free, and
-    oracle-certifiable. decoder='fake' uses the deterministic
-    content-hash fake (format-agnostic plumbing tests). decoder='real'
-    marks where PIL/librosa/ffmpeg integration goes and raises
-    NotImplementedError.
+def decode_media(media: DataFrame) -> DataFrame:
+    """Decode REAL binary PPM (P6) payloads to fixed-width feature
+    vectors with the pure-python codec (ppm_decode) — deterministic,
+    library-free and oracle-certifiable. Emits FEATURE_SCHEMA rows.
 
     The Arrow batch iterator preserves partitioning — no shuffle; at
     scale, repartition upstream by size (``n_bytes`` ranges) so decode
     work balances across executors even when payload sizes are skewed.
     """
-    if decoder == "real":
-        raise NotImplementedError(
-            "real media decode needs PIL/librosa/ffmpeg, not present in "
-            "this container; wire the library call inside _decode_batches"
-        )
-    if decoder == "ppm":
-        # parser mirrored from ppm_decode, inlined so cloudpickle
-        # ships it by value (same rationale as the fake closure)
-        def _ppm_batches(batches: Iterator) -> Iterator:
-            import pandas as pd
-
-            def dec(payload: bytes) -> list[float]:
-                if payload[:2] != b"P6":
-                    raise ValueError("not a P6 PPM payload")
-                parts, i, tok = [], 2, b""
-                while len(parts) < 3 and i < len(payload):
-                    c = payload[i:i + 1]
-                    if c.isspace():
-                        if tok:
-                            parts.append(int(tok))
-                            tok = b""
-                    else:
-                        tok += c
-                    i += 1
-                w, h, maxval = parts
-                if maxval != 255:
-                    raise ValueError(f"unsupported maxval {maxval}")
-                px = payload[i:i + w * h * 3]
-                if len(px) != w * h * 3:
-                    raise ValueError("truncated pixel data")
-                n = w * h
-                chans = [px[c::3] for c in range(3)]
-                return [
-                    float(w), float(h),
-                    *(sum(ch) / n for ch in chans),
-                    float(min(px)), float(max(px)), float(n),
-                ]
-
-            for pdf in batches:
-                yield pd.DataFrame({
-                    "media_id": pdf["media_id"],
-                    "media_type": pdf["media_type"],
-                    "n_bytes": pdf["n_bytes"],
-                    "feature": [dec(bytes(p)) for p in pdf["payload"]],
-                })
-
-        return media.mapInPandas(_ppm_batches, schema=FEATURE_SCHEMA)
-    if decoder != "fake":
-        raise ValueError(f"unknown decoder: {decoder!r}")
-
-    # the decode logic is defined INSIDE the closure so cloudpickle
-    # ships it by value — executors need no import of this package
-    # (a module-level reference would pickle by name and fail on
-    # workers without the repo on sys.path)
-
-    def _decode_batches(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        def fake(payload: bytes) -> list[float]:
-            n = len(payload)
-            head = payload[:16]
-            return [
-                float(n % 251) / 251.0,
-                float(sum(head) % 997) / 997.0,
-                float(head[0]) / 255.0 if n else 0.0,
-                float(head[-1]) / 255.0 if n else 0.0,
-                float(n % 7) / 7.0,
-                float(n % 13) / 13.0,
-                float(min(n, 4096)) / 4096.0,
-                1.0,
-            ]
-
-        for pdf in batches:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "media_type": pdf["media_type"],
-                "n_bytes": pdf["n_bytes"],
-                "feature": [fake(bytes(p)) for p in pdf["payload"]],
-            })
-
-    return media.mapInPandas(_decode_batches, schema=FEATURE_SCHEMA)
+    return map_arrow(media, ["media_id", "media_type", "n_bytes", "payload"],
+                     FEATURE_SCHEMA, _decode_kernel)
 
 
 def resize_media(media: DataFrame, max_bytes: int = 128) -> DataFrame:
     """'Resize/downsample' plumbing: cap each payload at ``max_bytes``
     bytes, recomputing the size/fingerprint metadata — the schema and
     plan shape of a real thumbnail/re-encode pass (which would swap
-    the substring for a decode-resize-encode Pandas UDF; that real
-    kernel is gated exactly like decode_media(decoder='real')).
+    the substring for a decode-resize-encode Arrow kernel).
 
     JVM-side substring on binary — shuffle-free, no Python. The
     fingerprint hashes the HEX of the (possibly truncated) payload,
@@ -506,16 +362,15 @@ def resize_media(media: DataFrame, max_bytes: int = 128) -> DataFrame:
     )
 
 
-# --- real-format header parsing (PNG / JPEG) ------------------------
-# Second oracle-checkable decoder tier (VERDICT r8 #8): parse the
-# HEADERS of the two dominant real image formats — dims, bit depth,
-# channel count — with no pixel decode, so multimodal metadata
-# extraction certifies against real-format bytes while full pixel
-# decoders stay env-gated behind decode_media(decoder='real'). Both
-# parsers are spec-literal pure python (PNG: RFC 2083 §3 signature +
-# IHDR layout with CRC-32 validation; JPEG: ITU T.81 §B marker-segment
-# walk to the first SOFn), pinned against hand-verified fixture bytes
-# in tests/test_pipeline_ops.py.
+# --- real-format header parsing (PNG / JPEG / GIF / BMP) ------------
+# Second oracle-checkable decoder tier: parse the HEADERS of the
+# dominant real image formats — dims, bit depth, channel count — with
+# no pixel decode, so multimodal metadata extraction certifies against
+# real-format bytes. The parsers are spec-literal pure python (PNG:
+# RFC 2083 §3 signature + IHDR layout with CRC-32 validation; JPEG:
+# ITU T.81 §B marker-segment walk to the first SOFn; GIF87a/89a
+# logical screen descriptor; BMP BITMAPINFOHEADER), pinned against
+# hand-verified fixture bytes in tests/test_pipeline_ops.py.
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}  # color_type -> channels
@@ -536,11 +391,7 @@ HEADER_SCHEMA = StructType([
 def png_header(payload: bytes) -> tuple[int, int, int, int]:
     """Parse a PNG header: validate the 8-byte signature, require the
     first chunk to be IHDR (per spec), CHECK ITS CRC-32, and return
-    (width, height, bit_depth, channels). Reference copy — the
-    mapInPandas closure in media_headers inlines the same logic."""
-    import binascii
-    import struct
-
+    (width, height, bit_depth, channels)."""
     if payload[:8] != PNG_SIG:
         raise ValueError("not a PNG signature")
     if len(payload) < 33:                # sig + len/type + 13 + CRC
@@ -601,8 +452,7 @@ def gif_header(payload: bytes) -> tuple[int, int, int, int]:
     the logical screen descriptor's LITTLE-endian u16 dims, and return
     (width, height, bit_depth, channels) where bit_depth is the packed
     field's color-resolution bits + 1 and channels is 3 (GIF palettes
-    are RGB triples). Reference copy — media_headers inlines the same
-    logic (VERDICT r10 #5)."""
+    are RGB triples)."""
     if payload[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF signature")
     if len(payload) < 13:                # sig + logical screen descriptor
@@ -643,6 +493,11 @@ def bmp_header(payload: bytes) -> tuple[int, int, int, int]:
     return w, h, 8, bitcount // 8
 
 
+_HEADER_PARSERS = {"png": png_header, "jpeg": jpeg_header,
+                   "jpg": jpeg_header, "gif": gif_header,
+                   "bmp": bmp_header}
+
+
 def _be_bytes(col, n_hex: int):
     """Big-endian fixed-width byte encoding of a non-negative integral
     Column, built JVM-side (hex -> left-pad -> unhex)."""
@@ -659,20 +514,24 @@ def _le_bytes(col, n_bytes: int):
         F.substring(hx, i * 2 + 1, 2) for i in reversed(range(n_bytes))]))
 
 
+def _dims(text_col: str) -> tuple[Column, Column]:
+    """(w, h) = (len % 64 + 1, len % 32 + 1) of the text's UTF-8 bytes:
+    the dims every real-format builder writes, which the DuckDB oracle
+    predicts from the length alone."""
+    n = F.octet_length(F.encode(F.col(text_col), "UTF-8"))
+    return n % 64 + 1, n % 32 + 1
+
+
 def documents_as_png(docs: DataFrame, id_col: str = "doc_id",
                      text_col: str = "text") -> DataFrame:
     """Wrap documents as media whose payloads are REAL PNG byte
     streams: signature + a spec-correct IHDR chunk (big-endian dims
-    derived from the text length, bit depth 8, truecolor) with its
-    CRC-32 computed JVM-side (F.crc32 over type+data, exactly the
-    polynomial the spec mandates), closed by an IEND chunk. Pure
-    column expressions — shuffle-free scan; the header parser must
-    then reproduce (w, h) = (len%64+1, len%32+1) from the BYTES, which
-    the DuckDB oracle predicts independently from the length."""
-    import binascii
-
-    n = F.octet_length(F.encode(F.col(text_col), "UTF-8"))
-    w, h = n % 64 + 1, n % 32 + 1
+    from ``_dims``, bit depth 8, truecolor) with its CRC-32 computed
+    JVM-side (F.crc32 over type+data, exactly the polynomial the spec
+    mandates), closed by an IEND chunk. Pure column expressions —
+    shuffle-free scan; the header parser must then reproduce (w, h)
+    from the BYTES."""
+    w, h = _dims(text_col)
     ihdr_body = F.concat(F.lit(b"IHDR"), _be_bytes(w, 8),
                          _be_bytes(h, 8), F.lit(bytes([8, 2, 0, 0, 0])))
     iend = ((0).to_bytes(4, "big") + b"IEND"
@@ -680,14 +539,7 @@ def documents_as_png(docs: DataFrame, id_col: str = "doc_id",
     payload = F.concat(
         F.lit(PNG_SIG), _be_bytes(F.lit(13), 8), ihdr_body,
         _be_bytes(F.crc32(ihdr_body), 8), F.lit(iend))
-    return docs.select(
-        F.col(id_col).alias("media_id"),
-        payload.alias("payload"),
-        F.lit("image").alias("media_type"),
-        F.lit("png").alias("format"),
-        F.octet_length(payload).cast("long").alias("n_bytes"),
-        F.sha2(F.hex(payload), 256).alias("content_sha256"),
-    )
+    return _media_rows(docs, id_col, payload, "png")
 
 
 def documents_as_jpeg(docs: DataFrame, id_col: str = "doc_id",
@@ -696,10 +548,8 @@ def documents_as_jpeg(docs: DataFrame, id_col: str = "doc_id",
     streams: SOI, a literal JFIF APP0 segment, a spec-correct SOF0
     frame header (precision 8, big-endian height-then-width per
     T.81 §B.2.2, 3 components with standard 4:2:0 sampling specs),
-    EOI. Same (w, h) derivation as documents_as_png so one oracle
-    formula covers both formats."""
-    n = F.octet_length(F.encode(F.col(text_col), "UTF-8"))
-    w, h = n % 64 + 1, n % 32 + 1
+    EOI."""
+    w, h = _dims(text_col)
     app0 = (b"\xff\xe0\x00\x10JFIF\x00\x01\x02\x00"
             b"\x00\x01\x00\x01\x00\x00")
     sof0 = F.concat(F.lit(b"\xff\xc0\x00\x11\x08"),
@@ -707,14 +557,7 @@ def documents_as_jpeg(docs: DataFrame, id_col: str = "doc_id",
                     F.lit(b"\x03\x01\x22\x00\x02\x11\x01\x03\x11\x01"))
     payload = F.concat(F.lit(b"\xff\xd8" + app0), sof0,
                        F.lit(b"\xff\xd9"))
-    return docs.select(
-        F.col(id_col).alias("media_id"),
-        payload.alias("payload"),
-        F.lit("image").alias("media_type"),
-        F.lit("jpeg").alias("format"),
-        F.octet_length(payload).cast("long").alias("n_bytes"),
-        F.sha2(F.hex(payload), 256).alias("content_sha256"),
-    )
+    return _media_rows(docs, id_col, payload, "jpeg")
 
 
 def documents_as_gif(docs: DataFrame, id_col: str = "doc_id",
@@ -722,21 +565,11 @@ def documents_as_gif(docs: DataFrame, id_col: str = "doc_id",
     """Wrap documents as media whose payloads are REAL GIF89a byte
     streams: signature + logical screen descriptor (LITTLE-endian u16
     dims built via _le_bytes, packed field 0x70 = color resolution 8,
-    no global color table) closed by the 0x3B trailer. Same (w, h)
-    derivation as documents_as_png so one oracle formula covers all
-    formats."""
-    n = F.octet_length(F.encode(F.col(text_col), "UTF-8"))
-    w, h = n % 64 + 1, n % 32 + 1
+    no global color table) closed by the 0x3B trailer."""
+    w, h = _dims(text_col)
     payload = F.concat(F.lit(b"GIF89a"), _le_bytes(w, 2),
                        _le_bytes(h, 2), F.lit(bytes([0x70, 0, 0, 0x3B])))
-    return docs.select(
-        F.col(id_col).alias("media_id"),
-        payload.alias("payload"),
-        F.lit("image").alias("media_type"),
-        F.lit("gif").alias("format"),
-        F.octet_length(payload).cast("long").alias("n_bytes"),
-        F.sha2(F.hex(payload), 256).alias("content_sha256"),
-    )
+    return _media_rows(docs, id_col, payload, "gif")
 
 
 def documents_as_bmp(docs: DataFrame, id_col: str = "doc_id",
@@ -745,10 +578,8 @@ def documents_as_bmp(docs: DataFrame, id_col: str = "doc_id",
     'BM' file header (file size = pixel offset = 54, no pixel data —
     the parser only reads the header region) + a spec-correct
     BITMAPINFOHEADER (size 40, little-endian i32 dims, planes 1,
-    24 bpp, remaining six u32 fields zero). Same (w, h) derivation
-    as documents_as_png."""
-    n = F.octet_length(F.encode(F.col(text_col), "UTF-8"))
-    w, h = n % 64 + 1, n % 32 + 1
+    24 bpp, remaining six u32 fields zero)."""
+    w, h = _dims(text_col)
     payload = F.concat(
         F.lit(b"BM" + (54).to_bytes(4, "little") + bytes(4)
               + (54).to_bytes(4, "little")
@@ -756,144 +587,46 @@ def documents_as_bmp(docs: DataFrame, id_col: str = "doc_id",
         _le_bytes(w, 4), _le_bytes(h, 4),
         F.lit((1).to_bytes(2, "little") + (24).to_bytes(2, "little")
               + bytes(24)))
-    return docs.select(
-        F.col(id_col).alias("media_id"),
-        payload.alias("payload"),
-        F.lit("image").alias("media_type"),
-        F.lit("bmp").alias("format"),
-        F.octet_length(payload).cast("long").alias("n_bytes"),
-        F.sha2(F.hex(payload), 256).alias("content_sha256"),
+    return _media_rows(docs, id_col, payload, "bmp")
+
+
+def documents_by_format(docs: DataFrame) -> DataFrame:
+    """Documents as real-format media, the format chosen by
+    ``doc_id % 4``: 0 PNG, 1 JPEG, 2 GIF, 3 BMP. Stateless per row, so
+    it applies to a replayed document stream unchanged."""
+    m = F.col("doc_id") % 4
+    return (
+        documents_as_png(docs.where(m == 0))
+        .unionByName(documents_as_jpeg(docs.where(m == 1)))
+        .unionByName(documents_as_gif(docs.where(m == 2)))
+        .unionByName(documents_as_bmp(docs.where(m == 3)))
     )
+
+
+def _format_header(fmt: str, payload: bytes) -> tuple[int, int, int, int]:
+    parse = _HEADER_PARSERS.get(fmt)
+    if parse is None:
+        raise ValueError(f"no header parser for format {fmt!r}")
+    return parse(payload)
+
+
+def _header_kernel(batch):
+    rows = _checked_rows(batch.column(0).to_pylist(), _format_header,
+                         batch.column(1).to_pylist(),
+                         batch.column(2).to_pylist())
+    return (batch.column(0), batch.column(1),
+            *(list(c) for c in zip(*rows)))
 
 
 def media_headers(media: DataFrame) -> DataFrame:
     """Header-metadata extraction over real-format payloads: parse
     each payload's PNG / JPEG / GIF / BMP header (dispatch on the
-    ``format`` column) inside mapInPandas — Arrow-batched,
-    partition-preserving, shuffle-free; memory bounded by the Arrow
-    batch size, exactly the decode_media plumbing contract. Emits
-    (media_id, format, width, height, bit_depth, channels)."""
-
-    # parsers inlined (mirroring png_header/jpeg_header above) so
-    # cloudpickle ships them by value — same rationale as decode_media
-    def _header_batches(batches: Iterator) -> Iterator:
-        import binascii
-        import struct
-
-        import pandas as pd
-
-        png_channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
-        sof = {0xC0, 0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7,
-               0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF}
-
-        def parse_png(p: bytes):
-            if p[:8] != b"\x89PNG\r\n\x1a\n":
-                raise ValueError("not a PNG signature")
-            if len(p) < 33:              # sig + len/type + 13 + CRC
-                raise ValueError("truncated PNG header")
-            length, ctype = struct.unpack(">I4s", p[8:16])
-            if ctype != b"IHDR" or length != 13:
-                raise ValueError("first chunk is not a 13-byte IHDR")
-            body = p[12:29]
-            (crc,) = struct.unpack(">I", p[29:33])
-            if binascii.crc32(body) & 0xFFFFFFFF != crc:
-                raise ValueError("IHDR CRC mismatch")
-            w, h, depth, color_type = struct.unpack(">IIBB", p[16:26])
-            if color_type not in png_channels:
-                raise ValueError(f"unknown PNG color type {color_type}")
-            return w, h, depth, png_channels[color_type]
-
-        def parse_jpeg(p: bytes):
-            if p[:2] != b"\xff\xd8":
-                raise ValueError("not a JPEG SOI")
-            i = 2
-            while i + 4 <= len(p):
-                if p[i] != 0xFF:
-                    raise ValueError(f"bad marker alignment at {i}")
-                marker = p[i + 1]
-                if marker == 0xFF:
-                    i += 1
-                    continue
-                if marker in (0xD8, 0xD9, 0x01) or 0xD0 <= marker <= 0xD7:
-                    if marker == 0xD9:
-                        break
-                    i += 2
-                    continue
-                seg_len = int.from_bytes(p[i + 2:i + 4], "big")
-                if seg_len < 2:
-                    raise ValueError("corrupt segment length")
-                if marker in sof:
-                    if i + 10 > len(p):   # p[i+9] would IndexError
-                        raise ValueError("truncated SOF segment")
-                    return (int.from_bytes(p[i + 7:i + 9], "big"),
-                            int.from_bytes(p[i + 5:i + 7], "big"),
-                            p[i + 4], p[i + 9])
-                if marker == 0xDA:
-                    break
-                i += 2 + seg_len
-            raise ValueError("no SOF marker before SOS/EOI")
-
-        def parse_gif(p: bytes):
-            if p[:6] not in (b"GIF87a", b"GIF89a"):
-                raise ValueError("not a GIF signature")
-            if len(p) < 13:
-                raise ValueError(
-                    "truncated GIF logical screen descriptor")
-            return (int.from_bytes(p[6:8], "little"),
-                    int.from_bytes(p[8:10], "little"),
-                    ((p[10] >> 4) & 0x7) + 1, 3)
-
-        def parse_bmp(p: bytes):
-            if p[:2] != b"BM":
-                raise ValueError("not a BMP magic")
-            if len(p) < 54:
-                raise ValueError("truncated BITMAPINFOHEADER")
-            dib = int.from_bytes(p[14:18], "little")
-            if dib != 40:
-                raise ValueError(f"unsupported DIB header size {dib}")
-            w = int.from_bytes(p[18:22], "little", signed=True)
-            h = abs(int.from_bytes(p[22:26], "little", signed=True))
-            planes = int.from_bytes(p[26:28], "little")
-            if planes != 1:
-                raise ValueError(f"bad BMP planes {planes}")
-            bitcount = int.from_bytes(p[28:30], "little")
-            if bitcount not in (1, 4, 8, 16, 24, 32):
-                raise ValueError(f"bad BMP bit count {bitcount}")
-            if w <= 0 or h == 0:
-                raise ValueError(f"bad BMP dims {w}x{h}")
-            if bitcount < 8:
-                return w, h, bitcount, 1
-            return w, h, 8, bitcount // 8
-
-        parsers = {"png": parse_png, "jpeg": parse_jpeg,
-                   "jpg": parse_jpeg, "gif": parse_gif,
-                   "bmp": parse_bmp}
-
-        for pdf in batches:
-            out = []
-            for mid, fmt, p in zip(pdf["media_id"], pdf["format"],
-                                   pdf["payload"]):
-                parse = parsers.get(fmt)
-                if parse is None:
-                    raise ValueError(
-                        f"media {mid}: no header parser for "
-                        f"format {fmt!r}")
-                try:
-                    w, h, depth, ch = parse(bytes(p))
-                except (ValueError, IndexError, struct.error) as exc:
-                    # documented ingest-edge contract: ValueError
-                    # carrying the offending media_id (ADVICE r9);
-                    # IndexError/struct.error widen the net so a
-                    # malformed payload can never escape the contract
-                    # as a bare low-level exception (ADVICE r10)
-                    raise ValueError(f"media {mid}: {exc}") from None
-                out.append((mid, fmt, w, h, depth, ch))
-            yield pd.DataFrame(out, columns=[
-                "media_id", "format", "width", "height",
-                "bit_depth", "channels"])
-
-    return media.select("media_id", "format", "payload") \
-        .mapInPandas(_header_batches, schema=HEADER_SCHEMA)
+    ``format`` column) in one Arrow pass — partition-preserving,
+    shuffle-free; memory bounded by the Arrow batch size, exactly the
+    decode_media plumbing contract. Emits (media_id, format, width,
+    height, bit_depth, channels)."""
+    return map_arrow(media, ["media_id", "format", "payload"],
+                     HEADER_SCHEMA, _header_kernel)
 
 
 def frame_sample(media: DataFrame, every_n_bytes: int = 64,

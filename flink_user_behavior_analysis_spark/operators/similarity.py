@@ -160,16 +160,35 @@ def _collect_queries(queries: DataFrame, id_col: str, vec_col: str,
             np.array([np.asarray(r[1], dtype=np.float64) for r in rows]))
 
 
+def _nearest(x, c, bias=None):
+    """For each row of ``x``, the index j of the row of ``c`` that
+    maximizes x . c_j - bias_j: the one assignment step of every
+    BLAS-scored Arrow kernel. Ties go to the lowest index, as the SQL
+    forms' ``row_number`` gives them. argmax takes the first max, but a
+    BLAS product does not give identical rows of ``c`` identical
+    values (its GEMM kernel handles edge rows differently), so exact
+    duplicate rows are mapped to the lowest index after the argmax.
+    Ties between distinct rows are left to the argmax."""
+    import numpy as np
+
+    scores = x @ c.T
+    if bias is not None:
+        scores = scores - bias
+    _, first, inv = np.unique(c, axis=0, return_index=True,
+                              return_inverse=True)
+    return first[inv.reshape(-1)][scores.argmax(axis=1)]
+
+
 def _pq_codes(x, books, sub: int):
     """(n, m) int32 codes: per subspace j, the nearest codebook entry of
-    ``x[:, j*sub:(j+1)*sub]`` (argmax of x.c - |c|^2/2, first max on
+    ``x[:, j*sub:(j+1)*sub]`` (argmax of x.c - |c|^2/2, lowest entry on
     ties)."""
     import numpy as np
 
     cs = np.empty((x.shape[0], len(books)), dtype="int32")
     for j, c in enumerate(books):
-        xj = x[:, j * sub:(j + 1) * sub]
-        cs[:, j] = (xj @ c.T - 0.5 * (c * c).sum(axis=1)).argmax(axis=1)
+        cs[:, j] = _nearest(x[:, j * sub:(j + 1) * sub], c,
+                            0.5 * (c * c).sum(axis=1))
     return cs
 
 
@@ -178,7 +197,7 @@ def _route(x, c_unit):
     stay zero), against the unit coarse centroids: cell is the argmax
     cosine (lowest cell on ties)."""
     x = _unit_or_zero(x)
-    cell = (x @ c_unit.T).argmax(axis=1)
+    cell = _nearest(x, c_unit)
     return cell, x - c_unit[cell]
 
 
@@ -456,10 +475,10 @@ def _ivf_probe(queries: DataFrame, corpus: DataFrame, k: int, nprobe: int,
     centroid ids and vectors (``cent_schema`` types the (cent_id,
     cent_vec) pair). The corpus is assigned to its argmax-cosine
     centroid by an Arrow scan against the centroid matrix (centroids
-    ordered by id, so argmax's first max is the lowest cent_id, the
-    oracle's tiebreak); each query probes its ``nprobe`` nearest
-    centroids by the DOUBLE left-fold expressions against the broadcast
-    centroid frame; candidates join on cent_id and are ranked by exact
+    ordered by id, so ``_nearest``'s lowest index is the lowest
+    cent_id, the oracle's tiebreak); each query probes its ``nprobe``
+    nearest centroids by the DOUBLE left-fold expressions against the
+    broadcast centroid frame; candidates join on cent_id and are ranked by exact
     cosine. Each corpus vector is in one list, so a (query, neighbor)
     pair occurs once."""
     import numpy as np
@@ -477,7 +496,7 @@ def _ivf_probe(queries: DataFrame, corpus: DataFrame, k: int, nprobe: int,
     def _assign(batch):
         x = list_matrix(batch, 1)
         norms = np.linalg.norm(x, axis=1)
-        best = np.argmax((x / norms[:, None]) @ c_mat.T, axis=1)
+        best = _nearest(x / norms[:, None], c_mat)
         return batch.column(0), batch.column(1), norms, c_ids[best]
 
     corpus_assigned = map_arrow(
@@ -590,27 +609,6 @@ def group_centroids(vecs: DataFrame, labels: DataFrame,
     )
     return assembled.select(
         F.col(label_col), "n_vecs", centroid.alias("centroid"))
-
-
-def cosine_pairs(vecs: DataFrame, threshold: float,
-                 id_col: str = "vec_id",
-                 vec_col: str = "embedding") -> DataFrame:
-    """All pairs (a < b) with cosine >= threshold (embedding near-dup).
-
-    Row-expression O(n^2) formulation — the readable baseline. Use
-    cosine_pairs_blocked for real runs: identical output, ~10x faster
-    (per-pair higher-order-function folds are CodegenFallback and
-    evaluate interpreted).
-    """
-    a = _normed(vecs, id_col, vec_col, "a")
-    b = _normed(vecs, id_col, vec_col, "b")
-    cos = dot_expr("a_vec", "b_vec") / (F.col("a_norm") * F.col("b_norm"))
-    return (
-        a.join(b, F.col("a_id") < F.col("b_id"))
-        .select(F.col("a_id").alias("id_a"), F.col("b_id").alias("id_b"),
-                F.round(cos, 4).alias("cosine"))
-        .where(F.col("cosine") >= threshold)
-    )
 
 
 _PAIR_SCHEMA = StructType([
@@ -758,8 +756,8 @@ def cosine_pairs_blocked(vecs: DataFrame, threshold: float,
                          id_col: str = "vec_id",
                          vec_col: str = "embedding",
                          n_blocks: int = 8) -> DataFrame:
-    """All-pairs cosine >= threshold via block-partitioned matrix
-    multiply — the 100 TB formulation of cosine_pairs (same output).
+    """All pairs (a < b) with cosine >= threshold (embedding near-dup)
+    via block-partitioned matrix multiply — the 100 TB formulation.
 
     Vectors are hashed into ``n_blocks`` blocks; every unordered block
     pair (i <= j) becomes one group key, and each vector is replicated
@@ -939,9 +937,8 @@ def kmeans_fit(vecs: DataFrame, k: int, iters: int = 5,
                 if x.shape[0] == 0:
                     return None
             # (squared-euclidean via the dot trick, or plain dot on the
-            # unit sphere); argmax returns the FIRST max -> lowest
-            # centroid index on ties
-            cent = (x @ c_mat.T - half_sq).argmax(axis=1)
+            # unit sphere); lowest centroid index on ties
+            cent = _nearest(x, c_mat, half_sq)
             return _partial_rows(cent, _fixed_point(x))
 
         # toArrow (not collect): the k*d partial rows land as columnar

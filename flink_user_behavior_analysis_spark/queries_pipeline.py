@@ -2317,18 +2317,15 @@ FROM documents
 
 
 def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow decode path over REAL binary PPM payloads (VERDICT r4
-    next-round #4): documents_as_ppm builds P6 images JVM-side, the
-    pure-python codec parses header + pixels inside mapInPandas, and
-    every emitted feature (dims, per-channel means, min/max byte) is
-    exact in float32 — so the DuckDB oracle recomputes them
-    bit-for-bit from hex(encode(text)). The fake-codec plumbing path
-    (decode_media(decoder='fake')) and the decoder='real' stub for
-    true codecs both remain."""
+    """Arrow decode path over REAL binary PPM payloads:
+    documents_as_ppm builds P6 images JVM-side, the pure-python codec
+    (operators/multimodal.ppm_decode) parses header + pixels inside an
+    Arrow kernel, and every emitted feature (dims, per-channel means,
+    min/max byte) is exact in float32 — so the DuckDB oracle
+    recomputes them bit-for-bit from hex(encode(text))."""
     from .operators.multimodal import documents_as_ppm
 
-    media = documents_as_ppm(_docs(spark, sf_dir))
-    feats = decode_media(media, decoder="ppm")
+    feats = decode_media(documents_as_ppm(_docs(spark, sf_dir)))
     sel = [F.element_at("feature", i + 1).cast("double").alias(a)
            for i, a in enumerate(
                ["w", "h", "mean_r", "mean_g", "mean_b",
@@ -2373,36 +2370,22 @@ FROM px
 
 
 def q_multimodal_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Real-format header metadata (VERDICT r8 #8, widened to four
-    formats per r10 #5): docs become REAL byte streams by doc_id % 4 —
-    PNG (signature + CRC-validated IHDR), JPEG (SOI/APP0/SOF0 marker
+    """Real-format header metadata: docs become REAL byte streams by
+    doc_id % 4 (operators/multimodal.documents_by_format) — PNG
+    (signature + CRC-validated IHDR), JPEG (SOI/APP0/SOF0 marker
     stream), GIF89a (logical screen descriptor, little-endian dims),
     BMP (BITMAPINFOHEADER) — all built JVM-side with dims derived
     from the text length; the spec-literal pure-python header parsers
     (operators/multimodal.py:png_header / jpeg_header / gif_header /
     bmp_header) then recover (width, height, bit_depth, channels)
-    from the BYTES inside one Arrow mapInPandas pass. The oracle
-    predicts the dims independently from the length formula — a
-    builder/parser endianness or offset bug surfaces as a hash
-    mismatch; the byte-level fixture pins live in
-    tests/test_pipeline_ops.py against hand-verified spec vectors."""
-    from .operators.multimodal import (
-        documents_as_bmp,
-        documents_as_gif,
-        documents_as_jpeg,
-        documents_as_png,
-        media_headers,
-    )
+    from the BYTES inside one Arrow kernel pass. The oracle predicts
+    the dims independently from the length formula — a builder/parser
+    endianness or offset bug surfaces as a hash mismatch; the
+    byte-level fixture pins live in tests/test_pipeline_ops.py against
+    hand-verified spec vectors."""
+    from .operators.multimodal import documents_by_format, media_headers
 
-    docs = _docs(spark, sf_dir)
-    m = F.col("doc_id") % 4
-    media = (
-        documents_as_png(docs.where(m == 0))
-        .unionByName(documents_as_jpeg(docs.where(m == 1)))
-        .unionByName(documents_as_gif(docs.where(m == 2)))
-        .unionByName(documents_as_bmp(docs.where(m == 3)))
-    )
-    return media_headers(media)
+    return media_headers(documents_by_format(_docs(spark, sf_dir)))
 
 
 MULTIMODAL_HEADERS_SQL = """

@@ -2,7 +2,6 @@ from .readers import (
     file_replay_stream,
     kafka_source,
     load_table,
-    load_tables,
     marketing_generator_stream,
     parse_apache_log,
     read_ad_click_log_csv,
@@ -18,7 +17,6 @@ __all__ = [
     "file_replay_stream",
     "kafka_source",
     "load_table",
-    "load_tables",
     "marketing_generator_stream",
     "parse_apache_log",
     "read_ad_click_log_csv",

@@ -139,10 +139,6 @@ def with_item(events: DataFrame) -> DataFrame:
         "item_id", F.regexp_extract("props", ITEM_RE, 1).try_cast("long"))
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or schemas.TESTDATA_TABLES)}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every testdata table as a temp view for spark.sql use."""
     for n in schemas.TESTDATA_TABLES:

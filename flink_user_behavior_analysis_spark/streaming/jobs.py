@@ -130,24 +130,6 @@ def exact_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def semdedup_assign_stream(spark: SparkSession, sf_dir: str,
-                           centroids: list) -> DataFrame:
-    """Streaming semantic-cluster assignment: the SemDeDup argmax
-    projection (operators/similarity.semdedup_assign — literal
-    centroids, zero shuffle, STATELESS) applied to a replayed
-    embeddings stream. Append mode; each arriving vector is routed
-    to its cell independently, so the streaming result equals the
-    batch assignment row-for-row (test-asserted). This is the
-    ingest-side half of incremental SemDeDup: route arrivals to
-    cells on the wire, then batch the within-cell probe
-    (semdedup_probe) per micro-batch or per accepted batch."""
-    from ..operators.similarity import semdedup_assign
-
-    ensure_utc(spark)
-    embs = file_replay_stream(spark, sf_dir, "embeddings")
-    return semdedup_assign(embs, centroids)
-
-
 def semdedup_drift_stream(spark: SparkSession, sf_dir: str,
                           centroids: list) -> DataFrame:
     """Streaming half of the SemDeDup drift monitor: route each
@@ -289,48 +271,6 @@ def pii_scrub_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pii_scrub(docs)
 
 
-def media_headers_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of multimodal_headers: wrap the replayed
-    document stream as real PNG/JPEG/GIF/BMP payloads (stateless JVM
-    column exprs, same doc_id % 4 dispatch as the batch query) and
-    parse their headers in the Arrow map — per-row, stateless, append
-    mode, so the drained output equals the batch parse row-for-row
-    (the pii_scrub_stream contract). The scan-at-ingest shape for
-    media metadata: dims/channels land in the catalog before the
-    first durable write, so malformed payloads fail loudly at the
-    edge instead of poisoning a downstream decode."""
-    from ..operators.multimodal import (documents_as_bmp,
-                                        documents_as_gif,
-                                        documents_as_jpeg,
-                                        documents_as_png, media_headers)
-
-    ensure_utc(spark)
-    docs = file_replay_stream(spark, sf_dir, "documents")
-    m = F.col("doc_id") % 4
-    media = (
-        documents_as_png(docs.where(m == 0))
-        .unionByName(documents_as_jpeg(docs.where(m == 1)))
-        .unionByName(documents_as_gif(docs.where(m == 2)))
-        .unionByName(documents_as_bmp(docs.where(m == 3)))
-    )
-    return media_headers(media)
-
-
-def media_ahash_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of the image perceptual-hash pass (r11): wrap
-    the replayed documents as real PPM payloads and average-hash each
-    inside the Arrow map — per-row, stateless, append mode, so the
-    drained output equals the batch hash pass row-for-row. The
-    hash-at-ingest shape: fingerprints land with the arrival stream,
-    and the dedup/banding stages downstream are hash-space-only work
-    that never revisits pixels."""
-    from ..operators.multimodal import documents_as_ppm, media_ahash
-
-    ensure_utc(spark)
-    docs = file_replay_stream(spark, sf_dir, "documents")
-    return media_ahash(documents_as_ppm(docs))
-
-
 def run_ingest_foreach_batch(raw_sdf: DataFrame, checkpoint_dir: str,
                              ingest_fn, job_id: str = "ingest") -> None:
     """Exactly-once streaming INGEST into a stored index (VERDICT r8
@@ -445,27 +385,6 @@ def dsir_ingest_batch(spark: SparkSession, prefix_raw: str,
         return n_selected
     finally:
         batch_df.unpersist()
-
-
-def run_dsir_ingest(raw_docs: DataFrame, prefix_raw: str,
-                    prefix_tgt: str, checkpoint_dir: str,
-                    logw_threshold: float = 0.0,
-                    select_sink: str | None = None,
-                    job_id: str = "dsir") -> None:
-    """End-to-end streaming DSIR ingest (VERDICT r10 #7): compose the
-    frozen-artifact scoring of dsir_score_stream with the raw-LM
-    growth of lm_append_to_model under one exactly-once foreachBatch
-    loop — score, select, append, epoch by epoch. Crash/replay and
-    concurrent-rebuild quarantine semantics are inherited from the
-    shared transactional skeleton (test-asserted in
-    tests/test_streaming_recovery.py alongside the curation twin)."""
-    spark = raw_docs.sparkSession
-    run_ingest_foreach_batch(
-        raw_docs, checkpoint_dir,
-        lambda b, bid: dsir_ingest_batch(spark, prefix_raw, prefix_tgt,
-                                         b, bid, logw_threshold,
-                                         select_sink),
-        job_id=job_id)
 
 
 def run_probe_foreach_batch(raw_sdf: DataFrame, probe_fn) -> DataFrame:
@@ -618,7 +537,7 @@ def snapshot_cdc_ingest_batch(spark: SparkSession, prefix: str,
     compaction can see the complete candidate snapshot and close the
     'removed' gap that a per-slice probe structurally cannot.
 
-    Exactly-once composition (the run_dsir_ingest shape): the ledger
+    Exactly-once composition (the dsir_ingest_batch shape): the ledger
     check early-exits a committed re-delivery BEFORE paying the
     probe; both writes are idempotent per-batch directory overwrites
     (a replayed epoch rewrites the same rows — verdicts are a pure
@@ -692,7 +611,7 @@ def run_snapshot_cdc_ingest(candidate: DataFrame, prefix: str,
     micro-batch emits added/changed verdicts against the frozen
     previous-version fingerprints AND stages its own fingerprints,
     under one exactly-once foreachBatch loop — the same composition
-    run_dsir_ingest uses for score+select+append. The batch half
+    dsir_ingest_batch uses for score+select+append. The batch half
     (snapshot_cdc_compact) closes the loop with removals and the next
     version cut once the snapshot is complete.
 

@@ -10,9 +10,12 @@
   the shared local top-k block and the shared global rank, equals
   brute_force_topk row for row on generated integer embeddings, where
   tied cosines are common.
+- Exact duplicate centroids: coarse routing and PQ encoding assign
+  to the lowest index, as the SQL forms' ``row_number`` does, though a
+  BLAS product scores the copies differently.
 - ``mapInArrow(`` appears in the package only in the runner and in
   ``pca_fit``, whose partial Gram matrix accumulates over all batches of
-  a partition.
+  a partition, and ``mapInPandas(`` nowhere.
 """
 
 import ast
@@ -28,6 +31,8 @@ from flink_user_behavior_analysis_spark.operators.arrow_kernel import (
     list_matrix,
 )
 from flink_user_behavior_analysis_spark.operators.similarity import (
+    _pq_codes,
+    _route,
     brute_force_topk,
     brute_force_topk_arrow,
 )
@@ -121,8 +126,24 @@ def test_brute_force_topk_arrow_equals_jvm_form(spark, base, copies,
     assert got == want
 
 
-def _map_in_arrow_calls():
-    """(module, enclosing top-level function) of every ``.mapInArrow(``
+def test_duplicate_centroids_assign_to_the_lowest_index():
+    """Row 4 of 5 centroids is a copy of row 0, and the queries lie
+    near it: rows 0 and 4 tie exactly, and the cell (and the PQ code)
+    must be 0. For d = 128 and 7 queries, OpenBLAS scores the two
+    copies differently for some queries, so a bare argmax picks 4."""
+    rng = np.random.default_rng(0)
+    for _ in range(20):
+        c = rng.standard_normal((5, 128))
+        c /= np.linalg.norm(c, axis=1, keepdims=True)
+        c[4] = c[0]
+        x = c[0] + 0.01 * rng.standard_normal((7, 128))
+        cell, _ = _route(x, c)
+        assert cell.tolist() == [0] * 7
+        assert _pq_codes(x, [c], 128)[:, 0].tolist() == [0] * 7
+
+
+def _calls(method):
+    """(module, enclosing top-level function) of every ``.<method>(``
     call in the package."""
     found = []
     for path in sorted(PACKAGE.rglob("*.py")):
@@ -131,18 +152,20 @@ def _map_in_arrow_calls():
             for node in ast.walk(top):
                 if (isinstance(node, ast.Call)
                         and isinstance(node.func, ast.Attribute)
-                        and node.func.attr == "mapInArrow"):
+                        and node.func.attr == method):
                     found.append((path.relative_to(PACKAGE).as_posix(),
                                   getattr(top, "name", None)))
     return sorted(found)
 
 
 def test_map_in_arrow_only_in_the_runner():
-    assert _map_in_arrow_calls() == [
+    assert _calls("mapInArrow") == [
         ("operators/arrow_kernel.py", "map_arrow"),
         ("operators/similarity.py", "pca_fit"),
     ]
+    assert _calls("mapInPandas") == []
     # the AST walk sees every call spelled in the source
-    text_hits = sum(p.read_text().count(".mapInArrow(")
-                    for p in PACKAGE.rglob("*.py"))
-    assert text_hits == len(_map_in_arrow_calls())
+    for method in ("mapInArrow", "mapInPandas"):
+        text_hits = sum(p.read_text().count(f".{method}(")
+                        for p in PACKAGE.rglob("*.py"))
+        assert text_hits == len(_calls(method)), method

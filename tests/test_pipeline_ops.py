@@ -13,10 +13,6 @@ from flink_user_behavior_analysis_spark.operators import (
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
 )
-from flink_user_behavior_analysis_spark.operators.multimodal import (
-    FEATURE_DIM,
-    _fake_decode,
-)
 from flink_user_behavior_analysis_spark.sources import load_table
 
 
@@ -51,19 +47,6 @@ def test_lsh_topk_subset_of_bruteforce_candidates(spark, sf_dir):
         key = (r.query_id, r.neighbor_id)
         if key in bf:
             assert abs(bf[key] - r.cosine) < 1e-9
-
-
-def test_fake_decode_deterministic_and_shaped(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").limit(20)
-    media = documents_as_media(docs)
-    rows = decode_media(media, decoder="fake").collect()
-    assert len(rows) == 20
-    by_id = {r.media_id: r for r in rows}
-    src = {r.media_id: r.payload for r in media.collect()}
-    for mid, r in by_id.items():
-        assert len(r.feature) == FEATURE_DIM
-        expected = _fake_decode(bytes(src[mid]))
-        assert all(abs(a - b) < 1e-6 for a, b in zip(r.feature, expected))
 
 
 def test_frame_sample_byte_windows_non_ascii(spark):
@@ -109,7 +92,7 @@ def test_ppm_decode_matches_reference(spark):
     media = documents_as_ppm(docs)
     payloads = {r.media_id: bytes(r.payload) for r in media.collect()}
     rows = {r.media_id: r
-            for r in decode_media(media, decoder="ppm").collect()}
+            for r in decode_media(media).collect()}
     assert len(rows) == len(texts)
     for mid, payload in payloads.items():
         assert payload.startswith(f"P6\n{PPM_W} {PPM_H}\n255\n".encode())
@@ -236,12 +219,10 @@ def test_gif_bmp_header_parsers_pinned_to_spec_vectors():
 
 
 def test_media_headers_inline_parser_matches_reference(spark):
-    """ADVICE r9: the mapInPandas closure in media_headers inlines
-    png_header's logic and had DRIFTED (missing truncation guard +
-    color-type validation — struct.error / KeyError instead of the
-    documented ValueError). Drive the malformed payloads through the
-    ARROW path and require a ValueError carrying the media_id, so the
-    two copies cannot diverge silently again."""
+    """Malformed payloads driven through the ARROW path of
+    media_headers (a truncated PNG, a bad PNG color type, a JPEG cut
+    inside its SOF segment) surface as a ValueError carrying the
+    media_id — never a bare struct.error, KeyError or IndexError."""
     from flink_user_behavior_analysis_spark.operators.multimodal import (
         media_headers,
     )
@@ -259,8 +240,8 @@ def test_media_headers_inline_parser_matches_reference(spark):
     assert "ValueError" in msg and "media 7" in msg \
         and "truncated" in msg, msg
 
-    # unknown color type (5 is not a legal PNG color type): the
-    # inline copy must raise ValueError, not KeyError
+    # unknown color type (5 is not a legal PNG color type): a
+    # ValueError, not KeyError
     import binascii
     import struct
     bad = bytearray(_PNG_FIXTURE)
@@ -274,9 +255,8 @@ def test_media_headers_inline_parser_matches_reference(spark):
     assert "ValueError" in msg and "media 7" in msg \
         and "color type" in msg, msg
 
-    # ADVICE r10: a JPEG cut inside its SOF segment used to escape the
-    # inline copy as a bare IndexError without the media_id — must be
-    # the documented ValueError contract on the Arrow path too
+    # a JPEG cut inside its SOF segment: the documented ValueError
+    # contract, not a bare IndexError without the media_id
     media = spark.createDataFrame(
         [(9, "jpeg", bytearray(_JPEG_FIXTURE[:25]))],
         "media_id long, format string, payload binary")
@@ -360,16 +340,6 @@ def test_media_headers_roundtrip_and_builder_pin(spark):
         assert got[(i + 100, "jpeg")] == want, (i, t)
         assert got[(i + 200, "gif")] == want, (i, t)
         assert got[(i + 300, "bmp")] == want, (i, t)
-
-
-def test_real_decoder_is_explicitly_stubbed(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").limit(1)
-    media = documents_as_media(docs)
-    try:
-        decode_media(media, decoder="real")
-        raise AssertionError("real decoder should be stubbed")
-    except NotImplementedError:
-        pass
 
 
 def test_quantization_error_bound(spark, sf_dir):

@@ -44,7 +44,7 @@ ARROW_ALLOWED = {
     "duplicated_spans_inc",  # same kernel over the delta
     "duplicated_spans_inc_stored",  # same kernel, stored span counts
     "remove_dup_spans",      # same span kernel, feeding the cut
-    "multimodal_decode",     # decode stub over binary payloads
+    "multimodal_decode",     # PPM codec over binary payloads (mapInArrow)
     "multimodal_headers",    # PNG/JPEG header parse over binary payloads
     "image_phash_dedup",     # aHash over PPM pixel bytes (r11)
     "image_phash_neardup",   # same hash pass feeding the banded join

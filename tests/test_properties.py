@@ -785,26 +785,6 @@ def test_semdedup_corpus_probe_is_split_invariant(spark, vecs, split):
             spark.sql(f"DROP TABLE {t.name}")
 
 
-def test_rotation_order_invariants():
-    """The derived gate rotation (queries.rotation_order): forced
-    names first, then never-green, then ascending freshest-green
-    round, name-tiebroken — and total (every registered name appears
-    exactly once)."""
-    from flink_user_behavior_analysis_spark.queries import (
-        _ALL_QUERIES,
-        _FORCE_WINDOW,
-        freshest_green_rounds,
-        rotation_order,
-    )
-
-    order = rotation_order(_ALL_QUERIES)
-    assert sorted(order) == sorted(_ALL_QUERIES)
-    fresh = freshest_green_rounds()
-    forced = set(_FORCE_WINDOW)
-    keys = [(n not in forced, fresh.get(n, -1), n) for n in order]
-    assert keys == sorted(keys)
-
-
 @settings(max_examples=10, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(

@@ -12,6 +12,10 @@ from .oracle_util import compare
 ORACLED = sorted(Q.ORACLES)
 
 
+def test_oracle_keys_subset_of_queries():
+    assert set(Q.ORACLES) <= set(Q.QUERIES)
+
+
 @pytest.mark.parametrize("name", ORACLED)
 def test_query_matches_oracle(spark, sf_dir, name):
     df = Q.QUERIES[name](spark, sf_dir)

@@ -770,10 +770,10 @@ def test_semdedup_ingest_loop_exactly_once_appends(spark, sf_dir):
 
 def test_semdedup_assign_stream_equals_batch(spark, sf_dir):
     """Streaming cluster routing == batch assignment, row for row:
-    the SemDeDup argmax projection is stateless, so replaying the
-    embeddings as a stream (append mode, availableNow) must assign
-    every vector to the same cell with the same cent_sim as the
-    batch operator."""
+    the SemDeDup argmax projection is stateless, so the batch operator
+    applied to the replayed embeddings stream (append mode,
+    availableNow) must assign every vector to the same cell with the
+    same cent_sim as over the batch table."""
     from flink_user_behavior_analysis_spark.operators.similarity import (
         semdedup_assign,
     )
@@ -782,14 +782,17 @@ def test_semdedup_assign_stream_equals_batch(spark, sf_dir):
         _semdedup_centroid_path,
         _semdedup_read_centroids,
     )
+    from flink_user_behavior_analysis_spark.sources.readers import (
+        file_replay_stream,
+    )
     from flink_user_behavior_analysis_spark.streaming.jobs import (
         run_available_now,
-        semdedup_assign_stream,
     )
 
     cents = _semdedup_read_centroids(_semdedup_centroid_path())
     streamed = run_available_now(
-        semdedup_assign_stream(spark, sf_dir, cents), output_mode="append")
+        semdedup_assign(file_replay_stream(spark, sf_dir, "embeddings"),
+                        cents), output_mode="append")
     batch = semdedup_assign(_embs(spark, sf_dir), cents)
     assert sorted(map(tuple, streamed.collect())) == \
         sorted(map(tuple, batch.collect()))
@@ -951,16 +954,24 @@ def test_pii_scrub_stream_equals_batch(spark, sf_dir):
 
 def test_media_headers_stream_equals_batch(spark, sf_dir):
     """Streaming header parse == batch parse row-for-row: building
-    the PNG/JPEG payloads and parsing their headers are stateless
-    per-row operations, so the append-mode replay must recover
+    the real-format payloads (the doc_id % 4 dispatch) and parsing
+    their headers are stateless per-row operations, so applied to the
+    replayed document stream in append mode they must recover
     identical (dims, depth, channels) for every document."""
     from flink_user_behavior_analysis_spark import queries as Q
+    from flink_user_behavior_analysis_spark.operators.multimodal import (
+        documents_by_format,
+        media_headers,
+    )
+    from flink_user_behavior_analysis_spark.sources.readers import (
+        file_replay_stream,
+    )
     from flink_user_behavior_analysis_spark.streaming.jobs import (
-        media_headers_stream,
         run_available_now,
     )
 
-    streamed = run_available_now(media_headers_stream(spark, sf_dir),
+    docs = file_replay_stream(spark, sf_dir, "documents")
+    streamed = run_available_now(media_headers(documents_by_format(docs)),
                                  output_mode="append")
     batch = Q.QUERIES["multimodal_headers"](spark, sf_dir)
     cols = ["media_id", "format", "width", "height", "bit_depth",
@@ -971,19 +982,21 @@ def test_media_headers_stream_equals_batch(spark, sf_dir):
 
 def test_media_ahash_stream_equals_batch(spark, sf_dir):
     """Streaming perceptual-hash pass == batch pass row-for-row
-    (stateless per-row Arrow map, the media_headers_stream
-    contract)."""
+    (stateless per-row Arrow kernel over the replayed documents)."""
     from flink_user_behavior_analysis_spark.operators.multimodal import (
         documents_as_ppm,
         media_ahash,
     )
     from flink_user_behavior_analysis_spark.queries_pipeline import _docs
+    from flink_user_behavior_analysis_spark.sources.readers import (
+        file_replay_stream,
+    )
     from flink_user_behavior_analysis_spark.streaming.jobs import (
-        media_ahash_stream,
         run_available_now,
     )
 
-    streamed = run_available_now(media_ahash_stream(spark, sf_dir),
+    docs = file_replay_stream(spark, sf_dir, "documents")
+    streamed = run_available_now(media_ahash(documents_as_ppm(docs)),
                                  output_mode="append")
     batch = media_ahash(documents_as_ppm(_docs(spark, sf_dir)))
     cols = ["media_id", "phash", "w", "h"]

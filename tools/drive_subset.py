@@ -1,35 +1,17 @@
 """Driver-simulation for a SUBSET of the contract: same hash compare
 as tools/drive_contract.py (shared helpers in tools/_driver_sim.py)
-but only for the query names given on the command line, or:
+but only for the query names given on the command line.
 
-  --window  the first GATE_WINDOW registry entries — the exact set
-            the round driver gates this round;
-  --tail    everything PAST the window (VERDICT r8 #7): as the
-            registry grows, the rotation horizon stretches — a wrong
-            answer introduced in a tail query could sit outside the
-            driver window for ceil(n/50) rounds. Running the tail
-            locally once per round (DuckDB-side only, no driver)
-            re-certifies those entries on the same hash compare, so
-            the effective staleness is one round regardless of
-            registry size. PERF.md records its wall per round.
-
-  --json [PATH]  additionally write the per-query results in the
+  --json PATH  additionally write the per-query results in the
             CORRECTNESS_r*.json row shape (rows_match / schema_match
-            / hash_match / spark_rows / oracle_rows / err), so the
-            tail pass is a committed machine-auditable artifact
-            (VERDICT r9 #8) instead of PERF-prose. With --tail and
-            no PATH, defaults to TAILCHECK_r{N}.json at the repo
-            root, N = newest committed CORRECTNESS round + 1 (the
-            round in progress).
+            / hash_match / spark_rows / oracle_rows / err), a
+            machine-auditable artifact of the run.
 
 Usage:
-    python tools/drive_subset.py name1 name2 ...
-    python tools/drive_subset.py --window
-    python tools/drive_subset.py --tail [--json [PATH]]
+    python tools/drive_subset.py name1 name2 ... [--json PATH]
 """
 import json
 import os
-import re
 import sys
 import time
 
@@ -46,45 +28,18 @@ from tools._driver_sim import (  # noqa: E402
 )
 
 
-def _default_tailcheck_path() -> str:
-    """TAILCHECK_r{N}.json with N = newest rotation-visible
-    CORRECTNESS round + 1 — the round this tail pass certifies."""
-    from flink_user_behavior_analysis_spark.queries import (
-        _correctness_files,
-    )
-
-    rounds = [int(m.group(1)) for p in _correctness_files()
-              if (m := re.search(r"CORRECTNESS_r(\d+)\.json$", p))]
-    n = (max(rounds) + 1) if rounds else 1
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    return os.path.join(root, f"TAILCHECK_r{n:02d}.json")
-
-
 def main() -> int:
     qs, oracles = e.queries(), e.oracle_sql()
     args = sys.argv[1:]
     json_path = None
     if "--json" in args:
         i = args.index("--json")
-        nxt = args[i + 1] if i + 1 < len(args) else None
-        if nxt is not None and not nxt.startswith("--"):
-            json_path = nxt
-            del args[i:i + 2]
-        else:
-            json_path = ""  # resolve after mode is known
-            del args[i]
-    names = args
-    mode = names[0] if names in (["--window"], ["--tail"]) else None
-    if mode:
-        from flink_user_behavior_analysis_spark.queries import GATE_WINDOW
-
-        names = (list(qs)[:GATE_WINDOW] if mode == "--window"
-                 else list(qs)[GATE_WINDOW:])
-    if json_path == "":
-        if mode != "--tail":
-            print("--json without PATH is only defaulted for --tail")
+        if i + 1 == len(args) or args[i + 1].startswith("--"):
+            print("--json needs a PATH")
             return 2
-        json_path = _default_tailcheck_path()
+        json_path = args[i + 1]
+        del args[i:i + 2]
+    names = args
     unknown = [n for n in names if n not in qs]
     if unknown:
         print("unknown queries:", unknown)
