@@ -158,8 +158,13 @@ def release_signature_cache(session: SparkSession | None = None) -> int:
 
 
 def normalized_text(col: str = "text") -> Column:
-    """Lowercase, strip non-alphanumerics, collapse whitespace."""
-    c = F.lower(F.col(col))
+    """Lowercase, strip non-alphanumerics, collapse whitespace.
+
+    U+0130 (dotted capital I) is mapped to ``i`` first: the JVM's full
+    case mapping lowercases it to ``i`` plus a combining dot, which
+    the strip turns into a space, splitting the word in two, where
+    DuckDB's ``lower`` (the oracles' normalization) gives ``i``."""
+    c = F.lower(F.translate(F.col(col), "\u0130", "i"))
     c = F.regexp_replace(c, "[^a-z0-9 ]", " ")
     c = F.regexp_replace(c, " +", " ")
     return F.trim(c)

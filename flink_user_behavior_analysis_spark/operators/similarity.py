@@ -2588,8 +2588,8 @@ def semdedup_probe(spark, prefix: str, batch: DataFrame,
     ``vs_delta=False`` skips the within-batch pair join and emits
     dup_corpus/kept only — each row's verdict then depends on that
     row and the frozen corpus alone, so the result is invariant to
-    how the batch is split (the streaming micro-batch twin,
-    streaming/jobs.semdedup_probe_stream, relies on exactly this;
+    how the batch is split (a micro-batch probe through
+    streaming/jobs.run_probe_foreach_batch relies on exactly this;
     the within-delta rule is NOT split-invariant because a dominator
     dropped in an earlier micro-batch is invisible to later ones —
     cross-micro-batch dedup belongs to the accept side of the

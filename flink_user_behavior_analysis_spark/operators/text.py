@@ -963,10 +963,9 @@ def lm_score_smoothed(model: dict[str, DataFrame], docs: DataFrame,
     )
 
 
-def dsir_weights(corpus: DataFrame, target: DataFrame | None,
+def dsir_weights(corpus: DataFrame, target_cond: Column,
                  id_col: str = "doc_id",
-                 text_col: str = "text",
-                 target_cond: Column | None = None) -> DataFrame:
+                 text_col: str = "text") -> DataFrame:
     """DSIR importance weights [Xie et al. 2023, arXiv:2302.03169 —
     Data Selection for Language Models via Importance Resampling]:
     rank raw-corpus documents by how target-like they are,
@@ -978,31 +977,20 @@ def dsir_weights(corpus: DataFrame, target: DataFrame | None,
     bigram contributes to both sides, so the ratio is well-defined
     for fully out-of-target documents.
 
-    Scale shape (100 TB): two LM builds (token-keyed count shuffles,
-    stored artifacts in production via lm_store_model — refresh the
-    raw model per corpus version, the target model per target
-    version), then scoring is FUSED: the corpus is tokenized ONCE,
-    its bigram frame persisted and reused for the raw counts and the
-    scoring scan, and both models' smoothed log-probs are joined in
-    the same pass feeding a single doc-keyed mean — not two
-    independent scorer plans joined at the end (a composition of
-    lm_score_smoothed twice measured ~2x this plan: three
-    tokenizations, two aggregates, one extra join). No pairwise
-    anything, no Python. Returns (id, n_bigrams, logw) — resample or
-    top-k on logw downstream (queries_pipeline: dsir_select).
-
-    r14 (§2.3/§2.4): when the target is a PREDICATE over the corpus
-    (``target_cond`` — the only shape the registered queries use),
-    both LMs now come from ONE tokenization and ONE aggregation pass:
-    the bigram/unigram frames carry a target flag and count
-    (count(*), count-if(target)) per key, so the raw and target
-    counts share their shuffle and the scoring joins collapse from
-    four key-joins + two scalar crossjoins to two + one. A count over
-    a filtered subset == a conditional count over the whole corpus,
-    so every cb/cw/v the smoothed scorer sees — and therefore every
-    rounded logw — is bit-identical to the two-model form (the same
-    DuckDB oracle certifies it). Passing ``target`` as a separate
-    frame keeps the original two-model path."""
+    The target is a PREDICATE over the corpus (``target_cond``): both
+    LMs come from ONE tokenization and ONE aggregation pass. The
+    bigram/unigram frames carry a target flag and count (count(*),
+    count-if(target)) per key, so the raw and target counts share
+    their shuffle, and the corpus's bigram frame is persisted once and
+    reused for the counts and the scoring scan. A count over a
+    filtered subset == a conditional count over the whole corpus, so
+    every cb/cw/v the smoothed scorer sees equals that of two
+    separately fitted LMs — which is what dsir_weights_from_models
+    scores against stored ones (probe == inline, test-asserted; the
+    same DuckDB oracle certifies both). No pairwise anything, no
+    Python. Returns (id, n_bigrams, logw) — resample or top-k on logw
+    downstream (queries_pipeline: dsir_select).
+    """
     from .dedup import _tracked_persist
 
     def _logp(cb: str, cw: str, v: str):
@@ -1011,94 +999,44 @@ def dsir_weights(corpus: DataFrame, target: DataFrame | None,
             / (F.coalesce(F.col(cw), F.lit(0)).cast("double")
                + F.col(v).cast("double")))
 
-    if target_cond is not None:
-        toks = corpus.select(
-            F.col(id_col),
-            F.split(normalized_text(text_col), " ").alias("_t"),
-            target_cond.alias("_tgt"),
-        )
-        bi = toks.select(
-            F.col(id_col), F.col("_tgt"),
-            F.explode(F.expr(
-                "zip_with(slice(_t, 1, size(_t) - 1), "
-                "slice(_t, 2, size(_t) - 1), "
-                "(a, b) -> struct(a AS w1, b AS w2))")).alias("bg"),
-        ).select(F.col(id_col), F.col("_tgt"),
-                 F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
-        bi = _tracked_persist(bi)  # feeds both counts AND the scoring scan
-        tgt_hit = F.when(F.col("_tgt"), F.lit(1))
-        uni_rt = (
-            toks.select(F.explode("_t").alias("w"), "_tgt")
-            .groupBy("w")
-            .agg(F.count(F.lit(1)).cast("long").alias("cw_r"),
-                 F.count(tgt_hit).cast("long").alias("cw_t_nz"))
-        )
-        big_rt = bi.groupBy("w1", "w2").agg(
-            F.count(F.lit(1)).cast("long").alias("cb_r"),
-            F.count(tgt_hit).cast("long").alias("cb_t_nz"))
-        # the two-model form LEFT-joins the target counts, so an
-        # absent key contributes NULL (-> coalesce 0); a fused
-        # count-if yields 0 directly — same value through coalesce
-        vv = uni_rt.agg(
-            F.count(F.lit(1)).cast("long").alias("v_r"),
-            F.count(F.when(F.col("cw_t_nz") > 0, F.lit(1)))
-            .cast("long").alias("v_t"))
-        scored = (
-            bi.join(big_rt, ["w1", "w2"], "left")
-            .join(uni_rt.withColumnRenamed("w", "w1"), ["w1"], "left")
-            .crossJoin(F.broadcast(vv))
-            .select(
-                F.col(id_col),
-                F.round(_logp("cb_t_nz", "cw_t_nz", "v_t") * 1_000_000, 0)
-                .cast("long").alias("_ft"),
-                F.round(_logp("cb_r", "cw_r", "v_r") * 1_000_000, 0)
-                .cast("long").alias("_fr"),
-            )
-        )
-        return scored.groupBy(id_col).agg(
-            F.count(F.lit(1)).cast("long").alias("n_bigrams"),
-            F.round(
-                F.round(F.sum("_ft").cast("double") / 1_000_000.0
-                        / F.count(F.lit(1)), 4)
-                - F.round(F.sum("_fr").cast("double") / 1_000_000.0
-                          / F.count(F.lit(1)), 4), 4).alias("logw"),
-        )
-
     toks = corpus.select(
         F.col(id_col),
         F.split(normalized_text(text_col), " ").alias("_t"),
+        target_cond.alias("_tgt"),
     )
     bi = toks.select(
-        F.col(id_col),
+        F.col(id_col), F.col("_tgt"),
         F.explode(F.expr(
             "zip_with(slice(_t, 1, size(_t) - 1), "
             "slice(_t, 2, size(_t) - 1), "
             "(a, b) -> struct(a AS w1, b AS w2))")).alias("bg"),
-    ).select(F.col(id_col), F.col("bg.w1").alias("w1"),
-             F.col("bg.w2").alias("w2"))
-    bi = _tracked_persist(bi)  # feeds raw counts AND the scoring scan
-    uni_r = (toks.select(F.explode("_t").alias("w"))
-             .groupBy("w")
-             .agg(F.count(F.lit(1)).cast("long").alias("cw_r")))
-    big_r = bi.groupBy("w1", "w2").agg(
-        F.count(F.lit(1)).cast("long").alias("cb_r"))
-    v_r = uni_r.agg(F.count(F.lit(1)).cast("long").alias("v_r"))
-    mt = lm_model(target, id_col=id_col, text_col=text_col)
-    big_t = mt["big"].withColumnRenamed("cb", "cb_t")
-    uni_t = mt["uni"].select(F.col("w").alias("w1"),
-                             F.col("cw").alias("cw_t"))
-    v_t = mt["vocab"].select(F.col("v").alias("v_t"))
-
+    ).select(F.col(id_col), F.col("_tgt"),
+             F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
+    bi = _tracked_persist(bi)  # feeds both counts AND the scoring scan
+    tgt_hit = F.when(F.col("_tgt"), F.lit(1))
+    uni_rt = (
+        toks.select(F.explode("_t").alias("w"), "_tgt")
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).cast("long").alias("cw_r"),
+             F.count(tgt_hit).cast("long").alias("cw_t_nz"))
+    )
+    big_rt = bi.groupBy("w1", "w2").agg(
+        F.count(F.lit(1)).cast("long").alias("cb_r"),
+        F.count(tgt_hit).cast("long").alias("cb_t_nz"))
+    # a stored target LM (dsir_weights_from_models) is LEFT-joined,
+    # so an absent key contributes NULL (-> coalesce 0); the fused
+    # count-if yields 0 directly — same value through coalesce
+    vv = uni_rt.agg(
+        F.count(F.lit(1)).cast("long").alias("v_r"),
+        F.count(F.when(F.col("cw_t_nz") > 0, F.lit(1)))
+        .cast("long").alias("v_t"))
     scored = (
-        bi.join(big_t, ["w1", "w2"], "left")
-        .join(uni_t, ["w1"], "left")
-        .crossJoin(F.broadcast(v_t))
-        .join(big_r, ["w1", "w2"], "left")
-        .join(uni_r.withColumnRenamed("w", "w1"), ["w1"], "left")
-        .crossJoin(F.broadcast(v_r))
+        bi.join(big_rt, ["w1", "w2"], "left")
+        .join(uni_rt.withColumnRenamed("w", "w1"), ["w1"], "left")
+        .crossJoin(F.broadcast(vv))
         .select(
             F.col(id_col),
-            F.round(_logp("cb_t", "cw_t", "v_t") * 1_000_000, 0)
+            F.round(_logp("cb_t_nz", "cw_t_nz", "v_t") * 1_000_000, 0)
             .cast("long").alias("_ft"),
             F.round(_logp("cb_r", "cw_r", "v_r") * 1_000_000, 0)
             .cast("long").alias("_fr"),

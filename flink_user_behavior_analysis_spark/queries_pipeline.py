@@ -848,7 +848,7 @@ def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     # predicate-target form (r14): one tokenization + one fused
     # count pass serves both LMs — bit-identical logw (same oracle)
-    w = dsir_weights(docs, None,
+    w = dsir_weights(docs,
                      target_cond=F.col("source").isin(*DSIR_TARGET_SOURCES))
     win = Window.orderBy(F.col("logw").desc(), F.col("doc_id").asc())
     return (
@@ -911,7 +911,7 @@ def q_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs(spark, sf_dir)
     # predicate-target fused form, as in q_dsir_select (r14)
-    w = dsir_weights(docs, None,
+    w = dsir_weights(docs,
                      target_cond=F.col("source").isin(*DSIR_TARGET_SOURCES))
     return weighted_sample_k(w, "logw", DSIR_K,
                              temperature=DSIR_TEMPERATURE,

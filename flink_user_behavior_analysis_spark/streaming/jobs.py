@@ -17,9 +17,13 @@ Output-mode strategy:
 - Top-N over windowed counts is not expressible as a pure streaming
   aggregation (rank over an agg); the reference buffers per-window in
   keyed state and fires on watermark (HotItem.java:134-192). The Spark
-  analogue is foreachBatch ranking — ``run_topn_foreach_batch`` —
+  analogue is foreachBatch ranking — ``run_topn_to_parquet`` —
   mirroring HotPage's late-update-safe MapState upsert
-  (HotPage.java:140-204): each micro-batch upserts counts, then ranks.
+  (HotPage.java:140-204): each micro-batch re-ranks the upserted
+  counts and overwrites the windows it touched in a parquet sink.
+- Late rows (HotPage.java:66,76-77 side output) are routed at the
+  source by ``run_with_late_channel_to_parquet`` into an on-time and a
+  late parquet leg; the main computation reads the on-time leg.
 """
 
 from __future__ import annotations
@@ -255,22 +259,6 @@ def props_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def pii_scrub_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming PII redaction: operators/text.pii_scrub applied to a
-    replayed document stream. The scrub is a pure per-row projection
-    (regex counts + chained placeholder replaces, JVM codegen), so
-    it runs stateless in append mode — each arriving document is
-    redacted independently and the drained output equals the batch
-    scrub row-for-row (test-asserted). The production shape for
-    scrub-on-ingest: redact BEFORE the first durable write, so raw
-    PII never lands in the lake."""
-    from ..operators.text import pii_scrub
-
-    ensure_utc(spark)
-    docs = file_replay_stream(spark, sf_dir, "documents")
-    return pii_scrub(docs)
-
-
 def run_ingest_foreach_batch(raw_sdf: DataFrame, checkpoint_dir: str,
                              ingest_fn, job_id: str = "ingest") -> None:
     """Exactly-once streaming INGEST into a stored index (VERDICT r8
@@ -391,17 +379,17 @@ def run_probe_foreach_batch(raw_sdf: DataFrame, probe_fn) -> DataFrame:
     """Drain a bounded stream of probe inputs via foreachBatch,
     running ``probe_fn`` (batch DataFrame -> DataFrame) against
     STORED serving artifacts per micro-batch, and return the union
-    of the per-batch results — the harness for the stored-index
-    serving twins (SemDeDup corpus probe, filtered ANN). The probe
-    functions are stateless per row/query given the frozen
-    artifacts, so the drained union equals the one-shot batch probe
-    whatever the micro-batch split (test-asserted).
+    of the per-batch results — the streaming form of the stored-index
+    probes (SemDeDup corpus probe, filtered ANN, DSIR scoring, the
+    snapshot-diff probe). The probe functions are stateless per
+    row/query given the frozen artifacts, so the drained union equals
+    the one-shot batch probe whatever the micro-batch split
+    (test-asserted).
 
-    Bounded-replay harness (like run_topn_foreach_batch): per-batch
-    results are collected to the driver. An unbounded production run
-    writes each micro-batch's probe result straight to a keyed sink
-    from inside foreachBatch instead — the probe plan itself is
-    identical."""
+    Bounded-replay harness: per-batch results are collected to the
+    driver. An unbounded production run writes each micro-batch's
+    probe result straight to a keyed sink from inside foreachBatch
+    instead — the probe plan itself is identical."""
     spark = raw_sdf.sparkSession
     holder: dict = {"rows": [], "schema": None}
 
@@ -423,61 +411,6 @@ def run_probe_foreach_batch(raw_sdf: DataFrame, probe_fn) -> DataFrame:
         # frame of the right shape instead of a schema-inference error
         return probe_fn(spark.createDataFrame([], raw_sdf.schema))
     return spark.createDataFrame(holder["rows"], holder["schema"])
-
-
-def semdedup_probe_stream(spark: SparkSession, sf_dir: str,
-                          prefix: str, centroids: list, eps: float,
-                          delta_pred=None) -> DataFrame:
-    """Streaming micro-batch probe against the STORED SemDeDup corpus
-    (VERDICT r7 #4): arriving vectors replay as a stream and each
-    micro-batch runs the cell-partition-pruned corpus probe
-    (operators/similarity.semdedup_probe, vs_delta=False) against the
-    frozen {prefix}_cells artifact — dup_corpus / n_corpus_matches
-    per vector, exactly the batch result under any micro-batch split
-    (each verdict depends on the row and the frozen corpus alone).
-
-    The within-delta half is deliberately NOT on the wire: its
-    dominance rule is order-sensitive across micro-batches, so
-    cross-batch dedup belongs to the ingest loop's accept side
-    (probe -> append keepers -> next batch sees them —
-    tests/test_streaming.py::test_semdedup_ingest_loop covers it).
-    ``delta_pred``: optional Column filtering the replayed
-    embeddings down to the delta."""
-    from ..operators.similarity import semdedup_probe
-
-    ensure_utc(spark)
-    embs = file_replay_stream(spark, sf_dir, "embeddings")
-    if delta_pred is not None:
-        embs = embs.where(delta_pred)
-    return run_probe_foreach_batch(
-        embs,
-        lambda batch: semdedup_probe(spark, prefix, batch, centroids,
-                                     eps, vs_delta=False))
-
-
-def snapshot_diff_stream(spark: SparkSession, sf_dir: str,
-                         prefix: str, key_cols, content_cols,
-                         transform=None) -> DataFrame:
-    """Streaming CDC-shaped snapshot diff: rows of a CANDIDATE
-    snapshot replay as a stream (``transform`` derives the candidate
-    from the raw table — mutations, filters) and each micro-batch
-    probes the stored {prefix}_fps artifact
-    (operators/versioning.snapshot_probe_from_store): added/changed
-    verdicts per row, split-invariant because each verdict depends
-    only on the row and the frozen store. 'removed' is deliberately
-    NOT on the wire — absence is a property of the complete snapshot,
-    so it belongs to the batch diff (snapshot_diff_from_store) run at
-    snapshot close."""
-    from ..operators.versioning import snapshot_probe_from_store
-
-    ensure_utc(spark)
-    docs = file_replay_stream(spark, sf_dir, "documents")
-    if transform is not None:
-        docs = transform(docs)
-    return run_probe_foreach_batch(
-        docs,
-        lambda batch: snapshot_probe_from_store(
-            spark, prefix, batch, key_cols, content_cols))
 
 
 def _hadoop_path_exists(spark: SparkSession, path: str) -> bool:
@@ -832,58 +765,6 @@ def snapshot_cdc_reclaim(spark: SparkSession, staging_root: str,
             "in_flight": sorted(in_flight), "open": sorted(open_)}
 
 
-def ann_filtered_probe_stream(spark: SparkSession, sf_dir: str,
-                              prefix: str, predicate, k: int,
-                              nprobe: int = 8,
-                              query_pred=None) -> DataFrame:
-    """Streaming filtered vector search over the STORED IVFADC index
-    (VERDICT r7 #4): query vectors replay as a stream; each
-    micro-batch routes against the stored coarse centroids and
-    ADC-ranks only the probed cell partitions with the metadata
-    predicate pushed into the scan
-    (operators/similarity.ivfpq_topk_filtered_from_index). Per-query
-    top-k is independent of every other query, so the drained union
-    equals the one-shot batch search under any micro-batch split.
-    ``query_pred``: optional Column selecting the query subset from
-    the replayed embeddings."""
-    from ..operators.similarity import ivfpq_topk_filtered_from_index
-
-    ensure_utc(spark)
-    embs = file_replay_stream(spark, sf_dir, "embeddings")
-    if query_pred is not None:
-        embs = embs.where(query_pred)
-    return run_probe_foreach_batch(
-        embs,
-        lambda batch: ivfpq_topk_filtered_from_index(
-            spark, prefix, batch, k, predicate, nprobe=nprobe))
-
-
-def dsir_score_stream(spark: SparkSession, sf_dir: str,
-                      prefix_raw: str, prefix_tgt: str,
-                      doc_pred=None) -> DataFrame:
-    """Streaming DSIR scoring against the STORED raw/target LMs:
-    arriving documents replay as a stream and each micro-batch runs
-    the probe-only importance weighting
-    (operators/text.dsir_weights_from_models) against the frozen LM
-    artifacts — (doc_id, n_bigrams, logw) per document. Scoring is
-    stateless per document given the frozen LMs, so the drained
-    union equals the one-shot batch weighting under any micro-batch
-    split (test-asserted) — the shape of a selection service scoring
-    a firehose against periodically refreshed LM versions.
-    ``doc_pred``: optional Column filtering the replayed docs."""
-    from ..operators.text import dsir_weights_from_models, lm_read_model
-
-    ensure_utc(spark)
-    docs = file_replay_stream(spark, sf_dir, "documents")
-    if doc_pred is not None:
-        docs = docs.where(doc_pred)
-    model_r = lm_read_model(spark, prefix_raw)
-    model_t = lm_read_model(spark, prefix_tgt)
-    return run_probe_foreach_batch(
-        docs,
-        lambda batch: dsir_weights_from_models(model_r, model_t, batch))
-
-
 def tx_interval_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1 streaming: stream-stream interval join with watermarks
     (TxPayMatchByJoin.java:63-93). Spark's native stream-stream inner
@@ -942,103 +823,6 @@ def run_available_now(
     return sdf.sparkSession.table(name)
 
 
-def run_with_late_channel(
-    raw_sdf: DataFrame,
-    delay_seconds: float,
-    compute,
-    ts_col: str = "ts",
-) -> dict[str, DataFrame]:
-    """Late-row side channel (reference HotPage.java:66,76-77: elements
-    later than watermark+allowedLateness go to a side output; SURVEY
-    section 4 flags this as custom work — Spark drops late rows
-    silently, so the side channel has to be built at the source).
-
-    Drains a bounded RAW stream via foreachBatch, reproducing Spark's
-    watermark rule on the driver: the watermark for batch N is
-    max(event time through batch N-1) - delay. Rows of batch N with
-    ts < watermark are routed to the ``late`` leg; on-time rows feed
-    ``compute`` (a batch-DataFrame -> DataFrame query) for the
-    ``result`` leg — so the main result is exactly the batch recompute
-    over the rows a watermarked streaming agg would have accepted,
-    and nothing is silently dropped.
-
-    TEST-ONLY HARNESS (VERDICT r8): per-batch rows are collected to
-    the driver, which is fine for bounded replays in tests and
-    unbounded nowhere. The production twin is
-    ``run_with_late_channel_to_parquet`` below — identical routing,
-    both legs appended to parquet sinks inside foreachBatch, zero
-    driver-side row state.
-    """
-    spark = raw_sdf.sparkSession
-    delay_us = int(delay_seconds * 1_000_000)
-    holder: dict = {"wm_us": None, "late": [], "on_time": [],
-                    "schema": raw_sdf.schema}
-
-    def _split(batch_df: DataFrame, _bid: int) -> None:
-        wm = holder["wm_us"]
-        ts_us = F.unix_micros(F.col(ts_col))
-        if wm is None:
-            late_rows, ontime = [], batch_df
-        else:
-            late_rows = batch_df.where(ts_us < F.lit(wm)).collect()
-            ontime = batch_df.where(ts_us >= F.lit(wm))
-        ontime_rows = ontime.collect()
-        holder["late"].extend(late_rows)
-        holder["on_time"].extend(ontime_rows)
-        mx = batch_df.agg(F.max(ts_us)).first()[0]
-        if mx is not None:
-            new_wm = mx - delay_us
-            holder["wm_us"] = new_wm if wm is None else max(wm, new_wm)
-
-    q = (
-        raw_sdf.writeStream.outputMode("append")
-        .foreachBatch(_split)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    on_time_df = spark.createDataFrame(holder["on_time"], holder["schema"])
-    late_df = spark.createDataFrame(holder["late"], holder["schema"])
-    return {"result": compute(on_time_df), "late": late_df}
-
-
-def run_topn_foreach_batch(
-    counts_sdf: DataFrame,
-    n: int,
-    order_cols,
-    partition_cols=("window_end_us",),
-    query_name: str | None = None,
-) -> DataFrame:
-    """T1/T2 streaming: rank per window inside foreachBatch.
-
-    complete-mode batches carry the full upserted count state, so the
-    per-batch rank is late-update-safe exactly like HotPage's MapState
-    upsert + re-fire (HotPage.java:160). The last batch's ranking is
-    the final answer on a bounded replay; unbounded runs would upsert
-    into a keyed sink instead (engine convention, SURVEY section 7b/e).
-    """
-    spark = counts_sdf.sparkSession
-    holder: dict = {}
-
-    def _rank(batch_df: DataFrame, _bid: int) -> None:
-        ranked = top_n_per_window(
-            batch_df, n, partition_cols=partition_cols,
-            order_cols=order_cols, rank_alias="rnk",
-        )
-        # materialize: the micro-batch plan dies with the query
-        holder["rows"] = ranked.collect()
-        holder["schema"] = ranked.schema
-
-    q = (
-        counts_sdf.writeStream.outputMode("complete")
-        .foreachBatch(_rank)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.createDataFrame(holder["rows"], holder["schema"])
-
-
 def run_with_late_channel_to_parquet(
     raw_sdf: DataFrame,
     delay_seconds: float,
@@ -1046,23 +830,34 @@ def run_with_late_channel_to_parquet(
     ts_col: str = "ts",
     checkpoint_dir: str | None = None,
 ) -> dict[str, str]:
-    """PRODUCTION form of run_with_late_channel (reference
-    HotPage.java:66,76-77 side output): per micro-batch, rows are
-    routed — late leg vs on-time leg against the running watermark —
-    and APPENDED to two parquet sinks from inside foreachBatch.  No
-    row ever reaches the driver; the only driver-side state is the
-    watermark scalar (one max() aggregate per batch — the same
-    bookkeeping Spark's own WatermarkTracker keeps).  The main
-    computation then runs over the on-time parquet as a batch or
-    follow-on streaming stage (kept outside this function: the sink
-    is the handoff point, exactly like the reference's side-output
-    tag splitting a pipeline).
+    """Late-row side channel (reference HotPage.java:66,76-77: elements
+    later than watermark + allowedLateness go to a side output; Spark
+    drops late rows silently, so the channel is built at the source).
+    Per micro-batch, rows are routed to a late leg or an on-time leg
+    and written to two parquet sinks from inside foreachBatch. No row
+    reaches the driver; the only driver-side state is the routing
+    watermark, one max() aggregate per batch. The main computation
+    then runs over the on-time parquet as a batch or follow-on
+    streaming stage (kept outside this function: the sink is the
+    handoff point, like the reference's side-output tag splitting a
+    pipeline).
+
+    Routing rule: a row of batch N is late when its event time is
+    below max(event time through batch N-1) - ``delay_seconds``, the
+    watermark Spark reports for batch N; batch 0 has no late rows.
+    Spark itself is one batch slower: a watermarked aggregation drops
+    the rows of batch N that are below the watermark in force during
+    batch N-1 (``eventTimeWatermarkForLateEvents``). So the late leg
+    holds every row Spark would drop, plus the rows Spark still
+    accepts in that one batch of grace (test-asserted: the late leg
+    contains every row ``numRowsDroppedByWatermark`` counts; on a
+    late-heavy replay it holds more).
 
     Returns {"on_time": path, "late": path}.
 
-    Restart semantics (ADVICE r4): each leg is partitioned by the
-    micro-batch id and written with DYNAMIC partition overwrite, so a
-    replayed batch overwrites exactly its own ``_bid=<id>`` partition
+    Restart semantics (ADVICE r4): each leg is written into its own
+    ``_bid=<micro-batch id>`` partition directory with overwrite, so a
+    replayed batch replaces exactly its own partition in both legs
     instead of re-appending — effectively-once rows per batch when
     ``checkpoint_dir`` is set. The running watermark is NOT
     driver-memory-only: on (re)start it is rebuilt from the sink
@@ -1148,11 +943,8 @@ def run_topn_to_parquet(
     closed windows' partitions are left untouched.  No driver
     collect anywhere; readers see each window's latest ranking.
 
-    Returns the sink path.  The harness twin run_topn_foreach_batch
-    (driver collect) remains test-only.
+    Returns the sink path.
     """
-    holder: dict = {}
-
     def _rank(batch_df: DataFrame, _bid: int) -> None:
         ranked = top_n_per_window(
             batch_df, n, partition_cols=partition_cols,
@@ -1162,7 +954,6 @@ def run_topn_to_parquet(
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy(*partition_cols)
          .parquet(out_dir))
-        holder["wrote"] = True
 
     w = (counts_sdf.writeStream.outputMode("complete")
          .foreachBatch(_rank)

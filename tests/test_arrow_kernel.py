@@ -10,6 +10,8 @@
   the shared local top-k block and the shared global rank, equals
   brute_force_topk row for row on generated integer embeddings, where
   tied cosines are common.
+- winnow_fingerprints equals its DuckDB form on hypothesis-drawn
+  documents: NULL, empty, one-token and non-ASCII text.
 - Exact duplicate centroids: coarse routing and PQ encoding assign
   to the lowest index, as the SQL forms' ``row_number`` does, though a
   BLAS product scores the copies differently.
@@ -17,9 +19,6 @@
   ``pca_fit``, whose partial Gram matrix accumulates over all batches of
   a partition, and ``mapInPandas(`` nowhere.
 """
-
-import ast
-import pathlib
 
 import numpy as np
 import pyarrow as pa
@@ -37,8 +36,7 @@ from flink_user_behavior_analysis_spark.operators.similarity import (
     brute_force_topk_arrow,
 )
 
-PACKAGE = pathlib.Path(__file__).resolve().parents[1] / \
-    "flink_user_behavior_analysis_spark"
+from .package_ast import calls
 
 VALUE_TYPES = {
     "float64": (pa.float64(), st.floats(allow_nan=False, allow_infinity=False)),
@@ -126,6 +124,57 @@ def test_brute_force_topk_arrow_equals_jvm_form(spark, base, copies,
     assert got == want
 
 
+# tokens that case-fold or normalize differently across engines:
+# accented and dotted capitals (inside a word too), the Kelvin sign, a
+# sharp s, an emoji, punctuation-only and whitespace-only tokens
+_WORDS = st.sampled_from(["a", "b", "c", "Ab", "x1", "\u00e9", "\u0130",
+                          "x\u0130y", "na\u00efve", "\u212a", "\u00df",
+                          "\U0001f600", "--", "\t"])
+_DOC = st.one_of(st.none(), st.just(""),
+                 st.lists(_WORDS, max_size=14).map(" ".join),
+                 st.text(max_size=30))
+
+
+@settings(max_examples=25, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(texts=st.lists(_DOC, min_size=1, max_size=6))
+@example(texts=[None, "", "one", "two words",
+                "\u00dcn\u00efc\u00f6d\u00e9 w\u00f6rds, na\u00efve caf\u00e9 ok",
+                "a b a b a b a b a b",
+                # the JVM lowercases U+0130 to i + a combining dot
+                "a b c d e f \u0130x g h i j"])
+def test_winnow_fingerprints_equals_duckdb_form(spark, texts):
+    """The winnowing kernel equals its DuckDB form (the registered
+    query's oracle) on NULL, empty, one-token, repetitive and
+    non-ASCII documents, and emits nothing for a NULL document."""
+    import duckdb
+
+    from flink_user_behavior_analysis_spark.operators.text import (
+        winnow_fingerprints,
+    )
+    from flink_user_behavior_analysis_spark.queries_pipeline import (
+        WINNOW_K,
+        WINNOW_W,
+        _winnow_sql,
+    )
+
+    docs = spark.createDataFrame(list(enumerate(texts)),
+                                 "doc_id long, text string")
+    got = sorted(map(tuple, winnow_fingerprints(
+        docs, k=WINNOW_K, w=WINNOW_W).collect()))
+    con = duckdb.connect()
+    try:
+        con.register("documents", pa.table({
+            "doc_id": pa.array(range(len(texts)), pa.int64()),
+            "text": pa.array(texts, pa.string())}))
+        want = sorted(con.execute(_winnow_sql()).fetchall())
+    finally:
+        con.close()
+    assert got == want
+    null_docs = {i for i, t in enumerate(texts) if t is None}
+    assert not null_docs & {doc_id for doc_id, _, _ in got}
+
+
 def test_duplicate_centroids_assign_to_the_lowest_index():
     """Row 4 of 5 centroids is a copy of row 0, and the queries lie
     near it: rows 0 and 4 tie exactly, and the cell (and the PQ code)
@@ -142,30 +191,9 @@ def test_duplicate_centroids_assign_to_the_lowest_index():
         assert _pq_codes(x, [c], 128)[:, 0].tolist() == [0] * 7
 
 
-def _calls(method):
-    """(module, enclosing top-level function) of every ``.<method>(``
-    call in the package."""
-    found = []
-    for path in sorted(PACKAGE.rglob("*.py")):
-        tree = ast.parse(path.read_text())
-        for top in tree.body:
-            for node in ast.walk(top):
-                if (isinstance(node, ast.Call)
-                        and isinstance(node.func, ast.Attribute)
-                        and node.func.attr == method):
-                    found.append((path.relative_to(PACKAGE).as_posix(),
-                                  getattr(top, "name", None)))
-    return sorted(found)
-
-
 def test_map_in_arrow_only_in_the_runner():
-    assert _calls("mapInArrow") == [
+    assert calls("mapInArrow") == [
         ("operators/arrow_kernel.py", "map_arrow"),
         ("operators/similarity.py", "pca_fit"),
     ]
-    assert _calls("mapInPandas") == []
-    # the AST walk sees every call spelled in the source
-    for method in ("mapInArrow", "mapInPandas"):
-        text_hits = sum(p.read_text().count(f".{method}(")
-                        for p in PACKAGE.rglob("*.py"))
-        assert text_hits == len(_calls(method)), method
+    assert calls("mapInPandas") == []

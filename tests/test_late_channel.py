@@ -1,18 +1,33 @@
-"""Late-row side channel (SURVEY section 4 custom work; reference
-HotPage.java:66,76-77): replay events out of order across two files so
-the second batch carries rows older than the watermark, and assert
-they land in the ``late`` frame while the main result equals the batch
-recompute over the on-time rows."""
+"""The two streaming sinks: the late-row side channel (SURVEY section 4
+custom work; reference HotPage.java:66,76-77) and the top-N sink.
+
+- Replay events out of order across two files so the second batch
+  carries rows older than the watermark, and assert they land in the
+  ``late`` leg while the batch recompute over the ``on_time`` leg
+  equals the recompute over the on-time rows.
+- On a three-file late-heavy replay, every row a watermarked Spark
+  aggregation drops is in the late leg.
+- Restarts overwrite each batch's partitions instead of duplicating.
+- ``foreachBatch(`` appears in the package only in the sinks and the
+  other named runners, so no driver-collect twin of a sink can come
+  back unnoticed.
+"""
 
 import glob
 import os
+import random
 import shutil
+from datetime import datetime, timedelta
 
 from pyspark.sql import functions as F
 
 from flink_user_behavior_analysis_spark.operators import windowed_count
 from flink_user_behavior_analysis_spark.sources import load_table
-from flink_user_behavior_analysis_spark.streaming import run_with_late_channel
+from flink_user_behavior_analysis_spark.streaming import (
+    run_with_late_channel_to_parquet,
+)
+
+from .package_ast import calls
 
 DELAY_S = 3600  # allowed lateness: 1 hour
 
@@ -37,6 +52,17 @@ def _two_file_replay_dir(spark, sf_dir, tmp_path):
     return stream_dir, first, second
 
 
+def _compute(on_time):
+    return windowed_count(
+        on_time.where(F.col("event_type") == "click"),
+        "ts", ["user_id"], "1 hour", "1 hour",
+    )
+
+
+def _key(df):
+    return sorted((r.window_end_us, r.user_id, r.cnt) for r in df.collect())
+
+
 def test_late_rows_routed_to_side_channel(spark, sf_dir, tmp_path):
     stream_dir, first, second = _two_file_replay_dir(spark, sf_dir, tmp_path)
     raw = (
@@ -45,13 +71,9 @@ def test_late_rows_routed_to_side_channel(spark, sf_dir, tmp_path):
         .parquet(str(stream_dir))
     )
 
-    def compute(on_time):
-        return windowed_count(
-            on_time.where(F.col("event_type") == "click"),
-            "ts", ["user_id"], "1 hour", "1 hour",
-        )
-
-    legs = run_with_late_channel(raw, DELAY_S, compute)
+    paths = run_with_late_channel_to_parquet(
+        raw, DELAY_S, str(tmp_path / "sink"),
+        checkpoint_dir=str(tmp_path / "ckpt"))
 
     # expected late set: batch-2 rows older than wm = max ts(batch 1) - delay
     max_us_1 = first.agg(F.max(F.unix_micros("ts"))).first()[0]
@@ -60,61 +82,64 @@ def test_late_rows_routed_to_side_channel(spark, sf_dir, tmp_path):
         r.event_id
         for r in second.where(F.unix_micros("ts") < F.lit(wm_us)).collect()
     }
-    got_late = {r.event_id for r in legs["late"].collect()}
-    assert got_late == expect_late
+    got_late = [r.event_id
+                for r in spark.read.parquet(paths["late"]).collect()]
+    assert sorted(got_late) == sorted(expect_late)
     assert got_late, "replay should produce late rows (else the test is vacuous)"
 
-    # main result == batch recompute over exactly the on-time rows
+    # recompute over the on-time leg == recompute over exactly the
+    # on-time rows (the _bid partition column is ignored)
     on_time = first.unionByName(
         second.where(F.unix_micros("ts") >= F.lit(wm_us))
     )
-    want = compute(on_time)
-    got = legs["result"]
-    key = lambda df: sorted(
-        (r.window_end_us, r.user_id, r.cnt) for r in df.collect()
-    )
-    assert key(got) == key(want)
+    assert _key(_compute(spark.read.parquet(paths["on_time"]))) == \
+        _key(_compute(on_time))
 
 
-def test_late_channel_parquet_sink_matches_harness(spark, sf_dir, tmp_path):
-    """Production path (VERDICT r3 item 7): both legs written to
-    parquet from inside foreachBatch — the routed sets must equal the
-    driver-collect harness's, and the main result recomputed over the
-    on-time parquet must equal the harness result leg."""
-    from flink_user_behavior_analysis_spark.streaming import (
-        run_with_late_channel_to_parquet,
-    )
-
-    stream_dir, first, second = _two_file_replay_dir(spark, sf_dir, tmp_path)
+def test_late_leg_holds_every_row_spark_drops(spark, tmp_path):
+    """Three files, late-heavy: 100 rows, then two files of 60 rows
+    spread over the same five hours. A watermarked aggregation drops
+    the rows of batch N below the watermark in force during batch
+    N-1; the router routes batch N against max(ts through N-1) -
+    delay, one batch earlier. So every row Spark drops must be in the
+    late leg. The aggregation keys on (1-minute window, event_id) in
+    update mode, so each accepted row shows up in the output and the
+    dropped rows are the ones missing from it."""
+    rng = random.Random(7)
+    t0 = datetime(2024, 1, 1)
+    files = [[(1000 * f + i, t0 + timedelta(seconds=rng.randrange(5 * 3600)))
+              for i in range(n)] for f, n in enumerate((100, 60, 60))]
+    schema = "event_id long, ts timestamp"
+    stream_dir = tmp_path / "replay"
+    for f, rows in enumerate(files):
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
+            str(stream_dir / f"f{f}"))
+        # FileStreamSource drains oldest-mtime first — pin the order
+        for p in glob.glob(str(stream_dir / f"f{f}" / "*")):
+            os.utime(p, (1_000_000 + f * 1000, 1_000_000 + f * 1000))
 
     def raw():
-        return (
-            spark.readStream.schema(first.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(str(stream_dir))
-        )
+        return (spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", "1")
+                .parquet(str(stream_dir / "*")))
 
-    def compute(on_time):
-        return windowed_count(
-            on_time.where(F.col("event_type") == "click"),
-            "ts", ["user_id"], "1 hour", "1 hour",
-        )
+    agg = (raw().withWatermark("ts", f"{DELAY_S} seconds")
+           .groupBy(F.window("ts", "1 minute"), "event_id").count())
+    q = (agg.writeStream.format("memory").queryName("late_leg_wm_agg")
+         .outputMode("update").trigger(availableNow=True).start())
+    q.awaitTermination()
+    n_dropped = sum(op.numRowsDroppedByWatermark
+                    for p in q.recentProgress for op in p.stateOperators)
+    accepted = {r.event_id
+                for r in spark.table("late_leg_wm_agg").collect()}
+    dropped = {i for rows in files for i, _ in rows} - accepted
+    assert n_dropped > 0, "vacuous: the aggregation dropped no rows"
+    assert len(dropped) == n_dropped
 
     paths = run_with_late_channel_to_parquet(
-        raw(), DELAY_S, str(tmp_path / "sink"),
-        checkpoint_dir=str(tmp_path / "ckpt"))
-    legs = run_with_late_channel(raw(), DELAY_S, compute)
-
-    late_pq = spark.read.parquet(paths["late"])
-    on_time_pq = spark.read.parquet(paths["on_time"])
-    assert {r.event_id for r in late_pq.collect()} == {
-        r.event_id for r in legs["late"].collect()}
-    assert late_pq.count() > 0, "vacuous replay: no late rows"
-
-    key = lambda df: sorted(
-        (r.window_end_us, r.user_id, r.cnt) for r in df.collect()
-    )
-    assert key(compute(on_time_pq)) == key(legs["result"])
+        raw(), DELAY_S, str(tmp_path / "sink"))
+    late = {r.event_id for r in spark.read.parquet(paths["late"]).collect()}
+    assert dropped <= late
 
 
 def test_late_channel_parquet_sink_replay_is_idempotent(spark, sf_dir,
@@ -124,10 +149,6 @@ def test_late_channel_parquet_sink_replay_is_idempotent(spark, sf_dir,
     rows: each leg partitions by batch id and dynamically overwrites
     its own partitions, and the watermark is rebuilt from the sink, so
     after the rerun the two legs still hold the input exactly once."""
-    from flink_user_behavior_analysis_spark.streaming import (
-        run_with_late_channel_to_parquet,
-    )
-
     stream_dir, first, second = _two_file_replay_dir(spark, sf_dir, tmp_path)
 
     def raw():
@@ -204,19 +225,12 @@ def test_late_channel_empty_when_delay_covers_disorder(spark, sf_dir, tmp_path):
         F.max(F.unix_micros("ts")) - F.min(F.unix_micros("ts"))
     ).first()[0]
 
-    def compute(on_time):
-        return windowed_count(
-            on_time.where(F.col("event_type") == "click"),
-            "ts", ["user_id"], "1 hour", "1 hour",
-        )
-
-    legs = run_with_late_channel(raw, span_us / 1_000_000 + 1, compute)
-    assert legs["late"].count() == 0
-    want = compute(load_table(spark, sf_dir, "events"))
-    key = lambda df: sorted(
-        (r.window_end_us, r.user_id, r.cnt) for r in df.collect()
-    )
-    assert key(legs["result"]) == key(want)
+    paths = run_with_late_channel_to_parquet(
+        raw, span_us / 1_000_000 + 1, str(tmp_path / "sink"),
+        checkpoint_dir=str(tmp_path / "ckpt"))
+    assert spark.read.parquet(paths["late"]).count() == 0
+    want = _compute(load_table(spark, sf_dir, "events"))
+    assert _key(_compute(spark.read.parquet(paths["on_time"]))) == _key(want)
 
 
 def test_late_channel_replay_clears_emptied_leg(spark, tmp_path):
@@ -227,12 +241,6 @@ def test_late_channel_replay_clears_emptied_leg(spark, tmp_path):
     cannot do this (an empty output overwrites nothing); the sink
     writes each leg's partition directory directly so a replay fully
     supersedes both legs."""
-    from datetime import datetime, timedelta
-
-    from flink_user_behavior_analysis_spark.streaming import (
-        run_with_late_channel_to_parquet,
-    )
-
     t0 = datetime(2024, 1, 1)
     old = spark.createDataFrame(
         [(i, t0 + timedelta(minutes=i)) for i in range(5)],
@@ -281,10 +289,6 @@ def test_late_channel_parquet_sink_crash_mid_batch_recovery(
     effectively-once per batch, no duplicates, no stale
     half-written leg. (The commit log is not mutated in place:
     Spark 4's metadata-log cache flags that as concurrent use.)"""
-    from flink_user_behavior_analysis_spark.streaming import (
-        run_with_late_channel_to_parquet,
-    )
-
     stream_dir, first, second = _two_file_replay_dir(spark, sf_dir, tmp_path)
 
     def raw():
@@ -336,3 +340,16 @@ def test_late_channel_parquet_sink_crash_mid_batch_recovery(
         for leg, p in paths2.items()
     }
     assert got == snap
+
+
+def test_foreach_batch_only_in_the_runners():
+    """Each streaming delivery pattern has one runner: a second
+    ``foreachBatch`` loop (say, a driver-collect twin of a sink) fails
+    here until it is named."""
+    assert calls("foreachBatch") == [
+        ("operators/sketches.py", "cms_merge_stream"),
+        ("streaming/jobs.py", "run_ingest_foreach_batch"),
+        ("streaming/jobs.py", "run_probe_foreach_batch"),
+        ("streaming/jobs.py", "run_topn_to_parquet"),
+        ("streaming/jobs.py", "run_with_late_channel_to_parquet"),
+    ]

@@ -990,7 +990,9 @@ def test_dsir_stored_models_probe_equals_inline(spark, sf_dir):
     LMs (lm_store_model twice) and scores probe-only; the probe must
     reproduce dsir_weights' (doc_id, n_bigrams, logw) exactly —
     including docs whose bigrams the TARGET model never saw, where
-    the smoothed coalesce path carries the whole signal."""
+    the smoothed coalesce path carries the whole signal. The two are
+    different plans: two separately fitted, stored LMs against one
+    fused pass of conditional counts."""
     from pyspark.sql import functions as F
 
     from flink_user_behavior_analysis_spark.operators.text import (
@@ -1001,14 +1003,14 @@ def test_dsir_stored_models_probe_equals_inline(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    target = docs.where(F.col("source").isin("src0", "src1"))
+    in_target = F.col("source").isin("src0", "src1")
     tables = lm_store_model(docs, "t_dsir_raw")
-    tables += lm_store_model(target, "t_dsir_tgt")
+    tables += lm_store_model(docs.where(in_target), "t_dsir_tgt")
     try:
         probe = dsir_weights_from_models(
             lm_read_model(spark, "t_dsir_raw"),
             lm_read_model(spark, "t_dsir_tgt"), docs)
-        inline = dsir_weights(docs, target)
+        inline = dsir_weights(docs, in_target)
         assert (sorted(map(tuple, probe.collect()))
                 == sorted(map(tuple, inline.collect())))
     finally:

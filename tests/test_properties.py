@@ -745,8 +745,8 @@ def test_pii_scrub_matches_python_re(spark, frags):
     split=st.integers(min_value=0, max_value=100),
 )
 def test_semdedup_corpus_probe_is_split_invariant(spark, vecs, split):
-    """The streaming twin's load-bearing claim
-    (streaming/jobs.semdedup_probe_stream): with vs_delta=False the
+    """The micro-batch probe's load-bearing claim
+    (streaming/jobs.run_probe_foreach_batch): with vs_delta=False the
     probe verdict is per-row against the frozen corpus, so probing
     any 2-way split of a batch and unioning the results must equal
     probing the whole batch at once — for arbitrary vectors,

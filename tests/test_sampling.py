@@ -64,8 +64,7 @@ def test_gumbel_topk_is_weight_biased_and_seed_reproducible(spark, sf_dir):
     from flink_user_behavior_analysis_spark.queries_pipeline import _docs
 
     docs = _docs(spark, sf_dir)
-    target = docs.where(F.col("source").isin("src0", "src1"))
-    w = dsir_weights(docs, target).persist()
+    w = dsir_weights(docs, F.col("source").isin("src0", "src1")).persist()
     try:
         k = 40
         s1 = {r.doc_id for r in

@@ -20,7 +20,6 @@ from flink_user_behavior_analysis_spark.streaming import (
     reconcile_stateful,
     run_available_now,
     sessionize_stream,
-    run_topn_foreach_batch,
     stream_events,
     tx_interval_join_stream,
     unique_visitors_stream,
@@ -63,21 +62,6 @@ def test_marketing_by_channel_stream_equals_batch(spark, sf_dir):
     got = run_available_now(marketing_by_channel_stream(spark, sf_dir))
     want = Q.QUERIES["marketing_by_channel"](spark, sf_dir)
     _assert_same(got, want, ["window_end_us", "channel", "behavior", "cnt"])
-
-
-def test_streaming_topn_equals_batch_hot_items(spark, sf_dir):
-    counts = hot_items_counts_stream(spark, sf_dir)
-    got = run_topn_foreach_batch(
-        counts, 3,
-        order_cols=[F.col("cnt").desc(), F.col("item_id").asc()],
-    )
-    want = Q.QUERIES["hot_items"](spark, sf_dir)
-    _assert_same(
-        got.select("window_end_us", "item_id", "cnt",
-                   F.col("rnk").cast("long").alias("rnk")),
-        want,
-        ["window_end_us", "item_id", "cnt", "rnk"],
-    )
 
 
 def test_tx_interval_join_stream_equals_batch(spark, sf_dir):
@@ -816,8 +800,11 @@ def test_semdedup_probe_stream_equals_batch(spark, sf_dir, tmp_path):
         _embs,
         _semdedup_read_centroids_or_fit,
     )
+    from flink_user_behavior_analysis_spark.sources.readers import (
+        file_replay_stream,
+    )
     from flink_user_behavior_analysis_spark.streaming.jobs import (
-        semdedup_probe_stream,
+        run_probe_foreach_batch,
     )
 
     cents = _semdedup_read_centroids_or_fit(spark)
@@ -835,8 +822,10 @@ def test_semdedup_probe_stream_equals_batch(spark, sf_dir, tmp_path):
     stage = tmp_path / "probe_replay"
     delta.repartition(3).write.parquet(str(stage / "embeddings.parquet"))
 
-    streamed = semdedup_probe_stream(spark, str(stage), prefix,
-                                     cents, SEMDEDUP_EPS)
+    streamed = run_probe_foreach_batch(
+        file_replay_stream(spark, str(stage), "embeddings"),
+        lambda batch: semdedup_probe(spark, prefix, batch, cents,
+                                     SEMDEDUP_EPS, vs_delta=False))
     batch = semdedup_probe(spark, prefix, delta, cents, SEMDEDUP_EPS,
                            vs_delta=False)
     cols = ["vec_id", "status", "n_corpus_matches"]
@@ -859,23 +848,32 @@ def test_dsir_score_stream_equals_inline_weights(spark, sf_dir, tmp_path):
 
     from flink_user_behavior_analysis_spark.operators.text import (
         dsir_weights,
+        dsir_weights_from_models,
+        lm_read_model,
         lm_store_model,
     )
+    from flink_user_behavior_analysis_spark.sources.readers import (
+        file_replay_stream,
+    )
     from flink_user_behavior_analysis_spark.streaming.jobs import (
-        dsir_score_stream,
+        run_probe_foreach_batch,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    target = docs.where(F.col("source").isin("src0", "src1"))
+    in_target = F.col("source").isin("src0", "src1")
     pr, pt = "t_dsir_str_raw", "t_dsir_str_tgt"
-    tables = lm_store_model(docs, pr) + lm_store_model(target, pt)
+    tables = (lm_store_model(docs, pr)
+              + lm_store_model(docs.where(in_target), pt))
 
     # 3-file replay dir -> 3 micro-batches
     stage = tmp_path / "dsir_replay"
     docs.repartition(3).write.parquet(str(stage / "documents.parquet"))
     try:
-        streamed = dsir_score_stream(spark, str(stage), pr, pt)
-        inline = dsir_weights(docs, target)
+        model_r, model_t = lm_read_model(spark, pr), lm_read_model(spark, pt)
+        streamed = run_probe_foreach_batch(
+            file_replay_stream(spark, str(stage), "documents"),
+            lambda batch: dsir_weights_from_models(model_r, model_t, batch))
+        inline = dsir_weights(docs, in_target)
         cols = ["doc_id", "n_bigrams", "logw"]
         assert sorted(map(tuple, streamed.select(*cols).collect())) == \
             sorted(map(tuple, inline.select(*cols).collect()))
@@ -896,8 +894,11 @@ def test_ann_filtered_probe_stream_equals_batch(spark, sf_dir, tmp_path):
         ivfpq_topk_filtered_from_index,
     )
     from flink_user_behavior_analysis_spark.queries_pipeline import _embs
+    from flink_user_behavior_analysis_spark.sources.readers import (
+        file_replay_stream,
+    )
     from flink_user_behavior_analysis_spark.streaming.jobs import (
-        ann_filtered_probe_stream,
+        run_probe_foreach_batch,
     )
 
     embs = _embs(spark, sf_dir)
@@ -915,8 +916,10 @@ def test_ann_filtered_probe_stream_equals_batch(spark, sf_dir, tmp_path):
     queries.repartition(3).write.parquet(str(stage / "embeddings.parquet"))
 
     pred = F.col("label") == label
-    streamed = ann_filtered_probe_stream(spark, str(stage), prefix,
-                                         pred, k=3, nprobe=4)
+    streamed = run_probe_foreach_batch(
+        file_replay_stream(spark, str(stage), "embeddings"),
+        lambda batch: ivfpq_topk_filtered_from_index(
+            spark, prefix, batch, 3, pred, nprobe=4))
     batch = ivfpq_topk_filtered_from_index(spark, prefix, queries, 3,
                                            pred, nprobe=4)
     assert sorted(map(tuple, streamed.collect())) == \
@@ -940,13 +943,16 @@ def test_pii_scrub_stream_equals_batch(spark, sf_dir):
         pii_scrub,
     )
     from flink_user_behavior_analysis_spark.queries_pipeline import _docs
+    from flink_user_behavior_analysis_spark.sources.readers import (
+        file_replay_stream,
+    )
     from flink_user_behavior_analysis_spark.streaming.jobs import (
-        pii_scrub_stream,
         run_available_now,
     )
 
-    streamed = run_available_now(pii_scrub_stream(spark, sf_dir),
-                                 output_mode="append")
+    streamed = run_available_now(
+        pii_scrub(file_replay_stream(spark, sf_dir, "documents")),
+        output_mode="append")
     batch = pii_scrub(_docs(spark, sf_dir))
     cols = ["doc_id", "n_email", "n_phone", "n_ip", "scrubbed"]
     assert _rows(streamed, cols) == _rows(batch, cols)
@@ -1139,14 +1145,18 @@ def test_snapshot_diff_stream_equals_batch_added_changed(spark, sf_dir):
     equal the batch diff's added+changed rows exactly (removed is
     batch-only by design — absence needs the complete snapshot)."""
     from flink_user_behavior_analysis_spark.operators.versioning import (
+        snapshot_probe_from_store,
         snapshot_store_fps,
     )
     from flink_user_behavior_analysis_spark.queries_pipeline import (
         q_snapshot_diff,
     )
     from flink_user_behavior_analysis_spark.sources import load_table
+    from flink_user_behavior_analysis_spark.sources.readers import (
+        file_replay_stream,
+    )
     from flink_user_behavior_analysis_spark.streaming.jobs import (
-        snapshot_diff_stream,
+        run_probe_foreach_batch,
     )
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1166,9 +1176,10 @@ def test_snapshot_diff_stream_equals_batch_added_changed(spark, sf_dir):
             "source",
         )
 
-    got = snapshot_diff_stream(spark, sf_dir, prefix,
-                               ["doc_id"], ["text", "source"],
-                               transform=to_candidate)
+    got = run_probe_foreach_batch(
+        to_candidate(file_replay_stream(spark, sf_dir, "documents")),
+        lambda batch: snapshot_probe_from_store(
+            spark, prefix, batch, ["doc_id"], ["text", "source"]))
     want = q_snapshot_diff(spark, sf_dir).where(
         F.col("status") != "removed")
     cols = ["doc_id", "status", "old_fp", "new_fp"]
