@@ -38,7 +38,7 @@ def main(argv: list[str] | None = None) -> int:
                          "mains are streaming jobs; this is their analogue)")
     args = ap.parse_args(argv)
 
-    from .streaming import STREAMING_QUERIES
+    from .streaming import STREAMING_QUERIES, run_available_now
 
     if args.list:
         print("testdata queries:")
@@ -60,9 +60,8 @@ def main(argv: list[str] | None = None) -> int:
             ap.error(
                 f"--stream requires one of: {', '.join(sorted(STREAMING_QUERIES))}"
             )
-        from .streaming import run_available_now
-
-        df = run_available_now(STREAMING_QUERIES[args.query](eng.spark, args.sf_dir))
+        twin = STREAMING_QUERIES[args.query]
+        df = run_available_now(twin.build(eng.spark, args.sf_dir), twin.mode)
     elif args.reference:
         if not args.query:
             ap.error("--reference requires a query name")
@@ -73,12 +72,16 @@ def main(argv: list[str] | None = None) -> int:
         ap.error("pass a query name, --sql, or --list")
         return 2
 
-    if args.json:
-        for row in df.limit(args.limit).toJSON().collect():
-            print(row)
-    else:
-        df.show(args.limit, truncate=False)
-    print(f"# rows: {df.count()}", file=sys.stderr)
+    # one action: limit + 1 rows tell whether the result has more
+    top = df.limit(args.limit + 1)
+    rows = (top.toJSON() if args.json else top).collect()
+    if not args.json:
+        print("\t".join(df.columns))
+    for row in rows[:args.limit]:
+        print(row if args.json else "\t".join(
+            "NULL" if v is None else str(v) for v in row))
+    n = len(rows) if len(rows) <= args.limit else f"more than {args.limit}"
+    print(f"# rows: {n}", file=sys.stderr)
     return 0
 
 

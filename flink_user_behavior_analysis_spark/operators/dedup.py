@@ -157,14 +157,18 @@ def release_signature_cache(session: SparkSession | None = None) -> int:
     return _drop_cache_entry(id(session))
 
 
-def normalized_text(col: str = "text") -> Column:
-    """Lowercase, strip non-alphanumerics, collapse whitespace.
+def lower_text(c: Column) -> Column:
+    """``lower`` as the DuckDB oracles lowercase: U+0130 (dotted
+    capital I) is mapped to ``i`` first, where the JVM's full case
+    mapping gives ``i`` plus a combining dot (a word break after the
+    alphanumeric strip, an extra regex token, a missed stop word)."""
+    return F.lower(F.translate(c, "\u0130", "i"))
 
-    U+0130 (dotted capital I) is mapped to ``i`` first: the JVM's full
-    case mapping lowercases it to ``i`` plus a combining dot, which
-    the strip turns into a space, splitting the word in two, where
-    DuckDB's ``lower`` (the oracles' normalization) gives ``i``."""
-    c = F.lower(F.translate(F.col(col), "\u0130", "i"))
+
+def normalized_text(col: str = "text") -> Column:
+    """Lowercase (``lower_text``), strip non-alphanumerics, collapse
+    whitespace."""
+    c = lower_text(F.col(col))
     c = F.regexp_replace(c, "[^a-z0-9 ]", " ")
     c = F.regexp_replace(c, " +", " ")
     return F.trim(c)

@@ -47,6 +47,22 @@ def sessionize(
     )
 
 
+def session_aggregate(
+    df: DataFrame,
+    key_cols: Sequence[str],
+    ts_col: str,
+    gap_seconds: float,
+) -> DataFrame:
+    """(w, keys..., session_start_us, session_end_us, n_events) per
+    ``session_window`` and key; streams as it stands."""
+    win = F.session_window(F.col(ts_col), f"{gap_seconds} seconds")
+    return df.groupBy(win.alias("w"), *key_cols).agg(
+        F.min(F.unix_micros(F.col(ts_col))).alias("session_start_us"),
+        F.max(F.unix_micros(F.col(ts_col))).alias("session_end_us"),
+        F.count(F.lit(1)).alias("n_events"),
+    )
+
+
 def sessionize_native(
     df: DataFrame,
     key_cols: Sequence[str],
@@ -54,10 +70,11 @@ def sessionize_native(
     gap_seconds: float,
 ) -> DataFrame:
     """Same output as ``sessionize`` via Spark's built-in
-    ``session_window`` — the idiomatic engine path, and the ONLY form
-    that also runs under Structured Streaming (state-store-backed
-    session merging with watermark eviction; the lag+cumsum form needs
-    a full sort per key and cannot stream).
+    ``session_window`` — the idiomatic engine path. Its
+    ``session_aggregate`` stage is the one form that also runs under
+    Structured Streaming (state-store-backed session merging with
+    watermark eviction; the lag+cumsum form needs a full sort per key
+    and cannot stream, nor can the per-key numbering here).
 
     Boundary note: session_window closes a session when the next event
     is >= gap after the previous (window end = last_ts + gap,
@@ -71,16 +88,8 @@ def sessionize_native(
     session_id reproduces the cumsum numbering: the 0-based index of
     the session within its key, ordered by session start.
     """
-    from pyspark.sql import Window
-
-    win = F.session_window(F.col(ts_col), f"{gap_seconds} seconds")
-    per_session = df.groupBy(win.alias("w"), *key_cols).agg(
-        F.min(F.unix_micros(F.col(ts_col))).alias("session_start_us"),
-        F.max(F.unix_micros(F.col(ts_col))).alias("session_end_us"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
     order = Window.partitionBy(*key_cols).orderBy("session_start_us")
-    return per_session.select(
+    return session_aggregate(df, key_cols, ts_col, gap_seconds).select(
         *key_cols,
         (F.row_number().over(order) - 1).cast("long").alias("session_id"),
         "session_start_us", "session_end_us", "n_events",

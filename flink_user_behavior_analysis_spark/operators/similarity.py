@@ -2842,7 +2842,8 @@ def semdedup_batch_stats(assigned: DataFrame) -> DataFrame:
     commutative, so it is ALSO the streaming state of the drift
     monitor: accumulating these per micro-batch and summing drains
     to exactly the batch aggregation whatever the batch split
-    (stream twin: streaming/jobs.semdedup_drift_stream)."""
+    (applied to semdedup_assign over the embeddings replay in
+    tests/test_streaming.py)."""
     micro = F.round(F.col("cent_sim") * 1e6).cast("long")
     return assigned.groupBy("cell").agg(
         F.count(F.lit(1)).cast("long").alias("n_batch"),

@@ -17,7 +17,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .arrow_kernel import map_arrow, md5_60, token_starts
-from .dedup import normalized_text
+from .dedup import lower_text, normalized_text
 
 # BPE-ish word/number/symbol tokenizer (shared with the DuckDB oracle)
 TOKEN_RE = "[a-z]+|[0-9]+|[^a-z0-9\\s]"
@@ -34,7 +34,7 @@ LANG_STOPWORDS: dict[str, list[str]] = {
 def token_counts(text_col: str = "text") -> dict[str, Column]:
     """Whitespace tokens + BPE-ish regex tokens."""
     norm = normalized_text(text_col)
-    lower = F.lower(F.col(text_col))
+    lower = lower_text(F.col(text_col))
     return {
         "n_tokens_ws": F.size(F.split(norm, " ")).cast("long"),
         "n_tokens_re": F.size(F.regexp_extract_all(lower, F.lit(TOKEN_RE), 0)
@@ -1302,7 +1302,7 @@ def gopher_rules(docs: DataFrame, min_words: int = 50,
         F.size(F.filter(raw_words, lambda w: w.rlike("[a-zA-Z]")))
         .cast("double") / n_den
     )
-    lower_words = F.transform(raw_words, F.lower)
+    lower_words = F.transform(raw_words, lower_text)
     stop_hits = sum(
         (F.array_contains(lower_words, s).cast("long")
          for s in GOPHER_STOPWORDS),

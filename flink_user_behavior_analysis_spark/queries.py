@@ -79,9 +79,13 @@ def _duck_tumbling_end(size_us: int, ts: str = "ts") -> str:
 # reference: HotItem.java:70-80 (agg 94-114, rank 134-192)
 # =====================================================================
 
-def hot_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = with_item(_events(spark, sf_dir).where(F.col("event_type") == "view"))
-    counts = windowed_count(ev, "ts", ["item_id"], "1 hour", "15 minutes")
+def hot_item_counts(events: DataFrame) -> DataFrame:
+    """Per-item view counts per window (HotItem.java:70-75)."""
+    ev = with_item(events.where(F.col("event_type") == "view"))
+    return windowed_count(ev, "ts", ["item_id"], "1 hour", "15 minutes")
+
+
+def hot_items_top(counts: DataFrame) -> DataFrame:
     ranked = top_n_per_window(
         counts,
         3,
@@ -91,6 +95,10 @@ def hot_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranked.select(
         "window_end_us", "item_id", "cnt", F.col("rnk").cast("long").alias("rnk")
     )
+
+
+def hot_items(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return hot_items_top(hot_item_counts(_events(spark, sf_dir)))
 
 
 HOT_ITEMS_SQL = f"""
@@ -155,9 +163,13 @@ FROM ranked WHERE rnk <= 5
 # one Spark aggregate; partial agg handles the hot constant key)
 # =====================================================================
 
-def page_views(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir).where(F.col("event_type") == "click")
+def page_view_counts(events: DataFrame) -> DataFrame:
+    ev = events.where(F.col("event_type") == "click")
     return windowed_global_count(ev, "ts", "1 hour", count_alias="pv")
+
+
+def page_views(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return page_view_counts(_events(spark, sf_dir))
 
 
 PAGE_VIEWS_SQL = f"""
@@ -218,12 +230,16 @@ FROM events GROUP BY 1
 # reference: AppMarketingByChannel.java:47-51 + UNINSTALL filter :48
 # =====================================================================
 
-def marketing_by_channel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir).where(F.col("event_type") != "error")
+def channel_behavior_counts(events: DataFrame) -> DataFrame:
+    ev = events.where(F.col("event_type") != "error")
     ev = ev.withColumn(
         "channel", F.concat(F.lit("ch"), (F.col("user_id") % 4).cast("string"))
     ).withColumnRenamed("event_type", "behavior")
     return windowed_count(ev, "ts", ["channel", "behavior"], "1 hour", "20 minutes")
+
+
+def marketing_by_channel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return channel_behavior_counts(_events(spark, sf_dir))
 
 
 MARKETING_BY_CHANNEL_SQL = f"""
@@ -311,8 +327,11 @@ def _login_fail(spark: SparkSession, sf_dir: str, n: int, span_s: int) -> DataFr
     ).select("user_id", "first_fail_us", "last_fail_us")
 
 
+LOGIN_FAIL_N, LOGIN_FAIL_SPAN_S = 2, 6 * 3600
+
+
 def login_fail(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _login_fail(spark, sf_dir, n=2, span_s=6 * 3600)
+    return _login_fail(spark, sf_dir, n=LOGIN_FAIL_N, span_s=LOGIN_FAIL_SPAN_S)
 
 
 def login_fail_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -471,8 +490,8 @@ FROM per_key
 IJ_LO_S, IJ_HI_S = -12 * 3600, 12 * 3600
 
 
-def _pays_receipts(spark: SparkSession, sf_dir: str):
-    ev = with_item(_events(spark, sf_dir))
+def pays_receipts(ev: DataFrame):
+    """(pays, receipts) of an events frame that carries ``item_id``."""
     pays = ev.where(F.col("event_type") == "purchase").select(
         "user_id", "item_id", F.col("ts").alias("pay_ts"),
         F.col("event_id").alias("pay_id"),
@@ -484,18 +503,22 @@ def _pays_receipts(spark: SparkSession, sf_dir: str):
     return pays, receipts
 
 
-def tx_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pays, receipts = _pays_receipts(spark, sf_dir)
-    joined = interval_join(
-        pays, receipts, ["user_id", "item_id"],
-        "pay_ts", "receipt_ts", IJ_LO_S, IJ_HI_S,
-    )
+def tx_pairs(joined: DataFrame) -> DataFrame:
+    """Output rows of a pays ``left`` x receipts ``right`` join."""
     return joined.select(
         F.col("left.user_id").alias("user_id"),
         F.col("left.item_id").alias("item_id"),
         F.unix_micros("left.pay_ts").alias("pay_us"),
         F.unix_micros("right.receipt_ts").alias("receipt_us"),
     )
+
+
+def tx_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    pays, receipts = pays_receipts(with_item(_events(spark, sf_dir)))
+    return tx_pairs(interval_join(
+        pays, receipts, ["user_id", "item_id"],
+        "pay_ts", "receipt_ts", IJ_LO_S, IJ_HI_S,
+    ))
 
 
 TX_INTERVAL_JOIN_SQL = f"""
@@ -519,18 +542,13 @@ WHERE p.event_type = 'purchase' AND r.event_type = 'click'
 # =====================================================================
 
 def tx_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pays, receipts = _pays_receipts(spark, sf_dir)
+    pays, receipts = pays_receipts(with_item(_events(spark, sf_dir)))
     legs = reconcile(
         pays, receipts, ["user_id", "item_id"],
         "pay_ts", "receipt_ts", IJ_LO_S, IJ_HI_S,
     )
-    matched = legs["matched"].select(
-        F.lit("matched").alias("kind"),
-        F.col("left.user_id").alias("user_id"),
-        F.col("left.item_id").alias("item_id"),
-        F.unix_micros("left.pay_ts").alias("pay_us"),
-        F.unix_micros("right.receipt_ts").alias("receipt_us"),
-    )
+    matched = tx_pairs(legs["matched"]).select(
+        F.lit("matched").alias("kind"), "*")
     up = legs["unmatched_left"].select(
         F.lit("unmatched_pay").alias("kind"),
         "user_id", "item_id",
@@ -2562,16 +2580,22 @@ def props_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     values per event type by count, ties by k asc. The JSON parse is
     a pure scan projection; the rollup is one (type, k) shuffle and
     a WindowGroupLimit rank."""
-    from pyspark.sql import Window
+    return props_top5(props_k_counts(_events(spark, sf_dir)))
 
-    ev = _events(spark, sf_dir)
+
+def props_k_counts(events: DataFrame) -> DataFrame:
     k_val = F.get_json_object(F.col("props"), "$.k").cast("long")
-    counted = (
-        ev.select(F.col("event_type"), k_val.alias("k"))
+    return (
+        events.select(F.col("event_type"), k_val.alias("k"))
         .where(F.col("k").isNotNull())
         .groupBy("event_type", "k")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
+
+
+def props_top5(counted: DataFrame) -> DataFrame:
+    from pyspark.sql import Window
+
     w = Window.partitionBy("event_type").orderBy(
         F.col("n").desc(), F.col("k").asc())
     return (
@@ -2698,7 +2722,7 @@ ORACLES: dict[str, str] = {
     "marketing_by_channel": MARKETING_BY_CHANNEL_SQL,
     "marketing_total": MARKETING_TOTAL_SQL,
     "ad_stats_by_province": AD_STATS_SQL,
-    "login_fail": _login_fail_sql(2, 6 * 3600),
+    "login_fail": _login_fail_sql(LOGIN_FAIL_N, LOGIN_FAIL_SPAN_S),
     "login_fail_cep": _login_fail_sql(3, 12 * 3600),
     "login_fail_fb": LOGIN_FAIL_FB_SQL,
     "view_then_purchase": VIEW_THEN_PURCHASE_SQL,

@@ -31,7 +31,7 @@ from .operators import (
     simhash_pairs,
     text_stats,
 )
-from .operators.text import LANG_STOPWORDS, TOKEN_RE
+from .operators.text import LANG_STOPWORDS, TOKEN_RE, quality_score_col
 from .session import ensure_utc
 from .sources import load_table
 
@@ -413,9 +413,8 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_pairs(_docs(spark, sf_dir), SIMHASH_MAX_HAMMING)
 
 
-def _simhash_sql() -> str:
-    bits = 60
-    chunk_w = bits // 4
+def _simhash_ctes(bits: int = 60) -> str:
+    """CTEs up to ``sims``: simhash_signatures' DuckDB form."""
     bit_sums = ",\n           ".join(
         f"sum(CASE WHEN (h >> {j}) & 1 = 1 THEN cnt ELSE -cnt END) AS s{j}"
         for j in range(bits)
@@ -424,14 +423,7 @@ def _simhash_sql() -> str:
         f"CASE WHEN s{j} > 0 THEN (1::BIGINT << {j}) ELSE 0 END"
         for j in range(bits)
     )
-    chunk_selects = "\n    UNION ALL\n".join(
-        f"    SELECT doc_id, simhash, {ci} AS chunk, "
-        f"(simhash >> {ci * chunk_w}) & {(1 << chunk_w) - 1} AS chunk_val "
-        f"FROM sims"
-        for ci in range(4)
-    )
-    return f"""
-WITH {_D_BASE},
+    return f"""{_D_BASE},
 words AS (SELECT doc_id, unnest(w) AS word FROM tok),
 wcnt AS (
     SELECT doc_id, word, COUNT(*) AS cnt,
@@ -443,7 +435,20 @@ wcnt AS (
     FROM wcnt GROUP BY doc_id
 ), sims AS (
     SELECT doc_id, {sim_terms} AS simhash FROM sums
-), chunks AS (
+)"""
+
+
+def _simhash_sql() -> str:
+    bits = 60
+    chunk_w = bits // 4
+    chunk_selects = "\n    UNION ALL\n".join(
+        f"    SELECT doc_id, simhash, {ci} AS chunk, "
+        f"(simhash >> {ci * chunk_w}) & {(1 << chunk_w) - 1} AS chunk_val "
+        f"FROM sims"
+        for ci in range(4)
+    )
+    return f"""
+WITH {_simhash_ctes(bits)}, chunks AS (
 {chunk_selects}
 ), cands AS (
     SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
@@ -2019,6 +2024,11 @@ FROM pieces GROUP BY 1, 2
 CURATION_QMIN = 0.6
 
 
+def curation_head(docs: DataFrame) -> DataFrame:
+    """Quality filter -> exact dedup, the curation pipeline's head."""
+    return exact_dedup(docs.where(quality_score_col("text") >= CURATION_QMIN))
+
+
 def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END curation: the composed pipeline a pre-training run
     actually executes, each stage one of this repo's operators —
@@ -2057,8 +2067,6 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     train = docs.where(~is_eval)
     # quality is a pure per-row projection, so the filter inlines as a
     # scan predicate — no join, no shuffle
-    from .operators.text import quality_score_col
-
     d1 = train.where(quality_score_col("text") >= CURATION_QMIN)
     # overlap (r14, guide §2.6): the contamination gram table depends
     # only on the EVAL split, not on d1/d2/d3 — materialize it on a

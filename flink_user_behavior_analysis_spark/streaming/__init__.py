@@ -1,21 +1,14 @@
 from .jobs import (
     STREAMING_QUERIES,
-    curation_stream,
-    exact_dedup_stream,
+    Twin,
     funnel_step_events_stream,
     hot_items_counts_stream,
-    marketing_by_channel_stream,
-    page_views_stream,
-    props_counts_stream,
     run_available_now,
     run_topn_to_parquet,
     run_with_late_channel_to_parquet,
-    sessionize_stream,
     stream_events,
     tx_interval_join_stream,
     unique_visitors_stream,
-    user_day_stream,
-    user_week_stream,
 )
 from .stateful import (
     cap_filter_stateful,
@@ -27,24 +20,17 @@ from .stateful import (
 
 __all__ = [
     "STREAMING_QUERIES",
-    "curation_stream",
-    "exact_dedup_stream",
+    "Twin",
     "funnel_step_events_stream",
-    "props_counts_stream",
-    "user_day_stream",
-    "user_week_stream",
     "cap_filter_stateful",
     "consecutive_fail_stateful",
     "asof_stateful",
     "reconcile_stateful",
     "hot_items_counts_stream",
-    "marketing_by_channel_stream",
     "order_timeout_stateful",
-    "page_views_stream",
     "run_available_now",
     "run_topn_to_parquet",
     "run_with_late_channel_to_parquet",
-    "sessionize_stream",
     "stream_events",
     "tx_interval_join_stream",
     "unique_visitors_stream",

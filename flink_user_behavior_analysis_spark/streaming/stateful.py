@@ -72,10 +72,12 @@ reference's assumption that watermarked input is effectively ordered
 helpers; executors import this package from the PYTHONPATH that
 session.get_spark sets.
 
-Batch equivalence: each operator's batch twin lives in
-operators/patterns.py / operators/blacklist.py / operators/joins.py /
-operators/asof.py; tests assert equal output on bounded replays
-(tests/test_streaming.py).
+Batch equivalence: each operator is an entry of
+``streaming.jobs.STREAMING_QUERIES``, bound there to its batch twin in
+queries.py (operators/patterns.py / blacklist.py / joins.py / asof.py)
+with that twin's parameters and a comparison rule;
+tests/test_streaming_split.py drains every entry over multi-file
+replays and asserts the rule.
 """
 
 from __future__ import annotations

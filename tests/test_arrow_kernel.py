@@ -10,8 +10,12 @@
   the shared local top-k block and the shared global rank, equals
   brute_force_topk row for row on generated integer embeddings, where
   tied cosines are common.
-- winnow_fingerprints equals its DuckDB form on hypothesis-drawn
-  documents: NULL, empty, one-token and non-ASCII text.
+- winnow_fingerprints, simhash_signatures, doc_fingerprints and
+  duplicated_spans (the ``_span_instances`` kernel) equal their DuckDB
+  forms on hypothesis-drawn documents: NULL, empty, one-token and
+  non-ASCII text. So do text_stats and gopher_rules, which lowercase
+  with the JVM: U+0130 (dotted capital I) is where the two engines'
+  case mappings part.
 - Exact duplicate centroids: coarse routing and PQ encoding assign
   to the lowest index, as the SQL forms' ``row_number`` does, though a
   BLAS product scores the copies differently.
@@ -29,11 +33,34 @@ from hypothesis import strategies as st
 from flink_user_behavior_analysis_spark.operators.arrow_kernel import (
     list_matrix,
 )
+from flink_user_behavior_analysis_spark.operators.chunking import (
+    duplicated_spans,
+)
+from flink_user_behavior_analysis_spark.operators.dedup import (
+    simhash_signatures,
+)
 from flink_user_behavior_analysis_spark.operators.similarity import (
     _pq_codes,
     _route,
     brute_force_topk,
     brute_force_topk_arrow,
+)
+from flink_user_behavior_analysis_spark.operators.text import (
+    doc_fingerprints,
+    gopher_rules,
+    text_stats,
+    winnow_fingerprints,
+)
+from flink_user_behavior_analysis_spark.queries_pipeline import (
+    SPAN_TOKENS,
+    TEXT_STATS_SQL,
+    WINNOW_K,
+    WINNOW_W,
+    _duplicated_spans_sql,
+    _fingerprint_sql,
+    _gopher_sql,
+    _simhash_ctes,
+    _winnow_sql,
 )
 
 from .package_ast import calls
@@ -135,6 +162,38 @@ _DOC = st.one_of(st.none(), st.just(""),
                  st.text(max_size=30))
 
 
+def _duckdb_rows(texts, sql):
+    """(columns, rows) of ``sql`` over a ``documents`` view of ``texts``
+    (doc_id = position)."""
+    import duckdb
+
+    con = duckdb.connect()
+    try:
+        con.register("documents", pa.table({
+            "doc_id": pa.array(range(len(texts)), pa.int64()),
+            "text": pa.array(texts, pa.string())}))
+        cur = con.execute(sql)
+        return [d[0] for d in cur.description], cur.fetchall()
+    finally:
+        con.close()
+
+
+def _docs(spark, texts):
+    return spark.createDataFrame(list(enumerate(texts)),
+                                 "doc_id long, text string")
+
+
+def _assert_equals_duckdb(df, texts, sql):
+    """Same column set and the same rows, compared by column name."""
+    cols, rows = _duckdb_rows(texts, sql)
+    assert sorted(df.columns) == sorted(cols)
+    key = sorted(cols)
+    want = sorted((tuple(dict(zip(cols, r))[c] for c in key) for r in rows),
+                  key=repr)
+    got = sorted((tuple(r[c] for c in key) for r in df.collect()), key=repr)
+    assert got == want
+
+
 @settings(max_examples=25, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(texts=st.lists(_DOC, min_size=1, max_size=6))
@@ -147,32 +206,65 @@ def test_winnow_fingerprints_equals_duckdb_form(spark, texts):
     """The winnowing kernel equals its DuckDB form (the registered
     query's oracle) on NULL, empty, one-token, repetitive and
     non-ASCII documents, and emits nothing for a NULL document."""
-    import duckdb
-
-    from flink_user_behavior_analysis_spark.operators.text import (
-        winnow_fingerprints,
-    )
-    from flink_user_behavior_analysis_spark.queries_pipeline import (
-        WINNOW_K,
-        WINNOW_W,
-        _winnow_sql,
-    )
-
-    docs = spark.createDataFrame(list(enumerate(texts)),
-                                 "doc_id long, text string")
-    got = sorted(map(tuple, winnow_fingerprints(
-        docs, k=WINNOW_K, w=WINNOW_W).collect()))
-    con = duckdb.connect()
-    try:
-        con.register("documents", pa.table({
-            "doc_id": pa.array(range(len(texts)), pa.int64()),
-            "text": pa.array(texts, pa.string())}))
-        want = sorted(con.execute(_winnow_sql()).fetchall())
-    finally:
-        con.close()
-    assert got == want
+    got = winnow_fingerprints(_docs(spark, texts), k=WINNOW_K, w=WINNOW_W)
+    _assert_equals_duckdb(got, texts, _winnow_sql())
     null_docs = {i for i, t in enumerate(texts) if t is None}
-    assert not null_docs & {doc_id for doc_id, _, _ in got}
+    assert not null_docs & {r.doc_id for r in got.collect()}
+
+
+@settings(max_examples=15, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(texts=st.lists(_DOC, min_size=1, max_size=6))
+@example(texts=[None, "", "one", "\u0130x", "W\u0130TH the x\u0130y",
+                "\u212a \u00df \U0001f600 -- caf\u00e9"])
+def test_simhash_and_fingerprints_equal_duckdb_form(spark, texts):
+    """simhash_signatures and doc_fingerprints (Arrow kernels) equal
+    their DuckDB forms; a NULL document has SimHash 0 (the runner's
+    edge policy) and no row on the DuckDB side, whose word explode
+    drops it."""
+    docs = _docs(spark, texts)
+    _assert_equals_duckdb(doc_fingerprints(docs), texts, _fingerprint_sql())
+    sims = {r.doc_id: r.simhash for r in simhash_signatures(docs).collect()}
+    _, rows = _duckdb_rows(
+        texts, f"WITH {_simhash_ctes()} SELECT doc_id, simhash FROM sims")
+    assert {i: h for i, h in sims.items() if texts[i] is not None} == \
+        dict(rows)
+    assert all(sims[i] == 0 for i, t in enumerate(texts) if t is None)
+
+
+@settings(max_examples=15, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(texts=st.lists(_DOC, min_size=1, max_size=6))
+@example(texts=[None, "", "one", "\u0130x \u0130X", "W\u0130TH the",
+                "with the be to of and that have", "x\u0130y \U0001f600"])
+def test_text_stats_and_gopher_equal_duckdb_form(spark, texts):
+    """text_stats and gopher_rules lowercase as their DuckDB forms do:
+    "\u0130x" is one regex token and "W\u0130TH" is the stop word
+    "with"."""
+    docs = _docs(spark, texts)
+    _assert_equals_duckdb(text_stats(docs), texts, TEXT_STATS_SQL)
+    _assert_equals_duckdb(gopher_rules(docs, min_stop_hits=1), texts,
+                          _gopher_sql())
+
+
+_SPAN_WORDS = st.sampled_from(["a", "b", "\u0130x", "x\u0130y", "\u00e9",
+                               "--", "c1"])
+
+
+@settings(max_examples=15, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(texts=st.lists(
+    st.one_of(st.none(), st.just(""),
+              st.lists(_SPAN_WORDS, min_size=10, max_size=40).map(" ".join)),
+    min_size=1, max_size=5))
+@example(texts=[None, "", "one", " ".join(["a", "b"] * 12),
+                " ".join(["\u0130x"] * 20), " ".join(["ix"] * 20)])
+def test_duplicated_spans_equal_duckdb_form(spark, texts):
+    """duplicated_spans, whose span fingerprints come from the
+    ``_span_instances`` kernel, equals its DuckDB form on NULL, empty,
+    short, repetitive and non-ASCII documents."""
+    _assert_equals_duckdb(duplicated_spans(_docs(spark, texts), SPAN_TOKENS),
+                          texts, _duplicated_spans_sql())
 
 
 def test_duplicate_centroids_assign_to_the_lowest_index():

@@ -34,8 +34,19 @@ def test_cli_list_and_run(spark, sf_dir, capsys):
     out = capsys.readouterr().out
     assert "hot_items" in out and "ref_hot_pages" in out
     assert cli_main(["page_views", "--sf-dir", sf_dir, "--limit", "3"]) == 0
-    assert "window_end_us" in capsys.readouterr().out
+    out = capsys.readouterr()
+    assert "window_end_us" in out.out
+    assert "# rows: more than 3" in out.err
     assert cli_main(
         ["--sql", "SELECT count(*) AS n FROM events", "--sf-dir", sf_dir, "--json"]
     ) == 0
-    assert '"n"' in capsys.readouterr().out
+    out = capsys.readouterr()
+    assert '"n"' in out.out and "# rows: 1" in out.err
+
+
+def test_cli_stream_drains_an_append_only_twin(spark, sf_dir, capsys):
+    """--stream drains a twin in its table's output mode: an append-only
+    twin (a stream-stream join) fails in complete mode."""
+    assert cli_main(["tx_interval_join", "--stream", "--sf-dir", sf_dir]) == 0
+    out = capsys.readouterr()
+    assert "pay_us" in out.out and "# rows: 0" in out.err

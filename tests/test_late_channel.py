@@ -19,10 +19,14 @@ import random
 import shutil
 from datetime import datetime, timedelta
 
+import pytest
 from pyspark.sql import functions as F
 
 from flink_user_behavior_analysis_spark.operators import windowed_count
-from flink_user_behavior_analysis_spark.sources import load_table
+from flink_user_behavior_analysis_spark.sources import (
+    file_replay_stream,
+    load_table,
+)
 from flink_user_behavior_analysis_spark.streaming import (
     run_with_late_channel_to_parquet,
 )
@@ -231,6 +235,30 @@ def test_late_channel_empty_when_delay_covers_disorder(spark, sf_dir, tmp_path):
     assert spark.read.parquet(paths["late"]).count() == 0
     want = _compute(load_table(spark, sf_dir, "events"))
     assert _key(_compute(spark.read.parquet(paths["on_time"]))) == _key(want)
+
+
+def test_late_channel_start_reads_committed_legs_only(spark, sf_dir,
+                                                     tmp_path):
+    """A start rebuilds the watermark from the sink legs. A leg holding
+    only the ``_temporary`` dir of a crashed first write has no
+    committed rows, so the run starts with no watermark; a leg that
+    cannot be read fails the start (a fallback to no watermark would
+    route every replayed row on time)."""
+    def run(sink, leftover, payload):
+        leftover.mkdir(parents=True)
+        (leftover / "part-00000.parquet").write_bytes(payload)
+        return run_with_late_channel_to_parquet(
+            file_replay_stream(spark, sf_dir, "events"), DELAY_S, str(sink))
+
+    a = tmp_path / "a"
+    paths = run(a, a / "on_time" / "_bid=0" / "_temporary" / "0", b"half")
+    assert spark.read.parquet(paths["late"]).count() == 0
+    assert (spark.read.parquet(paths["on_time"]).count()
+            == load_table(spark, sf_dir, "events").count())
+    b = tmp_path / "b"
+    with pytest.raises(Exception, match="(?i)parquet|footer|magic"):
+        run(b, b / "on_time" / "_bid=0", b"not a parquet file")
+    assert not (b / "late").exists()
 
 
 def test_late_channel_replay_clears_emptied_leg(spark, tmp_path):

@@ -1,29 +1,20 @@
-"""Streaming == batch equivalence (SURVEY section 5.3): each streaming
-job replayed with trigger availableNow over the same files must produce
-the batch formulation's exact result set (contents keyed by
-(window, key) — emission order/cadence intentionally differs from the
-reference's per-watermark firing, SURVEY section 7a)."""
+"""Streaming twins and stream-applied operators against their batch
+forms.
 
-import pytest
+Each ``test_<twin>_...`` below drains its ``STREAMING_QUERIES`` entry
+over a single-file sf0.001 replay and asserts the entry's rule
+through ``assert_twin`` (tests/test_streaming_split.py, which also
+drains every entry over a 3-file replay). The other tests apply batch
+operators to ``file_replay_stream`` or drive the foreachBatch runners.
+"""
+
 from pyspark.sql import functions as F
 
-from flink_user_behavior_analysis_spark import queries as Q
-from flink_user_behavior_analysis_spark.operators import consecutive_events
 from flink_user_behavior_analysis_spark.sources import load_table
-from flink_user_behavior_analysis_spark.streaming import (
-    cap_filter_stateful,
-    consecutive_fail_stateful,
-    hot_items_counts_stream,
-    marketing_by_channel_stream,
-    order_timeout_stateful,
-    page_views_stream,
-    reconcile_stateful,
-    run_available_now,
-    sessionize_stream,
-    stream_events,
-    tx_interval_join_stream,
-    unique_visitors_stream,
-)
+from flink_user_behavior_analysis_spark.streaming import run_available_now
+
+from .test_streaming_split import (_events_with_edges, _write_replay,
+                                   assert_twin)
 
 
 def _rows(df, cols):
@@ -35,48 +26,29 @@ def _assert_same(stream_df, batch_df, cols):
 
 
 def test_hot_items_counts_stream_equals_batch(spark, sf_dir):
-    got = run_available_now(hot_items_counts_stream(spark, sf_dir))
-    # batch twin: the count stage of the hot_items query
-    from flink_user_behavior_analysis_spark.queries import _events
-    from flink_user_behavior_analysis_spark.sources import with_item
-    from flink_user_behavior_analysis_spark.operators import windowed_count
-
-    ev = with_item(_events(spark, sf_dir).where(F.col("event_type") == "view"))
-    want = windowed_count(ev, "ts", ["item_id"], "1 hour", "15 minutes")
-    _assert_same(got, want, ["window_end_us", "item_id", "cnt"])
+    assert_twin(spark, "hot_items_counts", sf_dir)
 
 
 def test_page_views_stream_equals_batch(spark, sf_dir):
-    got = run_available_now(page_views_stream(spark, sf_dir))
-    want = Q.QUERIES["page_views"](spark, sf_dir)
-    _assert_same(got, want, ["window_end_us", "pv"])
+    assert_twin(spark, "page_views", sf_dir)
 
 
 def test_unique_visitors_stream_equals_batch(spark, sf_dir):
-    got = run_available_now(unique_visitors_stream(spark, sf_dir))
-    want = Q.QUERIES["unique_visitors"](spark, sf_dir)
-    _assert_same(got, want, ["window_end_us", "uv"])
+    assert_twin(spark, "unique_visitors", sf_dir)
 
 
 def test_marketing_by_channel_stream_equals_batch(spark, sf_dir):
-    got = run_available_now(marketing_by_channel_stream(spark, sf_dir))
-    want = Q.QUERIES["marketing_by_channel"](spark, sf_dir)
-    _assert_same(got, want, ["window_end_us", "channel", "behavior", "cnt"])
+    assert_twin(spark, "marketing_by_channel", sf_dir)
 
 
-def test_tx_interval_join_stream_equals_batch(spark, sf_dir):
-    got = run_available_now(tx_interval_join_stream(spark, sf_dir), "append")
-    want = Q.QUERIES["tx_interval_join"](spark, sf_dir)
-    _assert_same(got, want, ["user_id", "item_id", "pay_us", "receipt_us"])
+def test_tx_interval_join_stream_equals_batch(spark, sf_dir, tmp_path):
+    """sf0.001 has no pay with an in-band receipt: the edge rows add one."""
+    replay = _write_replay(str(tmp_path), _events_with_edges(sf_dir), [])
+    assert_twin(spark, "tx_interval_join", replay)
 
 
 def test_consecutive_fail_stateful_equals_batch(spark, sf_dir):
-    ev = stream_events(spark, sf_dir, watermark="0 seconds")
-    got = run_available_now(
-        consecutive_fail_stateful(ev, n=2, within_seconds=6 * 3600), "append"
-    )
-    want = Q.QUERIES["login_fail"](spark, sf_dir)
-    _assert_same(got, want, ["user_id", "first_fail_us", "last_fail_us"])
+    assert_twin(spark, "consecutive_fail", sf_dir)
 
 
 def test_per_key_sorts_across_arrow_chunks(spark, tmp_path):
@@ -124,12 +96,7 @@ def test_per_key_sorts_across_arrow_chunks(spark, tmp_path):
 
 
 def test_cap_filter_stateful_equals_batch(spark, sf_dir):
-    ev = stream_events(spark, sf_dir, watermark="0 seconds").withColumnRenamed(
-        "event_type", "behavior"
-    )
-    got = run_available_now(cap_filter_stateful(ev, cap=3), "append")
-    want = Q.QUERIES["blacklist_warnings"](spark, sf_dir)
-    _assert_same(got, want, ["user_id", "behavior", "day", "warning_msg"])
+    assert_twin(spark, "cap_filter", sf_dir)
 
 
 def test_python_worker_startup_path(spark):
@@ -138,7 +105,7 @@ def test_python_worker_startup_path(spark):
     with no jar on its import path and, when the unpacked tree of the
     Spark build exists, pyspark imported from plain files. Otherwise
     each task's importlib.invalidate_caches() re-reads the archives.
-    The three applyInPandasWithState twins above
+    The applyInPandasWithState twins of this file
     (consecutive_fail / cap_filter / reconcile) run on this same
     session, so their equality with the batch twins is the end-to-end
     check that the reordered path changes no result."""
@@ -185,117 +152,45 @@ def test_worker_reorder_path_drops_jars_and_prefers_tree(tmp_path):
 
 
 def test_sessionize_stream_equals_batch(spark, sf_dir):
-    """Native session_window streaming aggregation == the batch
-    lag+cumsum sessionize on the bounded replay."""
-    got = run_available_now(sessionize_stream(spark, sf_dir))
-    want = Q.QUERIES["sessionize_users"](spark, sf_dir)
-    _assert_same(
-        got, want,
-        ["user_id", "session_start_us", "session_end_us", "n_events"],
-    )
+    assert_twin(spark, "sessionize", sf_dir)
 
 
 def test_reconcile_stateful_equals_batch(spark, sf_dir):
-    """J2 streaming twin: matched pairs are watermark-independent
-    (emitted the moment the later side arrives) so the matched leg must
-    equal the batch reconcile exactly; unmatched legs emit only once
-    the watermark passes the deadline, so every emitted unmatched row
-    must appear in the batch result (keys with deadlines beyond the
-    final watermark may legitimately stay open, like a Flink job
-    killed at t sees no timers past t)."""
-    ev = stream_events(spark, sf_dir, watermark="0 seconds")
-    ev = ev.withColumn(
-        "item_id", F.regexp_extract("props", r'"k":\s*(\d+)', 1).cast("long")
-    )
-    got = run_available_now(
-        reconcile_stateful(ev, -12 * 3600, 12 * 3600), "append"
-    )
-    want = Q.QUERIES["tx_match"](spark, sf_dir)
-    cols = ["kind", "user_id", "item_id", "pay_us", "receipt_us"]
-    got_rows = _rows(got, cols)
-    want_rows = _rows(want, cols)
-    assert set(got_rows) <= set(want_rows)
-    got_matched = [r for r in got_rows if r[0] == "matched"]
-    want_matched = [r for r in want_rows if r[0] == "matched"]
-    assert got_matched == want_matched
-    # unmatched rows whose deadline precedes the final watermark fired
-    assert any(r[0] != "matched" for r in got_rows), (
-        "no unmatched row emitted — timers never fired"
-    )
+    """Some unmatched row is emitted: its timer fired."""
+    got = assert_twin(spark, "reconcile", sf_dir)
+    assert any(r["kind"] != "matched" for r in got)
 
 
 def test_order_timeout_stateful_matches_batch_for_closed_keys(spark, sf_dir):
-    """Event-time timers only fire while the watermark advances; keys
-    whose deadline lies beyond the final watermark stay open when a
-    bounded replay ends (the reference has the same property — a Flink
-    job killed at t sees no timers past t). Assert: every emitted row
-    matches the batch result exactly, and all immediately-decidable
-    (pay-observed) keys are emitted."""
-    ev = stream_events(spark, sf_dir, watermark="0 seconds")
-    ev = ev.withColumn(
-        "item_id", F.regexp_extract("props", r'"k":\s*(\d+)', 1).cast("long")
-    )
-    got = run_available_now(
-        order_timeout_stateful(ev, timeout_seconds=3 * 24 * 3600), "append"
-    )
-    want = Q.QUERIES["order_timeout"](spark, sf_dir)
-    got_rows = {
-        (r.user_id, r.item_id): (r.create_us, r.pay_us, r.result_state)
-        for r in got.collect()
-    }
-    want_rows = {
-        (r.user_id, r.item_id): (r.create_us, r.pay_us, r.result_state)
-        for r in want.collect()
-    }
-    assert got_rows, "stateful op emitted nothing"
-    mismatches = {
-        k: (v, want_rows.get(k)) for k, v in got_rows.items()
-        if want_rows.get(k) != v
-    }
-    assert not mismatches, dict(list(mismatches.items())[:5])
-    # all 'payed' decisions are watermark-independent -> must all emit
-    payed_want = {k for k, v in want_rows.items() if v[2] == "payed"}
-    payed_got = {k for k, v in got_rows.items() if v[2] == "payed"}
-    assert payed_want == payed_got
+    """order_timeout's one check: over one file its timers fire only in
+    the closing micro-batch, so no key receives rows after its deadline
+    has passed (over several files the operator fails,
+    test_streaming_split.py)."""
+    assert assert_twin(spark, "order_timeout", sf_dir)
 
 
 def test_exact_dedup_stream_equals_batch(spark, sf_dir):
-    """Streaming fingerprint dedup (complete mode) == the batch
-    exact_dedup aggregation on the bounded replay."""
-    from flink_user_behavior_analysis_spark.streaming import exact_dedup_stream
-
-    got = run_available_now(exact_dedup_stream(spark, sf_dir))
-    want = Q.QUERIES["dedup_exact"](spark, sf_dir)
-    _assert_same(got, want, ["fingerprint", "keeper_id", "n_docs"])
+    assert_twin(spark, "exact_dedup", sf_dir)
 
 
 def test_streaming_curation_smoke(spark, sf_dir):
-    """End-to-end streaming curation (VERDICT r3 item 6): quality
-    filter -> exact-dedup stream, drained; the streamed survivor set
-    must equal the batch composition, and feeding those survivors
-    into the incremental near-dup probe must reproduce the batch
-    probe verdicts exactly (kept/dup_corpus/dup_delta)."""
+    """End-to-end streaming curation (VERDICT r3 item 6): the curation
+    twin's drained survivors (equal to its batch twin) fed into the
+    incremental near-dup probe must reproduce the batch probe verdicts
+    exactly (kept/dup_corpus/dup_delta)."""
     from flink_user_behavior_analysis_spark.operators.dedup import (
         dedup_incremental,
-        normalized_text,
         release_signature_cache,
     )
-    from flink_user_behavior_analysis_spark.operators.text import (
-        quality_score_col,
+    from flink_user_behavior_analysis_spark.streaming import (
+        STREAMING_QUERIES,
     )
-    from flink_user_behavior_analysis_spark.streaming import curation_stream
 
-    got = run_available_now(curation_stream(spark, sf_dir))
+    got = spark.createDataFrame(
+        [(r["keeper_id"],) for r in assert_twin(spark, "curation", sf_dir)],
+        "keeper_id long")
+    want = STREAMING_QUERIES["curation"].batch_frame(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    d1 = docs.where(quality_score_col("text") >= 0.6)
-    want = (
-        d1.select(F.md5(normalized_text("text")).alias("fingerprint"),
-                  "doc_id")
-        .groupBy("fingerprint")
-        .agg(F.min("doc_id").cast("long").alias("keeper_id"),
-             F.count(F.lit(1)).cast("long").alias("n_docs"))
-    )
-    _assert_same(got, want, ["fingerprint", "keeper_id", "n_docs"])
     assert got.count() > 0
 
     # stage 3: the STREAMED survivors feed the incremental probe —
@@ -363,14 +258,11 @@ def test_stateless_pipeline_ops_compose_on_streams_unchanged(spark, sf_dir):
 
 
 def test_drop_duplicates_within_watermark_bounded_state(spark, sf_dir):
-    """The production bounded-state form exact_dedup_stream's docstring
-    points to: dropDuplicatesWithinWatermark keeps O(watermark window)
+    """The production bounded-state form of the dedup twins (streaming/
+    jobs.py): dropDuplicatesWithinWatermark keeps O(watermark window)
     state instead of O(distinct keys). On the bounded replay with a
     watermark covering the full span, it must keep exactly one row per
-    fingerprint — the same distinct set as the batch aggregation."""
-    from flink_user_behavior_analysis_spark.operators.dedup import (
-        normalized_text,
-    )
+    key — the same distinct set as the batch aggregation."""
     from flink_user_behavior_analysis_spark.sources import (
         file_replay_stream,
     )
@@ -397,9 +289,8 @@ def test_streaming_registry_names_and_builders(spark, sf_dir):
     from flink_user_behavior_analysis_spark.streaming import STREAMING_QUERIES
 
     assert len(STREAMING_QUERIES) >= 7
-    for name, fn in STREAMING_QUERIES.items():
-        df = fn(spark, sf_dir)
-        assert df.isStreaming, name
+    for name, twin in STREAMING_QUERIES.items():
+        assert twin.build(spark, sf_dir).isStreaming, name
 
 
 def test_cms_stream_accumulation_matches_batch(spark, sf_dir, tmp_path):
@@ -472,76 +363,15 @@ def test_error_spike_scoring_composes_on_streamed_counts(spark, sf_dir):
 
 
 def test_funnel_composes_on_streamed_step_events(spark, sf_dir):
-    """VERDICT r5 #6: the funnel's streaming form — distinct step
-    events maintained as stream-dedup state, the k-row funnel
-    re-aggregated from the drained table — equals the batch operator
-    end to end (first-touch semantics are a function of the distinct
-    step-event set, which the stream preserves exactly)."""
-    from flink_user_behavior_analysis_spark.operators.funnel import (
-        funnel,
-    )
-    from flink_user_behavior_analysis_spark.queries import (
-        FUNNEL_STEPS,
-        FUNNEL_WITHIN,
-    )
-    from flink_user_behavior_analysis_spark.streaming import (
-        funnel_step_events_stream,
-    )
-
-    drained = run_available_now(
-        funnel_step_events_stream(spark, sf_dir, FUNNEL_STEPS),
-        output_mode="append")
-    got = funnel(drained, list(FUNNEL_STEPS), FUNNEL_WITHIN,
-                 type_col="event_type")
-    want = funnel(load_table(spark, sf_dir, "events"),
-                  list(FUNNEL_STEPS), FUNNEL_WITHIN)
-    cols = ["step_idx", "step", "n_users", "conversion"]
-    assert _rows(got, cols) == _rows(want, cols)
+    assert_twin(spark, "funnel_step_events", sf_dir)
 
 
 def test_retention_composes_on_streamed_user_weeks(spark, sf_dir):
-    """VERDICT r5 #6: weekly cohort retention's streaming form — the
-    distinct (user, week) sufficient statistic as stream-dedup
-    state, retention_from_user_weeks over the drained pairs —
-    equals the batch operator end to end."""
-    from flink_user_behavior_analysis_spark.operators.funnel import (
-        retention_cohorts,
-        retention_from_user_weeks,
-    )
-    from flink_user_behavior_analysis_spark.queries import (
-        RETENTION_MAX_WEEKS,
-    )
-    from flink_user_behavior_analysis_spark.streaming import (
-        user_week_stream,
-    )
-
-    drained = run_available_now(user_week_stream(spark, sf_dir),
-                                output_mode="append")
-    got = retention_from_user_weeks(drained, RETENTION_MAX_WEEKS)
-    want = retention_cohorts(load_table(spark, sf_dir, "events"),
-                             max_weeks=RETENTION_MAX_WEEKS)
-    cols = ["cohort_week", "week_offset", "n_active", "cohort_size",
-            "retention"]
-    assert _rows(got, cols) == _rows(want, cols)
+    assert_twin(spark, "user_weeks", sf_dir)
 
 
 def test_dau_composes_on_streamed_user_days(spark, sf_dir):
-    """DAU/WAU/stickiness streaming form: distinct (user, day) pairs
-    as stream-dedup state, the day-grain report re-aggregated from
-    the drained pairs — equals the batch query end to end."""
-    from flink_user_behavior_analysis_spark.operators.funnel import (
-        dau_stickiness_from_user_days,
-    )
-    from flink_user_behavior_analysis_spark.streaming import (
-        user_day_stream,
-    )
-
-    drained = run_available_now(user_day_stream(spark, sf_dir),
-                                output_mode="append")
-    got = dau_stickiness_from_user_days(drained)
-    want = Q.QUERIES["dau_stickiness"](spark, sf_dir)
-    cols = ["day", "dau", "wau", "stickiness"]
-    assert _rows(got, cols) == _rows(want, cols)
+    assert_twin(spark, "user_days", sf_dir)
 
 
 def test_span_ingest_loop_with_additive_count_updates(spark, sf_dir,
@@ -606,27 +436,7 @@ def test_span_ingest_loop_with_additive_count_updates(spark, sf_dir,
 
 
 def test_props_topk_composes_on_streamed_counts(spark, sf_dir):
-    """props_topk's streaming form: the (event_type, k) counts run as
-    an unbounded streaming aggregation; the top-5 rank over the
-    drained counts equals the batch query end to end."""
-    from pyspark.sql import Window
-
-    from flink_user_behavior_analysis_spark.streaming import (
-        props_counts_stream,
-    )
-
-    drained = run_available_now(props_counts_stream(spark, sf_dir))
-    w = Window.partitionBy("event_type").orderBy(
-        F.col("n").desc(), F.col("k").asc())
-    got = (
-        drained.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 5)
-        .select("event_type", "k", "n",
-                F.col("rnk").cast("long").alias("rnk"))
-    )
-    want = Q.QUERIES["props_topk"](spark, sf_dir)
-    cols = ["event_type", "k", "n", "rnk"]
-    assert _rows(got, cols) == _rows(want, cols)
+    assert_twin(spark, "props_counts", sf_dir)
 
 
 def test_semdedup_drift_stream_equals_batch(spark, sf_dir):
@@ -638,6 +448,7 @@ def test_semdedup_drift_stream_equals_batch(spark, sf_dir):
     state row per cell."""
     from flink_user_behavior_analysis_spark.operators.similarity import (
         _semdedup_assigned,
+        semdedup_assign,
         semdedup_batch_stats,
         semdedup_drift,
         semdedup_drift_from_stats,
@@ -648,16 +459,16 @@ def test_semdedup_drift_stream_equals_batch(spark, sf_dir):
         _semdedup_centroid_path,
         _semdedup_read_centroids,
     )
-    from flink_user_behavior_analysis_spark.streaming.jobs import (
-        run_available_now,
-        semdedup_drift_stream,
+    from flink_user_behavior_analysis_spark.sources import (
+        file_replay_stream,
     )
 
     cents = _semdedup_read_centroids(_semdedup_centroid_path())
     embs = _embs(spark, sf_dir)
 
     streamed = run_available_now(
-        semdedup_drift_stream(spark, sf_dir, cents),
+        semdedup_batch_stats(semdedup_assign(
+            file_replay_stream(spark, sf_dir, "embeddings"), cents)),
         output_mode="complete")
     batch_stats = semdedup_batch_stats(
         _semdedup_assigned(embs, cents, "vec_id", "embedding"))
@@ -1011,29 +822,7 @@ def test_media_ahash_stream_equals_batch(spark, sf_dir):
 
 
 def test_asof_stateful_equals_batch_for_decided_lefts(spark, sf_dir):
-    """Streaming as-of twin: a left (purchase) is decidable only once
-    the watermark passes its timestamp, so every emitted row must
-    equal the batch as-of join exactly, and only the stream's very
-    tail (lefts at-or-after the final watermark) may stay open —
-    the same bounded-replay property the other timer operators pin."""
-    from flink_user_behavior_analysis_spark.streaming import asof_stateful
-
-    ev = stream_events(spark, sf_dir, watermark="0 seconds")
-    got = run_available_now(
-        asof_stateful(ev, "purchase", "view"), "append")
-    want = Q.QUERIES["purchase_asof_view"](spark, sf_dir).select(
-        "user_id",
-        F.col("purchase_id").alias("left_id"),
-        F.col("purchase_us").alias("left_us"),
-        F.col("view_id").alias("right_id"),
-        F.col("view_us").alias("right_us"),
-    )
-    cols = ["user_id", "left_id", "left_us", "right_id", "right_us"]
-    got_rows = _rows(got, cols)
-    want_rows = _rows(want, cols)
-    assert set(got_rows) <= set(want_rows)
-    # near-total coverage: only the final-watermark tail may stay open
-    assert len(got_rows) >= 0.9 * len(want_rows) > 0
+    assert_twin(spark, "asof", sf_dir)
 
 
 def test_asof_stateful_late_right_within_delay_wins(spark, tmp_path):

@@ -7,19 +7,11 @@ from pyspark.sql import functions as F
 
 from flink_user_behavior_analysis_spark import queries as Q
 from flink_user_behavior_analysis_spark.sources import load_table, with_item
-from flink_user_behavior_analysis_spark.streaming import (
-    cap_filter_stateful,
-    consecutive_fail_stateful,
-    reconcile_stateful,
-)
-
-
-def _consecutive_fail(ev):
-    return consecutive_fail_stateful(ev, n=2, within_seconds=6 * 3600)
+from flink_user_behavior_analysis_spark.streaming import STREAMING_QUERIES
 
 
 def _run_once(spark, src_dir, ckpt, out_dir, raw_schema,
-              build=_consecutive_fail):
+              build=STREAMING_QUERIES["consecutive_fail"].body):
     raw = spark.readStream.schema(raw_schema).parquet(src_dir)
     ev = raw.withWatermark("ts", "0 seconds")
     out = build(ev)
@@ -89,17 +81,17 @@ def test_cap_filter_survives_restart(spark, sf_dir, tmp_path):
     the restart: the cut falls after the first event of a group whose
     warning fires after it."""
     ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", F.col("event_type").alias("behavior"))
+        "event_id", "ts", "user_id", "event_type")
     want = sorted(tuple(r) for r in Q.QUERIES["blacklist_warnings"](
         spark, sf_dir).collect())
     u, b, day, _ = want[0]
     first_us = ev.where(
-        (F.col("user_id") == u) & (F.col("behavior") == b)
+        (F.col("user_id") == u) & (F.col("event_type") == b)
         & (F.date_format("ts", "yyyy-MM-dd") == day)
     ).agg(F.min(F.unix_micros("ts"))).first()[0]
     first, both = _two_phase(
         spark, ev, F.timestamp_micros(F.lit(first_us)), tmp_path,
-        lambda e: cap_filter_stateful(e, cap=Q.BL_CAP))
+        STREAMING_QUERIES["cap_filter"].body)
     assert sorted(tuple(r) for r in both) == want
     assert (u, b, day) not in {(r.user_id, r.behavior, r.day) for r in first}
 
@@ -122,7 +114,7 @@ def test_reconcile_survives_restart(spark, sf_dir, tmp_path):
     cut = F.timestamp_micros(F.lit(pay_us))
     first, both = _two_phase(
         spark, ev, cut, tmp_path,
-        lambda e: reconcile_stateful(e, Q.IJ_LO_S, Q.IJ_HI_S))
+        STREAMING_QUERIES["reconcile"].body)
     got = [tuple(r) for r in both]
     assert sorted(r for r in got if r[0] == "matched") == want_m
     assert set(got) <= set(want)

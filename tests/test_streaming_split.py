@@ -1,44 +1,48 @@
-"""Stateful streaming twins == batch twins on ANY replay split.
+"""Every streaming twin against its batch twin on multi-file replays.
 
-The other stream tests replay one file, so each stateful operator sees
-the whole timeline in one micro-batch and never carries state across
-batches. Here hypothesis cuts the sf0.001 events at random event-time
-points into 1-4 time-ordered files, drained one file per micro-batch
-(``maxFilesPerTrigger=1``), and the drained output is checked with the
-rules ``perfbench/checks.py`` applies: consecutive_fail and cap_filter
-exact, reconcile matched rows exact and unmatched rows a subset (they
-fire only once the watermark passes their deadline).
+``STREAMING_QUERIES`` (streaming/jobs.py) pairs each twin with its
+batch query, output mode, compared columns and comparison rule. One
+helper, ``assert_twin``, drains a twin and asserts its rule against the
+batch twin over the same files: the prefix consistency of *Structured
+Streaming* (SIGMOD 2018), tested as spark-rapids tests two execution
+paths, with one helper and one asserted result.
 
-The input gains edge rows for user ``EDGE_USER``, whose keyed state
-holds several sub-keys at once: an ``item_id`` above 2**53 next to a
-NULL ``item_id`` (a nullable long holding a NULL reaches pandas as
-float64, which would round the id), a NULL-item pay in band with
-receipts of other items (merging NULL into another item would match
-it) and with a NULL-item receipt (a NULL item equals nothing in the
-batch join), and NULL ``behavior`` rows on days that also hold clicks (merging
-NULL into another behavior would cross the cap).
+- ``test_twin_equals_batch`` drains every entry over a fixed 3-file
+  event-time cut (and a 3-file cut of the documents), one file per
+  micro-batch (``maxFilesPerTrigger=1``), so windowed, dedup and keyed
+  state cross micro-batches.
+- ``test_stateful_twins_equal_batch_on_any_split``: hypothesis cuts the
+  events at random event-time points into 1-4 files for the per-user
+  machines.
+- ``test_every_stream_body_and_stateful_operator_has_an_entry``.
+
+The events are sf0.001 plus edge rows for user ``EDGE_USER``, whose
+keyed state holds several sub-keys at once: an ``item_id`` above 2**53
+next to a NULL ``item_id`` (a nullable long holding a NULL reaches
+pandas as float64, which would round the id), a NULL-item pay in band
+with receipts of other items (merging NULL into another item would
+match it) and with a NULL-item receipt (a NULL item equals nothing in
+the batch join), and NULL ``behavior`` rows on days that also hold
+clicks (merging NULL into another behavior would cross the cap). The
+BIG-item pay and receipt are also the only matched pair, so the
+interval join has rows to compare.
 """
 
+import inspect
 import os
 import uuid
 from collections import Counter
-from datetime import datetime, timedelta
+from datetime import datetime, timedelta, timezone
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
+from pyspark.errors import StreamingQueryException
 
 from flink_user_behavior_analysis_spark import queries as Q
-from flink_user_behavior_analysis_spark.sources import with_item
-from flink_user_behavior_analysis_spark.streaming import (
-    cap_filter_stateful,
-    consecutive_fail_stateful,
-    reconcile_stateful,
-    run_available_now,
-    stream_events,
-)
+from flink_user_behavior_analysis_spark.streaming import STREAMING_QUERIES
 
 EDGE_USER = 990
 BIG_ITEM = 2**53 + 1
@@ -63,19 +67,73 @@ EDGE_ROWS = [
     (2 * D + 3 * H, None, '{"k": 8}'),               # 4 NULLs: one warning
 ]
 
+# the per-user machines the random splits drain
+PER_USER = ("consecutive_fail", "cap_filter", "reconcile")
+
+
 def _us(t: datetime) -> int:
     return int((t - datetime(1970, 1, 1)).total_seconds()) * 1_000_000
 
 
-STREAM_COLS = {
-    "consecutive_fail": ["user_id", "first_fail_us", "last_fail_us"],
-    "cap_filter": ["user_id", "behavior", "day", "warning_msg"],
-    "reconcile": ["kind", "user_id", "item_id", "pay_us", "receipt_us"],
-}
+def _bag(rows, cols) -> Counter:
+    return Counter(tuple(r[c] for c in cols) for r in rows)
 
 
-def _bag(df, cols) -> Counter:
-    return Counter(tuple(r[c] for c in cols) for r in df.collect())
+def _matched(bag: Counter) -> Counter:
+    return Counter({r: n for r, n in bag.items() if r[0] == "matched"})
+
+
+def _drain(spark, twin, replay):
+    """Drain ``twin`` over ``replay``: (its rows after ``compose``, the
+    watermark of its last micro-batch in microseconds or None)."""
+    name = f"twin_{uuid.uuid4().hex[:12]}"
+    q = (twin.build(spark, replay).writeStream.format("memory")
+         .queryName(name).outputMode(twin.mode)
+         .trigger(availableNow=True).start())
+    q.awaitTermination()
+    wm = ((q.lastProgress or {}).get("eventTime") or {}).get("watermark")
+    wm_us = None if wm is None else _us(
+        datetime.fromisoformat(wm.replace("Z", "+00:00"))
+        .astimezone(timezone.utc).replace(tzinfo=None))
+    got = spark.table(name)
+    return (twin.compose(got) if twin.compose else got).collect(), wm_us
+
+
+def _assert_rule(twin, got_rows, want_rows, wm_us):
+    """``twin.rule`` (see ``Twin``). For ``closed_keys`` the first two
+    columns are the key and the last the decision; for
+    ``decided_lefts`` the third column is the left's event time."""
+    got, want = _bag(got_rows, twin.cols), _bag(want_rows, twin.cols)
+    assert want, "the batch twin is empty: any rule would hold"
+    if twin.rule in ("exact", "composed"):
+        assert got == want
+    elif twin.rule == "matched_exact":
+        assert _matched(got) == _matched(want)
+        assert not got - want
+    elif twin.rule == "closed_keys":
+        g = {r[:2]: r[2:] for r in got}
+        w = {r[:2]: r[2:] for r in want}
+        assert {k: (v, w.get(k)) for k, v in g.items() if w.get(k) != v} == {}
+        assert ({k for k, v in g.items() if v[-1] == "payed"}
+                == {k for k, v in w.items() if v[-1] == "payed"})
+    elif twin.rule == "decided_lefts":
+        assert not got - want
+        # a left's timer fires once the watermark passes it by a ms
+        assert not {r for r in want if r[2] < wm_us - 2000} - set(got)
+    else:
+        raise AssertionError(f"unknown rule {twin.rule!r}")
+
+
+def assert_twin(spark, name, replay, want=None):
+    """Drain entry ``name`` over ``replay`` and assert its rule against
+    its batch twin over the same files (``want``: the batch rows, when
+    the caller already has them). Returns the drained rows."""
+    twin = STREAMING_QUERIES[name]
+    got, wm_us = _drain(spark, twin, replay)
+    if want is None:
+        want = twin.batch_frame(spark, replay).collect()
+    _assert_rule(twin, got, want, wm_us)
+    return got
 
 
 def _events_with_edges(sf_dir) -> pa.Table:
@@ -95,11 +153,10 @@ def _events_with_edges(sf_dir) -> pa.Table:
             .sort_by([("ts", "ascending"), ("event_id", "ascending")]))
 
 
-def _write_replay(root, table, cuts) -> str:
-    """``table`` (ts-sorted) as files cut before the rows at ``cuts``,
-    with increasing modification times so the stream reads them in
-    event-time order."""
-    d = os.path.join(root, "events.parquet")
+def _write_replay(root, table, cuts, name="events") -> str:
+    """``table`` (sorted) as files cut before the rows at ``cuts``, with
+    increasing modification times so the stream reads them in order."""
+    d = os.path.join(root, f"{name}.parquet")
     os.makedirs(d)
     bounds = [0, *cuts, table.num_rows]
     for i, (a, b) in enumerate(zip(bounds, bounds[1:])):
@@ -109,9 +166,63 @@ def _write_replay(root, table, cuts) -> str:
     return root
 
 
+def _time_cuts(table, fracs):
+    """The first row at or after each event-time fraction of the span."""
+    ts = table["ts"].to_pylist()
+    lo, hi = ts[0], ts[-1]
+    return sorted({next(i for i, t in enumerate(ts) if t >= lo + f * (hi - lo))
+                   for f in fracs} - {0})
+
+
 @pytest.fixture(scope="module")
 def edge_events(sf_dir):
     return _events_with_edges(sf_dir)
+
+
+@pytest.fixture(scope="module")
+def three_files(edge_events, sf_dir, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("three_files"))
+    _write_replay(root, edge_events, _time_cuts(edge_events, [1 / 3, 2 / 3]))
+    docs = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
+    docs = docs.cast(docs.schema.remove_metadata()).sort_by("doc_id")
+    n = docs.num_rows
+    return _write_replay(root, docs, [n // 3, 2 * n // 3], "documents")
+
+
+@pytest.mark.parametrize("name", [
+    pytest.param(n, marks=pytest.mark.xfail(
+        strict=True, raises=StreamingQueryException,
+        reason="INVALID_TIMEOUT_TIMESTAMP: order_timeout sets a timeout "
+               "below the watermark for a key whose deadline has passed "
+               "(ROADMAP direction 1)"))
+    if n == "order_timeout" else n
+    for n in STREAMING_QUERIES])
+def test_twin_equals_batch(spark, three_files, name):
+    assert_twin(spark, name, three_files)
+
+
+def test_every_stream_body_and_stateful_operator_has_an_entry():
+    from flink_user_behavior_analysis_spark.streaming import jobs, stateful
+
+    def functions(module, keep):
+        return {f for n, f in vars(module).items()
+                if inspect.isfunction(f) and f.__module__ == module.__name__
+                and keep(n)}
+
+    streams = functions(jobs, lambda n: n.endswith("_stream")
+                         and n != "stream_events")
+    operators = functions(stateful, lambda n: not n.startswith("_"))
+    bodies = {getattr(t.body, "func", t.body)
+              for t in STREAMING_QUERIES.values()}
+    assert streams and operators
+    assert not streams - bodies
+    assert not operators - bodies
+    for name, twin in STREAMING_QUERIES.items():
+        assert callable(twin.batch) or twin.batch in Q.QUERIES, name
+        # a stream-specific body says why it is not the batch body
+        assert bool(twin.why) == (getattr(twin.body, "func", twin.body)
+                                  in streams | operators), name
+        assert (twin.rule == "composed") <= (twin.compose is not None), name
 
 
 @pytest.fixture(scope="module")
@@ -120,24 +231,8 @@ def batch_twins(spark, edge_events, tmp_path_factory):
     for every split, so they run once."""
     whole = _write_replay(str(tmp_path_factory.mktemp("whole")),
                           edge_events, [])
-    return {name: _bag(Q.QUERIES[query](spark, whole), STREAM_COLS[name])
-            for name, query in (("consecutive_fail", "login_fail"),
-                                ("cap_filter", "blacklist_warnings"),
-                                ("reconcile", "tx_match"))}
-
-
-def _drain(spark, replay):
-    def events():
-        return stream_events(spark, replay, watermark="0 seconds")
-
-    return {
-        "consecutive_fail": consecutive_fail_stateful(
-            events(), n=2, within_seconds=6 * 3600),
-        "cap_filter": cap_filter_stateful(
-            events().withColumnRenamed("event_type", "behavior"), cap=3),
-        "reconcile": reconcile_stateful(
-            with_item(events()), -12 * 3600, 12 * 3600),
-    }
+    return {n: STREAMING_QUERIES[n].batch_frame(spark, whole).collect()
+            for n in PER_USER}
 
 
 @settings(max_examples=3, deadline=None,
@@ -147,26 +242,14 @@ def _drain(spark, replay):
 @example(fracs=[0.25, 0.5, 0.75])
 def test_stateful_twins_equal_batch_on_any_split(spark, edge_events,
                                                  batch_twins, tmp_path, fracs):
-    ts = edge_events["ts"].to_pylist()
-    lo, hi = ts[0], ts[-1]
-    # an event-time cut point -> the first row at or after it
-    cuts = sorted({next(i for i, t in enumerate(ts) if t >= lo + f * (hi - lo))
-                   for f in fracs} - {0})
+    cuts = _time_cuts(edge_events, fracs)
     replay = _write_replay(str(tmp_path / uuid.uuid4().hex), edge_events, cuts)
-    got = {name: _bag(run_available_now(sdf, "append"), STREAM_COLS[name])
-           for name, sdf in _drain(spark, replay).items()}
-
-    assert got["consecutive_fail"] == batch_twins["consecutive_fail"], cuts
-    assert got["cap_filter"] == batch_twins["cap_filter"], cuts
-    matched = Counter({r: n for r, n in got["reconcile"].items()
-                       if r[0] == "matched"})
-    assert matched == Counter({r: n for r, n in batch_twins["reconcile"].items()
-                               if r[0] == "matched"}), cuts
-    assert not got["reconcile"] - batch_twins["reconcile"], cuts
+    got = {n: assert_twin(spark, n, replay, batch_twins[n]) for n in PER_USER}
     # the edge rows reached the outputs they were built for
-    assert ("matched", EDGE_USER, BIG_ITEM, _us(T0), _us(T0 + H)) in matched
-    assert (EDGE_USER, None, "2024-01-12", "click over 3 times today") \
-        in got["cap_filter"]
+    assert ("matched", EDGE_USER, BIG_ITEM, _us(T0), _us(T0 + H)) in \
+        _bag(got["reconcile"], STREAMING_QUERIES["reconcile"].cols), cuts
+    assert (EDGE_USER, None, "2024-01-12", "click over 3 times today") in \
+        _bag(got["cap_filter"], STREAMING_QUERIES["cap_filter"].cols), cuts
 
 
 def test_reconcile_null_item_never_matches(spark, sf_dir, tmp_path):
@@ -189,12 +272,13 @@ def test_reconcile_null_item_never_matches(spark, sf_dir, tmp_path):
         "value": [1.0] * len(rows), "props": [r[4] for r in rows],
     }).select(schema.names).cast(schema)
     replay = _write_replay(str(tmp_path), table, [2, 3])
-    def user_7(df):
-        return _bag(df.where("user_id = 7"), STREAM_COLS["reconcile"])
+    cols = STREAMING_QUERIES["reconcile"].cols
 
-    want = user_7(Q.QUERIES["tx_match"](spark, replay))
+    def user_7(rows):
+        return _bag([r for r in rows if r["user_id"] == 7], cols)
+
+    want = user_7(Q.QUERIES["tx_match"](spark, replay).collect())
     assert want == Counter({("unmatched_pay", 7, None, _us(T0), None): 1,
                             ("unmatched_receipt", 7, None, None,
                              _us(T0 + H)): 1})
-    assert user_7(run_available_now(_drain(spark, replay)["reconcile"],
-                                    "append")) == want
+    assert user_7(assert_twin(spark, "reconcile", replay)) == want
