@@ -494,18 +494,14 @@ def span_store_counts(corpus: DataFrame, prefix: str,
     fingerprints only itself and probes (probe ≡ inline,
     test-asserted). At real scale this table is also the thing a
     merge job updates per accepted batch (counts are additive)."""
-    from ..sources.readers import (clear_append_ledger,
-                                   invalidate_manifest, write_bucketed)
+    from ..sources.readers import (index_commit, rebuild_ledger,
+                                   write_bucketed)
 
-    invalidate_manifest(corpus.sparkSession, prefix)  # rebuild bracket: open
-    clear_append_ledger(corpus.sparkSession, prefix,  # new generation
-                        includes_appends=rebuild_includes_appends)
-    occ = span_fp_counts(corpus, span_tokens, id_col, text_col)
-    write_bucketed(occ, f"{prefix}_spancounts", "fp", n_buckets)
     names = [f"{prefix}_spancounts"]
-    from ..sources.readers import write_manifest
-
-    write_manifest(corpus.sparkSession, prefix, names)  # commit marker LAST
+    with index_commit(corpus.sparkSession, prefix, names,
+                      rebuild_ledger(rebuild_includes_appends)):
+        occ = span_fp_counts(corpus, span_tokens, id_col, text_col)
+        write_bucketed(occ, names[0], "fp", n_buckets)
     return names
 
 
@@ -525,14 +521,13 @@ def span_append_counts(spark, prefix: str, accepted: DataFrame,
     are additive over disjoint doc sets).
 
     Same manifest-bracket transaction + batch_id ledger as every
-    other stored family: crash -> not-ready -> gated rebuild (ledger
-    cleared); committed re-delivery -> no-op."""
-    from ..sources.readers import (append_recorded, require_bucket_count,
-                                   require_index_ready,
-                                   transactional_append, write_bucketed)
+    other stored family (begin_append, then commit_append): crash ->
+    not-ready -> gated rebuild (ledger cleared); committed
+    re-delivery -> no-op."""
+    from ..sources.readers import (begin_append, commit_append,
+                                   require_bucket_count, write_bucketed)
 
-    require_index_ready(spark, prefix, "span_append_counts")
-    if batch_id is not None and append_recorded(spark, prefix, batch_id):
+    if not begin_append(spark, prefix, batch_id, "span_append_counts"):
         return 0  # committed re-delivery: skip BEFORE any batch compute
     n_batch = accepted.count()
     batch_counts = span_fp_counts(accepted, span_tokens, id_col, text_col)
@@ -543,13 +538,9 @@ def span_append_counts(spark, prefix: str, accepted: DataFrame,
               .agg(F.sum("n_corpus").cast("long").alias("n_corpus"))
               .localCheckpoint(eager=True))
 
-    def _write():
+    with commit_append(spark, prefix, [f"{prefix}_spancounts"], batch_id):
         write_bucketed(merged, f"{prefix}_spancounts", "fp", nb)
-
-    ran = transactional_append(
-        spark, prefix, [f"{prefix}_spancounts"], batch_id,
-        "span_append_counts", _write, pre_checked=True)
-    return int(n_batch) if ran else 0
+    return int(n_batch)
 
 
 def duplicated_spans_incremental_from_store(

@@ -133,23 +133,19 @@ def contam_store_grams(corpus: DataFrame, prefix: str, n: int = 5,
     ever rescanning the corpus text — the 100 TB shingling cost is
     paid once per corpus version, not once per eval release.
 
-    Same crash-atomic skeleton as every other *_store_* builder:
-    manifest invalidated first, ledger cleared for the new generation
-    (quarantining discarded append batches unless
+    Same crash-atomic bracket (index_commit) as every other
+    *_store_* builder: manifest invalidated first, ledger cleared for
+    the new generation (quarantining discarded append batches unless
     rebuild_includes_appends asserts the corpus absorbed them),
     commit marker written LAST."""
-    from ..sources.readers import (clear_append_ledger,
-                                   invalidate_manifest, write_bucketed,
-                                   write_manifest)
+    from ..sources.readers import (index_commit, rebuild_ledger,
+                                   write_bucketed)
 
-    spark = corpus.sparkSession
-    invalidate_manifest(spark, prefix)  # rebuild bracket: open
-    clear_append_ledger(spark, prefix,  # new generation
-                        includes_appends=rebuild_includes_appends)
-    write_bucketed(_gram_fps(corpus, n, id_col, text_col),
-                   f"{prefix}_grams", "gram_fp", n_buckets)
     names = [f"{prefix}_grams"]
-    write_manifest(spark, prefix, names)
+    with index_commit(corpus.sparkSession, prefix, names,
+                      rebuild_ledger(rebuild_includes_appends)):
+        write_bucketed(_gram_fps(corpus, n, id_col, text_col),
+                       names[0], "gram_fp", n_buckets)
     return names
 
 
@@ -161,8 +157,8 @@ def contam_append_grams(spark, prefix: str, new_docs: DataFrame,
     ONLY the batch and append its (gram_fp, id) rows — a plain
     bucketed append preserves the probe join's co-partitioning.
     ``n`` MUST match the store (gram fps are a function of it).
-    Exactly-once via the shared manifest-bracket transactional
-    skeleton.
+    Exactly-once via the shared manifest-bracket append
+    (begin_append, then commit_append).
 
     PRECONDITION (ADVICE r10): batch doc ids must be DISJOINT from
     docs already in the index — the index is additive over disjoint
@@ -171,25 +167,17 @@ def contam_append_grams(spark, prefix: str, new_docs: DataFrame,
     rows twice; the probe defends in depth by counting DISTINCT
     gram_fp per doc, so n_hits stays correct even then, but the
     duplicate rows still cost index bytes — don't rely on it."""
-    from ..sources.readers import (append_bucketed, append_recorded,
-                                   require_bucket_count,
-                                   require_index_ready,
-                                   transactional_append)
+    from ..sources.readers import (append_bucketed, begin_append,
+                                   commit_append, require_bucket_count)
 
-    require_index_ready(spark, prefix, "contam_append_grams")
-    if batch_id is not None and append_recorded(spark, prefix, batch_id):
+    if not begin_append(spark, prefix, batch_id, "contam_append_grams"):
         return 0  # committed re-delivery: skip the batch compute
     fps = _gram_fps(new_docs, n, id_col, text_col)
     n_batch = new_docs.count()
     nb = require_bucket_count(spark, f"{prefix}_grams")
-
-    def _write():
+    with commit_append(spark, prefix, [f"{prefix}_grams"], batch_id):
         append_bucketed(fps, f"{prefix}_grams", "gram_fp", nb)
-
-    ran = transactional_append(
-        spark, prefix, [f"{prefix}_grams"], batch_id,
-        "contam_append_grams", _write, pre_checked=True)
-    return int(n_batch) if ran else 0
+    return int(n_batch)
 
 
 def contamination_from_store(spark, prefix: str, eval_docs: DataFrame,

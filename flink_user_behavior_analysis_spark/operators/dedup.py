@@ -427,13 +427,18 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
     implies at least one chunk is equal, so candidates come from 4
     equality joins on a chunk value (each a plain shuffle join on a
     uniform key) instead of a cross join. Exact hamming verifies.
+
+    A NULL document has no words, so it pairs with nothing: it is
+    dropped before signing (simhash_signatures would sign it 0, which
+    pairs any two NULL documents at hamming 0).
     """
     # persist: both sides of the chunk self-join read this one small
     # frame (one row per doc); unpersisted, the 60-aggregate signature
     # subtree runs once per side (no shared exchange to reuse under a
     # broadcast join). The persisted signature table is also what a
     # 100 TB deployment would materialize.
-    sigs = _tracked_persist(simhash_signatures(docs, id_col, text_col))
+    sigs = _tracked_persist(simhash_signatures(
+        docs.where(F.col(text_col).isNotNull()), id_col, text_col))
     chunk_w = SIMHASH_BITS // 4
     # posexplode instead of a 4-way union: one signature subtree in the
     # plan, so the self-join reuses one shuffle instead of recomputing
@@ -592,25 +597,18 @@ def dedup_store_corpus(corpus: DataFrame, prefix: str, k: int = 12,
     and shingles ONLY ITSELF and probes these tables
     (dedup_incremental with corpus_buckets/corpus_shingles, probe ≡
     inline test-asserted)."""
-    from ..sources.readers import (clear_append_ledger,
-                                   invalidate_manifest, write_bucketed)
+    from ..sources.readers import (index_commit, rebuild_ledger,
+                                   write_bucketed)
 
-    invalidate_manifest(corpus.sparkSession, prefix)  # rebuild bracket: open
-    # new generation; rebuild_includes_appends=True asserts `corpus`
-    # already absorbed every appended batch, waiving the quarantine
-    # inline (ADVICE r9 — see clear_append_ledger)
-    clear_append_ledger(corpus.sparkSession, prefix,
-                        includes_appends=rebuild_includes_appends)
-    sigs = minhash_signatures(corpus, k, id_col, text_col, n)
-    bc = band_buckets(sigs, k, bands, id_col)
-    write_bucketed(bc, f"{prefix}_buckets", "bucket", n_buckets)
-    sh = with_shingles(corpus, id_col, text_col, n).select(
-        F.col(id_col), F.col("shingles"))
-    write_bucketed(sh, f"{prefix}_shingles", id_col, n_buckets)
     names = [f"{prefix}_buckets", f"{prefix}_shingles"]
-    from ..sources.readers import write_manifest
-
-    write_manifest(corpus.sparkSession, prefix, names)  # commit marker LAST
+    with index_commit(corpus.sparkSession, prefix, names,
+                      rebuild_ledger(rebuild_includes_appends)):
+        sigs = minhash_signatures(corpus, k, id_col, text_col, n)
+        bc = band_buckets(sigs, k, bands, id_col)
+        write_bucketed(bc, names[0], "bucket", n_buckets)
+        sh = with_shingles(corpus, id_col, text_col, n).select(
+            F.col(id_col), F.col("shingles"))
+        write_bucketed(sh, names[1], id_col, n_buckets)
     return names
 
 
@@ -630,34 +628,28 @@ def dedup_append_corpus(spark, prefix: str, accepted: DataFrame,
     signatures computed under different parameters would silently
     never collide with the stored buckets.
 
-    Same transaction/ledger shape as the other stored families:
-    manifest invalidated first and recommitted last (crash anywhere
-    -> not-ready -> gated rebuild, which clears the ledger), batch
-    ledger recorded just before the recommit -> exactly-once."""
-    from ..sources.readers import (append_bucketed, append_recorded,
-                                   require_bucket_count,
-                                   require_index_ready,
-                                   transactional_append)
+    Same transaction/ledger shape as the other stored families
+    (begin_append, then commit_append): manifest invalidated first
+    and recommitted last (crash anywhere -> not-ready -> gated
+    rebuild, which clears the ledger), batch ledger recorded just
+    before the recommit -> exactly-once."""
+    from ..sources.readers import (append_bucketed, begin_append,
+                                   commit_append, require_bucket_count)
 
-    require_index_ready(spark, prefix, "dedup_append_corpus")
-    if batch_id is not None and append_recorded(spark, prefix, batch_id):
+    if not begin_append(spark, prefix, batch_id, "dedup_append_corpus"):
         return 0  # committed re-delivery: skip BEFORE any batch compute
     n_batch = accepted.count()
     sigs = minhash_signatures(accepted, k, id_col, text_col, n)
     bc = band_buckets(sigs, k, bands, id_col)
     sh = with_shingles(accepted, id_col, text_col, n).select(
         F.col(id_col), F.col("shingles"))
-    nb_b = require_bucket_count(spark, f"{prefix}_buckets")
-    nb_s = require_bucket_count(spark, f"{prefix}_shingles")
-
-    def _write():
-        append_bucketed(bc, f"{prefix}_buckets", "bucket", nb_b)
-        append_bucketed(sh, f"{prefix}_shingles", id_col, nb_s)
-
-    ran = transactional_append(
-        spark, prefix, [f"{prefix}_buckets", f"{prefix}_shingles"],
-        batch_id, "dedup_append_corpus", _write, pre_checked=True)
-    return int(n_batch) if ran else 0
+    names = [f"{prefix}_buckets", f"{prefix}_shingles"]
+    nb_b = require_bucket_count(spark, names[0])
+    nb_s = require_bucket_count(spark, names[1])
+    with commit_append(spark, prefix, names, batch_id):
+        append_bucketed(bc, names[0], "bucket", nb_b)
+        append_bucketed(sh, names[1], id_col, nb_s)
+    return int(n_batch)
 
 
 def dedup_incremental_from_store(spark, prefix: str, delta: DataFrame,

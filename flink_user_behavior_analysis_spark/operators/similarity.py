@@ -1565,70 +1565,65 @@ def ivfpq_store_index(corpus: DataFrame, prefix: str,
     metadata predicate as a pushed parquet filter on the inverted-
     file scan — no join against a metadata table at query time.
     """
-    from ..sources.readers import (clear_append_ledger,
-                                   invalidate_manifest, save_as_table)
+    from ..sources.readers import (index_commit, rebuild_ledger,
+                                   save_as_table)
 
     model = ivfpq_fit(corpus, n_centroids=n_centroids, m=m,
                       codes=codes, coarse_iters=coarse_iters,
                       pq_iters=pq_iters, id_col=id_col,
                       vec_col=vec_col)
     spark = corpus.sparkSession
-    # rebuild bracket opens AFTER the driver-side fit: the fit writes
-    # nothing, so invalidating first would only leave a previously
-    # good index not-ready (readers re-triggering rebuilds, appends
-    # refused) for the whole k-means duration. Ledger cleared inside
-    # the bracket: the new generation lacks appended batches' data,
-    # so stale entries would turn re-delivery into silent loss.
-    invalidate_manifest(spark, prefix)
-    clear_append_ledger(spark, prefix,
-                        includes_appends=rebuild_includes_appends)
-    cent_rows = [
-        (c, d, model["centroids"][c][d])
-        for c in range(len(model["centroids"]))
-        for d in range(len(model["centroids"][c]))
-    ]
-    cent = spark.createDataFrame(cent_rows, "cell INT, dim INT, val DOUBLE")
-    save_as_table(cent.write.mode("overwrite").format("parquet"),
-                  f"{prefix}_centroids")
-    cb_rows = [
-        (j, c, d, model["codebooks"][j][c][d])
-        for j in range(model["m"])
-        for c in range(len(model["codebooks"][j]))
-        for d in range(model["sub"])
-    ]
-    cb = spark.createDataFrame(
-        cb_rows, "sub INT, cent INT, dim INT, val DOUBLE")
-    save_as_table(cb.write.mode("overwrite").format("parquet"),
-                  f"{prefix}_codebook")
-    enc = ivfpq_encode(corpus, model, id_col, vec_col)
-    if meta_cols:
-        meta = corpus.select(F.col(id_col).alias("_mid"),
-                             *[F.col(c) for c in meta_cols])
-        enc = enc.join(meta, enc[id_col] == meta["_mid"]).drop("_mid")
-    # second-level partition key for exactly-once ingestion: the
-    # build lands under _batch="base"; each later append lands under
-    # its own batch id, so a re-delivered append can dynamic-
-    # overwrite ONLY its own (cell, batch) partitions. Probes filter
-    # on cell alone — first-level pruning is unaffected.
-    save_as_table(
-        enc.withColumn("_batch", F.lit("base"))
-        .write.mode("overwrite").format("parquet")
-        .partitionBy("cell", "_batch"),
-        f"{prefix}_codes")
     names = [f"{prefix}_centroids", f"{prefix}_codebook",
              f"{prefix}_codes"]
     if truth_queries is not None:
-        truth = brute_force_topk_arrow(truth_queries, corpus, truth_k,
-                                       id_col=id_col, vec_col=vec_col)
-        save_as_table(truth.write.mode("overwrite").format("parquet"),
-                      f"{prefix}_truth")
         names.append(f"{prefix}_truth")
-    # commit marker LAST (VERDICT r6 #2): a crash mid-build leaves no
-    # manifest, so index_ready-gated callers rebuild instead of
-    # trusting a half-index
-    from ..sources.readers import write_manifest
-
-    write_manifest(spark, prefix, names)
+    # the bracket opens AFTER the driver-side fit: the fit writes
+    # nothing, so invalidating first would only leave a previously
+    # good index not-ready (readers re-triggering rebuilds, appends
+    # refused) for the whole k-means duration
+    with index_commit(spark, prefix, names,
+                      rebuild_ledger(rebuild_includes_appends)):
+        cent_rows = [
+            (c, d, model["centroids"][c][d])
+            for c in range(len(model["centroids"]))
+            for d in range(len(model["centroids"][c]))
+        ]
+        cent = spark.createDataFrame(cent_rows,
+                                     "cell INT, dim INT, val DOUBLE")
+        save_as_table(cent.write.mode("overwrite").format("parquet"),
+                      f"{prefix}_centroids")
+        cb_rows = [
+            (j, c, d, model["codebooks"][j][c][d])
+            for j in range(model["m"])
+            for c in range(len(model["codebooks"][j]))
+            for d in range(model["sub"])
+        ]
+        cb = spark.createDataFrame(
+            cb_rows, "sub INT, cent INT, dim INT, val DOUBLE")
+        save_as_table(cb.write.mode("overwrite").format("parquet"),
+                      f"{prefix}_codebook")
+        enc = ivfpq_encode(corpus, model, id_col, vec_col)
+        if meta_cols:
+            meta = corpus.select(F.col(id_col).alias("_mid"),
+                                 *[F.col(c) for c in meta_cols])
+            enc = enc.join(meta,
+                           enc[id_col] == meta["_mid"]).drop("_mid")
+        # second-level partition key for exactly-once ingestion: the
+        # build lands under _batch="base"; each later append lands
+        # under its own batch id, so a re-delivered append can
+        # dynamic-overwrite ONLY its own (cell, batch) partitions.
+        # Probes filter on cell alone — first-level pruning is
+        # unaffected.
+        save_as_table(
+            enc.withColumn("_batch", F.lit("base"))
+            .write.mode("overwrite").format("parquet")
+            .partitionBy("cell", "_batch"),
+            f"{prefix}_codes")
+        if truth_queries is not None:
+            truth = brute_force_topk_arrow(truth_queries, corpus, truth_k,
+                                           id_col=id_col, vec_col=vec_col)
+            save_as_table(truth.write.mode("overwrite").format("parquet"),
+                          f"{prefix}_truth")
     return names
 
 
@@ -1807,54 +1802,28 @@ def ivfpq_append_to_index(spark, prefix: str, new_vecs: DataFrame,
       (queries_pipeline._recall_frame / _recall_certificate;
       test_recall_certificate_after_index_append pins it).
     """
-    from ..sources.readers import (append_recorded, record_append,
-                                   require_appendable,
-                                   require_index_ready)
+    from ..sources.readers import begin_append
 
     # appending onto a torn-rebuild index would report success and
     # then lose the batch when the gated reader rebuilds — same gate
     # as the manifest-bracket families
-    require_index_ready(spark, prefix, "ivfpq_append_to_index")
-    if batch_id is not None and append_recorded(spark, prefix, batch_id):
+    if not begin_append(spark, prefix, batch_id, "ivfpq_append_to_index"):
         return 0
-    require_appendable(spark, prefix, batch_id, "ivfpq_append_to_index")
     model, _ = ivfpq_read_index(spark, prefix)
     enc = ivfpq_encode(new_vecs, model, id_col, vec_col)
     if meta_cols:
         meta = new_vecs.select(F.col(id_col).alias("_mid"),
                                *[F.col(c) for c in meta_cols])
         enc = enc.join(meta, enc[id_col] == meta["_mid"]).drop("_mid")
-    enc = enc.withColumn("_batch", F.lit(batch_id or "adhoc"))
     # the encode is an opaque Arrow map — count() would execute it in
     # full and the write would re-execute it; persist so the dominant
     # route+encode scan runs exactly once per append
     enc = enc.persist()
     try:
-        n = enc.count()
-        # align column order to the existing table (partition cols
-        # last) — insertInto is positional
-        existing = [f.name for f in spark.table(f"{prefix}_codes").schema]
-        aligned = enc.select(*existing)
-        if batch_id is not None:
-            _dynamic_overwrite_insert(spark, aligned,
-                                      f"{prefix}_codes")
-        else:
-            aligned.write.mode("append").format("parquet") \
-                .partitionBy("cell", "_batch") \
-                .saveAsTable(f"{prefix}_codes")
+        return _append_cells(spark, prefix, "codes", enc, batch_id,
+                             auto_compact_files_per_cell)
     finally:
         enc.unpersist()
-    # cross-session relation-cache refresh (see transactional_append):
-    # under foreachBatch the write ran in the micro-batch clone, and
-    # ``spark``'s cached listing for the codes table would stay stale
-    spark.catalog.refreshTable(f"{prefix}_codes")
-    if batch_id is not None:
-        record_append(spark, prefix, batch_id)  # ledger LAST
-    _maybe_auto_compact(spark, prefix, f"{prefix}_codes",
-                        auto_compact_files_per_cell,
-                        lambda: ivfpq_compact_index(spark, prefix),
-                        committed_rows=int(n))
-    return int(n)
 
 
 class MaintenanceFailedError(RuntimeError):
@@ -1877,6 +1846,36 @@ class MaintenanceFailedError(RuntimeError):
             f"— do NOT re-ingest the batch; the index is left "
             f"not-ready and gated readers will rebuild (or finish "
             f"the compaction manually)")
+
+
+def _append_cells(spark, prefix: str, suffix: str, rows: DataFrame,
+                  batch_id: str | None,
+                  auto_compact_files_per_cell: int | None) -> int:
+    """The shared append of the two (cell, _batch)-partitioned
+    families (ivfpq ``codes``, semdedup ``cells``), run after
+    begin_append returned True: count ``rows``, align them to
+    ``{prefix}_{suffix}``'s column order (partition cols last —
+    insertInto is positional), land them as an idempotent DYNAMIC
+    OVERWRITE of their own (cell, batch_id) partitions (``batch_id``
+    None: a plain at-least-once append under ``_batch='adhoc'``), then
+    record_batch (refresh, ledger LAST), then _maybe_auto_compact.
+    Returns rows appended."""
+    from ..sources.readers import record_batch
+
+    table = f"{prefix}_{suffix}"
+    rows = rows.withColumn("_batch", F.lit(batch_id or "adhoc"))
+    n = int(rows.count())
+    aligned = rows.select(*[f.name for f in spark.table(table).schema])
+    if batch_id is not None:
+        _dynamic_overwrite_insert(spark, aligned, table)
+    else:
+        aligned.write.mode("append").format("parquet") \
+            .partitionBy("cell", "_batch").saveAsTable(table)
+    record_batch(spark, prefix, [table], batch_id)
+    _maybe_auto_compact(spark, prefix, table, auto_compact_files_per_cell,
+                        lambda: _compact_index_family(spark, prefix, suffix),
+                        committed_rows=n)
+    return n
 
 
 def _maybe_auto_compact(spark, prefix: str, table: str,
@@ -1913,31 +1912,28 @@ def pq_store_index(corpus: DataFrame, prefix: str, m: int = 8,
     small ints per vector — the only thing a query-time scan reads).
     The stored-artifact counterpart to bm25_store_index: fit once per
     corpus version, then every query batch is probe-only."""
-    from ..sources.readers import (invalidate_manifest, save_as_table,
+    from ..sources.readers import (index_commit, save_as_table,
                                    write_bucketed)
 
     model = pq_fit(corpus, m=m, codes=codes, iters=iters,
                    vec_col=vec_col)
     spark = corpus.sparkSession
+    names = [f"{prefix}_codebook", f"{prefix}_codes"]
     # bracket opens after the driver-side fit (writes nothing) — see
     # ivfpq_store_index for the not-ready-window rationale
-    invalidate_manifest(spark, prefix)
-    rows = [
-        (j, c, d, model["codebooks"][j][c][d])
-        for j in range(model["m"])
-        for c in range(len(model["codebooks"][j]))
-        for d in range(model["sub"])
-    ]
-    cb = spark.createDataFrame(
-        rows, "sub INT, cent INT, dim INT, val DOUBLE")
-    save_as_table(cb.write.mode("overwrite").format("parquet"),
-                  f"{prefix}_codebook")
-    enc = pq_encode(corpus, model, id_col, vec_col)
-    write_bucketed(enc, f"{prefix}_codes", id_col, n_buckets)
-    names = [f"{prefix}_codebook", f"{prefix}_codes"]
-    from ..sources.readers import write_manifest
-
-    write_manifest(spark, prefix, names)  # commit marker, written LAST
+    with index_commit(spark, prefix, names, "quarantine"):
+        rows = [
+            (j, c, d, model["codebooks"][j][c][d])
+            for j in range(model["m"])
+            for c in range(len(model["codebooks"][j]))
+            for d in range(model["sub"])
+        ]
+        cb = spark.createDataFrame(
+            rows, "sub INT, cent INT, dim INT, val DOUBLE")
+        save_as_table(cb.write.mode("overwrite").format("parquet"),
+                      f"{prefix}_codebook")
+        enc = pq_encode(corpus, model, id_col, vec_col)
+        write_bucketed(enc, f"{prefix}_codes", id_col, n_buckets)
     return names
 
 
@@ -2509,38 +2505,33 @@ def semdedup_store_corpus(corpus: DataFrame, centroids: list[list[float]],
     on cell, the ivfpq_store_index pattern). Commit marker
     ({prefix}_manifest) is written LAST — crash-atomic like every
     other *_store_* builder."""
-    from ..sources.readers import (clear_append_ledger,
-                                   invalidate_manifest, save_as_table,
-                                   write_manifest)
+    from ..sources.readers import (index_commit, rebuild_ledger,
+                                   save_as_table)
 
     spark = corpus.sparkSession
-    invalidate_manifest(spark, prefix)  # rebuild bracket: open
-    # new generation: appended batches are not in it — drop their
-    # ledger entries or re-delivery would be skipped (data loss);
-    # rebuild_includes_appends=True asserts `corpus` absorbed them
-    # all, waiving the quarantine inline (ADVICE r9)
-    clear_append_ledger(spark, prefix,
-                        includes_appends=rebuild_includes_appends)
-    cells = _semdedup_assigned(corpus, centroids, id_col, vec_col) \
-        .select(id_col, "cell", "cent_sim",
-                F.col("_v").alias("embedding"))
-    # (cell, _batch) two-level partitioning: same exactly-once append
-    # contract as the IVFADC codes table (see ivfpq_append_to_index)
-    save_as_table(
-        cells.withColumn("_batch", F.lit("base"))
-        .write.mode("overwrite").format("parquet")
-        .partitionBy("cell", "_batch"),
-        f"{prefix}_cells")
-    # model-identity artifact: the cells are only valid under the
-    # centroids that assigned them, so the fingerprint is part of the
-    # committed index (semdedup_index_current checks it at gate time)
-    fp = semdedup_model_fingerprint(centroids)
-    save_as_table(
-        spark.createDataFrame([(fp,)], "model_fp STRING")
-        .write.mode("overwrite").format("parquet"),
-        f"{prefix}_modelfp")
     names = [f"{prefix}_cells", f"{prefix}_modelfp"]
-    write_manifest(spark, prefix, names)
+    with index_commit(spark, prefix, names,
+                      rebuild_ledger(rebuild_includes_appends)):
+        cells = _semdedup_assigned(corpus, centroids, id_col, vec_col) \
+            .select(id_col, "cell", "cent_sim",
+                    F.col("_v").alias("embedding"))
+        # (cell, _batch) two-level partitioning: same exactly-once
+        # append contract as the IVFADC codes table (see
+        # ivfpq_append_to_index)
+        save_as_table(
+            cells.withColumn("_batch", F.lit("base"))
+            .write.mode("overwrite").format("parquet")
+            .partitionBy("cell", "_batch"),
+            f"{prefix}_cells")
+        # model-identity artifact: the cells are only valid under the
+        # centroids that assigned them, so the fingerprint is part of
+        # the committed index (semdedup_index_current checks it at
+        # gate time)
+        fp = semdedup_model_fingerprint(centroids)
+        save_as_table(
+            spark.createDataFrame([(fp,)], "model_fp STRING")
+            .write.mode("overwrite").format("parquet"),
+            f"{prefix}_modelfp")
     return names
 
 
@@ -2747,8 +2738,7 @@ def _compact_index_family(spark, prefix: str, table_suffix: str) -> dict:
     with no detection, which is within its stated at-least-once
     contract: use batch ids for anything you cannot lose."""
     from ..sources.readers import (compact_partitioned_table,
-                                   invalidate_manifest,
-                                   require_index_ready, write_manifest)
+                                   index_commit, require_index_ready)
 
     # same gate as the appends: compacting an uncommitted index gets
     # the designed ValueError, not a raw catalog error from the
@@ -2768,19 +2758,18 @@ def _compact_index_family(spark, prefix: str, table_suffix: str) -> dict:
     # append is gated on index_ready, so once the manifest is gone
     # new appends refuse to start — the only exposure left is an
     # append already past its gate when the invalidation lands
-    invalidate_manifest(spark, prefix)
-    stats = compact_partitioned_table(
-        spark, f"{prefix}_{table_suffix}", ["cell"])
-    raced = _ledger_ids() - before
-    if raced:
-        raise RuntimeError(
-            f"append(s) {sorted(raced)} committed during compaction of "
-            f"{prefix}_{table_suffix} — depending on timing their rows "
-            f"were either erased by the rewrite or absorbed into it; "
-            f"verify presence before re-ingesting under NEW batch ids "
-            f"(the old ids are burned in the ledger); the manifest is "
-            f"left invalidated so gated readers rebuild")
-    write_manifest(spark, prefix, manifest)
+    with index_commit(spark, prefix, manifest, "keep"):
+        stats = compact_partitioned_table(
+            spark, f"{prefix}_{table_suffix}", ["cell"])
+        raced = _ledger_ids() - before
+        if raced:
+            raise RuntimeError(
+                f"append(s) {sorted(raced)} committed during compaction "
+                f"of {prefix}_{table_suffix} — depending on timing their "
+                f"rows were either erased by the rewrite or absorbed "
+                f"into it; verify presence before re-ingesting under NEW "
+                f"batch ids (the old ids are burned in the ledger); the "
+                f"manifest is left invalidated so gated readers rebuild")
     return stats
 
 
@@ -2895,21 +2884,16 @@ def semdedup_append_corpus(spark, prefix: str, accepted: DataFrame,
                            centroids: list[list[float]],
                            id_col: str = "vec_id",
                            vec_col: str = "embedding",
-                           batch_id: str | None = None,
-                           auto_compact_files_per_cell: int | None = None
-                           ) -> int:
+                           batch_id: str | None = None) -> int:
     """The accept side of the incremental-SemDeDup loop: after
     semdedup_probe marks a batch, the KEPT members join the corpus —
     assign them (same frozen centroid model, pure projection) and
     land them in the cell-partitioned {prefix}_cells table, so the
     next batch's probe sees them. Returns rows appended. Same
-    frozen-model caveat, same EXACTLY-ONCE ``batch_id`` contract
+    frozen-model caveat and same EXACTLY-ONCE ``batch_id`` contract
     (ledger-gated idempotent dynamic partition overwrite; None ->
-    plain at-least-once append), and same append-path compaction
-    cadence (``auto_compact_files_per_cell``) as
-    ivfpq_append_to_index."""
-    from ..sources.readers import (append_recorded, record_append,
-                                   require_appendable)
+    plain at-least-once append) as ivfpq_append_to_index."""
+    from ..sources.readers import begin_append
 
     # model-identity gate, not just manifest presence: appending cells
     # assigned under a refit model into an old-model index would mix
@@ -2922,30 +2906,14 @@ def semdedup_append_corpus(spark, prefix: str, accepted: DataFrame,
             f"index under THESE centroids — the model was refit (or "
             f"the index is torn); rebuild with semdedup_store_corpus "
             f"before appending")
-    if batch_id is not None and append_recorded(spark, prefix, batch_id):
+    if not begin_append(spark, prefix, batch_id,
+                        "semdedup_append_corpus"):
         return 0
-    require_appendable(spark, prefix, batch_id, "semdedup_append_corpus")
     cells = _semdedup_assigned(accepted, centroids, id_col, vec_col) \
         .select(id_col, "cent_sim", F.col("_v").alias("embedding"),
-                "cell") \
-        .withColumn("_batch", F.lit(batch_id or "adhoc"))
-    # count() here is cheap, not a double-execute: the assignment is a
-    # pure JVM Column projection (no filter), so Catalyst prunes every
-    # cosine fold out of the count plan; only the write computes them
-    n = cells.count()
-    existing = [f.name for f in spark.table(f"{prefix}_cells").schema]
-    aligned = cells.select(*existing)
-    if batch_id is not None:
-        _dynamic_overwrite_insert(spark, aligned, f"{prefix}_cells")
-    else:
-        aligned.write.mode("append").format("parquet") \
-            .partitionBy("cell", "_batch").saveAsTable(f"{prefix}_cells")
-    # cross-session relation-cache refresh (see transactional_append)
-    spark.catalog.refreshTable(f"{prefix}_cells")
-    if batch_id is not None:
-        record_append(spark, prefix, batch_id)  # ledger LAST
-    _maybe_auto_compact(spark, prefix, f"{prefix}_cells",
-                        auto_compact_files_per_cell,
-                        lambda: semdedup_compact_corpus(spark, prefix),
-                        committed_rows=int(n))
-    return int(n)
+                "cell")
+    # the count inside _append_cells is cheap, not a double-execute:
+    # the assignment is a pure JVM Column projection (no filter), so
+    # Catalyst prunes every cosine fold out of the count plan; only
+    # the write computes them
+    return _append_cells(spark, prefix, "cells", cells, batch_id, None)

@@ -497,28 +497,20 @@ def bm25_store_index(docs: DataFrame, prefix: str, n_buckets: int = 8,
     probe's tf-to-dl join needs no exchange on either stored side;
     df/consts are small dimension tables the probe broadcasts anyway.
     Returns the table names written."""
-    from ..sources.readers import (clear_append_ledger,
-                                   invalidate_manifest, save_as_table,
-                                   write_bucketed)
+    from ..sources.readers import (index_commit, rebuild_ledger,
+                                   save_as_table, write_bucketed)
 
-    invalidate_manifest(docs.sparkSession, prefix)  # rebuild bracket: open
-    # new generation: appended batches are not in it — stale ledger
-    # entries would turn re-delivery into silent loss;
-    # rebuild_includes_appends=True asserts `docs` absorbed them all,
-    # waiving the quarantine inline (ADVICE r9)
-    clear_append_ledger(docs.sparkSession, prefix,
-                        includes_appends=rebuild_includes_appends)
-    idx = bm25_index(docs, id_col=id_col, text_col=text_col)
-    write_bucketed(idx["tf"], f"{prefix}_tf", id_col, n_buckets)
-    write_bucketed(idx["dl"], f"{prefix}_dl", id_col, n_buckets)
-    save_as_table(idx["df"].write.mode("overwrite").format("parquet"),
-                  f"{prefix}_df")
-    save_as_table(idx["consts"].write.mode("overwrite").format("parquet"),
-                  f"{prefix}_consts")
     names = [f"{prefix}_{s}" for s in ("tf", "dl", "df", "consts")]
-    from ..sources.readers import write_manifest
-
-    write_manifest(docs.sparkSession, prefix, names)  # commit marker LAST
+    with index_commit(docs.sparkSession, prefix, names,
+                      rebuild_ledger(rebuild_includes_appends)):
+        idx = bm25_index(docs, id_col=id_col, text_col=text_col)
+        write_bucketed(idx["tf"], f"{prefix}_tf", id_col, n_buckets)
+        write_bucketed(idx["dl"], f"{prefix}_dl", id_col, n_buckets)
+        save_as_table(idx["df"].write.mode("overwrite").format("parquet"),
+                      f"{prefix}_df")
+        save_as_table(
+            idx["consts"].write.mode("overwrite").format("parquet"),
+            f"{prefix}_consts")
     return names
 
 
@@ -549,8 +541,9 @@ def bm25_append_to_index(spark: SparkSession, prefix: str,
              scores are BIT-IDENTICAL to rebuilding on the union
              (test-asserted).
 
-    Transactional shape: the whole append runs inside the manifest
-    bracket (invalidated first, recommitted last) — a crash at ANY
+    Transactional shape (begin_append, then commit_append): the whole
+    append runs inside the manifest bracket (invalidated first,
+    recommitted last) — a crash at ANY
     point leaves the index not-ready and the gated reader rebuilds
     from source (which also clears the ledger). The ledger is
     recorded just before the recommit, so with a ``batch_id``
@@ -559,13 +552,11 @@ def bm25_append_to_index(spark: SparkSession, prefix: str,
     partitioned vector indexes there is no per-batch overwrite here
     — the bracket IS the idempotence mechanism, bought at
     rebuild-on-crash recovery cost."""
-    from ..sources.readers import (append_bucketed, append_recorded,
-                                   require_bucket_count,
-                                   require_index_ready, save_as_table,
-                                   transactional_append)
+    from ..sources.readers import (append_bucketed, begin_append,
+                                   commit_append, require_bucket_count,
+                                   save_as_table)
 
-    require_index_ready(spark, prefix, "bm25_append_to_index")
-    if batch_id is not None and append_recorded(spark, prefix, batch_id):
+    if not begin_append(spark, prefix, batch_id, "bm25_append_to_index"):
         return 0  # committed re-delivery: skip BEFORE any batch compute
     n_batch = new_docs.count()
     nb = require_bucket_count(spark, f"{prefix}_tf")
@@ -583,7 +574,8 @@ def bm25_append_to_index(spark: SparkSession, prefix: str,
     dl_b = tf_b.groupBy(id_col).agg(
         F.sum("tf").cast("long").alias("dl"))
 
-    def _write():
+    names = [f"{prefix}_{s}" for s in ("tf", "dl", "df", "consts")]
+    with commit_append(spark, prefix, names, batch_id):
         append_bucketed(tf_b, f"{prefix}_tf", id_col, nb)
         append_bucketed(dl_b, f"{prefix}_dl", id_col, nb)
         merged = (spark.table(f"{prefix}_df").unionByName(df_b)
@@ -601,12 +593,7 @@ def bm25_append_to_index(spark: SparkSession, prefix: str,
             "n_docs BIGINT, avgdl DOUBLE")
         save_as_table(consts.write.mode("overwrite").format("parquet"),
                       f"{prefix}_consts")
-
-    ran = transactional_append(
-        spark, prefix, [f"{prefix}_{s}" for s in ("tf", "dl", "df",
-                                                  "consts")],
-        batch_id, "bm25_append_to_index", _write, pre_checked=True)
-    return int(n_batch) if ran else 0
+    return int(n_batch)
 
 
 def bm25_topk_from_index(index: dict[str, DataFrame], queries: DataFrame,
@@ -796,23 +783,18 @@ def lm_store_model(docs: DataFrame, prefix: str, n_buckets: int = 8,
     next-round #5): big bucketed+sorted on w1 (the probe join's
     leading key), uni bucketed on w; vocab is one row. Returns the
     table names written."""
-    from ..sources.readers import (clear_append_ledger,
-                                   invalidate_manifest, save_as_table,
-                                   write_bucketed)
+    from ..sources.readers import (index_commit, rebuild_ledger,
+                                   save_as_table, write_bucketed)
 
-    invalidate_manifest(docs.sparkSession, prefix)  # rebuild bracket: open
-    clear_append_ledger(docs.sparkSession, prefix,  # new generation
-                        includes_appends=rebuild_includes_appends)
-    m = lm_model(docs, id_col=id_col, text_col=text_col)
-    write_bucketed(m["big"], f"{prefix}_big", "w1", n_buckets,
-                   sort_col="w1")
-    write_bucketed(m["uni"], f"{prefix}_uni", "w", n_buckets)
-    save_as_table(m["vocab"].write.mode("overwrite").format("parquet"),
-                  f"{prefix}_vocab")
     names = [f"{prefix}_{s}" for s in ("big", "uni", "vocab")]
-    from ..sources.readers import write_manifest
-
-    write_manifest(docs.sparkSession, prefix, names)  # commit marker LAST
+    with index_commit(docs.sparkSession, prefix, names,
+                      rebuild_ledger(rebuild_includes_appends)):
+        m = lm_model(docs, id_col=id_col, text_col=text_col)
+        write_bucketed(m["big"], f"{prefix}_big", "w1", n_buckets,
+                       sort_col="w1")
+        write_bucketed(m["uni"], f"{prefix}_uni", "w", n_buckets)
+        save_as_table(m["vocab"].write.mode("overwrite").format("parquet"),
+                      f"{prefix}_vocab")
     return names
 
 
@@ -839,12 +821,11 @@ def lm_append_to_model(spark: SparkSession, prefix: str,
     inside the manifest bracket, ledger recorded just before the
     recommit — crash anywhere -> not-ready -> gated rebuild (which
     clears the ledger); committed re-delivery -> no-op."""
-    from ..sources.readers import (append_recorded, require_bucket_count,
-                                   require_index_ready, save_as_table,
-                                   transactional_append, write_bucketed)
+    from ..sources.readers import (begin_append, commit_append,
+                                   require_bucket_count, save_as_table,
+                                   write_bucketed)
 
-    require_index_ready(spark, prefix, "lm_append_to_model")
-    if batch_id is not None and append_recorded(spark, prefix, batch_id):
+    if not begin_append(spark, prefix, batch_id, "lm_append_to_model"):
         return 0  # committed re-delivery: skip BEFORE any batch compute
     m = lm_model(new_docs, id_col=id_col, text_col=text_col)
     n_batch = new_docs.count()
@@ -859,17 +840,14 @@ def lm_append_to_model(spark: SparkSession, prefix: str,
                   .localCheckpoint(eager=True))
     vocab = merged_uni.agg(F.count(F.lit(1)).cast("long").alias("v"))
 
-    def _write():
+    names = [f"{prefix}_{s}" for s in ("big", "uni", "vocab")]
+    with commit_append(spark, prefix, names, batch_id):
         write_bucketed(merged_big, f"{prefix}_big", "w1", nb,
                        sort_col="w1")
         write_bucketed(merged_uni, f"{prefix}_uni", "w", nb)
         save_as_table(vocab.write.mode("overwrite").format("parquet"),
                       f"{prefix}_vocab")
-
-    ran = transactional_append(
-        spark, prefix, [f"{prefix}_{s}" for s in ("big", "uni", "vocab")],
-        batch_id, "lm_append_to_model", _write, pre_checked=True)
-    return int(n_batch) if ran else 0
+    return int(n_batch)
 
 
 def lm_read_model(spark: SparkSession, prefix: str) -> dict[str, DataFrame]:

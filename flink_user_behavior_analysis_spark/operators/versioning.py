@@ -146,10 +146,11 @@ def snapshot_store_fps(
     versioning shape at 100 TB: the old snapshot's text is read once
     when the version is cut, and every later diff probes hash-width
     rows on a co-partitioned layout (zero-exchange against a
-    same-bucketed candidate side). Same crash-atomic skeleton as the
-    other *_store_* builders: manifest invalidated first, commit
-    marker written LAST, so a crash mid-build reads as not-ready and
-    the caller rebuilds instead of diffing against half a version.
+    same-bucketed candidate side). Same crash-atomic bracket
+    (index_commit) as the other *_store_* builders: manifest
+    invalidated first, commit marker written LAST, so a crash
+    mid-build reads as not-ready and the caller rebuilds instead of
+    diffing against half a version.
 
     Like every other *_store_* rebuild, this clears the CDC append
     ledger under ``prefix`` (r13, closing the contract gap ADVICE
@@ -160,17 +161,16 @@ def snapshot_store_fps(
     re-deliver them (re-probe + re-stage are idempotent) or waive
     with acknowledge_cleared. The normal lifecycle never hits this:
     cycle-start builds see no ledger, and the in-cycle version cut
-    (snapshot_cdc_compact) clears with the includes_appends waiver
+    (snapshot_cut_version) clears with the ``waive`` handling
     because the cut absorbs the staged batches."""
-    from ..sources.readers import clear_append_ledger
+    from ..sources.readers import index_commit, write_bucketed
 
-    spark = snapshot.sparkSession
     keys = list(key_cols)
-    clear_append_ledger(spark, prefix)
-    return snapshot_cut_version(
-        spark, prefix,
-        fingerprint_snapshot(snapshot, keys, content_cols),
-        keys, n_buckets)
+    names = [f"{prefix}_fps"]
+    with index_commit(snapshot.sparkSession, prefix, names, "quarantine"):
+        write_bucketed(fingerprint_snapshot(snapshot, keys, content_cols),
+                       names[0], keys, n_buckets)
+    return names
 
 
 def snapshot_cut_version(
@@ -184,19 +184,25 @@ def snapshot_cut_version(
     rows — the CDC compaction path (VERDICT r11 #6), where the staged
     per-slice fingerprints union to the complete candidate snapshot
     and the content was already hashed on the wire, so the version cut
-    never rereads document text. Same crash-atomic bracket as every
-    *_store_* builder: manifest invalidated first, commit marker
-    written LAST — a crash mid-cut reads as not-ready and gated
-    probes refuse instead of diffing against half a version."""
-    from ..sources.readers import (invalidate_manifest, write_bucketed,
-                                   write_manifest)
+    never rereads document text. Same crash-atomic bracket
+    (index_commit) as every *_store_* builder: manifest invalidated
+    first, commit marker written LAST — a crash mid-cut reads as
+    not-ready and gated probes refuse instead of diffing against half
+    a version.
+
+    The cut is this family's rebuild, so the bracket clears the CDC
+    append ledger with the ``waive`` handling (ADVICE r12): the new
+    version IS the staged batches' union, so every ledgered id's data
+    is contained in it. The clear runs inside the bracket, before the
+    write; a crash anywhere in it leaves the manifest invalidated and
+    the cycle's ``_cut_pending`` marker refusing new slices, and a
+    re-run of snapshot_cdc_compact redoes the idempotent cut."""
+    from ..sources.readers import index_commit, write_bucketed
 
     keys = list(key_cols)
-    invalidate_manifest(spark, prefix)
-    write_bucketed(fps.select(*keys, "fp"), f"{prefix}_fps",
-                   keys[0] if len(keys) == 1 else keys, n_buckets)
     names = [f"{prefix}_fps"]
-    write_manifest(spark, prefix, names)
+    with index_commit(spark, prefix, names, "waive"):
+        write_bucketed(fps.select(*keys, "fp"), names[0], keys, n_buckets)
     return names
 
 

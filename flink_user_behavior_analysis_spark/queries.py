@@ -2516,35 +2516,34 @@ def profit_by_nation_year_bucketed(spark: SparkSession,
     plan with ZERO Exchange on the compound key (plan-asserted in
     tests/test_bucketed_join.py); the lone fact-sized exchange left
     is the orders join on orderkey. Build is manifest-gated
-    (invalidate-first / commit-last) like every stored artifact:
+    (index_commit: invalidate-first / commit-last) like every stored
+    artifact:
     bucket lineitem's 6-column projection once, then derive the cost
     table from the bucketed copy — exchange-free — and store it under
     the same bucket spec. Results are identical to the inline form
     (same oracle row-for-row)."""
     from .queries_pipeline import _artifact_tag
-    from .sources.readers import (index_ready, invalidate_manifest,
-                                  write_bucketed, write_manifest)
+    from .sources.readers import index_commit, index_ready, write_bucketed
 
     prefix = f"q9b_{_artifact_tag(sf_dir)}"
     li_t, costs_t = f"{prefix}_lineitem", f"{prefix}_costs"
     key = ["l_partkey", "l_suppkey"]
     if not index_ready(spark, prefix):
-        invalidate_manifest(spark, prefix)
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey", "l_suppkey", "l_quantity",
-            "l_extendedprice", "l_discount")
-        write_bucketed(li, li_t, key, Q9_BUCKETS, sort_col=key)
-        unit_cents = F.round(
-            F.col("l_extendedprice") * 100 / F.col("l_quantity")
-        ).cast("long")
-        costs = (spark.table(li_t)
-                 .groupBy(F.col("l_partkey").alias("ps_partkey"),
-                          F.col("l_suppkey").alias("ps_suppkey"))
-                 .agg(F.min(unit_cents).alias("ps_unitcost_cents")))
-        write_bucketed(costs, costs_t,
-                       ["ps_partkey", "ps_suppkey"], Q9_BUCKETS,
-                       sort_col=["ps_partkey", "ps_suppkey"])
-        write_manifest(spark, prefix, [li_t, costs_t])
+        with index_commit(spark, prefix, [li_t, costs_t], "quarantine"):
+            li = load_table(spark, sf_dir, "lineitem").select(
+                "l_orderkey", "l_partkey", "l_suppkey", "l_quantity",
+                "l_extendedprice", "l_discount")
+            write_bucketed(li, li_t, key, Q9_BUCKETS, sort_col=key)
+            unit_cents = F.round(
+                F.col("l_extendedprice") * 100 / F.col("l_quantity")
+            ).cast("long")
+            costs = (spark.table(li_t)
+                     .groupBy(F.col("l_partkey").alias("ps_partkey"),
+                              F.col("l_suppkey").alias("ps_suppkey"))
+                     .agg(F.min(unit_cents).alias("ps_unitcost_cents")))
+            write_bucketed(costs, costs_t,
+                           ["ps_partkey", "ps_suppkey"], Q9_BUCKETS,
+                           sort_col=["ps_partkey", "ps_suppkey"])
     return _q9_profit_rollup(spark, sf_dir,
                              spark.table(li_t), spark.table(costs_t))
 

@@ -33,7 +33,7 @@ from .operators import (
 )
 from .operators.text import LANG_STOPWORDS, TOKEN_RE, quality_score_col
 from .session import ensure_utc
-from .sources import load_table
+from .sources import load_table, readers
 
 JACCARD_T = 0.5
 COSINE_T = 0.4
@@ -238,27 +238,11 @@ def q_dedup_keeper_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clusters with quality-argmax keeper selection
     (operators/cluster.py:keeper_by_quality over text_stats scores)."""
     from .operators.cluster import keeper_by_quality
-    from .operators.dedup import _tracked_persist
 
     docs = _docs(spark, sf_dir)
     pairs = minhash_lsh_pairs(docs, JACCARD_T, k=MINHASH_K, bands=LSH_BANDS)
-    # overlap (r14, guide §2.6): the quality scan is independent of
-    # pair generation and of the components fixpoint that
-    # keeper_by_quality drives — materialize it on a driver thread so
-    # its tokenization pass back-fills executors while the fixpoint's
-    # per-round driver round-trips leave them idle. Same frames, only
-    # earlier; the tracked persist is released with the signature
-    # caches after the query materializes.
-    quality = _tracked_persist(
-        text_stats(docs).select("doc_id", "quality_score"))
-    q_fut = _start_action(quality)
-    try:
-        out = keeper_by_quality(docs, pairs, quality)
-    except BaseException:
-        _fail_action(q_fut)
-        raise
-    q_fut.result()
-    return out
+    return keeper_by_quality(
+        docs, pairs, text_stats(docs).select("doc_id", "quality_score"))
 
 
 def _keeper_quality_sql() -> str:
@@ -329,7 +313,7 @@ def q_dedup_incremental_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     is_delta = hash_uniform("doc_id", "delta") < DELTA_RATE
     prefix = f"dedup_{_artifact_tag(sf_dir)}"
-    if not _index_ready(spark, prefix):
+    if not readers.index_ready(spark, prefix):
         from .operators.dedup import dedup_store_corpus
 
         dedup_store_corpus(docs.where(~is_delta), prefix,
@@ -351,7 +335,7 @@ def q_duplicated_spans_inc_stored(spark: SparkSession,
     docs = _docs(spark, sf_dir)
     is_delta = hash_uniform("doc_id", "delta") < DELTA_RATE
     prefix = f"spans_{_artifact_tag(sf_dir)}"
-    if not _index_ready(spark, prefix):
+    if not readers.index_ready(spark, prefix):
         from .operators.chunking import span_store_counts
 
         span_store_counts(docs.where(~is_delta), prefix, SPAN_TOKENS)
@@ -725,45 +709,6 @@ def _artifact_tag(sf_dir: str) -> str:
     return _os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
 
 
-def _index_ready(spark: SparkSession, prefix: str) -> bool:
-    """Crash-atomic stored-index gate (VERDICT r6 #2): trust a stored
-    index only when its manifest — written LAST by every
-    *_store_* builder — exists and every table it lists exists. A
-    build that crashed between artifact writes therefore triggers a
-    rebuild instead of a permanent half-index failure."""
-    from .sources.readers import index_ready
-
-    return index_ready(spark, prefix)
-
-
-def _start_action(df: DataFrame):
-    """Materialize ``df`` (count) on a driver thread and return the
-    Future — the guide-§2.6 overlap pattern: Spark happily runs
-    several jobs at once inside one application, actions are only
-    sequential because driver code calls them sequentially. Used to
-    compute an independent subtree (e.g. the brute-force truth scan)
-    WHILE the driver coordinates an iterative fit, whose per-round
-    collect()/numpy sections otherwise leave the executors idle.
-    Changes nothing about what is computed — only when. Callers must
-    .result() the future (it rethrows the action's exception)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    pool = ThreadPoolExecutor(max_workers=1)
-    fut = pool.submit(df.count)
-    pool.shutdown(wait=False)
-    return fut
-
-
-def _fail_action(fut) -> None:
-    """Await an overlapped action after a main-path failure, swallowing
-    its own error so the primary exception propagates unmasked (and no
-    background job is left running)."""
-    try:
-        fut.result()
-    except Exception:
-        pass
-
-
 def q_bm25_topk_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PRODUCTION BM25 shape (VERDICT r4 next-round #5): the inverted
     index is a STORED artifact — built once per (corpus, sf) into
@@ -780,7 +725,7 @@ def q_bm25_topk_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     prefix = f"bm25_{_artifact_tag(sf_dir)}"
-    if not _index_ready(spark, prefix):
+    if not readers.index_ready(spark, prefix):
         bm25_store_index(_docs(spark, sf_dir), prefix)
     qdf = spark.createDataFrame(BM25_QUERIES,
                                 "query_id long, query_text string")
@@ -796,7 +741,7 @@ def q_lm_score_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.text import lm_read_model, lm_score_from_model, lm_store_model
 
     prefix = f"lm_{_artifact_tag(sf_dir)}"
-    if not _index_ready(spark, prefix):
+    if not readers.index_ready(spark, prefix):
         lm_store_model(_docs(spark, sf_dir), prefix)
     return lm_score_from_model(lm_read_model(spark, prefix),
                                _docs(spark, sf_dir))
@@ -886,9 +831,9 @@ def q_dsir_select_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     tag = _artifact_tag(sf_dir)
     prefix_r, prefix_t = f"dsirraw_{tag}", f"dsirtgt_{tag}"
-    if not _index_ready(spark, prefix_r):
+    if not readers.index_ready(spark, prefix_r):
         lm_store_model(docs, prefix_r)
-    if not _index_ready(spark, prefix_t):
+    if not readers.index_ready(spark, prefix_t):
         lm_store_model(
             docs.where(F.col("source").isin(*DSIR_TARGET_SOURCES)),
             prefix_t)
@@ -943,9 +888,9 @@ def q_dsir_resample_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     tag = _artifact_tag(sf_dir)
     prefix_r, prefix_t = f"dsirraw_{tag}", f"dsirtgt_{tag}"
-    if not _index_ready(spark, prefix_r):
+    if not readers.index_ready(spark, prefix_r):
         lm_store_model(docs, prefix_r)
-    if not _index_ready(spark, prefix_t):
+    if not readers.index_ready(spark, prefix_t):
         lm_store_model(
             docs.where(F.col("source").isin(*DSIR_TARGET_SOURCES)),
             prefix_t)
@@ -1802,7 +1747,7 @@ def q_contamination_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     is_eval = hash_uniform("doc_id", "eval") < CONTAM_RATE
     prefix = f"contam_{_artifact_tag(sf_dir)}"
-    if not _index_ready(spark, prefix):
+    if not readers.index_ready(spark, prefix):
         contam_store_grams(docs.where(~is_eval), prefix, n=CONTAM_N)
     return contamination_from_store(spark, prefix,
                                     docs.where(is_eval), n=CONTAM_N)
@@ -2068,60 +2013,44 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # quality is a pure per-row projection, so the filter inlines as a
     # scan predicate — no join, no shuffle
     d1 = train.where(quality_score_col("text") >= CURATION_QMIN)
-    # overlap (r14, guide §2.6): the contamination gram table depends
-    # only on the EVAL split, not on d1/d2/d3 — materialize it on a
-    # driver thread while the exact-dedup checkpoint, the LSH pair
-    # generation and the components fixpoint run, instead of paying
-    # its shingle pass serially inside d4's checkpoint. Persisted so
-    # the broadcast build below reads the cached rows; released by
-    # the session-level release_signature_cache like every other
-    # tracked frame. Same frames computed, only earlier.
-    from .operators.dedup import _tracked_persist
+    # exact dedup as ONE min-window pass (r15, §2.4): the old
+    # groupBy(_fp).min + join-back form evaluated the d1 subtree —
+    # regex-heavy quality filter + normalize + md5 — TWICE inside
+    # the d2 checkpoint job (once per join side). min(doc_id) over
+    # a fingerprint window keeps exactly the same rows (the min-id
+    # doc per fp; doc_id is unique) off a single evaluation.
+    # A/B same-window min-of-4: 1.79 -> 1.19 s / 1.80 -> 0.98 s.
+    # Fp keys are md5 — the skew study (§4 / tests/
+    # test_skew_window_choice.py) covers the hot-key exposure.
+    from pyspark.sql import Window
 
-    ev_grams = _tracked_persist(
+    w_fp = Window.partitionBy("_fp")
+    # EAGER checkpoints, deliberately (r14, guide §1.2): the lazy
+    # variant (materialize inside the next consumer's first job)
+    # was A/B-tested and measured ~0.7 s SLOWER here (9.59 vs 8.90
+    # min-of-3 same-session) — each stage materializing with full
+    # 32-way parallelism beats folding it into the next consumer's
+    # job, whose first action is narrower. connected_components'
+    # per-round checkpoints are the opposite case (see cluster.py).
+    d2 = (
+        d1.withColumn("_fp", F.md5(normalized_text("text")))
+        .withColumn("_min", F.min("doc_id").over(w_fp))
+        .where(F.col("_min") == F.col("doc_id"))
+        .drop("_fp", "_min")
+        .localCheckpoint(eager=True)
+    )
+    pairs = minhash_lsh_pairs(d2, JACCARD_T, k=MINHASH_K,
+                              bands=LSH_BANDS)
+    comp = connected_components(d2.select("doc_id"), pairs,
+                                id_col="doc_id")
+    keepers = comp.where(
+        F.col("doc_id") == F.col("component")).select("doc_id")
+    d3 = d2.join(keepers, "doc_id").localCheckpoint(eager=True)
+    ev_grams = (
         with_shingles(eval_docs, n=CONTAM_N)
         .select(F.explode_outer("shingles").alias("gram"))
         .where(F.col("gram").isNotNull()).distinct()
     )
-    ev_fut = _start_action(ev_grams)
-    try:
-        # exact dedup as ONE min-window pass (r15, §2.4): the old
-        # groupBy(_fp).min + join-back form evaluated the d1 subtree —
-        # regex-heavy quality filter + normalize + md5 — TWICE inside
-        # the d2 checkpoint job (once per join side). min(doc_id) over
-        # a fingerprint window keeps exactly the same rows (the min-id
-        # doc per fp; doc_id is unique) off a single evaluation.
-        # A/B same-window min-of-4: 1.79 -> 1.19 s / 1.80 -> 0.98 s.
-        # Fp keys are md5 — the skew study (§4 / tests/
-        # test_skew_window_choice.py) covers the hot-key exposure.
-        from pyspark.sql import Window
-
-        w_fp = Window.partitionBy("_fp")
-        # EAGER checkpoints, deliberately (r14, guide §1.2): the lazy
-        # variant (materialize inside the next consumer's first job)
-        # was A/B-tested and measured ~0.7 s SLOWER here (9.59 vs 8.90
-        # min-of-3 same-session) — each stage materializing with full
-        # 32-way parallelism beats folding it into the next consumer's
-        # job, whose first action is narrower. connected_components'
-        # per-round checkpoints are the opposite case (see cluster.py).
-        d2 = (
-            d1.withColumn("_fp", F.md5(normalized_text("text")))
-            .withColumn("_min", F.min("doc_id").over(w_fp))
-            .where(F.col("_min") == F.col("doc_id"))
-            .drop("_fp", "_min")
-            .localCheckpoint(eager=True)
-        )
-        pairs = minhash_lsh_pairs(d2, JACCARD_T, k=MINHASH_K,
-                                  bands=LSH_BANDS)
-        comp = connected_components(d2.select("doc_id"), pairs,
-                                    id_col="doc_id")
-        keepers = comp.where(
-            F.col("doc_id") == F.col("component")).select("doc_id")
-        d3 = d2.join(keepers, "doc_id").localCheckpoint(eager=True)
-    except BaseException:
-        _fail_action(ev_fut)
-        raise
-    ev_fut.result()
     tr_grams = with_shingles(d3, n=CONTAM_N).select(
         "doc_id", F.explode_outer("shingles").alias("gram")
     ).where(F.col("gram").isNotNull())
@@ -2715,7 +2644,7 @@ def q_hybrid_retrieval_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     prefix = f"bm25_{_artifact_tag(sf_dir)}"
-    if not _index_ready(spark, prefix):
+    if not readers.index_ready(spark, prefix):
         from .operators.text import bm25_store_index
 
         bm25_store_index(_docs(spark, sf_dir), prefix)
@@ -3101,25 +3030,17 @@ def q_ann_topk_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     determinism + cell balance stay pytest-gated
     (tests/test_pipeline_ops.py:test_ivf_trained_deterministic_and_recall).
     """
-    from .operators.dedup import _tracked_persist
     from .operators.similarity import brute_force_topk_arrow, ivf_topk_trained
 
     embs = _embs(spark, sf_dir)
     queries = embs.where(F.col("vec_id") < ANN_QUERY_MAX_ID)
-    # overlap (guide §2.6): the brute-force truth scan is independent
-    # of the k-means fit, so its job runs WHILE the fit's per-round
-    # driver sections would otherwise leave the executors idle
-    truth = _tracked_persist(brute_force_topk_arrow(queries, embs, ANN_K))
-    fut = _start_action(truth)
-    try:
-        trained = ivf_topk_trained(queries, embs, ANN_K,
-                                   n_centroids=IVF_K, nprobe=IVF_NPROBE,
-                                   train_iters=2)
-    except BaseException:
-        _fail_action(fut)
-        raise
-    return _ann_certificate(spark, queries, trained, truth,
-                            IVF_TRAINED_RECALL_FLOOR, truth_fut=fut)
+    trained = ivf_topk_trained(queries, embs, ANN_K,
+                               n_centroids=IVF_K, nprobe=IVF_NPROBE,
+                               train_iters=2)
+    return _ann_certificate(
+        spark, queries, trained,
+        _materialized(brute_force_topk_arrow(queries, embs, ANN_K)),
+        IVF_TRAINED_RECALL_FLOOR)
 
 
 def _bad_rank_agg(approx: DataFrame) -> DataFrame:
@@ -3134,9 +3055,20 @@ def _bad_rank_agg(approx: DataFrame) -> DataFrame:
     )
 
 
+def _materialized(df: DataFrame) -> DataFrame:
+    """``df`` persisted (tracked — released with the signature caches)
+    and materialized now, so the plans that read it twice hit the
+    cache instead of each recomputing it."""
+    from .operators.dedup import _tracked_persist
+
+    df = _tracked_persist(df)
+    df.count()
+    return df
+
+
 def _ann_certificate(spark: SparkSession, queries: DataFrame,
                      approx: DataFrame, truth: DataFrame,
-                     floor: float, truth_fut=None) -> DataFrame:
+                     floor: float) -> DataFrame:
     """The shared certificate row for the iterative-ANN queries:
     exact n_queries/k, recall@k vs brute force >= floor, contiguous
     ranks.
@@ -3147,24 +3079,14 @@ def _ann_certificate(spark: SparkSession, queries: DataFrame,
     They are now four 1-row aggregate subtrees cross-joined into ONE
     lazy plan, so a single action computes them and Spark schedules
     the independent subtrees' stages concurrently. ``approx`` is
-    persisted (tracked — bench/engine call release_signature_cache
-    after materializing) and materialized once up front so the two
-    subtrees that read it (hit join, rank audit) hit cache instead of
-    racing to recompute the ADC/assignment scan; ``truth`` is either
-    pre-materialized by the caller's overlapped job (``truth_fut``,
-    see _start_action) or cheap to read twice (a stored table).
-    recall_ok is the same IEEE double compare as the old
-    ``int(n_hit / n_truth >= floor)`` — bit-identical output."""
-    from .operators.dedup import _tracked_persist
-
-    approx = _tracked_persist(approx)
-    try:
-        approx.count()
-    finally:
-        # await the overlapped truth scan even when the approx
-        # materialization fails — no leaked background job
-        if truth_fut is not None:
-            truth_fut.result()
+    materialized once up front (_materialized) so the two subtrees
+    that read it (hit join, rank audit) hit cache instead of racing
+    to recompute the ADC/assignment scan; ``truth`` is either
+    materialized by the caller the same way or cheap to read twice
+    (a stored table). recall_ok is the same IEEE double compare as
+    the old ``int(n_hit / n_truth >= floor)`` — bit-identical
+    output."""
+    approx = _materialized(approx)
     nq = queries.agg(F.count(F.lit(1)).alias("n_queries"))
     nt = truth.agg(F.count(F.lit(1)).alias("_nt"))
     nh = (
@@ -3185,7 +3107,10 @@ def _ann_certificate(spark: SparkSession, queries: DataFrame,
     )
 
 
-ANN_TOPK_IVF_TRAINED_SQL = f"""
+# the oracle of every _ann_certificate row (ann_topk_ivf_trained,
+# ann_topk_pq, ann_topk_ivfpq, ann_topk_ivfpq_stored): exact
+# n_queries and k, and both certificates held
+ANN_CERTIFICATE_SQL = f"""
 SELECT (SELECT COUNT(*) FROM embeddings
         WHERE vec_id < {ANN_QUERY_MAX_ID})::BIGINT AS n_queries,
        {ANN_K}::BIGINT AS k,
@@ -3209,30 +3134,16 @@ def q_ann_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_queries / k exactly, recall@k vs in-query brute force >= floor,
     ranks contiguous 1..n per query. Raw neighbor rows via pq_topk;
     determinism + code validity stay pytest-gated."""
-    from .operators.dedup import _tracked_persist
     from .operators.similarity import brute_force_topk_arrow, pq_topk
 
     embs = _embs(spark, sf_dir)
     queries = embs.where(F.col("vec_id") < ANN_QUERY_MAX_ID)
-    # overlap (guide §2.6): truth is independent of the PQ fit
-    truth = _tracked_persist(brute_force_topk_arrow(queries, embs, ANN_K))
-    fut = _start_action(truth)
-    try:
-        approx = pq_topk(queries, embs, ANN_K, m=PQ_M, codes=PQ_CODES,
-                         train_iters=2)
-    except BaseException:
-        _fail_action(fut)
-        raise
-    return _ann_certificate(spark, queries, approx, truth,
-                            PQ_RECALL_FLOOR, truth_fut=fut)
-
-
-ANN_TOPK_PQ_SQL = f"""
-SELECT (SELECT COUNT(*) FROM embeddings
-        WHERE vec_id < {ANN_QUERY_MAX_ID})::BIGINT AS n_queries,
-       {ANN_K}::BIGINT AS k,
-       1::BIGINT AS recall_ok, 1::BIGINT AS ranks_ok
-"""
+    approx = pq_topk(queries, embs, ANN_K, m=PQ_M, codes=PQ_CODES,
+                     train_iters=2)
+    return _ann_certificate(
+        spark, queries, approx,
+        _materialized(brute_force_topk_arrow(queries, embs, ANN_K)),
+        PQ_RECALL_FLOOR)
 
 
 # deterministic recalls (content-hash init, fixed-point updates) with
@@ -3254,31 +3165,17 @@ def q_ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     force >= floor, contiguous ranks. (That routing actually prunes
     is pytest-gated: the probed candidate set must be a strict
     subset of the corpus.)"""
-    from .operators.dedup import _tracked_persist
     from .operators.similarity import brute_force_topk_arrow, ivfpq_topk
 
     embs = _embs(spark, sf_dir)
     queries = embs.where(F.col("vec_id") < ANN_QUERY_MAX_ID)
-    # overlap (guide §2.6): truth is independent of both IVFADC fits
-    truth = _tracked_persist(brute_force_topk_arrow(queries, embs, ANN_K))
-    fut = _start_action(truth)
-    try:
-        approx = ivfpq_topk(queries, embs, ANN_K,
-                            n_centroids=IVFPQ_CELLS, nprobe=IVFPQ_NPROBE,
-                            m=IVFPQ_M, codes=IVFPQ_CODES)
-    except BaseException:
-        _fail_action(fut)
-        raise
-    return _ann_certificate(spark, queries, approx, truth,
-                            IVFPQ_RECALL_FLOOR, truth_fut=fut)
-
-
-ANN_TOPK_IVFPQ_SQL = f"""
-SELECT (SELECT COUNT(*) FROM embeddings
-        WHERE vec_id < {ANN_QUERY_MAX_ID})::BIGINT AS n_queries,
-       {ANN_K}::BIGINT AS k,
-       1::BIGINT AS recall_ok, 1::BIGINT AS ranks_ok
-"""
+    approx = ivfpq_topk(queries, embs, ANN_K,
+                        n_centroids=IVFPQ_CELLS, nprobe=IVFPQ_NPROBE,
+                        m=IVFPQ_M, codes=IVFPQ_CODES)
+    return _ann_certificate(
+        spark, queries, approx,
+        _materialized(brute_force_topk_arrow(queries, embs, ANN_K)),
+        IVFPQ_RECALL_FLOOR)
 
 
 def q_ann_topk_ivfpq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3300,7 +3197,7 @@ def q_ann_topk_ivfpq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix = f"ivfpq_{_artifact_tag(sf_dir)}"
     embs = _embs(spark, sf_dir)
     queries = embs.where(F.col("vec_id") < ANN_QUERY_MAX_ID)
-    if not _index_ready(spark, prefix):
+    if not readers.index_ready(spark, prefix):
         from .operators.similarity import ivfpq_store_index
 
         ivfpq_store_index(embs, prefix, n_centroids=IVFPQ_CELLS,
@@ -3312,9 +3209,6 @@ def q_ann_topk_ivfpq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = spark.table(f"{prefix}_truth")
     return _ann_certificate(spark, queries, approx, truth,
                             IVFPQ_RECALL_FLOOR)
-
-
-ANN_TOPK_IVFPQ_STORED_SQL = ANN_TOPK_IVFPQ_SQL
 
 
 def q_ann_topk_pq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3329,7 +3223,7 @@ def q_ann_topk_pq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import pq_read_index, pq_topk
 
     prefix = f"pq_{_artifact_tag(sf_dir)}"
-    if not _index_ready(spark, prefix):
+    if not readers.index_ready(spark, prefix):
         from .operators.similarity import pq_store_index
 
         pq_store_index(_embs(spark, sf_dir), prefix,
@@ -3342,10 +3236,7 @@ def q_ann_topk_pq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver actions (the _ann_certificate r14 shape); approx is
     # persisted+materialized once so the row-count and rank-audit
     # subtrees read cache instead of re-running the ADC probe
-    from .operators.dedup import _tracked_persist
-
-    approx = _tracked_persist(approx)
-    approx.count()
+    approx = _materialized(approx)
     nq = queries.agg(F.count(F.lit(1)).alias("n_queries"))
     nr = approx.agg(F.count(F.lit(1)).alias("_nr"))
     nb = _bad_rank_agg(approx)
@@ -3396,7 +3287,7 @@ def q_ann_topk_filtered_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix = f"ivfpqf_{_artifact_tag(sf_dir)}"
     embs = _embs(spark, sf_dir)
     queries = embs.where(F.col("vec_id") < ANN_QUERY_MAX_ID)
-    if not _index_ready(spark, prefix):
+    if not readers.index_ready(spark, prefix):
         ivfpq_store_index(embs, prefix, n_centroids=IVFPQ_CELLS,
                           m=IVFPQ_M, codes=IVFPQ_CODES,
                           coarse_iters=2, pq_iters=2,
@@ -3406,10 +3297,7 @@ def q_ann_topk_filtered_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label") == ANN_FILTER_LABEL, nprobe=IVFPQ_NPROBE)
     # one combined certificate plan instead of three sequential
     # driver actions (the _ann_certificate r14 shape)
-    from .operators.dedup import _tracked_persist
-
-    approx = _tracked_persist(approx)
-    approx.count()
+    approx = _materialized(approx)
     nq = queries.agg(F.count(F.lit(1)).alias("n_queries"))
     nl = (
         approx.select(F.col("neighbor_id").alias("vec_id"))
@@ -3947,7 +3835,7 @@ def q_snapshot_diff_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
     )
     prefix = f"snapfp_{_artifact_tag(sf_dir)}"
-    if not _index_ready(spark, prefix):
+    if not readers.index_ready(spark, prefix):
         snapshot_store_fps(old, prefix, ["doc_id"], ["text", "source"])
     return snapshot_diff_from_store(spark, prefix, new,
                                     ["doc_id"], ["text", "source"])
@@ -4178,7 +4066,7 @@ def q_ann_recall_ivfpq_stored(spark: SparkSession,
     prefix = f"ivfpq_{_artifact_tag(sf_dir)}"
     embs = _embs(spark, sf_dir)
     queries = embs.where(F.col("vec_id") < ANN_QUERY_MAX_ID)
-    if not _index_ready(spark, prefix):
+    if not readers.index_ready(spark, prefix):
         from .operators.similarity import ivfpq_store_index
 
         ivfpq_store_index(embs, prefix, n_centroids=IVFPQ_CELLS,
@@ -4206,7 +4094,7 @@ def q_ann_recall_pq_stored(spark: SparkSession,
                                        pq_read_index, pq_topk)
 
     prefix = f"pq_{_artifact_tag(sf_dir)}"
-    if not _index_ready(spark, prefix):
+    if not readers.index_ready(spark, prefix):
         from .operators.similarity import pq_store_index
 
         pq_store_index(_embs(spark, sf_dir), prefix,
@@ -4362,8 +4250,8 @@ PIPELINE_ORACLES: dict[str, str] = {
     "hybrid_retrieval": _hybrid_sql(),
     "hybrid_retrieval_stored": _hybrid_sql(),
     "source_quantiles": _source_quantiles_sql(),
-    "ann_topk_ivfpq": ANN_TOPK_IVFPQ_SQL,
-    "ann_topk_ivfpq_stored": ANN_TOPK_IVFPQ_STORED_SQL,
+    "ann_topk_ivfpq": ANN_CERTIFICATE_SQL,
+    "ann_topk_ivfpq_stored": ANN_CERTIFICATE_SQL,
     "ann_topk_pq_stored": ANN_TOPK_PQ_STORED_SQL,
     # same recursive-CTE oracle as dedup_clusters: the star algorithm
     # must reproduce min-label's labeling exactly
@@ -4380,8 +4268,8 @@ PIPELINE_ORACLES: dict[str, str] = {
     "winnow_overlap": _winnow_overlap_sql(),
     # self-certifying forms (r5): the oracle pins the SQL-computable
     # facts (query/corpus counts) and demands every certificate be 1
-    "ann_topk_ivf_trained": ANN_TOPK_IVF_TRAINED_SQL,
-    "ann_topk_pq": ANN_TOPK_PQ_SQL,
+    "ann_topk_ivf_trained": ANN_CERTIFICATE_SQL,
+    "ann_topk_pq": ANN_CERTIFICATE_SQL,
     "pca_embed": PCA_EMBED_SQL,
     # stored-artifact probe paths (r5): same oracles as the inline
     # builds — probe-only ≡ inline-build is exactly the claim

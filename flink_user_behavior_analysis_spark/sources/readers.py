@@ -20,6 +20,7 @@ explain(): PushedFilters / ReadSchema on parquet).
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -410,7 +411,8 @@ def save_as_table(writer, table: str) -> None:
 def write_manifest(spark, prefix: str, artifacts: list[str]) -> str:
     """Crash-atomicity marker for multi-table stored indexes (VERDICT
     r6 #2): a build that writes N artifact tables commits by writing
-    ``{prefix}_manifest`` LAST, listing every artifact it produced.
+    ``{prefix}_manifest`` LAST, listing every artifact it produced
+    (index_commit is its one caller).
     A crash between artifact writes leaves no manifest — readers that
     gate on ``index_ready`` then rebuild (overwrite is idempotent)
     instead of trusting a half-index forever. The manifest is one
@@ -430,8 +432,8 @@ def invalidate_manifest(spark, prefix: str) -> None:
     for first builds: a rebuild that overwrites artifact #1 and then
     crashes leaves the OLD manifest pointing at a mixed-generation index
     that ``index_ready`` would keep trusting forever. Invalidate-first /
-    commit-last brackets the whole rebuild so any crash inside it reads
-    as "not ready → rebuild"."""
+    commit-last (index_commit) brackets the whole rebuild so any crash
+    inside it reads as "not ready → rebuild"."""
     spark.sql(f"DROP TABLE IF EXISTS {prefix}_manifest")
 
 
@@ -449,8 +451,8 @@ def index_ready(spark, prefix: str) -> bool:
 
 def clear_append_ledger(spark, prefix: str,
                         includes_appends: bool = False) -> list[str]:
-    """Drop ``{prefix}_appends`` — REBUILDS must call this (builders
-    do, inside their invalidate-first bracket): a rebuilt index is a
+    """Drop ``{prefix}_appends`` — every REBUILD does, through
+    index_commit's ``quarantine``/``waive`` handling: a rebuilt index is a
     new generation containing only the source corpus, so previously
     appended batches' data is gone — if their ledger entries
     survived, an at-least-once re-delivery would be skipped and the
@@ -607,16 +609,15 @@ def record_append(spark, prefix: str, batch_id: str) -> None:
     modes a stored family must pick (do NOT write a marker-last
     append without one of them):
 
-    1. IDEMPOTENT DATA WRITE (ivfpq/semdedup): the write is a
-       dynamic-partition overwrite keyed on the batch, so a retry
-       replaces that batch's partitions, never duplicates them.
-    2. MANIFEST-BRACKET TRANSACTION (bm25/lm/minhash/spans, via
-       transactional_append): the whole append runs between
-       invalidate_manifest and write_manifest, with the marker
-       recorded just before the recommit — a crash anywhere leaves
-       the index not-ready, the gated reader rebuilds from source,
-       and the rebuild clears this ledger; the retry then lands on
-       the fresh index."""
+    1. IDEMPOTENT DATA WRITE (ivfpq/semdedup, CDC staging, via
+       record_batch): the write is an overwrite keyed on the batch,
+       so a retry replaces that batch's data, never duplicates it.
+    2. MANIFEST-BRACKET TRANSACTION (bm25/lm/minhash/spans/grams,
+       via commit_append): the whole append runs inside
+       index_commit, with the marker recorded just before the
+       recommit — a crash anywhere leaves the index not-ready, the
+       gated reader rebuilds from source, and the rebuild clears
+       this ledger; the retry then lands on the fresh index."""
     spark.createDataFrame([(batch_id,)], "batch_id STRING") \
         .write.mode("append").format("parquet") \
         .saveAsTable(f"{prefix}_appends")
@@ -657,51 +658,92 @@ def append_bucketed(df, table: str, bucket_col: str,
         .bucketBy(n_buckets, bucket_col).saveAsTable(table)
 
 
-def transactional_append(spark, prefix: str, names: list[str],
-                         batch_id: str | None, caller: str,
-                         write_fn, pre_checked: bool = False) -> bool:
-    """THE shared skeleton of a manifest-bracket transactional append
-    — one implementation so the six stored families cannot drift:
+def rebuild_ledger(includes_appends: bool) -> str:
+    """The ledger handling of a ``*_store_*`` rebuild's index_commit:
+    ``waive`` when the caller asserts its source corpus contains every
+    appended batch (``rebuild_includes_appends=True``), else
+    ``quarantine``."""
+    return "waive" if includes_appends else "quarantine"
 
-      1. refuse if the index is not committed (require_index_ready);
-      2. ledger hit -> return False (committed re-delivery no-op);
-      3. invalidate the manifest (transaction open);
-      4. ``write_fn()`` performs the family's data writes;
-      5. record the ledger entry (just BEFORE the recommit: a crash
-         here reads as not-ready -> rebuild -> ledger cleared);
-      6. recommit the manifest (transaction close).
 
-    A crash at any point between 3 and 6 leaves the index not-ready;
-    the gated reader rebuilds from source and clears the ledger, so
-    a retry of the batch lands exactly once. Returns True if the
-    append ran, False if it was a ledger-skipped re-delivery.
+@contextmanager
+def index_commit(spark, prefix: str, names: list[str], ledger: str):
+    """THE commit bracket of every stored index — builds, rebuilds,
+    version cuts, compactions and manifest-bracket appends all write
+    inside it, so no family carries its own copy of the protocol:
 
-    ``pre_checked``: the caller already ran steps 1-2 itself (to
-    skip its batch compute on a re-delivery) — don't pay the
-    manifest and ledger scans twice per append."""
-    if not pre_checked:
-        require_index_ready(spark, prefix, caller)
-        if (batch_id is not None
-                and append_recorded(spark, prefix, batch_id)):
-            return False
-    # always gated here (even pre_checked) so no family can commit a
-    # new batch past a rebuild-discarded one — see require_appendable
-    require_appendable(spark, prefix, batch_id, caller)
+      1. invalidate ``{prefix}_manifest`` — from here on a crash reads
+         as not-ready and the gated reader rebuilds;
+      2. handle the append ledger (see clear_append_ledger):
+         ``quarantine`` — a rebuild's new generation lacks the
+         appended batches, so their ids are quarantined;
+         ``waive`` — the same clear, with the caller asserting the new
+         generation contains those batches (rebuild_includes_appends,
+         the CDC version cut); ``keep`` — the ledger is untouched
+         (a compaction absorbs the batches, an append adds one);
+      3. the ``with`` body runs the family's writes, looking up the
+         writers (write_bucketed, save_as_table, ...) on this module
+         at call time;
+      4. commit the manifest listing ``names``, LAST.
+
+    An exception in the body propagates with the manifest still
+    invalidated."""
     invalidate_manifest(spark, prefix)
-    write_fn()
-    # the write may have executed under a DIFFERENT SparkSession than
-    # ``spark`` (foreachBatch hands the ingest a per-query CLONE whose
-    # DataFrames carry it through every derived write) — sessions
-    # share the external catalog and the files but each caches table
-    # relations separately, so without a refresh the caller's session
-    # keeps serving the PRE-APPEND file listing for these tables
-    # (r9: streaming-ingest test caught exactly this)
-    for t in names:
+    if ledger != "keep":
+        clear_append_ledger(spark, prefix,
+                            includes_appends=ledger == "waive")
+    yield
+    write_manifest(spark, prefix, names)
+
+
+def begin_append(spark, prefix: str, batch_id: str | None,
+                 caller: str) -> bool:
+    """THE entry of every ledgered append, run before any batch
+    compute: refuse an uncommitted index (require_index_ready); return
+    False for a committed re-delivery (ledger hit — the caller returns
+    without computing anything); refuse a NEW batch while
+    rebuild-discarded ids are pending (require_appendable). True means
+    the batch runs and commits through commit_append (manifest-bracket
+    families) or record_batch (idempotent-write families)."""
+    require_index_ready(spark, prefix, caller)
+    if batch_id is not None and append_recorded(spark, prefix, batch_id):
+        return False
+    require_appendable(spark, prefix, batch_id, caller)
+    return True
+
+
+def record_batch(spark, prefix: str, tables: list[str],
+                 batch_id: str | None) -> None:
+    """The ledger-last step of an append, after its data writes:
+    refresh ``tables`` in ``spark``, then record ``batch_id``
+    (``None``, an ad-hoc at-least-once append, records nothing).
+
+    The writes may have run under a DIFFERENT SparkSession than
+    ``spark`` (foreachBatch hands the ingest a per-query CLONE whose
+    DataFrames carry it through every derived write); sessions share
+    the external catalog and the files but each caches table
+    relations separately, so without the refresh ``spark`` keeps
+    serving the pre-append file listing of these tables."""
+    for t in tables:
         spark.catalog.refreshTable(t)
     if batch_id is not None:
         record_append(spark, prefix, batch_id)
-    write_manifest(spark, prefix, names)
-    return True
+
+
+@contextmanager
+def commit_append(spark, prefix: str, names: list[str],
+                  batch_id: str | None):
+    """Commit of a MANIFEST-BRACKET append (bm25, lm, minhash, spans,
+    contamination grams), after begin_append returned True: the
+    ``with`` body runs the family's data writes inside
+    ``index_commit(..., "keep")``, then record_batch records the
+    ledger entry just before the manifest recommit. A crash anywhere
+    leaves the index not-ready; the gated reader rebuilds from source
+    and clears the ledger, so a retry of the batch lands exactly
+    once."""
+    with index_commit(spark, prefix, names, "keep"):
+        yield
+        record_batch(spark, prefix, names, batch_id)
 
 
 def files_per_partition(spark, table: str,
@@ -750,9 +792,9 @@ def compact_partitioned_table(spark, table: str,
     to overwrite a table it is reading). The APPEND LEDGER IS NOT
     TOUCHED: absorbed batch ids stay committed, so a re-delivery of
     an absorbed batch remains a no-op — clearing the ledger would
-    re-open the exactly-once window. Caller owns the crash-atomicity
-    bracket (invalidate manifest first, recommit last) so a torn
-    compaction reads as not-ready instead of serving a half-rewrite.
+    re-open the exactly-once window. The caller runs this inside
+    ``index_commit(..., "keep")`` so a torn compaction reads as
+    not-ready instead of serving a half-rewrite.
     Returns {"rows", "files_before", "files_after"} — the stats are
     two extra full-table jobs (count + file listing), so pass
     ``collect_stats=False`` on a maintenance cadence where only the

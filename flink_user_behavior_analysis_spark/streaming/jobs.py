@@ -343,16 +343,18 @@ def snapshot_cdc_ingest_batch(spark: SparkSession, prefix: str,
     compaction can see the complete candidate snapshot and close the
     'removed' gap that a per-slice probe structurally cannot.
 
-    Exactly-once composition (the dsir_ingest_batch shape): the ledger
-    check early-exits a committed re-delivery BEFORE paying the
-    probe; both writes are idempotent per-batch directory overwrites
-    (a replayed epoch rewrites the same rows — verdicts are a pure
-    function of the slice and the frozen store); the ledger commits
-    LAST. A crash anywhere replays the epoch into either a clean
-    rewrite (pre-ledger) or a no-op (post-ledger). The quarantine
+    Exactly-once composition (the dsir_ingest_batch shape, through
+    begin_append and record_batch): an uncommitted {prefix}_fps
+    (a version cut in flight) refuses; the ledger check early-exits a
+    committed re-delivery BEFORE paying the probe; the quarantine
     gate refuses NEW batches while rebuild-discarded ids are pending,
-    like every stored family. Slices must partition the candidate
-    snapshot's keys (two live batches sharing a key would stage
+    like every stored family. Both writes are idempotent per-batch
+    directory overwrites (a replayed epoch rewrites the same rows —
+    verdicts are a pure function of the slice and the frozen store);
+    the ledger commits LAST. A crash anywhere replays the epoch into
+    either a clean rewrite (pre-ledger) or a no-op (post-ledger).
+    Slices must partition the candidate snapshot's keys (two live
+    batches sharing a key would stage
     conflicting fingerprints — same precondition as the contam-gram
     appends; epoch REPLAYS are deduped by the ledger and are fine).
 
@@ -360,13 +362,11 @@ def snapshot_cdc_ingest_batch(spark: SparkSession, prefix: str,
     epoch)."""
     from ..operators.versioning import (fingerprint_snapshot,
                                         snapshot_probe_from_store)
-    from ..sources.readers import (append_recorded, record_append,
-                                   require_appendable)
+    from ..sources.readers import begin_append, record_batch
 
-    if append_recorded(spark, prefix, batch_id):
+    if not begin_append(spark, prefix, batch_id,
+                        "snapshot_cdc_ingest_batch"):
         return 0
-    require_appendable(spark, prefix, batch_id,
-                       "snapshot_cdc_ingest_batch")
     # a compacted staging dir is a CLOSED cycle: staging more slices
     # into it would pollute the next compact's "complete candidate
     # snapshot" union with the previous cycle's leftovers (wrong
@@ -401,7 +401,7 @@ def snapshot_cdc_ingest_batch(spark: SparkSession, prefix: str,
         (fingerprint_snapshot(batch_df, key_cols, content_cols)
          .write.mode("overwrite")
          .parquet(f"{staging_dir}/ingest_batch={batch_id}"))
-        record_append(spark, prefix, batch_id)  # ledger LAST
+        record_batch(spark, prefix, [], batch_id)  # ledger LAST
         return int(n)
     finally:
         batch_df.unpersist()
@@ -432,9 +432,8 @@ def run_snapshot_cdc_ingest(candidate: DataFrame, prefix: str,
     (cdc_default_job_id, ADVICE r13) — so a crash-restart of the
     SAME cycle still replays under the same ids (exactly-once
     preserved) even if the restart spells the path differently,
-    while rotated cycles can never collide — even in the crash
-    window between the version cut and the ledger clear in
-    snapshot_cdc_compact."""
+    while rotated cycles can never collide, whatever ledger a crashed
+    snapshot_cdc_compact left behind."""
     spark = candidate.sparkSession
     if job_id is None:
         job_id = cdc_default_job_id(spark, staging_dir)
@@ -472,14 +471,18 @@ def snapshot_cdc_compact(spark: SparkSession, prefix: str,
     r12), and the cut is one bucketed write of rows that already
     exist on disk.
 
-    The cut is this family's rebuild analog, so it ends by CLEARING
-    the append ledger (ADVICE r12): the new version IS the staged
-    batches' union, so every ledgered id's data is contained in the
-    cut — the provably-lossless ``includes_appends=True`` waiver.
-    Without the clear, a next cycle whose batch ids collided would
-    be silently skipped as replays. (Belt-and-suspenders: the
-    default job_id also derives from the rotated staging_dir, so
-    ids can't collide even if a crash lands between cut and clear.)
+    The cut is this family's rebuild analog, so its bracket CLEARS
+    the append ledger (ADVICE r12, snapshot_cut_version): the new
+    version IS the staged batches' union, so every ledgered id's data
+    is contained in the cut — the provably-lossless ``waive``
+    handling. Without the clear, a next cycle whose batch ids
+    collided would be silently skipped as replays. The clear runs
+    inside the cut's bracket, so there is no committed version whose
+    ledger still holds the previous cycle's ids; while the bracket
+    is open the ``_cut_pending`` marker and the invalidated manifest
+    both refuse new slices. (Belt-and-suspenders: the default job_id
+    also derives from the rotated staging_dir, so ids can't collide
+    across cycles.)
 
     The compact also drops a ``_compacted`` marker into the staging
     dir: the cycle is closed, and any later stage or re-compact
@@ -494,8 +497,9 @@ def snapshot_cdc_compact(spark: SparkSession, prefix: str,
     (now equal to staged → zero removals) and overwrite the correct
     sidecar — silently losing the cycle's removals in exactly the
     recovery path. With the marker, a re-run reuses the sidecar,
-    re-runs the idempotent cut, and finishes ledger-clear + close;
-    the ingest gate also refuses new slices once the marker exists.
+    re-runs the idempotent cut (ledger clear included), and closes
+    the cycle; the ingest gate also refuses new slices once the
+    marker exists.
 
     Return-value lifetime: the returned DataFrame reads LAZILY from
     the ``_removed`` sidecar under this staging dir — consume it (or
@@ -504,7 +508,6 @@ def snapshot_cdc_compact(spark: SparkSession, prefix: str,
     keep_last=1 keeps the newest closed cycle for exactly this
     reason."""
     from ..operators.versioning import _diff_fps, snapshot_cut_version
-    from ..sources.readers import clear_append_ledger
 
     keys = list(key_cols)
     if _hadoop_path_exists(spark, f"{staging_dir}/_compacted"):
@@ -529,9 +532,9 @@ def snapshot_cdc_compact(spark: SparkSession, prefix: str,
         # so recomputing the diff here would overwrite the correct
         # sidecar with an empty one and silently lose the cycle's
         # removal verdicts. Reuse the sidecar; the cut is idempotent
-        # (same staged rows, manifest bracket), so finishing it plus
-        # the ledger clear and the _compacted marker is safe whether
-        # the crash hit before or after each of them.
+        # (same staged rows, ledger clear inside its manifest
+        # bracket), so finishing it plus the _compacted marker is
+        # safe whether the crash hit before or after each of them.
         if not _hadoop_path_exists(spark, removed_path):
             raise ValueError(
                 f"staging dir {staging_dir} has _cut_pending but no "
@@ -551,7 +554,6 @@ def snapshot_cdc_compact(spark: SparkSession, prefix: str,
         # re-entry means "sidecar is authoritative, fps may be cut"
         _hadoop_touch(spark, pending_path)
     snapshot_cut_version(spark, prefix, staged, keys, n_buckets)
-    clear_append_ledger(spark, prefix, includes_appends=True)
     # close the cycle: later stage/compact attempts against this
     # landing zone refuse instead of corrupting the next removal
     # sweep (underscore-prefixed, invisible to the staged-slice scan)

@@ -200,7 +200,6 @@ def cap_filter_stateful(
     user_col: str = "user_id",
     behavior_col: str = "behavior",
     ts_col: str = "ts",
-    order_col: str = "event_id",
 ) -> DataFrame:
     """Streaming F6: per (user, behavior, day) pass while count < cap,
     emit ONE warning when the (cap+1)-th event arrives. The reference's
@@ -208,8 +207,7 @@ def cap_filter_stateful(
     days' counts are droppable by watermark (document: production would
     add a timeout to evict prior-day counts). Keyed by user; the state
     row holds a count per (behavior, day). Only the counts matter, so
-    rows are not ordered (``order_col`` is unused and kept for
-    signature compatibility)."""
+    rows are not ordered."""
     out_schema = StructType([
         StructField("user_id", LongType()),
         StructField("behavior", StringType()),

@@ -37,6 +37,7 @@ from flink_user_behavior_analysis_spark.operators.chunking import (
     duplicated_spans,
 )
 from flink_user_behavior_analysis_spark.operators.dedup import (
+    simhash_pairs,
     simhash_signatures,
 )
 from flink_user_behavior_analysis_spark.operators.similarity import (
@@ -52,6 +53,7 @@ from flink_user_behavior_analysis_spark.operators.text import (
     winnow_fingerprints,
 )
 from flink_user_behavior_analysis_spark.queries_pipeline import (
+    SIMHASH_MAX_HAMMING,
     SPAN_TOKENS,
     TEXT_STATS_SQL,
     WINNOW_K,
@@ -60,6 +62,7 @@ from flink_user_behavior_analysis_spark.queries_pipeline import (
     _fingerprint_sql,
     _gopher_sql,
     _simhash_ctes,
+    _simhash_sql,
     _winnow_sql,
 )
 
@@ -217,12 +220,16 @@ def test_winnow_fingerprints_equals_duckdb_form(spark, texts):
 @given(texts=st.lists(_DOC, min_size=1, max_size=6))
 @example(texts=[None, "", "one", "\u0130x", "W\u0130TH the x\u0130y",
                 "\u212a \u00df \U0001f600 -- caf\u00e9"])
+@example(texts=[None, None, "a b c", "x y z w"])
 def test_simhash_and_fingerprints_equal_duckdb_form(spark, texts):
     """simhash_signatures and doc_fingerprints (Arrow kernels) equal
     their DuckDB forms; a NULL document has SimHash 0 (the runner's
     edge policy) and no row on the DuckDB side, whose word explode
-    drops it."""
+    drops it. simhash_pairs equals the registered query's DuckDB form,
+    so a NULL document pairs with nothing."""
     docs = _docs(spark, texts)
+    _assert_equals_duckdb(simhash_pairs(docs, SIMHASH_MAX_HAMMING), texts,
+                          _simhash_sql())
     _assert_equals_duckdb(doc_fingerprints(docs), texts, _fingerprint_sql())
     sims = {r.doc_id: r.simhash for r in simhash_signatures(docs).collect()}
     _, rows = _duckdb_rows(

@@ -2672,45 +2672,3 @@ def test_semdedup_cosine_rounding_boundary_pinned_adversarially(
     ).fetchone()[0] is True
     for t in ("cells", "modelfp", "manifest"):
         spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-
-
-@pytest.mark.parametrize("query, main_path", [
-    ("q_dedup_keeper_quality", "operators.cluster.keeper_by_quality"),
-    ("q_curation_pipeline", "queries_pipeline.minhash_lsh_pairs"),
-])
-def test_overlapped_failure_keeps_primary_exception(
-        spark, sf_dir, monkeypatch, query, main_path):
-    """A query that overlaps a background action with its main path
-    must surface the MAIN path's exception when both fail (the
-    background failure is awaited and dropped), and must still raise
-    the background failure when the main path succeeds."""
-    import importlib
-    from concurrent.futures import Future
-
-    from flink_user_behavior_analysis_spark import queries_pipeline as qp
-
-    class Primary(Exception):
-        pass
-
-    class Background(Exception):
-        pass
-
-    def failing_action(df):
-        fut = Future()
-        fut.set_exception(Background("background action failed"))
-        return fut
-
-    def main_fails(*args, **kwargs):
-        raise Primary("main path failed")
-
-    mod_name, attr = main_path.rsplit(".", 1)
-    mod = importlib.import_module(f"flink_user_behavior_analysis_spark.{mod_name}")
-    monkeypatch.setattr(qp, "_start_action", failing_action)
-    monkeypatch.setattr(mod, attr, main_fails)
-    with pytest.raises(Primary):
-        getattr(qp, query)(spark, sf_dir)
-
-    if query == "q_dedup_keeper_quality":
-        monkeypatch.setattr(mod, attr, lambda docs, pairs, quality: quality)
-        with pytest.raises(Background):
-            qp.q_dedup_keeper_quality(spark, sf_dir)

@@ -24,6 +24,8 @@ from flink_user_behavior_analysis_spark.sources.readers import (
     write_manifest,
 )
 
+from .package_ast import calls
+
 
 def _drop(spark, table: str) -> None:
     spark.sql(f"DROP TABLE IF EXISTS {table}")
@@ -33,6 +35,16 @@ def _drop_prefix(spark, prefix: str) -> None:
     for t in spark.catalog.listTables():
         if t.name.startswith(prefix):
             _drop(spark, t.name)
+
+
+@pytest.mark.parametrize("step", ["invalidate_manifest", "write_manifest",
+                                  "clear_append_ledger", "record_append"])
+def test_commit_protocol_steps_only_in_readers(step):
+    """Every stored family commits through sources/readers.py
+    (index_commit, begin_append, commit_append, record_batch): no
+    other module writes or drops a manifest or touches the append
+    ledger, so the protocol exists once."""
+    assert {m for m, _ in calls(step)} == {"sources/readers.py"}
 
 
 def test_index_ready_requires_manifest_and_listed_tables(spark):
